@@ -191,14 +191,16 @@ object SparkEntry {
     * entries (bounded by the registry's LRU cap). */
   def memoSessionCount: Int = Memos.sessionCount
 
-  /** q259/q267/q286 share the eight-member champion family via
-    * [[graft.seq.Champion.pickBlendScore]]: the member scoreboard and
-    * forecast union are series-grain tiny and localCheckpointed once
-    * per (session, sfDir), so a sweep that runs all three pays the
-    * eight per-series fits ONCE (r10 measured the pair re-fitting the
-    * family twice at ~5s each). Values are identical to the one-plan
-    * championForecast/blendForecast paths — pickAndBlend materializes
-    * the exact same member tables the tails consume. */
+  /** q259/q267/q286 and the extended-order boards share the
+    * eight-member champion family via
+    * [[graft.seq.Champion.pickBlendScoreFcs]]: its member table — one
+    * row per (series, member) carrying the score and the member's
+    * forecasts — is series-grain tiny and localCheckpointed once per
+    * (session, sfDir), so a sweep that runs them all pays the eight
+    * per-series fits ONCE. The four frames (pick, blend, scoreboard,
+    * forecast union) are window/explode tails over that one
+    * checkpoint, with values identical to the one-plan
+    * championForecast/blendForecast/scoreboard paths. */
   private def championShared(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
     Memos.memo(s, "champion", d) {
       val weekly = Enrichment.weeklyAggregate(li(s, d), col("l_shipdate"),

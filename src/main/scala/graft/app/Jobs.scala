@@ -273,7 +273,14 @@ object Jobs {
     * sink discipline as [[forecastSubmission]]. This is the
     * reference's actual per-series loop wired end to end: every
     * series forecasts with whichever family member its own history
-    * scores best (length-1 series degrade to the mean member). */
+    * scores best (length-1 series degrade to the mean member).
+    *
+    * The post-pick grid is materialized once before post-processing:
+    * sigmaCap reads the grid twice (its own mean/σ aggregate and the
+    * capped rows), and without the checkpoint each read would re-run
+    * the whole champion plan. The grid's and the series' checkpoints
+    * are released once the shipped CSV has been validated (the
+    * returned frame reads the CSV, not them). */
   def championSubmission(spark: SparkSession, sfDir: String, outDir: String): DataFrame = {
     val weekly = etl(spark, sfDir)
     val fc = graft.seq.Champion.championForecast(weekly,
@@ -281,15 +288,17 @@ object Jobs {
       h = 5, m = 13)
     val grid = fc.select(col("step").cast("int").as("semana"),
       col("l_suppkey").as("pdv"), col("l_partkey").as("produto"),
-      col("forecast").as("quantidade"))
-    val processed = PostProcess.chain(Seq(
-      PostProcess.nonNegative("quantidade"),
-      PostProcess.sigmaCap("quantidade", 5.0),
-      PostProcess.integerize("quantidade")))(grid)
-      .withColumn("quantidade", col("quantidade").cast("long"))
-    val back = Sinks.csvSubmission(spark, processed, s"$outDir/submission_champion")
-    require(SubmissionValidator.isValid(back), "champion submission failed validation")
-    back
+      col("forecast").as("quantidade")).localCheckpoint(true)
+    try {
+      val processed = PostProcess.chain(Seq(
+        PostProcess.nonNegative("quantidade"),
+        PostProcess.sigmaCap("quantidade", 5.0),
+        PostProcess.integerize("quantidade")))(grid)
+        .withColumn("quantidade", col("quantidade").cast("long"))
+      val back = Sinks.csvSubmission(spark, processed, s"$outDir/submission_champion")
+      require(SubmissionValidator.isValid(back), "champion submission failed validation")
+      back
+    } finally Seq(grid, fc).foreach(org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints)
   }
 
   /** Competitive-informed submission (reference

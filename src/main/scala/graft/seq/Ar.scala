@@ -112,6 +112,22 @@ object Ar {
       .drop("__y", "__l1", "__l2")
   }
 
+  /** The rounded h-step recursion over one series' coefficients and its
+    * last two observations x_n, x_{n−1}: f_1 = c + φ1·x_n + φ2·x_{n−1},
+    * f_s = c + φ1·f_{s−1} + φ2·f_{s−2}, each step rounded before it
+    * feeds forward. Shared by every AR forecaster (and the champion
+    * family's ar2/ari members) so the chain exists once. */
+  private[seq] def forecastSteps(c: Column, phi1: Column, phi2: Column,
+                                 xn: Column, xn1: Column, h: Int): Vector[Column] =
+    (1 to h).foldLeft(Vector.empty[Column]) { (acc, s) =>
+      val (p1, p2) = s match {
+        case 1 => (xn, xn1)
+        case 2 => (acc(0), xn)
+        case _ => (acc(s - 2), acc(s - 3))
+      }
+      acc :+ r(c + phi1 * p1 + phi2 * p2)
+    }
+
   /** h-step-ahead forecast recursion, one output row per (series, step):
     *   f_1 = c + φ1·x_n + φ2·x_{n−1}
     *   f_s = c + φ1·f_{s−1} + φ2·f_{s−2}   (forecasts feed back as lags)
@@ -131,14 +147,8 @@ object Ar {
         max(when(col("__rd") === 2, col("__y"))).as("__xn1"))
       .filter(col("__xn1").isNotNull)
     val base = lastVals.join(coefs(indexed, keyCols), keyCols)
-    val steps = (1 to h).foldLeft(Vector.empty[Column]) { (acc, s) =>
-      val (p1, p2) = s match {
-        case 1 => (col("__xn"), col("__xn1"))
-        case 2 => (acc(0), col("__xn"))
-        case _ => (acc(s - 2), acc(s - 3))
-      }
-      acc :+ r(col("ar_c") + col("ar_phi1") * p1 + col("ar_phi2") * p2)
-    }
+    val steps = forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"),
+      col("__xn"), col("__xn1"), h)
     base.select(key :+ posexplode(array(steps: _*)).as(Seq("__p", "ar_forecast")): _*)
       .withColumn("step", (col("__p") + 1).cast("long"))
       .select(key ++ Seq(col("step"), col("ar_forecast")): _*)
@@ -187,14 +197,8 @@ object Ar {
         max(when(col("__rd") === 2, col("__y"))).as("__xn1"))
       .filter(col("__xn1").isNotNull)
     val base = lastVals.join(cf, keyCols).join(sig, keyCols)
-    val steps = (1 to h).foldLeft(Vector.empty[Column]) { (acc, s) =>
-      val (p1, p2) = s match {
-        case 1 => (col("__xn"), col("__xn1"))
-        case 2 => (acc(0), col("__xn"))
-        case _ => (acc(s - 2), acc(s - 3))
-      }
-      acc :+ r(col("ar_c") + col("ar_phi1") * p1 + col("ar_phi2") * p2)
-    }
+    val steps = forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"),
+      col("__xn"), col("__xn1"), h)
     // ψ weights and the left-folded cumulative ψ² sums, both rounded
     // per step exactly as the oracle's recursive CTE carries them
     val psis = (1 until h).foldLeft(Vector[Column](lit(1.0))) { (acc, j) =>

@@ -50,167 +50,201 @@ import graft.functions.Funcs.{microMean, r}
   * behavior (arima_temporal.py error_action='ignore' degrades to the
   * simplest candidate).
   *
-  * Execution shape: the input series frame is localCheckpointed once
-  * (eight member pipelines would each re-derive it — the
-  * forecastIntervals/Dsir house trade), every member is its own
-  * key-partitioned window/fold + key-grain aggregate, and the final
-  * pick is one key-grain window over a union of key-grain scoreboards
-  * (rows = #series × #members — tiny next to the series frame). The
-  * winner join runs key-grain against the unioned forecast tables.
-  * Scales in the series count, never materializes a per-group vector.
+  * Execution shape: the input series frame (null-key rows dropped) is
+  * localCheckpointed once, and each member is ONE chain over it that
+  * ends in one row per (series, member) carrying both the score
+  * (__mrank, __k, sse, neff, aic) and the member's h-step forecasts as
+  * an array (__fc). Score and forecast come from the same fit: the
+  * per-row state (lags, Holt level/trend, Theta's SES, the packed grid
+  * fits) is read once, and a key-grain aggregate folds it into the SSE
+  * and the last-row state the forecaster extrapolates. The eight
+  * member rows union into one member table (#series × 8 rows), and
+  * every consumer is one tail over it: a key-partitioned window
+  * (argmin, AIC minimum or rank) plus an explode of the forecast
+  * arrays, with no join or exchange keyed on the member. The plan thus
+  * holds each member kernel exactly once (ChampionSpec pins that), and
+  * the chains that window over the series share one exchange of the
+  * checkpoint. A member that does not score a series (too short to
+  * identify it) has a NULL aic there but may still forecast, e.g.
+  * snaive's partial season; only [[pickBlendScoreFcs]]'s forecast union
+  * shows those rows. Scales in the series count, never materializes a
+  * per-group vector beyond the grid fits' packed cells.
+  *
+  * `valueCol` must be non-null. ChampionSpec pins every consumer row
+  * for row against the replaced two-pipeline form.
   */
 object Champion {
 
   /** Exact SSE of a 4dp-grid residual column: square → 1e-8 grid →
     * guarded exact-long sum → one division back (Ar.forecastIntervals
-    * σ² convention), rounded at emit. */
+    * σ² convention), rounded at emit. NULL residuals are skipped. */
   private def sqSum(resid: Column): Column =
     r(graft.functions.Funcs.microSumSq(resid))
 
-  /** Shared member machinery: the eight family members' AIC scoreboard
-    * (keys..., model, __mrank, aic) and their h-step forecast union
-    * (keys..., model, step, forecast) — consumed by the argmin pick
-    * ([[championForecast]]) and the Akaike-weight average
-    * ([[blendForecast]]). */
-  private def memberTables(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                           valueCol: String, h: Int, m: Int,
-                           alpha: Double, beta: Double,
-                           damp: Double): (DataFrame, DataFrame, DataFrame) = {
+  /** Forecast array literal: element s is (step = s, forecast = fs(s−1)). */
+  private def steps(fs: Seq[Column]): Column =
+    array(fs.zipWithIndex.map { case (f, i) =>
+      struct(lit(i + 1L).as("step"), f.as("forecast"))
+    }: _*)
+
+  /** The member table: one row per (series, member) with keys...,
+    * model, __mrank, __k, sse, neff, aic (NULL where the member does not
+    * score the series) and __fc, the member's forecasts as an
+    * array<struct<step, forecast>> (NULL where it does not forecast).
+    * See the object scaladoc for the shape. */
+  private def memberTable(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
+                          valueCol: String, h: Int, m: Int,
+                          alpha: Double, beta: Double, damp: Double): DataFrame = {
     require(h >= 1 && h <= m, "horizon must lie in [1, m]")
     val keys = keyCols.map(col)
     val x = col(valueCol).cast("double")
-    val src = df.localCheckpoint(true)
+    val src = df.filter(keys.map(_.isNotNull).reduce(_ && _)).localCheckpoint(true)
     val wAsc = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val counts = src.groupBy(keys: _*).agg(count(lit(1)).as("__n"))
+    val rn = row_number().over(wAsc)
 
-    def tag(d: DataFrame, name: String, rank: Int, k: Int): DataFrame =
+    /** The member's row: its score where `scored`, its forecasts. */
+    def member(d: DataFrame, name: String, rank: Int, k: Int, scored: Column,
+               fc: Column): DataFrame =
       d.select(keys ++ Seq(lit(name).as("model"), lit(rank).as("__mrank"),
-        lit(k.toDouble).as("__k"), col("sse"), col("neff")): _*)
-
-    def fcTag(d: DataFrame, name: String): DataFrame =
-      d.select(keys ++ Seq(lit(name).as("model"), col("step").cast("long").as("step"),
-        col("forecast")): _*)
-
-    def explodeSteps(d: DataFrame, steps: Seq[Column]): DataFrame =
-      d.select(keys :+ explode(array(steps.zipWithIndex.map { case (f, i) =>
-        struct(lit(i + 1L).as("step"), f.as("forecast"))
-      }: _*)).as("__e"): _*)
-        .select(keys ++ Seq(col("__e.step").as("step"),
-          col("__e.forecast").as("forecast")): _*)
+        lit(k.toDouble).as("__k"), when(scored, col("sse")).as("sse"),
+        when(scored, col("neff")).as("neff"), fc.as("__fc")): _*)
 
     // ---- mean_naive: rounded exact mean, flat forecast
-    val muT = src.groupBy(keys: _*).agg(r(microMean(x)).as("__mu"))
-    val meanScore = tag(src.join(muT, keyCols)
-      .withColumn("__res", x - col("__mu"))
-      .groupBy(keys: _*).agg(sqSum(col("__res")).as("sse"),
-        count(lit(1)).cast("double").as("neff")), "mean_naive", 0, 1)
-    val meanFc = fcTag(explodeSteps(muT, (1 to h).map(_ => col("__mu"))),
-      "mean_naive")
+    val mu = src.groupBy(keys: _*).agg(r(microMean(x)).as("__mu"))
+    val mean = member(src.join(mu, keyCols).groupBy(keys: _*).agg(
+      sqSum(x - col("__mu")).as("sse"), count(lit(1)).cast("double").as("neff"),
+      max(col("__mu")).as("__mu")),
+      "mean_naive", 0, 1, lit(true), steps(Seq.fill(h)(col("__mu"))))
 
     // ---- snaive: last season's value, both as fit and as forecast
-    val snLag = src.withColumn("__lm", lag(x, m).over(wAsc))
-      .withColumn("__rn", row_number().over(wAsc))
-    val snScore = tag(snLag.filter(col("__lm").isNotNull)
-      .withColumn("__res", x - col("__lm"))
-      .groupBy(keys: _*).agg(sqSum(col("__res")).as("sse"),
-        count(lit(1)).cast("double").as("neff")), "snaive", 1, 0)
-    val snFc = fcTag(snLag.join(counts, keyCols)
-      .filter(col("__rn") > col("__n") - m && col("__rn") <= col("__n") - m + h)
-      .select(keys ++ Seq((col("__rn") - (col("__n") - m)).as("step"),
-        r(x).as("forecast")): _*), "snaive")
+    // (forecast step s reads row n − m + s; a series shorter than a
+    // season forecasts the steps whose base row exists)
+    val sn = src.withColumn("__lm", lag(x, m).over(wAsc))
+      .withColumn("__rn", rn)
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(keys: _*)))
+      .groupBy(keys: _*).agg(
+        sqSum(x - col("__lm")).as("sse"),
+        count(col("__lm")).cast("double").as("neff"),
+        sort_array(collect_list(when(col("__rn") > col("__n") - m &&
+          col("__rn") <= col("__n") - m + h,
+          struct((col("__rn") - (col("__n") - m)).cast("long").as("step"),
+            r(x).as("forecast"))))).as("__fc"))
+    val snaive = member(sn, "snaive", 1, 0, lit(true),
+      when(size(col("__fc")) > 0, col("__fc")))
 
-    // ---- ar2: the OLS fit's own rounded one-step predictions
-    val arFit = Ar.fitted(src, keyCols, ordCols, valueCol)
-    val arScore = tag(arFit.filter(col("ar_fitted").isNotNull)
-      .withColumn("__res", x - col("ar_fitted"))
-      .groupBy(keys: _*).agg(sqSum(col("__res")).as("sse"),
-        count(lit(1)).cast("double").as("neff"))
-      .filter(col("neff") >= 3), "ar2", 2, 3)
-    val arFc = fcTag(Ar.forecast(src, keyCols, ordCols, valueCol, h)
-      .withColumnRenamed("ar_forecast", "forecast"), "ar2")
+    // ---- ar2: the OLS fit's own rounded one-step predictions; the
+    // forecast recursion starts from the last two observations
+    val ar = Ar.fitted(src.withColumn("__rn", rn)
+      .withColumn("__xp", lag(x, 1).over(wAsc)), keyCols, ordCols, valueCol)
+      .groupBy(keys: _*).agg(
+        sqSum(x - col("ar_fitted")).as("sse"),
+        count(col("ar_fitted")).cast("double").as("neff"),
+        max(col("ar_c")).as("ar_c"), max(col("ar_phi1")).as("ar_phi1"),
+        max(col("ar_phi2")).as("ar_phi2"),
+        max_by(x, col("__rn")).as("__xn"), max_by(col("__xp"), col("__rn")).as("__xn1"))
+    val ar2 = member(ar, "ar2", 2, 3, col("neff") >= 3,
+      when(col("neff") >= 1 && col("__xn1").isNotNull,
+        steps(Ar.forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"),
+          col("__xn"), col("__xn1"), h))))
 
     // ---- ari: AR(2) on first differences; the one-step residual on
     // the original scale equals the diff-scale residual
-    // (x_t − (x_{t−1} + d̂_t) = Δx_t − d̂_t), so the diff fit scores it
+    // (x_t − (x_{t−1} + d̂_t) = Δx_t − d̂_t), so the diff fit scores it.
+    // The forecast integrates the diff steps from the last level as a
+    // left fold (0 + d̂_1, then + d̂_s), the order a running sum adds in
     val dif = src.withColumn("__d", x - lag(x, 1).over(wAsc))
+      .withColumn("__rn", rn)
       .filter(col("__d").isNotNull)
-    val ariScore = tag(Ar.fitted(dif, keyCols, ordCols, "__d")
-      .filter(col("ar_fitted").isNotNull)
-      .withColumn("__res", col("__d") - col("ar_fitted"))
-      .groupBy(keys: _*).agg(sqSum(col("__res")).as("sse"),
-        count(lit(1)).cast("double").as("neff"))
-      .filter(col("neff") >= 3), "ari", 3, 3)
-    val ariFc = fcTag(Ar.forecastIntegrated(src, keyCols, ordCols, valueCol, h)
-      .withColumnRenamed("ari_forecast", "forecast"), "ari")
+      .withColumn("__dp", lag(col("__d"), 1).over(wAsc))
+    val ari0 = Ar.fitted(dif, keyCols, ordCols, "__d")
+      .groupBy(keys: _*).agg(
+        sqSum(col("__d") - col("ar_fitted")).as("sse"),
+        count(col("ar_fitted")).cast("double").as("neff"),
+        max(col("ar_c")).as("ar_c"), max(col("ar_phi1")).as("ar_phi1"),
+        max(col("ar_phi2")).as("ar_phi2"),
+        max_by(col("__d"), col("__rn")).as("__dn"),
+        max_by(col("__dp"), col("__rn")).as("__dn1"),
+        max_by(x, col("__rn")).as("__yn"))
+    val ariCum = Ar.forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"),
+      col("__dn"), col("__dn1"), h).scanLeft(lit(0.0))(_ + _).tail
+    val ari = member(ari0, "ari", 3, 3, col("neff") >= 3,
+      when(col("neff") >= 1, steps(ariCum.map(c => r(col("__yn") + c)))))
 
-    // ---- ma1: the CLS grid fold's own SSE; forecast μ + θ·ε_n then flat
-    val maFull = SequentialKernels.fitMa1Full(src, keyCols, ordCols, valueCol)
-    val maScore = tag(maFull.join(counts, keyCols).filter(col("__n") >= 2)
-      .select(keys ++ Seq(col("ma1_sse").as("sse"),
-        col("__n").cast("double").as("neff")): _*), "ma1", 4, 2)
-    val maFc = fcTag(explodeSteps(maFull, (1 to h).map { s =>
-      if (s == 1) r(col("ma1_mu") + col("ma1_theta") * col("ma1_eps_last"))
-      else r(col("ma1_mu"))
-    }), "ma1")
+    // ---- ma1: the CLS grid fit's own SSE; forecast μ + θ·ε_n then flat
+    val ma = member(SequentialKernels.fitMa1FullCounted(src, keyCols, ordCols, valueCol)
+      .withColumn("sse", col("ma1_sse"))
+      .withColumn("neff", col("__n").cast("double")),
+      "ma1", 4, 2, col("__n") >= 2, steps((1 to h).map { s =>
+        if (s == 1) r(col("ma1_mu") + col("ma1_theta") * col("ma1_eps_last"))
+        else r(col("ma1_mu"))
+      }))
 
-    // ---- arma11: the (φ,θ) grid fold's own SSE (conditioned on t ≥ 2)
-    val armaFull = SequentialKernels.fitArma11Full(src, keyCols, ordCols, valueCol)
-    val armaScore = tag(armaFull.join(counts, keyCols).filter(col("__n") >= 3)
-      .select(keys ++ Seq(col("arma_sse").as("sse"),
-        (col("__n") - 1).cast("double").as("neff")): _*), "arma11", 5, 3)
+    // ---- arma11: the (φ,θ) grid fit's own SSE (conditioned on t ≥ 2)
     val armaSteps = (1 to h).foldLeft(Vector.empty[Column]) { (acc, s) =>
-      val f =
+      acc :+ (
         if (s == 1) r(col("arma_mu") + col("arma_phi") * col("arma_xc_last") +
           col("arma_theta") * col("arma_eps_last"))
-        else r(col("arma_mu") + col("arma_phi") * (acc(s - 2) - col("arma_mu")))
-      acc :+ f
+        else r(col("arma_mu") + col("arma_phi") * (acc(s - 2) - col("arma_mu"))))
     }
-    val armaFc = fcTag(explodeSteps(armaFull, armaSteps), "arma11")
+    val arma = member(SequentialKernels.fitArma11FullCounted(src, keyCols, ordCols, valueCol)
+      .withColumn("sse", col("arma_sse"))
+      .withColumn("neff", (col("__n") - 1).cast("double")),
+      "arma11", 5, 3, col("__n") >= 3, steps(armaSteps))
 
     // ---- theta: scored on its honest one-step prediction (the
     // reference's fittedvalues convention — no peek at x_t). From
     // ŷ_t = ½·l_t + ½·ses_{t−1} and ses_{t−1} = 2·fitted_{t−1} −
-    // l_{t−1}, the prediction collapses to fitted_{t−1} + b/2.
-    val thFit = Theta.fitted(src, keyCols, ordCols, valueCol, alpha)
-    val thScore = tag(thFit
+    // l_{t−1}, the prediction collapses to fitted_{t−1} + b/2. The
+    // forecast extends the trend from the last index and carries the
+    // last SES level flat
+    val th = Theta.fittedFull(src, keyCols, ordCols, valueCol, alpha)
       .withColumn("__pf", lag(col("theta_fitted"), 1).over(wAsc))
-      .filter(col("__pf").isNotNull)
-      .withColumn("__res", x - r(col("__pf") + col("theta_b") / 2))
-      .groupBy(keys: _*).agg(sqSum(col("__res")).as("sse"),
-        count(lit(1)).cast("double").as("neff")), "theta", 6, 2)
-    val thFc = fcTag(Theta.forecast(src, keyCols, ordCols, valueCol, alpha, h)
-      .withColumnRenamed("theta_forecast", "forecast"), "theta")
+      .groupBy(keys: _*).agg(
+        sqSum(x - r(col("__pf") + col("theta_b") / 2)).as("sse"),
+        count(col("__pf")).cast("double").as("neff"),
+        max(col("theta_a")).as("theta_a"), max(col("theta_b")).as("theta_b"),
+        max(col("__t")).as("__tn"), max_by(col("__ses"), col("__t")).as("__sesn"))
+    val theta = member(th, "theta", 6, 2, lit(true), steps((1 to h).map(s =>
+      Theta.forecastStep(col("theta_a"), col("theta_b"), col("__tn"), col("__sesn"), s))))
 
     // ---- holt_damped: one-step x̂_t = l_{t−1} + φ_d·b_{t−1} (defined
-    // once the trend exists, t ≥ 3), damped extrapolation beyond
-    val holt = SequentialKernels.withHolt(src, keyCols, ordCols, valueCol,
-      alpha, beta)
-    val holtScore = tag(holt
+    // once the trend exists, t ≥ 3), damped extrapolation from the
+    // last rounded (level, trend) beyond
+    val ho = SequentialKernels.withHolt(src.withColumn("__rn", rn), keyCols,
+      ordCols, valueCol, alpha, beta)
       .withColumn("__pl", lag(col("holt_level"), 1).over(wAsc))
       .withColumn("__pt", lag(col("holt_trend"), 1).over(wAsc))
-      .filter(col("__pt").isNotNull)
-      .withColumn("__res", x - r(col("__pl") + lit(damp) * col("__pt")))
-      .groupBy(keys: _*).agg(sqSum(col("__res")).as("sse"),
-        count(lit(1)).cast("double").as("neff")), "holt_damped", 7, 2)
-    val holtFc = fcTag(SequentialKernels.dampedHoltForecast(src, keyCols,
-      ordCols, valueCol, alpha, beta, damp, h)
-      .withColumnRenamed("holt_forecast", "forecast"), "holt_damped")
+      .groupBy(keys: _*).agg(
+        sqSum(x - r(col("__pl") + lit(damp) * col("__pt"))).as("sse"),
+        count(col("__pt")).cast("double").as("neff"),
+        max_by(col("holt_level"), col("__rn")).as("__ln"),
+        max_by(col("holt_trend"), col("__rn")).as("__bn"))
+    val holt = member(ho, "holt_damped", 7, 2, lit(true),
+      when(col("__bn").isNotNull, steps(SequentialKernels.dampedSteps(
+        r(col("__ln")), r(col("__bn")), damp, h))))
 
-    // ---- scoreboard → AIC (the pick/average happens in the consumers)
-    val scores = Seq(meanScore, snScore, arScore, ariScore, maScore,
-      armaScore, thScore, holtScore).reduce(_ unionByName _)
-      .filter(col("sse").isNotNull && col("neff") >= 1)
-    val aic = scores.withColumn("aic",
-      r(col("neff") * log(greatest(col("sse"), lit(1e-8)) / col("neff")) +
-        lit(2.0) * col("__k")))
-    val fcs = Seq(meanFc, snFc, arFc, ariFc, maFc, armaFc, thFc, holtFc)
-      .reduce(_ unionByName _)
-    // src rides along so a caller that re-materializes aic/fcs can
-    // unpersist the source checkpoint — Spark pins persisted RDDs in
-    // SparkContext.persistentRdds (strong refs), so an intermediate
-    // localCheckpoint left behind leaks for the JVM's life
-    (aic, fcs, src)
+    Seq(mean, snaive, ar2, ari, ma, arma, theta, holt).reduce(_ unionByName _)
+      .withColumn("aic", when(col("sse").isNotNull && col("neff") >= 1,
+        r(col("neff") * log(greatest(col("sse"), lit(1e-8)) / col("neff")) +
+          lit(2.0) * col("__k"))))
   }
+
+  /** Series window in pick order: (aic, member order) with the unscored
+    * rows last. Consumers test `aic IS NOT NULL` only ABOVE their
+    * window: a filter on the member table itself would be pushed
+    * through the union into each member's projection, inlining — and so
+    * re-running — the grid fits that `sse` derives from. */
+  private def pickOrder(keyCols: Seq[String]) =
+    Window.partitionBy(keyCols.map(col): _*)
+      .orderBy(col("aic").asc_nulls_last, col("__mrank"))
+
+  /** `cols` of a member table with its forecast arrays exploded to
+    * (…, step, forecast) rows. */
+  private def exploded(t: DataFrame, cols: Seq[Column]): DataFrame =
+    t.select(cols :+ explode(col("__fc")).as("__e"): _*)
+      .withColumn("step", col("__e.step"))
+      .withColumn("forecast", col("__e.forecast"))
+      .drop("__e")
 
   /** One row per (series, step) with the champion member's id, its
     * rounded AIC and its h-step forecast. Output columns:
@@ -220,24 +254,16 @@ object Champion {
   def championForecast(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                        valueCol: String, h: Int = 4, m: Int = 13,
                        alpha: Double = 0.3, beta: Double = 0.1,
-                       damp: Double = 0.9): DataFrame = {
-    val (aic, fcs, _) = memberTables(df, keyCols, ordCols, valueCol, h, m,
-      alpha, beta, damp)
-    pickFrom(aic, fcs, keyCols)
-  }
+                       damp: Double = 0.9): DataFrame =
+    pickFrom(memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta, damp),
+      keyCols)
 
-  /** Argmin tail over already-built member tables. */
-  private def pickFrom(aic: DataFrame, fcs: DataFrame,
-                       keyCols: Seq[String]): DataFrame = {
-    val keys = keyCols.map(col)
-    val wPick = Window.partitionBy(keys: _*).orderBy(col("aic"), col("__mrank"))
-    val champ = aic.withColumn("__rk", row_number().over(wPick))
-      .filter(col("__rk") === 1)
-      .select(keys ++ Seq(col("model"), col("aic")): _*)
-    champ.join(fcs, keyCols :+ "model")
-      .select(keys ++ Seq(col("model").as("champion"), col("aic"),
-        col("step"), col("forecast")): _*)
-  }
+  /** Argmin tail: the (aic, member order)-first scored row per series,
+    * its forecast array exploded. */
+  private def pickFrom(t: DataFrame, keyCols: Seq[String]): DataFrame =
+    exploded(t.withColumn("__rk", row_number().over(pickOrder(keyCols)))
+      .filter(col("__rk") === 1 && col("aic").isNotNull),
+      keyCols.map(col) ++ Seq(col("model").as("champion"), col("aic")))
 
   /** The full order-search TRACE — what the reference's stepwise
     * auto-ARIMA loop logs per candidate order
@@ -251,20 +277,15 @@ object Champion {
   def scoreboard(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                  valueCol: String, h: Int = 4, m: Int = 13,
                  alpha: Double = 0.3, beta: Double = 0.1,
-                 damp: Double = 0.9): DataFrame = {
-    val (aic, _, _) = memberTables(df, keyCols, ordCols, valueCol, h, m,
-      alpha, beta, damp)
-    scoreboardFrom(aic, keyCols)
-  }
+                 damp: Double = 0.9): DataFrame =
+    scoreboardFrom(memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta,
+      damp), keyCols)
 
-  /** Both consumers from ONE member-pipeline execution: the scoreboard
-    * and forecast union are materialized (they are series-grain tiny —
-    * #series × 8 and × 8·h rows), so the eight member fits run once
-    * however many of the returned frames are consumed. The single-query
-    * paths (championForecast / blendForecast) deliberately stay
-    * unmaterialized one-plan shapes (the measured-fastest form —
-    * BENCH_NOTES r10); this entry exists for multi-consumer jobs like
-    * the walk-forward backtest, which was paying the family twice. */
+  /** Both consumers from ONE member-table execution (see
+    * [[pickBlendScoreFcs]]) — for multi-consumer jobs like the
+    * walk-forward backtest, which would otherwise fit the family once
+    * per consumer. The single-query paths (championForecast /
+    * blendForecast) stay unmaterialized one-plan shapes. */
   def pickAndBlend(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                    valueCol: String, h: Int = 4, m: Int = 13,
                    alpha: Double = 0.3, beta: Double = 0.1,
@@ -275,9 +296,8 @@ object Champion {
   }
 
   /** All THREE consumers — champion pick, Akaike blend and the
-    * order-search scoreboard — from one materialized member-pipeline
-    * execution (the pickAndBlend contract extended with the q286
-    * trace). */
+    * order-search scoreboard — from one materialized member table (the
+    * pickAndBlend contract extended with the q286 trace). */
   def pickBlendScore(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                      valueCol: String, h: Int = 4, m: Int = 13,
                      alpha: Double = 0.3, beta: Double = 0.1,
@@ -287,34 +307,34 @@ object Champion {
     (pick, blend, board)
   }
 
-  /** [[pickBlendScore]] plus the materialized member FORECAST union
-    * (keys..., model, step, forecast) as a fourth frame — what an
-    * extended search ([[OrderSearch.championForecastExt]]) joins its
-    * winner against without re-fitting the family. */
+  /** [[pickBlendScore]] plus the member FORECAST union (keys..., model,
+    * step, forecast) as a fourth frame — what an extended search
+    * ([[OrderSearch.championForecastExt]]) joins its winner against
+    * without re-fitting the family. The member table is
+    * localCheckpointed ONCE (series-grain: #series × 8 rows) and all
+    * four frames are tails over that one checkpoint, so the eight
+    * member fits run once however many frames are consumed. */
   def pickBlendScoreFcs(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                         valueCol: String, h: Int = 4, m: Int = 13,
                         alpha: Double = 0.3, beta: Double = 0.1,
                         damp: Double = 0.9): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (aic0, fcs0, src) = memberTables(df, keyCols, ordCols, valueCol, h, m,
-      alpha, beta, damp)
-    val aic = aic0.localCheckpoint(true)
-    val fcs = fcs0.localCheckpoint(true)
-    // aic/fcs are materialized now and every returned frame derives
-    // from THEM — the source checkpoint's blocks are dead weight, and
-    // persistentRdds would otherwise pin them for the JVM's life
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints(src)
-    (pickFrom(aic, fcs, keyCols), blendFrom(aic, fcs, keyCols),
-      scoreboardFrom(aic, keyCols), fcs)
+    val t0 = memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta, damp)
+    val t = t0.localCheckpoint(true)
+    // every returned frame derives from t now — the series checkpoint's
+    // blocks are dead weight, and persistentRdds would otherwise pin
+    // them for the JVM's life
+    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints(t0)
+    val keys = keyCols.map(col)
+    (pickFrom(t, keyCols), blendFromTable(t, keyCols), scoreboardFrom(t, keyCols),
+      exploded(t, keys :+ col("model")))
   }
 
-  /** Scoreboard tail over an already-built member score table. */
-  private def scoreboardFrom(aic: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val keys = keyCols.map(col)
-    val w = Window.partitionBy(keys: _*).orderBy(col("aic"), col("__mrank"))
-    aic.withColumn("rank", row_number().over(w).cast("long"))
-      .select(keys ++ Seq(col("model"), col("__k").as("k"), col("sse"),
+  /** Scoreboard tail: the scored rows ranked by (aic, member order). */
+  private def scoreboardFrom(t: DataFrame, keyCols: Seq[String]): DataFrame =
+    t.withColumn("rank", row_number().over(pickOrder(keyCols)).cast("long"))
+      .filter(col("aic").isNotNull)
+      .select(keyCols.map(col) ++ Seq(col("model"), col("__k").as("k"), col("sse"),
         col("neff").as("n_eff"), col("aic"), col("rank")): _*)
-  }
 
   /** Akaike-weight model averaging — the combination twin of the
     * argmin pick (Burnham & Anderson: w_i ∝ exp(−Δ_i/2) with
@@ -334,32 +354,45 @@ object Champion {
   def blendForecast(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                     valueCol: String, h: Int = 4, m: Int = 13,
                     alpha: Double = 0.3, beta: Double = 0.1,
-                    damp: Double = 0.9): DataFrame = {
-    val (aic, fcs, _) = memberTables(df, keyCols, ordCols, valueCol, h, m,
-      alpha, beta, damp)
-    blendFrom(aic, fcs, keyCols)
+                    damp: Double = 0.9): DataFrame =
+    blendFromTable(memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta,
+      damp), keyCols)
+
+  /** Akaike weight r(exp((AIC_min − AIC)/2)) of each scored row, AIC_min
+    * a window minimum over the series (a groupBy + join-back would
+    * consume the scores twice); unscored rows drop after the window. */
+  private def weighted(scores: DataFrame, keyCols: Seq[String]): DataFrame =
+    scores
+      .withColumn("__amin", min(col("aic")).over(Window.partitionBy(keyCols.map(col): _*)))
+      .filter(col("aic").isNotNull)
+      .withColumn("__w", r(exp((col("__amin") - col("aic")) / 2)))
+
+  /** Akaike-weight tail over a member table: weights, exploded forecasts,
+    * and the (series, step) average — all on the window's series-key
+    * partitioning. */
+  private def blendFromTable(t: DataFrame, keyCols: Seq[String]): DataFrame =
+    blendAgg(exploded(weighted(t, keyCols),
+      keyCols.map(col) :+ col("__w")), keyCols)
+
+  /** Akaike-weight tail over a long-form scoreboard (keys..., model,
+    * aic) and forecast union (keys..., model, step, forecast) — the
+    * extended order search's boards. */
+  private[seq] def blendFrom(board: DataFrame, fcs: DataFrame,
+                             keyCols: Seq[String]): DataFrame = {
+    val wts = weighted(board, keyCols)
+      .select(keyCols.map(col) ++ Seq(col("model"), col("__w")): _*)
+    blendAgg(fcs.join(wts, keyCols :+ "model"), keyCols)
   }
 
-  /** Akaike-weight tail over already-built member tables. */
-  private[seq] def blendFrom(aic: DataFrame, fcs: DataFrame,
-                        keyCols: Seq[String]): DataFrame = {
+  /** Σ w·f / Σ w per (series, step) as exact micro-int sums, with the
+    * member count. */
+  private def blendAgg(wf: DataFrame, keyCols: Seq[String]): DataFrame = {
     val keys = keyCols.map(col)
-    // Δ via a window-min, NOT a groupBy+join-back: the join shape
-    // consumes the scoreboard twice and re-executes all eight member
-    // score pipelines (measured +3s at sf0.1); the window keeps one
-    // consumer on the series-key partitioning the scoreboard already has
-    val wts = aic
-      .withColumn("__amin", min(col("aic")).over(Window.partitionBy(keys: _*)))
-      .withColumn("__w", r(exp((col("__amin") - col("aic")) / 2)))
-      .select(keys ++ Seq(col("model"), col("__w")): _*)
-    fcs.join(wts, keyCols :+ "model")
-      .groupBy(keys :+ col("step"): _*)
-      .agg(
-        (sum(graft.expr.RoundHalfUpExpr.column(col("__w") * lit(1e4)).cast("long") *
-          graft.expr.RoundHalfUpExpr.column(col("forecast") * lit(1e4)).cast("long"))
-          .cast("double") / lit(1e8)).as("__num"),
-        (sum(graft.expr.RoundHalfUpExpr.column(col("__w") * lit(1e4)).cast("long"))
-          .cast("double") / lit(1e4)).as("__den"),
+    val wL = graft.expr.RoundHalfUpExpr.column(col("__w") * lit(1e4)).cast("long")
+    val fL = graft.expr.RoundHalfUpExpr.column(col("forecast") * lit(1e4)).cast("long")
+    wf.groupBy(keys :+ col("step"): _*)
+      .agg((sum(wL * fL).cast("double") / lit(1e8)).as("__num"),
+        (sum(wL).cast("double") / lit(1e4)).as("__den"),
         count(lit(1)).as("n_members"))
       .select(keys ++ Seq(col("step"),
         r(col("__num") / col("__den")).as("blend_forecast"),

@@ -75,14 +75,27 @@ object SequentialKernels {
     * [[graft.expr.GridFitExpr]] — one compiled call per SERIES row.
     * The `__best` struct materializes in its own projection
     * (CollapseProject keeps multi-referenced non-cheap aliases), so
-    * the caller's field extraction never re-runs the fit. */
+    * the caller's field extraction never re-runs the fit. `__n` is the
+    * series' row count (the cell array's length), pruned unless read. */
   private def gridArrayFit(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                            valueCol: String, kind: String,
                            members: Seq[Seq[Double]]): DataFrame =
     packedSeries(df, keyCols, ordCols, valueCol)
       .withColumn("__best", graft.expr.GridFitExpr.column(
         col("__cells"), col("__mu"), vIdx = ordCols.size, kind, members))
+      .withColumn("__n", size(col("__cells")).cast("long"))
       .drop("__cells")
+
+  /** Default CLS grids of the MA(1) and ARMA(1,1) fits. */
+  private val Ma1Grid = Seq(-0.8, -0.4, 0.0, 0.4, 0.8)
+  private val Arma11PhiGrid = Seq(-0.5, 0.0, 0.5, 0.9)
+  private val Arma11ThetaGrid = Seq(-0.4, 0.0, 0.4)
+
+  /** Appends `__n`, the series' row count, to a one-row-per-series fit
+    * (the fold forms' route; the array forms read it off the cells). */
+  private def withSeriesCount(fit: DataFrame, df: DataFrame,
+                              keyCols: Seq[String]): DataFrame =
+    fit.join(df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__n")), keyCols)
 
   /** Generic keyed streaming fold: emits input row + extra double
     * columns computed by `step`, which receives the row's value and the
@@ -384,8 +397,7 @@ object SequentialKernels {
     * engines. Returns one row per series: ma1_theta, ma1_sse.
     */
   def fitMa1(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-             valueCol: String,
-             grid: Seq[Double] = Seq(-0.8, -0.4, 0.0, 0.4, 0.8)): DataFrame =
+             valueCol: String, grid: Seq[Double] = Ma1Grid): DataFrame =
     fitMa1Full(df, keyCols, ordCols, valueCol, grid)
       .select(keyCols.map(col) ++ Seq(col("ma1_theta"), col("ma1_sse")): _*)
 
@@ -395,12 +407,19 @@ object SequentialKernels {
     * consumes (f_1 = μ + θ·ε_n, f_{s≥2} = μ). Same single vectorized
     * fold, one extra emitted double per grid point. */
   def fitMa1Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                 valueCol: String,
-                 grid: Seq[Double] = Seq(-0.8, -0.4, 0.0, 0.4, 0.8)): DataFrame = {
+                 valueCol: String, grid: Seq[Double] = Ma1Grid): DataFrame = {
     require(grid.nonEmpty, "theta grid must be non-empty")
     if (arrayFits) fitMa1FullArray(df, keyCols, ordCols, valueCol, grid)
     else fitMa1FullFold(df, keyCols, ordCols, valueCol, grid)
   }
+
+  /** [[fitMa1Full]] on the default grid plus `__n`, the series' row
+    * count — the champion family's n_eff without a second pass. */
+  private[seq] def fitMa1FullCounted(df: DataFrame, keyCols: Seq[String],
+                                     ordCols: Seq[Column], valueCol: String): DataFrame =
+    if (arrayFits) fitMa1FullArray(df, keyCols, ordCols, valueCol, Ma1Grid, counted = true)
+    else withSeriesCount(fitMa1FullFold(df, keyCols, ordCols, valueCol, Ma1Grid),
+      df, keyCols)
 
   /** Array form of [[fitMa1Full]] ([[ArrayFitsConf]]): per θ, state
     * (ε, SSE) starts at (0, 0) and each non-null observation applies
@@ -408,7 +427,7 @@ object SequentialKernels {
     * — the fold form's exact chain. */
   private def fitMa1FullArray(df: DataFrame, keyCols: Seq[String],
                               ordCols: Seq[Column], valueCol: String,
-                              grid: Seq[Double]): DataFrame = {
+                              grid: Seq[Double], counted: Boolean = false): DataFrame = {
     val keys = keyCols.map(col)
     val fitted = gridArrayFit(df, keyCols, ordCols, valueCol,
       "ma1", grid.map(Seq(_)))
@@ -416,7 +435,8 @@ object SequentialKernels {
     fitted.select(keys ++ Seq(b.getField("theta").as("ma1_theta"),
       graft.functions.Funcs.r(b.getField("sse")).as("ma1_sse"),
       col("__mu").as("ma1_mu"),
-      b.getField("e").as("ma1_eps_last")): _*)
+      b.getField("e").as("ma1_eps_last")) ++
+      (if (counted) Seq(col("__n")) else Nil): _*)
   }
 
   /** Pre-r18 streaming-fold form of [[fitMa1Full]] — the
@@ -629,8 +649,8 @@ object SequentialKernels {
     * Returns one row per series: arma_phi, arma_theta, arma_sse. */
   def fitArma11(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                 valueCol: String,
-                phiGrid: Seq[Double] = Seq(-0.5, 0.0, 0.5, 0.9),
-                thetaGrid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame =
+                phiGrid: Seq[Double] = Arma11PhiGrid,
+                thetaGrid: Seq[Double] = Arma11ThetaGrid): DataFrame =
     fitArma11Full(df, keyCols, ordCols, valueCol, phiGrid, thetaGrid)
       .select(keyCols.map(col) ++ Seq(col("arma_phi"), col("arma_theta"),
         col("arma_sse")): _*)
@@ -644,13 +664,22 @@ object SequentialKernels {
     * extra double column per grid pair and no new exchange. */
   def fitArma11Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                     valueCol: String,
-                    phiGrid: Seq[Double] = Seq(-0.5, 0.0, 0.5, 0.9),
-                    thetaGrid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame = {
+                    phiGrid: Seq[Double] = Arma11PhiGrid,
+                    thetaGrid: Seq[Double] = Arma11ThetaGrid): DataFrame = {
     require(phiGrid.nonEmpty && thetaGrid.nonEmpty, "grids must be non-empty")
     if (arrayFits) fitArma11FullArray(df, keyCols, ordCols, valueCol,
       phiGrid, thetaGrid)
     else fitArma11FullFold(df, keyCols, ordCols, valueCol, phiGrid, thetaGrid)
   }
+
+  /** [[fitArma11Full]] on the default grids plus `__n`, the series' row
+    * count — the champion family's n_eff without a second pass. */
+  private[seq] def fitArma11FullCounted(df: DataFrame, keyCols: Seq[String],
+                                        ordCols: Seq[Column], valueCol: String): DataFrame =
+    if (arrayFits) fitArma11FullArray(df, keyCols, ordCols, valueCol,
+      Arma11PhiGrid, Arma11ThetaGrid, counted = true)
+    else withSeriesCount(fitArma11FullFold(df, keyCols, ordCols, valueCol,
+      Arma11PhiGrid, Arma11ThetaGrid), df, keyCols)
 
   /** Array form of [[fitArma11Full]] ([[ArrayFitsConf]]): per (φ, θ),
     * state (xcₚ, ε, SSE) — the first non-null observation only seeds
@@ -661,8 +690,8 @@ object SequentialKernels {
     * exactly like the fold's absent state. */
   private def fitArma11FullArray(df: DataFrame, keyCols: Seq[String],
                                  ordCols: Seq[Column], valueCol: String,
-                                 phiGrid: Seq[Double],
-                                 thetaGrid: Seq[Double]): DataFrame = {
+                                 phiGrid: Seq[Double], thetaGrid: Seq[Double],
+                                 counted: Boolean = false): DataFrame = {
     val pairs = for (p <- phiGrid; t <- thetaGrid) yield Seq(p, t)
     val keys = keyCols.map(col)
     val fitted = gridArrayFit(df, keyCols, ordCols, valueCol, "arma11", pairs)
@@ -672,7 +701,8 @@ object SequentialKernels {
       graft.functions.Funcs.r(b.getField("sse")).as("arma_sse"),
       col("__mu").as("arma_mu"),
       b.getField("e").as("arma_eps_last"),
-      b.getField("xcn").as("arma_xc_last")): _*)
+      b.getField("xcn").as("arma_xc_last")) ++
+      (if (counted) Seq(col("__n")) else Nil): _*)
   }
 
   /** Pre-r18 streaming-fold form of [[fitArma11Full]] — the
@@ -1428,12 +1458,18 @@ object SequentialKernels {
       .filter(col("holt_trend").isNotNull)
       .select(key ++ Seq(r(col("holt_level")).as("__l"),
         r(col("holt_trend")).as("__b")): _*)
-    val steps = dampSums(phi, h).zipWithIndex.map { case (d, i) =>
-      struct(lit(i + 1L).as("step"),
-        r(col("__l") + col("__b") * lit(d)).as("holt_forecast"))
+    val steps = dampedSteps(col("__l"), col("__b"), phi, h).zipWithIndex.map {
+      case (f, i) => struct(lit(i + 1L).as("step"), f.as("holt_forecast"))
     }
     last.select(key :+ explode(array(steps: _*)).as("__s"): _*)
       .select(key ++ Seq(col("__s.step"), col("__s.holt_forecast")): _*)
+  }
+
+  /** The damped extrapolation steps r(l + b·Σ_{i≤s} φⁱ), s = 1..h, from
+    * an already-rounded last level `l` and trend `b`. */
+  private[seq] def dampedSteps(l: Column, b: Column, phi: Double, h: Int): Seq[Column] = {
+    import graft.functions.Funcs.r
+    dampSums(phi, h).map(d => r(l + b * lit(d)))
   }
 
   /** W10++ — additive Holt-Winters h-step forecast: from each series'

@@ -75,13 +75,19 @@ object Theta {
       .filter(col("__rd") === 1)
     val steps = (1 to h).map { s =>
       struct(lit(s.toLong).as("step"),
-        r(lit(0.5) * (col("theta_a") + col("theta_b") * (col("__t") + lit(s.toDouble))) +
-          lit(0.5) * col("__ses")).as("theta_forecast"))
+        forecastStep(col("theta_a"), col("theta_b"), col("__t"), col("__ses"), s)
+          .as("theta_forecast"))
     }
     last.select(key :+ explode(array(steps: _*)).as("__p"): _*)
       .select(key ++ Seq(col("__p.step").as("step"),
         col("__p.theta_forecast").as("theta_forecast")): _*)
   }
+
+  /** Step `s` of the forecast from a series' trend coefficients, its
+    * last index t_n and last SES state: r(½·(a + b·(t_n + s)) + ½·ses_n). */
+  private[seq] def forecastStep(a: Column, b: Column, tn: Column, ses: Column,
+                                s: Int): Column =
+    r(lit(0.5) * (a + b * (tn + lit(s.toDouble))) + lit(0.5) * ses)
 
   /** Adds `theta_fitted` (plus the a/b trend coefficients) to the
     * series frame. `ord` must be unique per key. */
@@ -93,7 +99,7 @@ object Theta {
   /** The fit with its working columns (__t index, __l trend line, __z
     * theta2 value, __ses smoothed state) still attached — the forecast
     * reads the last-row state from here. */
-  private def fittedFull(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
+  private[seq] def fittedFull(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
                          valueCol: String, alpha: Double): DataFrame = {
     val key = keyCols.map(col)
     val w = Window.partitionBy(key: _*).orderBy(ord: _*)

@@ -1,13 +1,20 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import graft.seq.Champion
 
 /** Champion model-selection contracts (the auto-ARIMA pick, reference
   * src/models/arima_temporal.py:277-361): eight series engineered so
   * that EACH family member dominates the AIC scoreboard on exactly one
   * of them, plus shape and partitioning-invariance contracts on the
-  * winner's forecast output. */
+  * winner's forecast output, row-for-row parity of every consumer with
+  * [[ChampionReference]] (the two-pipeline member form it replaced) and
+  * the executed plan's shape. */
 class ChampionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -201,5 +208,128 @@ class ChampionSpec extends SparkSpec {
       assert(rows.sortBy(_._4).map(_._3).toSeq ==
         rows.map(_._3).sorted.toSeq)
     }
+  }
+
+  // ---- parity with the replaced two-pipeline member form
+
+  /** Series of length 1, 2, 3, 13, 14 and 30 (noise around a level, so
+    * members enter the scoreboard one length threshold at a time), an
+    * all-zero series, and two length-2 series whose mean_naive and
+    * theta AICs tie exactly on the 4dp grid (SSEs c² and 2c² with
+    * ln(c²) within 3e-5 of 2: both AICs round to 6.0000). */
+  private def edgeSeries: Seq[(String, Int, Double)] = {
+    val lens = Seq(1, 2, 3, 13, 14, 30).flatMap { n =>
+      (1 to n).map(t => (s"len$n", t, r4(50.0 + 0.5 * t + 4.0 * noise(n * 1000 + t))))
+    }
+    val zeros = (1 to 20).map(t => ("zeros", t, 0.0))
+    val ties = Seq(("tie_a", 1, 10.0), ("tie_a", 2, 15.4366),
+      ("tie_b", 1, 10.0), ("tie_b", 2, 15.4364))
+    lens ++ zeros ++ ties
+  }
+
+  private def rowsOf(df: DataFrame): (Seq[String], Seq[String]) =
+    (df.columns.toSeq, df.collect().map(_.toString).sorted.toSeq)
+
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val (gc, gr) = rowsOf(got)
+    val (wc, wr) = rowsOf(want)
+    assert(gc == wc, s"$what columns")
+    assert(gr.nonEmpty, s"$what is empty")
+    assert(gr == wr, s"$what rows differ:\n  got  ${gr.diff(wr)}\n  want ${wr.diff(gr)}")
+  }
+
+  private val parityInputs = Seq("planted" -> (() => planted), "edges" -> (() => edgeSeries))
+
+  test("the edge frame holds an exact AIC tie broken by member order") {
+    val sb = Champion.scoreboard(edgeSeries.toDF("key", "t", "v"), Seq("key"),
+      Seq(col("t")), "v", h = 4, m = 13)
+      .filter(col("key").startsWith("tie"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(5), r.getLong(6)))
+    Seq("tie_a", "tie_b").foreach { k =>
+      val byRank = sb.filter(_._1 == k).sortBy(_._4)
+      assert(byRank(0)._3 == byRank(1)._3, s"$k: ${byRank.toSeq}")
+      assert(byRank(0)._2 == "mean_naive" && byRank(1)._2 == "theta", k)
+    }
+  }
+
+  for ((name, rows) <- parityInputs; h <- Seq(4, 5)) {
+    test(s"championForecast, blendForecast and scoreboard match the reference ($name, h=$h)") {
+      val df = rows().toDF("key", "t", "v")
+      def args[T](f: (DataFrame, Seq[String], Seq[org.apache.spark.sql.Column], String,
+        Int, Int) => T): T = f(df, Seq("key"), Seq(col("t")), "v", h, 13)
+      def check(got: DataFrame, want: DataFrame, what: String): Unit =
+        try assertSameRows(got, want, what)
+        finally Seq(got, want).foreach(org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints)
+      check(args(Champion.championForecast(_, _, _, _, _, _)),
+        args(ChampionReference.championForecast(_, _, _, _, _, _)), "championForecast")
+      check(args(Champion.blendForecast(_, _, _, _, _, _)),
+        args(ChampionReference.blendForecast(_, _, _, _, _, _)), "blendForecast")
+      check(args(Champion.scoreboard(_, _, _, _, _, _)),
+        args(ChampionReference.scoreboard(_, _, _, _, _, _)), "scoreboard")
+    }
+
+    test(s"all four pickBlendScoreFcs frames match the reference ($name, h=$h)") {
+      val df = rows().toDF("key", "t", "v")
+      val got = Champion.pickBlendScoreFcs(df, Seq("key"), Seq(col("t")), "v", h, 13)
+      val want = ChampionReference.pickBlendScoreFcs(df, Seq("key"), Seq(col("t")), "v", h, 13)
+      try {
+        assertSameRows(got._1, want._1, "pick")
+        assertSameRows(got._2, want._2, "blend")
+        assertSameRows(got._3, want._3, "scoreboard")
+        assertSameRows(got._4, want._4, "forecast union")
+      } finally Seq(got._1, want._1)
+        .foreach(org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints)
+    }
+  }
+
+  test("parity holds under the streaming-fold grid fits (arrayFits = false)") {
+    val key = graft.seq.SequentialKernels.ArrayFitsConf
+    spark.conf.set(key, "false")
+    try {
+      val df = edgeSeries.toDF("key", "t", "v")
+      val got = Champion.pickBlendScoreFcs(df, Seq("key"), Seq(col("t")), "v", 5, 13)
+      val want = ChampionReference.pickBlendScoreFcs(df, Seq("key"), Seq(col("t")), "v", 5, 13)
+      try {
+        assertSameRows(got._1, want._1, "pick")
+        assertSameRows(got._3, want._3, "scoreboard")
+        assertSameRows(got._4, want._4, "forecast union")
+      } finally Seq(got._1, want._1)
+        .foreach(org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints)
+    } finally spark.conf.unset(key)
+  }
+
+  // ---- plan shape
+
+  /** Every node of an executed (adaptive) plan, each stage once: a
+    * reused exchange is counted as itself, not as a second copy of the
+    * subtree it reuses. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case r: ReusedExchangeExec => Seq(r)
+    case other => other +: other.children.flatMap(planNodes)
+  }
+
+  test("plan shape: each member kernel runs once, nothing is keyed on the member") {
+    val fc = Champion.championForecast(edgeSeries.toDF("key", "t", "v"), Seq("key"),
+      Seq(col("t")), "v", h = 5, m = 13)
+    fc.collect()
+    val nodes = planNodes(fc.queryExecution.executedPlan)
+    def kernelCount(name: String): Int = nodes.map(_.expressions
+      .map(_.collect { case e if e.prettyName == name => e }.size).sum).sum
+    Seq("graft_grid_fit_ma1", "graft_grid_fit_arma11", "graft_holt", "graft_ewma")
+      .foreach(k => assert(kernelCount(k) == 1, s"$k appears ${kernelCount(k)} times"))
+    def onModel(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Boolean =
+      es.exists(_.references.exists(_.name == "model"))
+    val keyedOnModel = nodes.collect {
+      case x: ShuffleExchangeExec if onModel(x.outputPartitioning match {
+        case hp: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning => hp.expressions
+        case _ => Nil
+      }) => x
+      case j: SortMergeJoinExec if onModel(j.leftKeys) => j
+      case j: ShuffledHashJoinExec if onModel(j.leftKeys) => j
+      case j: BroadcastHashJoinExec if onModel(j.leftKeys) => j
+    }
+    assert(keyedOnModel.isEmpty, keyedOnModel.mkString("\n"))
   }
 }

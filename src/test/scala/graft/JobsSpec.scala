@@ -100,6 +100,17 @@ class JobsSpec extends SparkSpec {
     } finally out.unpersist()
   }
 
+  test("championSubmission releases every checkpoint it pins") {
+    // the series checkpoint and the materialized post-pick grid must not
+    // outlive the call: persistentRdds holds strong references, so a
+    // leaked block set grows the heap with every submission
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val tmp = java.nio.file.Files.createTempDirectory("graft_champ_rel").toString
+    graft.app.Jobs.championSubmission(spark, dir, tmp)
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("diagnosticsRun: one alert frame with drift, quality and health legs") {
     val out = graft.app.Jobs.diagnosticsRun(spark, dir).cache()
     try {
