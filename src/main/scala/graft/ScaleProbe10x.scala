@@ -28,10 +28,13 @@ import org.apache.spark.sql.functions._
   * Everything is computed from the parquet inputs within the run —
   * the synthesized 10× directory is rebuilt from `$SPARK_GRAFT_SF_DIR`
   * every invocation and carries no precomputed results.
+  *
+  * Usage: `runMain graft.ScaleProbe10x [workDir] [query...]` — extra
+  * registered-query names after `workDir` join the probed rows.
   */
 object ScaleProbe10x {
 
-  private val probes = Seq(
+  private val headline = Seq(
     "q110_feature_store", "q283_als_portable", "q288_quality_classifier",
     "q138_curate", "q318_theil_sen", "q21_cooccurrence",
     "q285_kmv_distinct", "q272_validation", "q312_boilerplate", "q147_bpe",
@@ -43,6 +46,10 @@ object ScaleProbe10x {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = if (args.length > 0) args(0) else "target/scaleprobe10x_driver"
+    val extra = args.drop(1).toSeq
+    val unknown = extra.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown registered queries: ${unknown.mkString(", ")}")
+    val probes = headline ++ extra
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

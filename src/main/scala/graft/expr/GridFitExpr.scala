@@ -41,8 +41,9 @@ import org.apache.spark.sql.types._
   * `java.lang.Double.compare` — NaN sorts largest and equals itself,
   * matching the fold form's window `ORDER BY sse, params…` under
   * Spark's NaN semantics. (`Double.compare` orders −0.0 < 0.0 where
-  * Spark normalizes them equal; SSE is a sum of squares and the params
-  * are engine-literal grids, so neither side can produce −0.0.)
+  * Spark compares them equal; SSE is a sum of squares, and a −0.0 grid
+  * param is normalized to 0.0 in `memberArr`, so the pick and the
+  * reported winner never see −0.0.)
   *
   * SequentialKernelsSpec pins every kind against its fold twin
   * bit-for-bit on an adversarial frame.
@@ -52,6 +53,8 @@ case class GridFitExpr(cells: Expression, mu: Expression, vIdx: Int,
   extends Expression with CodegenFallback {
 
   require(members.nonEmpty, "grid must be non-empty")
+  require(members.forall(_.length == GridFitExpr.outType(kind).fieldIndex("sse")),
+    s"every $kind grid member needs one value per parameter")
 
   override def prettyName: String = s"graft_grid_fit_$kind"
   override def children: Seq[Expression] = Seq(cells, mu)
@@ -68,7 +71,7 @@ case class GridFitExpr(cells: Expression, mu: Expression, vIdx: Int,
   }
 
   @transient private lazy val memberArr: Array[Array[Double]] =
-    members.map(_.toArray).toArray
+    members.map(_.map(v => if (v == 0.0) 0.0 else v).toArray).toArray
   @transient private lazy val kindId: Int = GridFitExpr.kindId(kind)
   @transient private lazy val cellWidth: Int =
     cells.dataType.asInstanceOf[ArrayType]

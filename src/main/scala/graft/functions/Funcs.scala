@@ -82,8 +82,10 @@ object Funcs {
     * flips ONE conf; no operator call sites change, and the two modes
     * are bit-identical wherever the guard admits (FuncsFallbackSpec
     * pins both the in-bound equality and the NaN/±Inf edge cases).
-    * Read at COLUMN-CONSTRUCTION time (driver-side): set it before the
-    * query is built — an already-built plan keeps its accumulators. */
+    * Read at COLUMN-CONSTRUCTION time (driver-side) from the ACTIVE
+    * session, since a Column has no DataFrame to take a session from:
+    * set it before the query is built — an already-built plan keeps
+    * its accumulators. */
   val ExactLongSumsConf = "spark.graft.exactLongSums"
 
   private def exactLongs: Boolean = org.apache.spark.sql.SparkSession.active
@@ -267,7 +269,8 @@ object Funcs {
 
   /** Percentile with an exactness switch. Callers that need a specific
     * mode pass Some(...); the default (None) consults
-    * [[ExactPercentilesConf]] on the active session. */
+    * [[ExactPercentilesConf]] on the ACTIVE session when the Column is
+    * built (a Column has no DataFrame, so no session of its own). */
   def pct(c: Column, p: Double, exact: Option[Boolean] = None): Column = {
     val ex = exact.getOrElse(org.apache.spark.sql.SparkSession.active
       .conf.get(ExactPercentilesConf, "true").toBoolean)

@@ -69,8 +69,7 @@ object QuantileReg {
     require(taus.nonEmpty && taus.forall(t => t > 0 && t < 1),
       "quantiles must lie in (0, 1)")
     require(iters >= 1, "need at least one reweighted round")
-    val singlePass = org.apache.spark.sql.SparkSession.active
-      .conf.get(SinglePassConf, "true").toBoolean
+    val singlePass = df.sparkSession.conf.get(SinglePassConf, "true").toBoolean
     if (singlePass) fitSinglePass(df, groupCols, x, y, taus, iters, eps)
     else fitIterative(df, groupCols, x, y, taus, iters, eps)
   }

@@ -50,8 +50,10 @@ object SequentialKernels {
     * partitions. */
   val ArrayFitsConf = "spark.graft.arrayFits"
 
-  private def arrayFits: Boolean = org.apache.spark.sql.SparkSession.active
-    .conf.get(ArrayFitsConf, "true").toBoolean
+  /** Read from the input frame's own session when the fit is built:
+    * setting the conf after building the DataFrame has no effect. */
+  private def arrayFits(df: DataFrame): Boolean =
+    df.sparkSession.conf.get(ArrayFitsConf, "true").toBoolean
 
   /** Shared packed-series stage of the array-form grid fits: one hash
     * aggregate per series yields the exact micro-int mean (the
@@ -409,7 +411,7 @@ object SequentialKernels {
   def fitMa1Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                  valueCol: String, grid: Seq[Double] = Ma1Grid): DataFrame = {
     require(grid.nonEmpty, "theta grid must be non-empty")
-    if (arrayFits) fitMa1FullArray(df, keyCols, ordCols, valueCol, grid)
+    if (arrayFits(df)) fitMa1FullArray(df, keyCols, ordCols, valueCol, grid)
     else fitMa1FullFold(df, keyCols, ordCols, valueCol, grid)
   }
 
@@ -417,7 +419,7 @@ object SequentialKernels {
     * count — the champion family's n_eff without a second pass. */
   private[seq] def fitMa1FullCounted(df: DataFrame, keyCols: Seq[String],
                                      ordCols: Seq[Column], valueCol: String): DataFrame =
-    if (arrayFits) fitMa1FullArray(df, keyCols, ordCols, valueCol, Ma1Grid, counted = true)
+    if (arrayFits(df)) fitMa1FullArray(df, keyCols, ordCols, valueCol, Ma1Grid, counted = true)
     else withSeriesCount(fitMa1FullFold(df, keyCols, ordCols, valueCol, Ma1Grid),
       df, keyCols)
 
@@ -510,7 +512,7 @@ object SequentialKernels {
                  valueCol: String,
                  grid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame = {
     require(grid.nonEmpty, "theta grid must be non-empty")
-    if (arrayFits) fitMa3FullArray(df, keyCols, ordCols, valueCol, grid)
+    if (arrayFits(df)) fitMa3FullArray(df, keyCols, ordCols, valueCol, grid)
     else fitMa3FullFold(df, keyCols, ordCols, valueCol, grid)
   }
 
@@ -667,7 +669,7 @@ object SequentialKernels {
                     phiGrid: Seq[Double] = Arma11PhiGrid,
                     thetaGrid: Seq[Double] = Arma11ThetaGrid): DataFrame = {
     require(phiGrid.nonEmpty && thetaGrid.nonEmpty, "grids must be non-empty")
-    if (arrayFits) fitArma11FullArray(df, keyCols, ordCols, valueCol,
+    if (arrayFits(df)) fitArma11FullArray(df, keyCols, ordCols, valueCol,
       phiGrid, thetaGrid)
     else fitArma11FullFold(df, keyCols, ordCols, valueCol, phiGrid, thetaGrid)
   }
@@ -676,7 +678,7 @@ object SequentialKernels {
     * count — the champion family's n_eff without a second pass. */
   private[seq] def fitArma11FullCounted(df: DataFrame, keyCols: Seq[String],
                                         ordCols: Seq[Column], valueCol: String): DataFrame =
-    if (arrayFits) fitArma11FullArray(df, keyCols, ordCols, valueCol,
+    if (arrayFits(df)) fitArma11FullArray(df, keyCols, ordCols, valueCol,
       Arma11PhiGrid, Arma11ThetaGrid, counted = true)
     else withSeriesCount(fitArma11FullFold(df, keyCols, ordCols, valueCol,
       Arma11PhiGrid, Arma11ThetaGrid), df, keyCols)
@@ -870,7 +872,7 @@ object SequentialKernels {
                     thetaGrid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame = {
     require(phi1Grid.nonEmpty && phi2Grid.nonEmpty && thetaGrid.nonEmpty,
       "grids must be non-empty")
-    if (arrayFits) fitArma21FullArray(df, keyCols, ordCols, valueCol,
+    if (arrayFits(df)) fitArma21FullArray(df, keyCols, ordCols, valueCol,
       phi1Grid, phi2Grid, thetaGrid)
     else fitArma21FullFold(df, keyCols, ordCols, valueCol,
       phi1Grid, phi2Grid, thetaGrid)
@@ -1106,7 +1108,7 @@ object SequentialKernels {
                     theta2Grid: Seq[Double] = Seq(-0.3, 0.0, 0.3)): DataFrame = {
     require(phi1Grid.nonEmpty && phi2Grid.nonEmpty &&
       theta1Grid.nonEmpty && theta2Grid.nonEmpty, "grids must be non-empty")
-    if (arrayFits) fitArma22FullArray(df, keyCols, ordCols, valueCol,
+    if (arrayFits(df)) fitArma22FullArray(df, keyCols, ordCols, valueCol,
       phi1Grid, phi2Grid, theta1Grid, theta2Grid)
     else fitArma22FullFold(df, keyCols, ordCols, valueCol,
       phi1Grid, phi2Grid, theta1Grid, theta2Grid)

@@ -11,12 +11,16 @@ import org.apache.spark.sql.SparkSession
   *    exchange/broadcast/scan/sort/single-partition counts of the
   *    executed plan (all queries when none are named).
   *
-  * Usage: `runMain graft.tools.PlanAudit [--counts] [sfDir] [query...]`
+  * `--conf=key=value` sets a session conf before the plans are built.
+  *
+  * Usage: `runMain graft.tools.PlanAudit [--counts] [--conf=key=value ...] [sfDir] [query...]`
   */
 object PlanAudit {
+  val Usage = "PlanAudit [--counts] [--conf=key=value ...] [sfDir] [query...]"
+
   def main(args: Array[String]): Unit = {
     val counts = args.contains("--counts")
-    val rest = args.filterNot(_ == "--counts").toSeq
+    val (confs, rest) = QTime.splitConfs(args.filterNot(_ == "--counts").toSeq, Usage)
     // a leading registered-query name means the sfDir was omitted — use
     // the default dir instead of treating the query name as a path
     val (dirArg, nameArgs) = rest match {
@@ -31,7 +35,7 @@ object PlanAudit {
     dirArg.foreach { d =>
       if (!new java.io.File(d).isDirectory) {
         System.err.println(s"PlanAudit: '$d' is neither a registered query " +
-          "name nor an existing sfDir. Usage: PlanAudit [--counts] [sfDir] [query...]")
+          s"name nor an existing sfDir. Usage: $Usage")
         sys.exit(2)
       }
     }
@@ -45,11 +49,13 @@ object PlanAudit {
       else if (counts) graft.SparkEntry.queries.keys.toSeq.sorted
       else Seq("q22_weekly_aggregate", "q23_enrich_join", "q40_rolling_stats",
         "q41_rolling_slope", "q21_cooccurrence", "q68_ann_brute", "q69_ann_lsh")
-    val spark = SparkSession.builder().master("local[4]")
+    val builder = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+    confs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, dir)

@@ -11,10 +11,12 @@ import org.apache.spark.sql.execution.SparkStrategy
   *  - building a `DataFrame` from a rewritten `LogicalPlan`
   *    (`Dataset.ofRows`), for per-plan scoped rule application;
   *  - appending to a session's experimental optimizer rules, for
-  *    session-wide conf-gated installation.
+  *    session-wide conf-gated installation;
+  *  - reading Spark's own status store (`private[spark]`) for the
+  *    per-phase job and stage counters `graft.tools.QTime` prints.
   *
   * Everything else in graft stays on the public DataFrame/Catalyst
-  * API; keep this file to these two hooks.
+  * API; keep this file to these seams.
   */
 object GraftSqlBridge {
 
@@ -64,6 +66,21 @@ object GraftSqlBridge {
         catch { case _: Throwable => () }
       case _ => ()
     }
+
+  /** Every job in Spark's own status store, read once the listener bus
+    * has delivered every posted event, so a job that just finished is
+    * present with its final counts. */
+  def statusJobs(spark: SparkSession): Seq[org.apache.spark.status.api.v1.JobData] = {
+    val sc = spark.sparkContext
+    sc.listenerBus.waitUntilEmpty()
+    sc.statusStore.jobsList(java.util.Collections.emptyList())
+  }
+
+  /** Every recorded attempt of the given stages from the status store
+    * (skipped stages included, with status SKIPPED). */
+  def stageAttempts(spark: SparkSession, stageIds: Seq[Int]):
+      Seq[org.apache.spark.status.api.v1.StageData] =
+    stageIds.flatMap(spark.sparkContext.statusStore.stageData(_))
 
   /** Test probe: apply a session-extensions installer to a fresh
     * `SparkSessionExtensions` and report what it would inject at

@@ -382,19 +382,22 @@ class SequentialKernelsSpec extends SparkSpec {
     val df = rows.map { case (kk, t, v) =>
       (kk, t, v.map(java.lang.Double.valueOf).orNull) }.toDF("k", "t", "v")
     val k = Seq("k"); val o = Seq(col("t"))
-    def normalized(out: org.apache.spark.sql.DataFrame): (Seq[(String, String)], Seq[Seq[Any]]) =
+    def normalized(out: org.apache.spark.sql.DataFrame,
+                   signedZero: Boolean): (Seq[(String, String)], Seq[Seq[Any]]) =
       (out.schema.fields.map(f => (f.name, f.dataType.sql)).toSeq,
         out.orderBy("k").collect().map(_.toSeq.map {
           // Scala == on boxed doubles is IEEE (NaN != NaN): compare the
-          // BIT pattern instead — strictly stronger (it also splits ±0.0)
-          case dd: Double => java.lang.Double.doubleToLongBits(dd)
+          // BIT pattern instead — strictly stronger (it also splits ±0.0
+          // unless signedZero is off, where −0.0 + 0.0 folds it to 0.0)
+          case dd: Double => java.lang.Double.doubleToLongBits(
+            if (signedZero) dd else dd + 0.0)
           case other => other
         }).toSeq)
-    def both(build: => org.apache.spark.sql.DataFrame): Unit = {
-      val array = normalized(build) // default: array form
+    def both(build: => org.apache.spark.sql.DataFrame, signedZero: Boolean = true): Unit = {
+      val array = normalized(build, signedZero) // default: array form
       val prev = spark.conf.getOption(SequentialKernels.ArrayFitsConf)
       spark.conf.set(SequentialKernels.ArrayFitsConf, "false")
-      val fold = try normalized(build) finally prev match {
+      val fold = try normalized(build, signedZero) finally prev match {
         case Some(v) => spark.conf.set(SequentialKernels.ArrayFitsConf, v)
         case None    => spark.conf.unset(SequentialKernels.ArrayFitsConf)
       }
@@ -407,5 +410,32 @@ class SequentialKernelsSpec extends SparkSpec {
     both(SequentialKernels.fitArma11Full(df, k, o, "v"))
     both(SequentialKernels.fitArma21Full(df, k, o, "v"))
     both(SequentialKernels.fitArma22Full(df, k, o, "v"))
+    // a public grid holding −0.0 next to 0.0: the fold's window orders
+    // them equal; the array form normalizes −0.0 to 0.0, so it picks the
+    // same winner up to the sign of zero and never reports −0.0
+    val zeroGrid = Seq(0.5, -0.0, 0.0)
+    both(SequentialKernels.fitMa1Full(df, k, o, "v", zeroGrid), signedZero = false)
+    val thetas = SequentialKernels.fitMa1Full(df, k, o, "v", zeroGrid)
+      .collect().map(_.getAs[Double]("ma1_theta"))
+    assert(thetas.contains(0.0))
+    assert(!thetas.exists(t => 1 / t == Double.NegativeInfinity))
+    // a member whose arity does not match the kind fails at construction
+    val e = intercept[IllegalArgumentException](graft.expr.GridFitExpr.column(
+      col("c"), col("mu"), 1, "arma21", Seq(Seq(0.1, 0.2, 0.3), Seq(0.1, 0.2))))
+    assert(e.getMessage.contains("arma21"))
+  }
+
+  test("arrayFits is read from the input frame's session, not the active one") {
+    val other = spark.newSession()
+    other.conf.set(SequentialKernels.ArrayFitsConf, "false")
+    val rows = Seq(("a", 1, 1.0), ("a", 2, 3.0), ("a", 3, 2.0))
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    assert(org.apache.spark.sql.SparkSession.active
+      .conf.get(SequentialKernels.ArrayFitsConf, "true") == "true")
+    def plan(df: org.apache.spark.sql.DataFrame) = SequentialKernels
+      .fitMa1Full(df.toDF("k", "t", "v"), Seq("k"), Seq(col("t")), "v")
+      .queryExecution.executedPlan.toString
+    assert(!plan(other.createDataFrame(rows)).contains("graft_grid_fit_"))
+    assert(plan(spark.createDataFrame(rows)).contains("graft_grid_fit_"))
   }
 }
