@@ -42,13 +42,38 @@ import graft.functions.Funcs.{microMean, r}
   * grid that difference is dead except on an exact .00005 knife edge).
   *
   * A member enters a series' scoreboard only when its fit is genuinely
-  * identified there (snaive needs n > m; ar2 needs ≥ 3 regression
-  * rows; ari ≥ 3 diff-regression rows; arma11 needs n ≥ 3; ma1/theta
-  * n ≥ 2; holt_damped n ≥ 3), which also guarantees the winner's
-  * forecaster emits rows. Series of length 1 still forecast: the mean
-  * member is always eligible — the reference's fallback-to-simple
-  * behavior (arima_temporal.py error_action='ignore' degrades to the
-  * simplest candidate).
+  * identified there, which also guarantees the winner's forecaster
+  * emits rows. Each member's `scored` / aic condition fixes the
+  * shortest series n it can ever score:
+  *
+  *   member        min n  why
+  *   ------------  -----  ------------------------------------------
+  *   mean_naive    1      always scored
+  *   snaive        m + 1  ≥ 1 lag-m residual
+  *   ar2           5      ≥ 3 regression rows (n − 2)
+  *   ari           6      ≥ 3 diff-regression rows (n − 3)
+  *   ma1           2      n ≥ 2
+  *   arma11        3      n ≥ 3
+  *   theta         2      ≥ 1 honest one-step prediction
+  *   holt_damped   3      ≥ 1 residual once the trend exists (t ≥ 3)
+  *
+  * Series of length 1 still forecast: the mean member is always
+  * eligible — the reference's fallback-to-simple behavior
+  * (arima_temporal.py error_action='ignore' degrades to the simplest
+  * candidate, and a candidate it cannot identify is skipped).
+  *
+  * Pruning: the one-plan consumers (championForecast, blendForecast,
+  * scoreboard) store each series' length in the series checkpoint and
+  * feed each member only the series at least its minimum long. A
+  * pruned row could never score, so every scored row, rank, Akaike
+  * weight and forecast is unchanged; on short-history data (most
+  * retail series hold one or two weeks) the kernels then run over a
+  * small fraction of the series. The materialized member table
+  * ([[pickBlendScoreFcs]], which pickAndBlend and pickBlendScore
+  * share) is not pruned: its forecast union shows unscored members'
+  * rows, and the backtest that calls pickAndBlend keeps only
+  * supplier-grain series longer than h, where the filters would remove
+  * little while each distinct minimum costs its own exchange.
   *
   * Execution shape: the input series frame (null-key rows dropped) is
   * localCheckpointed once, and each member is ONE chain over it that
@@ -58,17 +83,20 @@ import graft.functions.Funcs.{microMean, r}
   * per-row state (lags, Holt level/trend, Theta's SES, the packed grid
   * fits) is read once, and a key-grain aggregate folds it into the SSE
   * and the last-row state the forecaster extrapolates. The eight
-  * member rows union into one member table (#series × 8 rows), and
-  * every consumer is one tail over it: a key-partitioned window
+  * member rows union into one member table (at most #series × 8 rows),
+  * and every consumer is one tail over it: a key-partitioned window
   * (argmin, AIC minimum or rank) plus an explode of the forecast
   * arrays, with no join or exchange keyed on the member. The plan thus
   * holds each member kernel exactly once (ChampionSpec pins that), and
-  * the chains that window over the series share one exchange of the
-  * checkpoint. A member that does not score a series (too short to
-  * identify it) has a NULL aic there but may still forecast, e.g.
-  * snaive's partial season; only [[pickBlendScoreFcs]]'s forecast union
-  * shows those rows. Scales in the series count, never materializes a
-  * per-group vector beyond the grid fits' packed cells.
+  * the chains fed the same series share one exchange of the
+  * checkpoint. A member's length filter sits on the checkpoint scan,
+  * below that exchange, so a pruned row is never shuffled. A member
+  * that does not score a series (too short to identify it) has a NULL
+  * aic there but may still forecast, e.g. snaive's partial season;
+  * only [[pickBlendScoreFcs]]'s forecast union shows those rows, so
+  * its table feeds every member every series. Scales in the series count,
+  * never materializes a per-group vector beyond the grid fits' packed
+  * cells.
   *
   * `valueCol` must be non-null. ChampionSpec pins every consumer row
   * for row against the replaced two-pipeline form.
@@ -87,20 +115,43 @@ object Champion {
       struct(lit(i + 1L).as("step"), f.as("forecast"))
     }: _*)
 
+  /** The shortest series each member can score (object scaladoc table),
+    * by member name, for seasonal period `m`. */
+  private[graft] def minLength(m: Int): Map[String, Int] = Map(
+    "mean_naive" -> 1, "snaive" -> (m + 1), "ar2" -> 5, "ari" -> 6,
+    "ma1" -> 2, "arma11" -> 3, "theta" -> 2, "holt_damped" -> 3)
+
+  /** The series checkpoint's length column (`__n` is the grid fits'). */
+  private[graft] val LenCol = "__slen"
+
   /** The member table: one row per (series, member) with keys...,
     * model, __mrank, __k, sse, neff, aic (NULL where the member does not
     * score the series) and __fc, the member's forecasts as an
     * array<struct<step, forecast>> (NULL where it does not forecast).
-    * See the object scaladoc for the shape. */
+    * With `prune`, each member sees only the series at least its
+    * [[minLength]] long, so the table holds no row a member could not
+    * score. See the object scaladoc for the shape. */
   private def memberTable(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                           valueCol: String, h: Int, m: Int,
-                          alpha: Double, beta: Double, damp: Double): DataFrame = {
+                          alpha: Double, beta: Double, damp: Double,
+                          prune: Boolean): DataFrame = {
     require(h >= 1 && h <= m, "horizon must lie in [1, m]")
     val keys = keyCols.map(col)
     val x = col(valueCol).cast("double")
-    val src = df.filter(keys.map(_.isNotNull).reduce(_ && _)).localCheckpoint(true)
+    val nonNull = df.filter(keys.map(_.isNotNull).reduce(_ && _))
+    val perSeries = Window.partitionBy(keys: _*)
+    // pruning stores each series' length in the checkpoint; unpruned,
+    // only snaive needs it, on a window it shares with its lag
+    val src = (if (prune) nonNull.withColumn(LenCol, count(lit(1)).over(perSeries))
+      else nonNull).localCheckpoint(true)
+    val seriesLen = if (prune) col(LenCol) else count(lit(1)).over(perSeries)
     val wAsc = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
     val rn = row_number().over(wAsc)
+    val minLen = minLength(m)
+
+    /** The series the named member is fed (mean_naive reads `src`). */
+    def fed(name: String): DataFrame =
+      if (prune) src.filter(col(LenCol) >= minLen(name)) else src
 
     /** The member's row: its score where `scored`, its forecasts. */
     def member(d: DataFrame, name: String, rank: Int, k: Int, scored: Column,
@@ -119,9 +170,9 @@ object Champion {
     // ---- snaive: last season's value, both as fit and as forecast
     // (forecast step s reads row n − m + s; a series shorter than a
     // season forecasts the steps whose base row exists)
-    val sn = src.withColumn("__lm", lag(x, m).over(wAsc))
+    val sn = fed("snaive").withColumn("__lm", lag(x, m).over(wAsc))
       .withColumn("__rn", rn)
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy(keys: _*)))
+      .withColumn("__n", seriesLen)
       .groupBy(keys: _*).agg(
         sqSum(x - col("__lm")).as("sse"),
         count(col("__lm")).cast("double").as("neff"),
@@ -134,7 +185,7 @@ object Champion {
 
     // ---- ar2: the OLS fit's own rounded one-step predictions; the
     // forecast recursion starts from the last two observations
-    val ar = Ar.fitted(src.withColumn("__rn", rn)
+    val ar = Ar.fitted(fed("ar2").withColumn("__rn", rn)
       .withColumn("__xp", lag(x, 1).over(wAsc)), keyCols, ordCols, valueCol)
       .groupBy(keys: _*).agg(
         sqSum(x - col("ar_fitted")).as("sse"),
@@ -152,7 +203,7 @@ object Champion {
     // (x_t − (x_{t−1} + d̂_t) = Δx_t − d̂_t), so the diff fit scores it.
     // The forecast integrates the diff steps from the last level as a
     // left fold (0 + d̂_1, then + d̂_s), the order a running sum adds in
-    val dif = src.withColumn("__d", x - lag(x, 1).over(wAsc))
+    val dif = fed("ari").withColumn("__d", x - lag(x, 1).over(wAsc))
       .withColumn("__rn", rn)
       .filter(col("__d").isNotNull)
       .withColumn("__dp", lag(col("__d"), 1).over(wAsc))
@@ -171,7 +222,7 @@ object Champion {
       when(col("neff") >= 1, steps(ariCum.map(c => r(col("__yn") + c)))))
 
     // ---- ma1: the CLS grid fit's own SSE; forecast μ + θ·ε_n then flat
-    val ma = member(SequentialKernels.fitMa1FullCounted(src, keyCols, ordCols, valueCol)
+    val ma = member(SequentialKernels.fitMa1FullCounted(fed("ma1"), keyCols, ordCols, valueCol)
       .withColumn("sse", col("ma1_sse"))
       .withColumn("neff", col("__n").cast("double")),
       "ma1", 4, 2, col("__n") >= 2, steps((1 to h).map { s =>
@@ -186,7 +237,7 @@ object Champion {
           col("arma_theta") * col("arma_eps_last"))
         else r(col("arma_mu") + col("arma_phi") * (acc(s - 2) - col("arma_mu"))))
     }
-    val arma = member(SequentialKernels.fitArma11FullCounted(src, keyCols, ordCols, valueCol)
+    val arma = member(SequentialKernels.fitArma11FullCounted(fed("arma11"), keyCols, ordCols, valueCol)
       .withColumn("sse", col("arma_sse"))
       .withColumn("neff", (col("__n") - 1).cast("double")),
       "arma11", 5, 3, col("__n") >= 3, steps(armaSteps))
@@ -197,7 +248,7 @@ object Champion {
     // l_{t−1}, the prediction collapses to fitted_{t−1} + b/2. The
     // forecast extends the trend from the last index and carries the
     // last SES level flat
-    val th = Theta.fittedFull(src, keyCols, ordCols, valueCol, alpha)
+    val th = Theta.fittedFull(fed("theta"), keyCols, ordCols, valueCol, alpha)
       .withColumn("__pf", lag(col("theta_fitted"), 1).over(wAsc))
       .groupBy(keys: _*).agg(
         sqSum(x - r(col("__pf") + col("theta_b") / 2)).as("sse"),
@@ -210,7 +261,7 @@ object Champion {
     // ---- holt_damped: one-step x̂_t = l_{t−1} + φ_d·b_{t−1} (defined
     // once the trend exists, t ≥ 3), damped extrapolation from the
     // last rounded (level, trend) beyond
-    val ho = SequentialKernels.withHolt(src.withColumn("__rn", rn), keyCols,
+    val ho = SequentialKernels.withHolt(fed("holt_damped").withColumn("__rn", rn), keyCols,
       ordCols, valueCol, alpha, beta)
       .withColumn("__pl", lag(col("holt_level"), 1).over(wAsc))
       .withColumn("__pt", lag(col("holt_trend"), 1).over(wAsc))
@@ -255,8 +306,8 @@ object Champion {
                        valueCol: String, h: Int = 4, m: Int = 13,
                        alpha: Double = 0.3, beta: Double = 0.1,
                        damp: Double = 0.9): DataFrame =
-    pickFrom(memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta, damp),
-      keyCols)
+    pickFrom(memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta, damp,
+      prune = true), keyCols)
 
   /** Argmin tail: the (aic, member order)-first scored row per series,
     * its forecast array exploded. */
@@ -279,13 +330,14 @@ object Champion {
                  alpha: Double = 0.3, beta: Double = 0.1,
                  damp: Double = 0.9): DataFrame =
     scoreboardFrom(memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta,
-      damp), keyCols)
+      damp, prune = true), keyCols)
 
   /** Both consumers from ONE member-table execution (see
-    * [[pickBlendScoreFcs]]) — for multi-consumer jobs like the
-    * walk-forward backtest, which would otherwise fit the family once
-    * per consumer. The single-query paths (championForecast /
-    * blendForecast) stay unmaterialized one-plan shapes. */
+    * [[pickBlendScoreFcs]], so unpruned) — for multi-consumer jobs like
+    * the walk-forward backtest, which would otherwise fit the family
+    * once per consumer. The single-query paths (championForecast /
+    * blendForecast / scoreboard) checkpoint only the series frame and
+    * run the member table inside their one plan. */
   def pickAndBlend(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                    valueCol: String, h: Int = 4, m: Int = 13,
                    alpha: Double = 0.3, beta: Double = 0.1,
@@ -313,12 +365,18 @@ object Champion {
     * without re-fitting the family. The member table is
     * localCheckpointed ONCE (series-grain: #series × 8 rows) and all
     * four frames are tails over that one checkpoint, so the eight
-    * member fits run once however many frames are consumed. */
+    * member fits run once however many frames are consumed.
+    *
+    * This table is NOT pruned: the forecast union is the one frame that
+    * shows members which do not score a series (ma1, arma11 and theta
+    * forecasts on series too short for them, snaive's partial season),
+    * and ChampionSpec pins it row for row with those rows in it. */
   def pickBlendScoreFcs(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                         valueCol: String, h: Int = 4, m: Int = 13,
                         alpha: Double = 0.3, beta: Double = 0.1,
                         damp: Double = 0.9): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val t0 = memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta, damp)
+    val t0 = memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta, damp,
+      prune = false)
     val t = t0.localCheckpoint(true)
     // every returned frame derives from t now — the series checkpoint's
     // blocks are dead weight, and persistentRdds would otherwise pin
@@ -356,7 +414,7 @@ object Champion {
                     alpha: Double = 0.3, beta: Double = 0.1,
                     damp: Double = 0.9): DataFrame =
     blendFromTable(memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta,
-      damp), keyCols)
+      damp, prune = true), keyCols)
 
   /** Akaike weight r(exp((AIC_min − AIC)/2)) of each scored row, AIC_min
     * a window minimum over the series (a groupBy + join-back would

@@ -1,11 +1,15 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, GreaterThanOrEqual, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, RDDScanExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.GraftSqlBridge
 import graft.seq.Champion
 
 /** Champion model-selection contracts (the auto-ARIMA pick, reference
@@ -13,8 +17,9 @@ import graft.seq.Champion
   * that EACH family member dominates the AIC scoreboard on exactly one
   * of them, plus shape and partitioning-invariance contracts on the
   * winner's forecast output, row-for-row parity of every consumer with
-  * [[ChampionReference]] (the two-pipeline member form it replaced) and
-  * the executed plan's shape. */
+  * [[ChampionReference]] (the two-pipeline member form it replaced) —
+  * on planted, edge, boundary-length and real weekly series — and the
+  * executed plan's shape, length pruning included. */
 class ChampionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -240,6 +245,44 @@ class ChampionSpec extends SparkSpec {
 
   private val parityInputs = Seq("planted" -> (() => planted), "edges" -> (() => edgeSeries))
 
+  private def release(dfs: DataFrame*): Unit =
+    dfs.foreach(GraftSqlBridge.unpersistCheckpoints)
+
+  /** championForecast, blendForecast and scoreboard (the pruned
+    * one-plan consumers) each equal the reference row for row. */
+  private def assertConsumersMatch(df: DataFrame, keyCols: Seq[String], ord: String,
+                                   h: Int): Unit = {
+    def args(f: (DataFrame, Seq[String], Seq[Column], String, Int, Int) => DataFrame): DataFrame =
+      f(df, keyCols, Seq(col(ord)), "v", h, 13)
+    def check(got: DataFrame, want: DataFrame, what: String): Unit =
+      try assertSameRows(got, want, what) finally release(got, want)
+    check(args(Champion.championForecast(_, _, _, _, _, _)),
+      args(ChampionReference.championForecast(_, _, _, _, _, _)), "championForecast")
+    check(args(Champion.blendForecast(_, _, _, _, _, _)),
+      args(ChampionReference.blendForecast(_, _, _, _, _, _)), "blendForecast")
+    check(args(Champion.scoreboard(_, _, _, _, _, _)),
+      args(ChampionReference.scoreboard(_, _, _, _, _, _)), "scoreboard")
+  }
+
+  /** All four pickBlendScoreFcs frames (the unpruned member table)
+    * equal the reference row for row; `frames` picks which. */
+  private def assertFramesMatch(df: DataFrame, keyCols: Seq[String], ord: String, h: Int,
+                                frames: Seq[Int] = Seq(0, 1, 2, 3)): Unit = {
+    val got = Champion.pickBlendScoreFcs(df, keyCols, Seq(col(ord)), "v", h, 13)
+    val want = ChampionReference.pickBlendScoreFcs(df, keyCols, Seq(col(ord)), "v", h, 13)
+    val (gots, wants) = (Seq(got._1, got._2, got._3, got._4),
+      Seq(want._1, want._2, want._3, want._4))
+    val names = Seq("pick", "blend", "scoreboard", "forecast union")
+    try frames.foreach(i => assertSameRows(gots(i), wants(i), names(i)))
+    finally release(got._1, want._1)
+  }
+
+  private def withArrayFits[T](on: Boolean)(body: => T): T = {
+    val key = graft.seq.SequentialKernels.ArrayFitsConf
+    spark.conf.set(key, on.toString)
+    try body finally spark.conf.unset(key)
+  }
+
   test("the edge frame holds an exact AIC tie broken by member order") {
     val sb = Champion.scoreboard(edgeSeries.toDF("key", "t", "v"), Seq("key"),
       Seq(col("t")), "v", h = 4, m = 13)
@@ -254,61 +297,92 @@ class ChampionSpec extends SparkSpec {
 
   for ((name, rows) <- parityInputs; h <- Seq(4, 5)) {
     test(s"championForecast, blendForecast and scoreboard match the reference ($name, h=$h)") {
-      val df = rows().toDF("key", "t", "v")
-      def args[T](f: (DataFrame, Seq[String], Seq[org.apache.spark.sql.Column], String,
-        Int, Int) => T): T = f(df, Seq("key"), Seq(col("t")), "v", h, 13)
-      def check(got: DataFrame, want: DataFrame, what: String): Unit =
-        try assertSameRows(got, want, what)
-        finally Seq(got, want).foreach(org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints)
-      check(args(Champion.championForecast(_, _, _, _, _, _)),
-        args(ChampionReference.championForecast(_, _, _, _, _, _)), "championForecast")
-      check(args(Champion.blendForecast(_, _, _, _, _, _)),
-        args(ChampionReference.blendForecast(_, _, _, _, _, _)), "blendForecast")
-      check(args(Champion.scoreboard(_, _, _, _, _, _)),
-        args(ChampionReference.scoreboard(_, _, _, _, _, _)), "scoreboard")
+      assertConsumersMatch(rows().toDF("key", "t", "v"), Seq("key"), "t", h)
     }
 
     test(s"all four pickBlendScoreFcs frames match the reference ($name, h=$h)") {
-      val df = rows().toDF("key", "t", "v")
-      val got = Champion.pickBlendScoreFcs(df, Seq("key"), Seq(col("t")), "v", h, 13)
-      val want = ChampionReference.pickBlendScoreFcs(df, Seq("key"), Seq(col("t")), "v", h, 13)
-      try {
-        assertSameRows(got._1, want._1, "pick")
-        assertSameRows(got._2, want._2, "blend")
-        assertSameRows(got._3, want._3, "scoreboard")
-        assertSameRows(got._4, want._4, "forecast union")
-      } finally Seq(got._1, want._1)
-        .foreach(org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints)
+      assertFramesMatch(rows().toDF("key", "t", "v"), Seq("key"), "t", h)
     }
   }
 
   test("parity holds under the streaming-fold grid fits (arrayFits = false)") {
-    val key = graft.seq.SequentialKernels.ArrayFitsConf
-    spark.conf.set(key, "false")
+    withArrayFits(false) {
+      assertFramesMatch(edgeSeries.toDF("key", "t", "v"), Seq("key"), "t", 5, Seq(0, 2, 3))
+    }
+  }
+
+  // ---- length pruning
+
+  /** Series of every length 1–8 and m − 1 … m + 2 (m = 13; noise
+    * around a level), plus a constant and an all-zero series: every
+    * member's minimum length lies in the set with a length either side,
+    * and the degenerate series score only some members however long. */
+  private def boundarySeries: Seq[(String, Int, Double)] = {
+    val lens = ((1 to 8) ++ (12 to 15)).flatMap { n =>
+      (1 to n).map(t => (f"len$n%02d", t, r4(50.0 + 0.5 * t + 4.0 * noise(n * 1000 + t + 7))))
+    }
+    val const = (1 to 15).map(t => ("const", t, 5.0))
+    val zeros = (1 to 15).map(t => ("zeros", t, 0.0))
+    lens ++ const ++ zeros
+  }
+
+  for (h <- Seq(4, 5); arrayFits <- Seq(true, false)) {
+    test(s"boundary lengths: each minimum is exact, every consumer matches the reference (h=$h, arrayFits=$arrayFits)") {
+      withArrayFits(arrayFits) {
+        val df = boundarySeries.toDF("key", "t", "v")
+        val lens = boundarySeries.groupBy(_._1).map { case (k, rs) => k -> rs.size }
+        val board = ChampionReference.scoreboard(df, Seq("key"), Seq(col("t")), "v", h, 13)
+        val scored = try board.select("key", "model").collect()
+          .map(r => (r.getString(0), r.getString(1))).toSet
+        finally release(board)
+        val minLen = Champion.minLength(13)
+        assert(minLen.keySet == scored.map(_._2), "one minimum per member")
+        // safe: no member scores a series its minimum prunes
+        scored.foreach { case (k, model) =>
+          assert(lens(k) >= minLen(model), s"$model scores $k (n = ${lens(k)})")
+        }
+        // tight: the noise series of exactly the minimum length scores it
+        minLen.foreach { case (model, n) =>
+          assert(scored.contains((f"len$n%02d", model)), s"$model does not score n = $n")
+        }
+        assertConsumersMatch(df, Seq("key"), "t", h)
+        assertFramesMatch(df, Seq("key"), "t", h)
+      }
+    }
+  }
+
+  test("real weekly grain (sf0.001 part x supplier): every consumer matches the reference") {
+    val weekly = graft.app.Jobs.etl(spark, "/root/testdata/sf0.001")
+      .select(col("l_partkey"), col("l_suppkey"), col("week_start"), col("qty_sum").as("v"))
+      .localCheckpoint(true)
     try {
-      val df = edgeSeries.toDF("key", "t", "v")
-      val got = Champion.pickBlendScoreFcs(df, Seq("key"), Seq(col("t")), "v", 5, 13)
-      val want = ChampionReference.pickBlendScoreFcs(df, Seq("key"), Seq(col("t")), "v", 5, 13)
-      try {
-        assertSameRows(got._1, want._1, "pick")
-        assertSameRows(got._3, want._3, "scoreboard")
-        assertSameRows(got._4, want._4, "forecast union")
-      } finally Seq(got._1, want._1)
-        .foreach(org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints)
-    } finally spark.conf.unset(key)
+      val keys = Seq("l_partkey", "l_suppkey")
+      assert(weekly.select(keys.map(col): _*).distinct().count() > 1000)
+      assertConsumersMatch(weekly, keys, "week_start", 5)
+      assertFramesMatch(weekly, keys, "week_start", 5)
+    } finally release(weekly)
   }
 
   // ---- plan shape
 
-  /** Every node of an executed (adaptive) plan, each stage once: a
-    * reused exchange is counted as itself, not as a second copy of the
-    * subtree it reuses. */
-  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
-    case q: QueryStageExec => q +: planNodes(q.plan)
-    case r: ReusedExchangeExec => Seq(r)
-    case other => other +: other.children.flatMap(planNodes)
+  /** A node's inputs through adaptive wrappers, query stages and reused
+    * exchanges (a reused exchange leads to the subtree it reuses). */
+  private def inputs(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case other => other.children
   }
+
+  /** Every node of an executed plan, each stage once: a reused exchange
+    * is counted as itself, not as a second copy of the subtree it reuses. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case r: ReusedExchangeExec => Seq(r)
+    case other => other +: inputs(other).flatMap(planNodes)
+  }
+
+  /** Every node below `p`, reused subtrees included. */
+  private def subtree(p: SparkPlan): Seq[SparkPlan] = p +: inputs(p).flatMap(subtree)
 
   test("plan shape: each member kernel runs once, nothing is keyed on the member") {
     val fc = Champion.championForecast(edgeSeries.toDF("key", "t", "v"), Seq("key"),
@@ -331,5 +405,62 @@ class ChampionSpec extends SparkSpec {
       case j: BroadcastHashJoinExec if onModel(j.leftKeys) => j
     }
     assert(keyedOnModel.isEmpty, keyedOnModel.mkString("\n"))
+  }
+
+  /** The k of each length filter (`series length >= k`) a node applies. */
+  private def lengthFilters(p: SparkPlan): Seq[Int] = p match {
+    case f: FilterExec => f.condition.collect {
+      case GreaterThanOrEqual(a: Attribute, Literal(k, _)) if a.name == Champion.LenCol =>
+        k.toString.toInt
+    }
+    case _ => Nil
+  }
+
+  test("plan guard: every member but mean_naive reads the series through its length filter") {
+    val fc = Champion.championForecast(boundarySeries.toDF("key", "t", "v"), Seq("key"),
+      Seq(col("t")), "v", h = 5, m = 13)
+    try {
+      fc.collect()
+      val unions = subtree(fc.queryExecution.executedPlan).collect { case u: UnionExec => u }
+      assert(unions.size == 1)
+      val minLen = Champion.minLength(13)
+      val seen = unions.head.children.map { branch =>
+        val nodes = subtree(branch)
+        val model = nodes.flatMap(_.expressions).flatMap(_.collect {
+          case Alias(Literal(v, _), "model") => v.toString
+        }).head
+        // the filter that sits directly on each scan of the series checkpoint
+        val onScans = nodes.flatMap(p => inputs(p).collect {
+          case s: RDDScanExec if s.output.exists(_.name == Champion.LenCol) => lengthFilters(p)
+        })
+        assert(onScans.nonEmpty, model)
+        val want = if (model == "mean_naive") Nil else Seq(minLen(model))
+        assert(onScans.forall(_ == want), s"$model reads the series through $onScans")
+        model
+      }
+      assert(seen.toSet == minLen.keySet)
+    } finally release(fc)
+  }
+
+  test("plan guard: pickBlendScoreFcs fits every member on every series") {
+    val plans = ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val got = try {
+      val got = Champion.pickBlendScoreFcs(boundarySeries.toDF("key", "t", "v"), Seq("key"),
+        Seq(col("t")), "v", h = 5, m = 13)
+      GraftSqlBridge.statusJobs(spark) // drains the listener bus
+      got
+    } finally spark.listenerManager.unregister(listener)
+    try {
+      val tables = plans.synchronized(plans.toList)
+        .filter(p => subtree(p).exists(_.isInstanceOf[UnionExec]))
+      assert(tables.nonEmpty, "the member table's checkpoint was not seen")
+      assert(tables.flatMap(subtree).flatMap(lengthFilters).isEmpty)
+    } finally release(got._1)
   }
 }
