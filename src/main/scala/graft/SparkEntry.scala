@@ -2465,11 +2465,11 @@ object SparkEntry {
         "source", temperature = 2.0)),
     // SCD2 validity intervals from the events change log
     "q145_scd2" -> ((s, d) =>
-      graft.operators.Scd.scd2(Tables.events(s, d), Seq("user_id"), "ts", "event_id",
-        Seq("event_type"))
+      graft.operators.Scd.scd2(Tables.events(s, d), Seq("user_id"),
+        Seq(col("ts"), col("event_id")), Seq("event_type"))
         .select(col("user_id"), col("event_type"),
-          unix_micros(col("effective_from")).as("from_us"),
-          unix_micros(col("effective_to")).as("to_us"),
+          unix_micros(col("valid_from")).as("from_us"),
+          unix_micros(col("valid_to")).as("to_us"),
           col("version"), col("is_current"))),
     // SemDeDup: cluster-scoped embedding dedup over the portable
     // fixed-iteration Lloyd cells (q204 recipe) — fully oracled; the
@@ -2962,8 +2962,8 @@ object SparkEntry {
       val daily = li(s, d)
         .groupBy(col("l_partkey"), col("l_suppkey"), col("l_shipdate"))
         .agg(min(col("l_discount")).as("discount"))
-      graft.etl.Scd.compressHistory(daily, Seq("l_partkey", "l_suppkey"),
-        col("l_shipdate"), Seq("discount"))
+      graft.operators.Scd.scd2(daily, Seq("l_partkey", "l_suppkey"),
+        Seq(col("l_shipdate")), Seq("discount"))
         .select(col("l_partkey"), col("l_suppkey"), col("discount"),
           unix_micros(col("valid_from").cast("timestamp")).as("valid_from"),
           unix_micros(col("valid_to").cast("timestamp")).as("valid_to"), col("n_obs"))

@@ -449,7 +449,7 @@ object EventsStream {
   final case class ScdRange(user_id: Long, value: Double, from_us: Long,
                             to_us: Long, n_obs: Long)
 
-  /** Streaming SCD2 — the streaming twin of `etl.Scd.compressHistory`:
+  /** Streaming SCD2 — the streaming twin of `operators.Scd.scd2`:
     * per-key state holds the OPEN validity range (value, from, n_obs);
     * a value change emits the closed range and re-opens. Append mode
     * therefore emits exactly the batch operator's rows with

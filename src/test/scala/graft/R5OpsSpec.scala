@@ -182,7 +182,7 @@ class R5OpsSpec extends SparkSpec {
       (2L, 1L, "X"), (2L, 2L, "X"))
       .map { case (u, t, a) => (u, java.sql.Timestamp.valueOf(f"2024-01-0$t%d 00:00:00"), t, a) }
       .toDF("user_id", "ts", "event_id", "event_type")
-    val out = Scd.scd2(rows, Seq("user_id"), "ts", "event_id", Seq("event_type"))
+    val out = Scd.scd2(rows, Seq("user_id"), Seq(col("ts"), col("event_id")), Seq("event_type"))
       .orderBy("user_id", "version")
       .select("user_id", "event_type", "version", "is_current")
       .as[(Long, String, Long, Boolean)].collect()
@@ -191,14 +191,32 @@ class R5OpsSpec extends SparkSpec {
       (2L, "X", 1L, true)))
 
     // intervals chain with no gaps/overlaps: to(i) == from(i+1)
-    val iv = Scd.scd2(rows, Seq("user_id"), "ts", "event_id", Seq("event_type"))
+    val iv = Scd.scd2(rows, Seq("user_id"), Seq(col("ts"), col("event_id")), Seq("event_type"))
       .filter(col("user_id") === 1L).orderBy("version")
-      .select(col("effective_from").cast("long"), col("effective_to").cast("long"))
+      .select(col("valid_from").cast("long"), col("valid_to").cast("long"))
       .as[(Long, Option[Long])].collect()
     iv.sliding(2).foreach {
       case Array((_, Some(to)), (from2, _)) => assert(to == from2)
       case _ =>
     }
     assert(iv.last._2.isEmpty)
+  }
+
+  test("scd2: a null first attribute still opens run 1, and a null tiebreaker splits no run") {
+    val rows = Seq(
+      // user 1: null null A → runs null[1,2] A[3]
+      (1L, 1L, Some(1L), None), (1L, 2L, Some(2L), None), (1L, 3L, Some(3L), Some("A")),
+      // user 2: A A A with a null event_id in the middle → one run
+      (2L, 1L, Some(4L), Some("A")), (2L, 2L, None, Some("A")), (2L, 3L, Some(6L), Some("A")))
+      .map { case (u, t, id, a) =>
+        (u, java.sql.Timestamp.valueOf(f"2024-01-0$t%d 00:00:00"), id, a) }
+      .toDF("user_id", "ts", "event_id", "event_type")
+    val out = Scd.scd2(rows, Seq("user_id"), Seq(col("ts"), col("event_id")), Seq("event_type"))
+      .orderBy("user_id", "version")
+      .select("user_id", "event_type", "n_obs", "version", "is_current")
+      .as[(Long, Option[String], Long, Long, Boolean)].collect().toSeq
+    assert(out == Seq(
+      (1L, None, 2L, 1L, false), (1L, Some("A"), 1L, 2L, true),
+      (2L, Some("A"), 3L, 1L, true)), out.toString)
   }
 }

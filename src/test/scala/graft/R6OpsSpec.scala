@@ -86,7 +86,7 @@ class R6OpsSpec extends SparkSpec {
       ("a", 1, "x"), ("a", 2, "x"), ("a", 3, "y"), ("a", 4, "y"), ("a", 5, "x"),
       ("b", 1, "z"))
       .toDF("k", "t", "v")
-    val out = graft.etl.Scd.compressHistory(snap, Seq("k"), col("t"), Seq("v"))
+    val out = graft.operators.Scd.scd2(snap, Seq("k"), Seq(col("t")), Seq("v"))
       .orderBy("k", "valid_from")
       .select("k", "v", "valid_from", "valid_to", "n_obs")
       .as[(String, String, Int, Option[Int], Long)].collect().toSeq
@@ -100,7 +100,7 @@ class R6OpsSpec extends SparkSpec {
   test("SCD2 compressHistory treats null attribute values as a distinct state") {
     val snap = Seq(("a", 1, Some("x")), ("a", 2, None), ("a", 3, None), ("a", 4, Some("x")))
       .toDF("k", "t", "v")
-    val out = graft.etl.Scd.compressHistory(snap, Seq("k"), col("t"), Seq("v"))
+    val out = graft.operators.Scd.scd2(snap, Seq("k"), Seq(col("t")), Seq("v"))
       .orderBy("valid_from").select("valid_from", "n_obs")
       .as[(Int, Long)].collect().toSeq
     assert(out == Seq((1, 1L), (2, 2L), (4, 1L)), out.toString) // null run is ONE range

@@ -298,7 +298,7 @@ class StreamingSpec extends SparkSpec {
       (3L, ts("2024-01-01 00:03:00"), 2.0), (4L, ts("2024-01-01 00:04:00"), 1.0),
       (5L, ts("2024-01-01 00:05:00"), 1.0)).toDF("event_id", "t", "value")
       .withColumn("k", lit(7L))
-    val batch = graft.etl.Scd.compressHistory(rows, Seq("k"), col("t"), Seq("value"))
+    val batch = graft.operators.Scd.scd2(rows, Seq("k"), Seq(col("t")), Seq("value"))
       .filter(col("valid_to").isNotNull)
       .orderBy("valid_from")
       .select(col("value"), unix_micros(col("valid_from").cast("timestamp")),

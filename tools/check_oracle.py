@@ -8,14 +8,38 @@ runs the matching oracle SQL from <verify_out_dir>/oracle_sql.json in
 DuckDB over the same source tables, and compares: row count, column
 names, and cell values (after sorting columns by name and rows by all
 columns). Reports per-query PASS/FAIL with the first few diffs.
+
+Each oracle SQL runs with its CTEs materialized (`name AS MATERIALIZED (`):
+DuckDB 1.0 inlines a CTE at every reference, so a recursive CTE read more
+than once re-runs per reference and can outgrow the host's memory. Where
+the rewrite does not parse (it also hits the second definition of a
+multi-window `WINDOW a AS (...), b AS (...)` clause), the original text
+runs. The connection gets a memory limit and a spill directory.
 """
-import sys, os, json, glob
+import sys, os, re, json, glob, tempfile
 import duckdb
 import pandas as pd
 import numpy as np
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+
+MEMORY_LIMIT = "4GB"
+# `name AS (` opening a CTE body; a WINDOW clause's first definition is
+# left alone, a later one in the same clause makes the rewrite unparsable
+CTE_DEF = re.compile(r"(?<!WINDOW )\b(\w+\s+AS\s+)\(", re.IGNORECASE)
+
+
+def materialized(con, sql):
+    """`sql` with every CTE materialized, or `sql` itself when the
+    rewrite does not parse."""
+    rewritten = CTE_DEF.sub(r"\1MATERIALIZED (", sql)
+    try:
+        con.extract_statements(rewritten)
+        return rewritten
+    except duckdb.ParserException:
+        return sql
 
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
@@ -65,7 +89,9 @@ def dtype_kind_problems(stypes, otypes):
 def main():
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    con = duckdb.connect()
+    spill = tempfile.TemporaryDirectory(prefix="check_oracle_")
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT,
+                                 "temp_directory": spill.name})
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
@@ -80,6 +106,7 @@ def main():
             print(f"FAIL {name}: no spark output")
             n_fail += 1
             continue
+        sql = materialized(con, sql)
         try:
             spark_sql = f"SELECT * FROM read_parquet({spark_files!r})"
             sdf = norm(con.execute(spark_sql).fetchdf())
