@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Add, AggregateWindowFunction, 
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** EWMA (`adjust=False`: y_0 = x_0; y_t = α·x_t + (1−α)·y_{t−1}) as a
-  * native running window AGGREGATE — the declarative twin of
-  * `SequentialKernels.withEwma`'s streaming fold, built so the kernel
+  * native running window AGGREGATE — the declarative replacement of
+  * `SequentialKernels.withEwma`'s streaming fold (kept in the test tree
+  * as `SequentialKernelsReference.withEwmaFold`), built so the kernel
   * participates in Catalyst instead of hiding behind an opaque
   * `MapPartitions`:
   *

@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType,
   * IEEE multiplication is not associative, so e.g. `α·(x−m)·(x−m)`
   * keeps the fold's left-to-right grouping), and WindowExec applies
   * updates one row at a time in window order, so the recursions are
-  * bit-identical to the folds (SequentialKernelsSpec pins each pair).
+  * bit-identical to the folds (kept in the test tree as
+  * `SequentialKernelsReference`; SequentialKernelsSpec pins each pair).
   * NULL inputs leave every buffer unchanged and emit the current state
   * — the folds' `ewm(ignore_na=False)`-adjacent contract. */
 object SeqKernelExprs {
@@ -40,7 +41,7 @@ object SeqKernelExprs {
   *   m_t = (1−α)·m_{t−1} + α·x_t
   *   v_t = (1−α)·(v_{t−1} + α·(x_t − m_{t−1})²)
   * seeded (m, v) = (x_0, 0). Emits struct(mean, var) — NULLs until the
-  * first value. The twin of `SequentialKernels.withEwmVar`'s fold. */
+  * first value. Replaces `SequentialKernelsReference.withEwmVarFold`. */
 case class EwmVarExpr(x: Expression, alpha: Double) extends AggregateWindowFunction {
   require(alpha > 0 && alpha <= 1, "alpha must lie in (0, 1]")
   override def children: Seq[Expression] = Seq(x)
@@ -72,7 +73,7 @@ case class EwmVarExpr(x: Expression, alpha: Double) extends AggregateWindowFunct
 
 /** Holt level/trend: level = EWMA(α) of the value, trend = EWMA(β) of
   * the first differences; trend is NULL until the second value. Emits
-  * struct(level, trend). The twin of `SequentialKernels.withHolt`. */
+  * struct(level, trend). Replaces `SequentialKernelsReference.withHoltFold`. */
 case class HoltExpr(x: Expression, alpha: Double, beta: Double)
   extends AggregateWindowFunction {
   require(alpha > 0 && alpha <= 1 && beta > 0 && beta <= 1,
@@ -111,8 +112,8 @@ case class HoltExpr(x: Expression, alpha: Double, beta: Double)
 
 /** Croston / SBA intermittent-demand forecast: size z and interval p
   * smooth with α on demand periods only; forecast = factor·z/p (factor
-  * = 1 − α/2 for SBA, 1 otherwise), NULL until the first demand. The
-  * twin of `SequentialKernels.withCroston`'s fold. */
+  * = 1 − α/2 for SBA, 1 otherwise), NULL until the first demand.
+  * Replaces `SequentialKernelsReference.withCrostonFold`. */
 case class CrostonExpr(x: Expression, alpha: Double, factor: Double)
   extends AggregateWindowFunction {
   require(alpha > 0 && alpha <= 1, "alpha must lie in (0, 1]")
@@ -149,8 +150,8 @@ case class CrostonExpr(x: Expression, alpha: Double, factor: Double)
 }
 
 /** TSB (Teunter–Syntetos–Babai): demand-probability b smooths with β
-  * every period, size z with α on demand periods; forecast = b·z. The
-  * twin of `SequentialKernels.withTsb`'s fold. */
+  * every period, size z with α on demand periods; forecast = b·z.
+  * Replaces `SequentialKernelsReference.withTsbFold`. */
 case class TsbExpr(x: Expression, alpha: Double, beta: Double)
   extends AggregateWindowFunction {
   require(alpha > 0 && alpha <= 1 && beta > 0 && beta <= 1,

@@ -14,7 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * document — rightmost minimal k-gram hash of each w-window — in one
   * O(len) pass.
   *
-  * Why not the Column formulation (TextAnalysis.winnowHof): it explodes
+  * Why not the Column formulation (`TextReference.winnowHof` in the
+  * test tree): it explodes
   * one row per window position, and each exploded row copies the FULL
   * per-document hash array into its UnsafeRow — O(len²) bytes of
   * shuffle-side traffic per document — and the per-shingle polynomial

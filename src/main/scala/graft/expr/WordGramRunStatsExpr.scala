@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native word-n-gram repetition statistics — the per-document kernel
-  * of the Gopher repetition rules (`Repetition.gramRunStats` semantics)
+  * of the Gopher repetition rules (the semantics of the sorted-run fold
+  * `TextReference.gramRunStats` in the test tree)
   * computed in ONE pass over the raw UTF-8 bytes.
   *
   * Returns `struct(top_gram string, top_cnt bigint, dup_chars bigint)`:
@@ -39,7 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    strictly greater count keeps the lexicographically smallest gram
   *    on ties, exactly `row_number() OVER (ORDER BY cnt DESC, gram
   *    ASC) = 1`.
-  * RepetitionKernelSpec pins this expression against the HOF fold twin
+  * RepetitionKernelSpec pins this expression against that HOF fold
   * on an adversarial corpus (multi-space runs, leading/trailing spaces,
   * empty words, multi-byte UTF-8); the q125/q130 oracles replay it.
   */

@@ -39,7 +39,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    dominant cost (BoilerProbe r18: the spans stage is 0.6 s of
   *    q312's 2.1 s at sf0.1 and runs TWICE — census and verdict-join
   *    branches).
-  * SpanDedupSpec pins this expression against the array-form twin on
+  * SpanDedupSpec pins this expression against the array form
+  * (`TextReference.spansArrayForm` in the test tree) on
   * an adversarial corpus (multi-space runs, leading/trailing spaces,
   * multi-byte UTF-8, empty and single-word docs); the q124/q312
   * oracles replay it.

@@ -142,26 +142,12 @@ object Recommend {
     // while the norm-pruned scan only TOUCHES pairs whose rounded
     // upper bound |x||y| can still enter the user's top-k. Output is
     // bit-identical (same FP ops, same rounding, same tie contract) —
-    // R17OpsSpec pins row-for-row equality with the cross form, and
-    // the q283 oracle is unchanged.
+    // R17OpsSpec pins row-for-row equality with the cross form
+    // (RecommendReference.crossScoreTopK in the test tree), and the
+    // q283 oracle is unchanged.
     mipsTopK(scoreUsers.select(col("u"), col("f1"), col("f2")),
       itemF.select(col("i"), col("f1"), col("f2")), k, userCol, itemCol)
   }
-
-  /** The pre-r17 all-pairs scoring tail, kept for the parity spec: score
-    * every (user, item) pair, bounded-heap top-k per user (score desc,
-    * id asc). Quadratic in entity count by construction. */
-  private[graft] def crossScoreTopK(users: DataFrame, items: DataFrame, k: Int,
-                                    userCol: String, itemCol: String): DataFrame =
-    users.toDF("u", "x1", "x2")
-      .crossJoin(broadcast(items.toDF("i", "y1", "y2")))
-      .select(col("u"), col("i"),
-        r(col("x1") * col("y1") + col("x2") * col("y2")).as("score"))
-      .groupBy(col("u"))
-      .agg(graft.expr.TopKPairsExpr.column(col("score"), col("i"), k).as("__top"))
-      .select(col("u"), posexplode(col("__top")))
-      .select(col("u").as(userCol), col("col.id").as(itemCol),
-        col("col.score").as("score"), (col("pos") + 1).cast("long").as("rank"))
 
   /** EXACT maximum-inner-product top-k (the LEMP/FEXIPRO norm-pruning
     * pattern): items are broadcast sorted by norm descending, and each
@@ -171,9 +157,11 @@ object Recommend {
     * score arithmetic as the cross form (x·y rounded through
     * RoundHalfUpExpr.compute at 1e4) and the same tie contract (score
     * desc, id asc via java.lang.Double.compare, NaN above finite), so
-    * the result is row-for-row identical — only the touched-pair count
-    * changes: all n per user in the adversarial equal-norm worst case,
-    * a handful on real skewed-norm factor tables.
+    * the result is row-for-row identical to the all-pairs form
+    * (`RecommendReference.crossScoreTopK` in the test tree) — only the
+    * touched-pair count changes: all n per user in the adversarial
+    * equal-norm worst case, a handful on real skewed-norm factor
+    * tables.
     *
     * One deliberate dimension-grain driver collect: the item factor
     * table (one row per item — the PCA/MMR precedent class; ~24 B/item,

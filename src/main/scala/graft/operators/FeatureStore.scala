@@ -25,17 +25,13 @@ import graft.functions.Funcs.safeDiv
   *     no join-back, no broadcast of a series-dim agg (which grows
   *     with the data and would OOM a broadcast at 100 TB).
   *
-  * The EWMA sequential kernel runs FIRST, on the narrow weekly frame.
-  * Its MapPartitions erases partitioning metadata, so the window
-  * families re-shuffle — three exchanges total, and that is the
-  * MEASURED optimum: the kernel-last alternative (riding the windows'
-  * exchange via assumePartitioned, two exchanges) pushes the ~110-column
-  * frame through the fold's generic Row encoder and benched 7× slower
-  * at sf0.1 (21.4s vs 3.2s) — per-row toSeq/fromSeq over 110 fields
-  * dwarfs one extra shuffle of the 5-column frame. At cluster scale the
-  * same holds: the extra exchange moves only the narrow pre-feature
-  * bytes, while the encoder tax is per-row × per-column on the wide
-  * frame. PlanSpec pins the three-exchange budget.
+  * The EWMA sequential kernel ([[graft.seq.SequentialKernels.withEwma]])
+  * is a native running window aggregate over the same (keys, week)
+  * window, so it rides the same series exchange as the window families
+  * and is pruned when a consumer drops `ewma_03` (q110). Built over
+  * `Enrichment.weeklyAggregate` of the fact, the plan holds two
+  * exchanges: the weekly groupBy and one series exchange. PlanSpec
+  * pins that budget.
   */
 object FeatureStore {
 
@@ -47,16 +43,14 @@ object FeatureStore {
     */
   def wide(weekly: DataFrame, keys: Seq[String], weekCol: String, qtyCol: String,
            lagSet: Seq[Int] = Seq(1, 2, 3, 4, 6, 8, 12),
-           rollSet: Seq[Int] = Seq(2, 3, 4, 6, 8, 12),
-           withEwma: Boolean = true): DataFrame = {
+           rollSet: Seq[Int] = Seq(2, 3, 4, 6, 8, 12)): DataFrame = {
     val sw = SeriesWindow(keys.map(col), Seq(col(weekCol)))
     val qty = col(qtyCol)
 
-    // ---- sequential kernel FIRST, on the narrow frame ----
-    // (see class doc: kernel-last is 7× slower — wide-row encoder tax)
-    var out = if (withEwma)
+    // ---- sequential kernel: a running window aggregate on the series
+    // window (see class doc) ----
+    var out =
       graft.seq.SequentialKernels.withEwma(weekly, keys, Seq(col(weekCol)), qtyCol, 0.3, "ewma_03")
-    else weekly
 
     // ---- temporal family: one window partitioning ----
     WindowFeatures.lags(qty, lagSet, sw).foreach { case (n, c) =>
@@ -157,11 +151,10 @@ object FeatureStore {
   def wideFromFact(fact: DataFrame, keys: Seq[String], dateCol: Column,
                    measure: Column,
                    lagSet: Seq[Int] = Seq(1, 2, 3, 4, 6, 8, 12),
-                   rollSet: Seq[Int] = Seq(2, 3, 4, 6, 8, 12),
-                   withEwma: Boolean = true): DataFrame = {
+                   rollSet: Seq[Int] = Seq(2, 3, 4, 6, 8, 12)): DataFrame = {
     val weekly = graft.etl.Enrichment.weeklyAggregate(
       fact, dateCol, keys.map(col), measure)
-    wide(weekly, keys, "week_start", "qty_sum", lagSet, rollSet, withEwma)
+    wide(weekly, keys, "week_start", "qty_sum", lagSet, rollSet)
   }
 
   /** `wide` + the reference's select-top-K step: score every generated

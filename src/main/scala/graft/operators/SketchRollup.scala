@@ -189,7 +189,7 @@ object SketchRollup {
     * 64-bit arithmetic (intermediates < 2^62 + 2^31), bit-identical in
     * any engine. A_j/B_j come from the deterministic Lehmer constant
     * stream, so Spark plan and oracle SQL embed the same literals. */
-  private def cmSlot(x: Column, j: Int, width: Int): Column = {
+  private[graft] def cmSlot(x: Column, j: Int, width: Int): Column = {
     val a = graft.functions.PortableHash.lehmerLong(1234567L + j)
     val b = graft.functions.PortableHash.lehmerLong(7654321L + j)
     (((x % lit(graft.functions.PortableHash.M31)) * lit(a) + lit(b)) %
@@ -210,8 +210,9 @@ object SketchRollup {
     * shuffled one row per touched slot per task: 2.65 s of q302's
     * 2.87 s at sf0.1, CmProbe). The dense array then explodes to the
     * same sparse (row, slot, cnt > 0) rows — counts are exact integers
-    * either way, so the output is bit-identical (CmSketchSpec pins the
-    * two builds against each other). Merge across periods/batches is
+    * either way, so the output is bit-identical (CmSketchSpec pins it
+    * to the explode build, `SketchRollupReference.cmSketchTableExplode`
+    * in the test tree). Merge across periods/batches is
     * slot-count ADDITION — exactly associative, so merge ≡ recompute
     * bit for bit and any engine replays the estimate (q302 is a full
     * hash-checked oracle). `item` must be a non-negative integer
@@ -235,21 +236,6 @@ object SketchRollup {
         explode(col("__cells")).as("__c")): _*)
       .select(keyCols.map(col) ++ Seq(col("period"), col("__c.row").as("row"),
         col("__c.slot").as("slot"), col("__c.cnt").as("cnt")): _*)
-  }
-
-  /** The pre-r18 explode-form build of [[cmSketchTable]] — kept as the
-    * readable reference twin CmSketchSpec pins the array build against. */
-  private[graft] def cmSketchTableExplode(df: DataFrame, keyCols: Seq[String],
-                                          periodCol: Column, item: Column,
-                                          depth: Int, width: Int): DataFrame = {
-    val rows = (0 until depth).map(j => struct(lit(j).as("row"),
-      cmSlot(item.cast("long"), j, width).as("slot")))
-    df.select(keyCols.map(col) :+ periodCol.as("period") :+
-        explode(array(rows: _*)).as("__rs"): _*)
-      .filter(col("__rs.slot").isNotNull) // NULL items are not counted
-      .groupBy(keyCols.map(col) ++ Seq(col("period"), col("__rs.row").as("row"),
-        col("__rs.slot").as("slot")): _*)
-      .agg(count(lit(1)).as("cnt"))
   }
 
   /** Point-estimate probes over the merged range sketch: for each

@@ -11,12 +11,19 @@ import org.apache.spark.sql.types._
   * src/features/temporal_features_engine.py:243-276 `ewm(adjust=False)`,
   * src/models/intermittent_demand.py:44-175).
   *
-  * Execution shape: ONE hash shuffle on the series key, sort within
-  * partitions by (key, order), then a streaming fold over the sorted
-  * iterator detecting key-run boundaries. Unlike `groupByKey.
-  * flatMapGroups` this never materializes a whole group in memory, so a
-  * pathological million-row series streams instead of OOMing — the
-  * 100 TB-safe shape for sequential kernels.
+  * Execution shapes. EWMA, EWM mean/variance, Holt, Croston/SBA and
+  * TSB are native running window aggregates
+  * ([[graft.expr.SeqKernelExprs]], [[graft.expr.EwmaExpr]]): Catalyst
+  * prunes them when a consumer drops their columns, and they share the
+  * series exchange and sort with neighboring window features. The
+  * other recursions (Holt-Winters, CUSUM, the MA(1) filter and the
+  * grid fits' `arrayFits=false` fallback) run [[keyedFold]] or
+  * [[keyedFoldLast]]: ONE hash shuffle on the series key, a sort
+  * within partitions by (key, order), then a streaming fold over the
+  * sorted iterator detecting key-run boundaries. Neither shape
+  * materializes a whole group in memory (unlike `groupByKey.
+  * flatMapGroups`), so a pathological million-row series streams
+  * instead of OOMing.
   *
   * Null values leave the state unchanged and emit the current state
   * (pandas `ewm(ignore_na=False)`-adjacent; exact NaN weighting of
@@ -99,30 +106,13 @@ object SequentialKernels {
                               keyCols: Seq[String]): DataFrame =
     fit.join(df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__n")), keyCols)
 
-  /** Generic keyed streaming fold: emits input row + extra double
-    * columns computed by `step`, which receives the row's value and the
-    * per-series state (None at series start) and returns (outputs,
-    * newState). */
-  /** When `assumePartitioned` is true the fold skips its repartition and
-    * only sorts within partitions: the caller guarantees the input is
-    * already hash-partitioned by exactly `keyCols` (e.g. by an upstream
-    * window's ENSURE_REQUIREMENTS exchange). This lets a kernel ride an
-    * existing series exchange instead of adding one — MapPartitions
-    * reports unknown output partitioning, so the cheap order is
-    * windows-first, kernel-last (see FeatureStore.wide). */
-  private def keyedFold[S](df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                           valueCol: String, outCols: Seq[String],
-                           assumePartitioned: Boolean = false)(
-                           step: (Option[Double], Option[S]) => (Seq[Option[Double]], Option[S])): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++
-      outCols.map(c => StructField(c, DoubleType, nullable = true)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    val keyIdx = keyCols.map(df.schema.fieldIndex)
-    val valIdx = df.schema.fieldIndex(valueCol)
-    // Typed primitive extraction resolved once from the schema — the fold
-    // runs once per fact row, so a per-row toString/parse would be a
-    // measurable constant-factor tax at scale.
-    val getValue: Row => Double = df.schema(valIdx).dataType match {
+  /** Typed primitive extraction of a fold's value column, resolved once
+    * from the schema — the folds run once per fact row, so a per-row
+    * toString/parse would be a measurable constant-factor tax at
+    * scale. `fold` names the calling fold in the error. */
+  private def numericValue(schema: StructType, valIdx: Int, valueCol: String,
+                           fold: String): Row => Double =
+    schema(valIdx).dataType match {
       case DoubleType => _.getDouble(valIdx)
       case FloatType => _.getFloat(valIdx).toDouble
       case LongType => _.getLong(valIdx).toDouble
@@ -131,9 +121,23 @@ object SequentialKernels {
       case ByteType => _.getByte(valIdx).toDouble
       case dt: DecimalType => _.getDecimal(valIdx).doubleValue()
       case dt => throw new IllegalArgumentException(
-        s"keyedFold value column '$valueCol' must be numeric, got $dt")
+        s"$fold value column '$valueCol' must be numeric, got $dt")
     }
-    (if (assumePartitioned) df else df.repartition(keyCols.map(col): _*))
+
+  /** Generic keyed streaming fold: emits input row + extra double
+    * columns computed by `step`, which receives the row's value and the
+    * per-series state (None at series start) and returns (outputs,
+    * newState). */
+  private[graft] def keyedFold[S](df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
+                                  valueCol: String, outCols: Seq[String])(
+                                  step: (Option[Double], Option[S]) => (Seq[Option[Double]], Option[S])): DataFrame = {
+    val outSchema = StructType(df.schema.fields ++
+      outCols.map(c => StructField(c, DoubleType, nullable = true)))
+    val enc = RowEncoder.encoderFor(outSchema)
+    val keyIdx = keyCols.map(df.schema.fieldIndex)
+    val valIdx = df.schema.fieldIndex(valueCol)
+    val getValue = numericValue(df.schema, valIdx, valueCol, "keyedFold")
+    df.repartition(keyCols.map(col): _*)
       .sortWithinPartitions(keyCols.map(col) ++ ordCols: _*)
       .mapPartitions { rows =>
         var curKey: Seq[Any] = null
@@ -168,17 +172,7 @@ object SequentialKernels {
     val enc = RowEncoder.encoderFor(outSchema)
     val keyIdx = keyCols.map(df.schema.fieldIndex)
     val valIdx = df.schema.fieldIndex(valueCol)
-    val getValue: Row => Double = df.schema(valIdx).dataType match {
-      case DoubleType => _.getDouble(valIdx)
-      case FloatType => _.getFloat(valIdx).toDouble
-      case LongType => _.getLong(valIdx).toDouble
-      case IntegerType => _.getInt(valIdx).toDouble
-      case ShortType => _.getShort(valIdx).toDouble
-      case ByteType => _.getByte(valIdx).toDouble
-      case dt: DecimalType => _.getDecimal(valIdx).doubleValue()
-      case dt => throw new IllegalArgumentException(
-        s"keyedFoldLast value column '$valueCol' must be numeric, got $dt")
-    }
+    val getValue = numericValue(df.schema, valIdx, valueCol, "keyedFoldLast")
     df.repartition(keyCols.map(col): _*)
       .sortWithinPartitions(keyCols.map(col) ++ ordCols: _*)
       .mapPartitions { rows =>
@@ -220,35 +214,18 @@ object SequentialKernels {
   /** W9 — EWMA with pandas `adjust=False` recursion:
     * y_0 = x_0; y_t = α·x_t + (1−α)·y_{t−1}.
     *
-    * r18 execution shape: a native running window aggregate
-    * ([[graft.expr.EwmaExpr]]) instead of the MapPartitions fold — the
-    * kernel is now PRUNABLE (a consumer that drops the column prunes
-    * the recursion: FeatureStore.wide's q110 projection) and shares the
-    * series exchange/sort with neighboring window features instead of
-    * forcing its own repartition plus a second exchange downstream
-    * (MapPartitions reports unknown partitioning). Identical update
-    * order and double arithmetic — SequentialKernelsSpec pins the two
-    * forms row for row. `assumePartitioned` is retained for source
-    * compatibility but moot: ENSURE_REQUIREMENTS already reuses an
-    * existing hash partitioning on `keyCols`. */
+    * Execution shape: a native running window aggregate
+    * ([[graft.expr.EwmaExpr]]). The kernel is PRUNABLE (a consumer that
+    * drops the column prunes the recursion: FeatureStore.wide's q110
+    * projection), and it shares the series exchange and sort with
+    * neighboring window features; ENSURE_REQUIREMENTS reuses an
+    * existing hash partitioning on `keyCols`. SequentialKernelsSpec
+    * pins it row for row to the streaming-fold form kept in the test
+    * tree (`SequentialKernelsReference.withEwmaFold`). */
   def withEwma(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-               valueCol: String, alpha: Double, outCol: String,
-               assumePartitioned: Boolean = false): DataFrame =
+               valueCol: String, alpha: Double, outCol: String): DataFrame =
     df.withColumn(outCol,
       graft.expr.EwmaExpr.over(col(valueCol), alpha, keyCols.map(col), ordCols))
-
-  /** The pre-r18 streaming-fold form of [[withEwma]] — kept as the
-    * readable reference twin the parity spec pins the window aggregate
-    * against. */
-  private[graft] def withEwmaFold(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                                  valueCol: String, alpha: Double, outCol: String): DataFrame =
-    keyedFold[Double](df, keyCols, ordCols, valueCol, Seq(outCol)) {
-      case (None, st) => (Seq(st), st)
-      case (Some(x), None) => (Seq(Some(x)), Some(x))
-      case (Some(x), Some(prev)) =>
-        val y = alpha * x + (1 - alpha) * prev
-        (Seq(Some(y)), Some(y))
-    }
 
   /** W9+ — exponentially-weighted mean AND variance (West's online
     * recursion, the `adjust=False` form):
@@ -256,15 +233,14 @@ object SequentialKernels {
     *   v_t = (1−α)·(v_{t−1} + α·(x_t − m_{t−1})²)
     * — the streaming volatility tracker (risk bands, anomaly
     * thresholds) that a rolling-window std approximates with a cliff.
-    * Same two-double state / single-exchange fold as the other
-    * kernels; oracle-backed by a recursive CTE (q209). */
+    * A two-double-state running window aggregate like [[withEwma]];
+    * oracle-backed by a recursive CTE (q209). */
   def withEwmVar(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                  valueCol: String, alpha: Double,
-                 meanCol: String = "ewm_mean", varCol: String = "ewm_var",
-                 assumePartitioned: Boolean = false): DataFrame = {
-    // r18: native running window aggregate (see withEwma) — prunable,
-    // exchange-sharing, no Row ser/deser; bit-identical to the fold
-    // twin below (SequentialKernelsSpec pins the pair)
+                 meanCol: String = "ewm_mean", varCol: String = "ewm_var"): DataFrame = {
+    // native running window aggregate (see withEwma) — prunable,
+    // exchange-sharing, no Row ser/deser; bit-identical to
+    // SequentialKernelsReference.withEwmVarFold (SequentialKernelsSpec)
     val st = graft.expr.SeqKernelExprs.windowed(
       graft.expr.EwmVarExpr(
         org.apache.spark.sql.GraftBridge.expression(col(valueCol).cast("double")), alpha),
@@ -275,30 +251,15 @@ object SequentialKernels {
       .drop("__ewmvar")
   }
 
-  /** Pre-r18 fold twin of [[withEwmVar]], kept for the parity spec. */
-  private[graft] def withEwmVarFold(df: DataFrame, keyCols: Seq[String],
-                                    ordCols: Seq[Column], valueCol: String,
-                                    alpha: Double, meanCol: String = "ewm_mean",
-                                    varCol: String = "ewm_var"): DataFrame =
-    keyedFold[(Double, Double)](df, keyCols, ordCols, valueCol,
-      Seq(meanCol, varCol)) {
-      case (None, st) => (Seq(st.map(_._1), st.map(_._2)), st)
-      case (Some(x), None) => (Seq(Some(x), Some(0.0)), Some((x, 0.0)))
-      case (Some(x), Some((m0, v0))) =>
-        val m = (1 - alpha) * m0 + alpha * x
-        val v = (1 - alpha) * (v0 + alpha * (x - m0) * (x - m0))
-        (Seq(Some(m), Some(v)), Some((m, v)))
-    }
-
   /** W10 — Holt level/trend as the reference computes them: level =
     * EWMA(α) of the value, trend = EWMA(β) of the first differences
     * (temporal_features_engine.py:262-276). */
   def withHolt(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                valueCol: String, alpha: Double, beta: Double,
                levelCol: String = "holt_level", trendCol: String = "holt_trend"): DataFrame = {
-    // r18: native running window aggregate (see withEwma) — prunable,
-    // exchange-sharing, no Row ser/deser; bit-identical to the fold
-    // twin below (SequentialKernelsSpec pins the pair)
+    // native running window aggregate (see withEwma) — prunable,
+    // exchange-sharing, no Row ser/deser; bit-identical to
+    // SequentialKernelsReference.withHoltFold (SequentialKernelsSpec)
     val st = graft.expr.SeqKernelExprs.windowed(
       graft.expr.HoltExpr(
         org.apache.spark.sql.GraftBridge.expression(col(valueCol).cast("double")),
@@ -309,28 +270,6 @@ object SequentialKernels {
       .withColumn(trendCol, col("__holt.trend"))
       .drop("__holt")
   }
-
-  /** Pre-r18 fold twin of [[withHolt]], kept for the parity spec. */
-  private[graft] def withHoltFold(df: DataFrame, keyCols: Seq[String],
-                                  ordCols: Seq[Column], valueCol: String,
-                                  alpha: Double, beta: Double,
-                                  levelCol: String = "holt_level",
-                                  trendCol: String = "holt_trend"): DataFrame =
-    keyedFold[(Double, Option[Double], Double)](df, keyCols, ordCols, valueCol,
-      Seq(levelCol, trendCol)) {
-      // state = (level, trendOpt, lastRawValue)
-      case (None, st) => (Seq(st.map(_._1), st.flatMap(_._2)), st)
-      case (Some(x), None) =>
-        (Seq(Some(x), None), Some((x, None, x)))
-      case (Some(x), Some((lvl, tr, lastX))) =>
-        val nl = alpha * x + (1 - alpha) * lvl
-        val d = x - lastX
-        val nt = tr match {
-          case None => d
-          case Some(t) => beta * d + (1 - beta) * t
-        }
-        (Seq(Some(nl), Some(nt)), Some((nl, Some(nt), x)))
-    }
 
   /** MA(1) innovation recursion — the moving-average member of the
     * sequential family (the MA side of the reference's ARIMA engine,
@@ -349,7 +288,7 @@ object SequentialKernels {
     * computed identically cross-engine) as `fittedCol`, both unrounded
     * — callers round at the output grain.
     *
-    * Same single-exchange streaming fold as the other kernels; a
+    * A single-exchange [[keyedFold]]; a
     * recursive-CTE oracle replays the identical scalar chain (q250).
     */
   /** Shared mean-centering stage of the MA/ARMA fits: the exact
@@ -1300,9 +1239,9 @@ object SequentialKernels {
   def withCroston(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                   valueCol: String, alpha: Double, sba: Boolean = false,
                   outCol: String = "croston_forecast"): DataFrame = {
-    // r18: native running window aggregate (see withEwma) — prunable,
-    // exchange-sharing, no Row ser/deser; bit-identical to the fold
-    // twin below (SequentialKernelsSpec pins the pair)
+    // native running window aggregate (see withEwma) — prunable,
+    // exchange-sharing, no Row ser/deser; bit-identical to
+    // SequentialKernelsReference.withCrostonFold (SequentialKernelsSpec)
     val factor = if (sba) 1.0 - alpha / 2.0 else 1.0
     df.withColumn(outCol, graft.expr.SeqKernelExprs.windowed(
       graft.expr.CrostonExpr(
@@ -1311,62 +1250,20 @@ object SequentialKernels {
       keyCols.map(col), ordCols))
   }
 
-  /** Pre-r18 fold twin of [[withCroston]], kept for the parity spec. */
-  private[graft] def withCrostonFold(df: DataFrame, keyCols: Seq[String],
-                                     ordCols: Seq[Column], valueCol: String,
-                                     alpha: Double, sba: Boolean = false,
-                                     outCol: String = "croston_forecast"): DataFrame = {
-    val factor = if (sba) 1.0 - alpha / 2.0 else 1.0
-    keyedFold[(Double, Double, Long)](df, keyCols, ordCols, valueCol, Seq(outCol)) {
-      // state = (z, p, periodsSinceLastDemand)
-      case (None, st) => (Seq(st.map { case (z, p, _) => factor * z / p }), st)
-      case (Some(x), None) =>
-        if (x > 0) (Seq(Some(factor * x / 1.0)), Some((x, 1.0, 0L)))
-        else (Seq(None), None)
-      case (Some(x), Some((z, p, gap))) =>
-        if (x > 0) {
-          val interval = (gap + 1).toDouble
-          val nz = alpha * x + (1 - alpha) * z
-          val np = alpha * interval + (1 - alpha) * p
-          (Seq(Some(factor * nz / np)), Some((nz, np, 0L)))
-        } else {
-          (Seq(Some(factor * z / p)), Some((z, p, gap + 1)))
-        }
-    }
-  }
-
   /** M5 — TSB (Teunter-Syntetos-Babai): demand-probability smoothing
     * every period (β), size smoothing on demand periods (α); forecast =
     * prob × size (reference: intermittent_demand.py:113-175). */
   def withTsb(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
               valueCol: String, alpha: Double, beta: Double,
               outCol: String = "tsb_forecast"): DataFrame =
-    // r18: native running window aggregate (see withEwma) — prunable,
-    // exchange-sharing, no Row ser/deser; bit-identical to the fold
-    // twin below (SequentialKernelsSpec pins the pair)
+    // native running window aggregate (see withEwma) — prunable,
+    // exchange-sharing, no Row ser/deser; bit-identical to
+    // SequentialKernelsReference.withTsbFold (SequentialKernelsSpec)
     df.withColumn(outCol, graft.expr.SeqKernelExprs.windowed(
       graft.expr.TsbExpr(
         org.apache.spark.sql.GraftBridge.expression(col(valueCol).cast("double")),
         alpha, beta),
       keyCols.map(col), ordCols))
-
-  /** Pre-r18 fold twin of [[withTsb]], kept for the parity spec. */
-  private[graft] def withTsbFold(df: DataFrame, keyCols: Seq[String],
-                                 ordCols: Seq[Column], valueCol: String,
-                                 alpha: Double, beta: Double,
-                                 outCol: String = "tsb_forecast"): DataFrame =
-    keyedFold[(Double, Double)](df, keyCols, ordCols, valueCol, Seq(outCol)) {
-      // state = (prob, size)
-      case (None, st) => (Seq(st.map { case (b, z) => b * z }), st)
-      case (Some(x), None) =>
-        val b0 = if (x > 0) 1.0 else 0.0
-        val z0 = if (x > 0) x else 0.0
-        (Seq(Some(b0 * z0)), Some((b0, z0)))
-      case (Some(x), Some((b, z))) =>
-        val nb = beta * (if (x > 0) 1.0 else 0.0) + (1 - beta) * b
-        val nz = if (x > 0) alpha * x + (1 - alpha) * z else z
-        (Seq(Some(nb * nz)), Some((nb, nz)))
-    }
 
   /** M6 — intermittency classification: ADI = periods/nonzero-periods,
     * CV² of nonzero demand sizes → smooth / intermittent / erratic /
@@ -1405,8 +1302,8 @@ object SequentialKernels {
     * not data-dependent); slots 1..m−1 first receive data-driven values
     * at observations 2..m, and slot 0 only at observation m+1. Every
     * first-cycle read therefore sees 0. Per-series state is m+2
-    * doubles, carried through the same single-exchange streaming fold
-    * as the other kernels. Oracle-backed (q191): the ring unrolls into
+    * doubles, carried through a single-exchange [[keyedFold]].
+    * Oracle-backed (q191): the ring unrolls into
     * m recursive-CTE state columns, the q73/q74 recipe. */
   def withHoltWinters(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                       valueCol: String, alpha: Double, beta: Double,
@@ -1526,16 +1423,14 @@ object SequentialKernels {
     * with an alarm when either side exceeds `h`. The caller centers the
     * series first (e.g. subtract the per-series mean rounded to 4
     * decimals so both engines recurse from identical doubles); keeping
-    * the kernel on a single delta column lets it ride the same
-    * `keyedFold` streaming shape as EWMA/Holt — one series exchange,
-    * no per-group materialization. */
+    * the kernel on a single delta column lets it ride [[keyedFold]] —
+    * one series exchange, no per-group materialization. */
   def withCusum(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                 deltaCol: String, slack: Double, h: Double,
                 posCol: String = "cusum_pos", negCol: String = "cusum_neg",
-                alarmCol: String = "cusum_alarm",
-                assumePartitioned: Boolean = false): DataFrame =
+                alarmCol: String = "cusum_alarm"): DataFrame =
     keyedFold[(Double, Double)](df, keyCols, ordCols, deltaCol,
-      Seq(posCol, negCol), assumePartitioned) {
+      Seq(posCol, negCol)) {
       case (None, st) => (Seq(st.map(_._1), st.map(_._2)), st)
       case (Some(d), st) =>
         val (pp, pn) = st.getOrElse((0.0, 0.0))

@@ -180,14 +180,6 @@ object EventsStream {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("top_values"))
 
-  /** Batch twin of [[windowedTopK]] for parity testing. */
-  def windowedTopKBatch(events: DataFrame, k: Int = 3,
-                        windowDur: String = "7 days"): DataFrame =
-    events.groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(graft.expr.TopKExpr.column(col("value"), k).as("top_values"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("top_values"))
-
   final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                          event_type: String, value: Double)
   final case class SessionState(nEvents: Long, valueSum: Double, lastTs: Long)

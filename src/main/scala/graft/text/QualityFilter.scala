@@ -60,12 +60,13 @@ object QualityFilter {
     // per-document projection with ZERO exchanges (the r17 form
     // shuffled the exploded gram table once and sorted it once; at any
     // scale that was the dominant cost — CurateProbe measured the gram
-    // stages at ~80% of q138, and the array-building HOF twin kept
+    // stages at ~80% of q138, and the array-building HOF form kept
     // 2.1 s of that as transform+slice+concat_ws allocation).
     // The kernel is NULL for gram-less docs (the explode_outer NULL
     // row of the r17 form), so the fraction/flag null semantics below
     // are verbatim; RepetitionKernelSpec pins the expression against
-    // the HOF fold twin and the original explode form. Layered selects
+    // the HOF fold (TextReference.gramRunStats in the test tree) and
+    // the original explode form. Layered selects
     // keep the expensive stats struct evaluated once per row
     // (CollapseProject's non-cheap guard).
     val staged = df.select(col(id),

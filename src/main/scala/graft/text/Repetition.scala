@@ -36,65 +36,12 @@ object Repetition {
       explode(grams).as("gram"))
   }
 
-  /** Per-document gram-run statistics computed INSIDE one projection
-    * (r18): sort the document's gram array so equal grams are adjacent,
-    * then fold the runs in one pass. Emits
-    * `struct(top_gram, top_cnt, dup_chars)` — the most frequent gram
-    * under the (count DESC, gram ASC) order, its count, and the chars
-    * covered by grams occurring ≥ 2 times — or NULL for an empty array.
-    *
-    * This replaces the explode → (doc, gram) hash-agg exchange →
-    * per-doc ranking window (a full sort of the exploded corpus) with
-    * per-row compute: ZERO shuffles, zero Generate, memory O(grams per
-    * document) — the array the projection already holds. Equivalence:
-    * run lengths over the sorted array ARE the per-gram counts; walking
-    * ascending and replacing the champion only on a STRICTLY greater
-    * count keeps the lexicographically smallest gram on count ties —
-    * exactly `row_number() OVER (ORDER BY cnt DESC, gram ASC) = 1`
-    * (sort_array and the window's gram ordering are both UTF8-binary).
-    * The dup sum is order-independent.
-    *
-    * Kept as the READABLE REFERENCE TWIN of the production kernel:
-    * the hot paths ([[ngramRepetition]], `QualityFilter.gopherFilter`)
-    * use [[graft.expr.WordGramRunStatsExpr]], which computes the same
-    * struct from zero-copy byte spans without materializing the gram
-    * array; RepetitionKernelSpec pins the two against each other and
-    * against the original explode → aggregate → window form. */
-  private[text] val GramStatsType = "struct<top_gram:string,top_cnt:bigint,dup_chars:bigint>"
-  def gramRunStats(grams: Column): Column = {
-    def champion(st: Column): (Column, Column) = (
-      when(st.getField("run") > st.getField("best_cnt"), st.getField("prev"))
-        .otherwise(st.getField("best_gram")),
-      when(st.getField("run") > st.getField("best_cnt"), st.getField("run"))
-        .otherwise(st.getField("best_cnt")))
-    def dupAcc(st: Column): Column =
-      st.getField("dup_chars") + when(st.getField("run") >= 2,
-        st.getField("run") * length(st.getField("prev")).cast("long")).otherwise(lit(0L))
-    aggregate(sort_array(grams),
-      struct(lit(null).cast("string").as("prev"), lit(0L).as("run"),
-        lit(null).cast("string").as("best_gram"), lit(0L).as("best_cnt"),
-        lit(0L).as("dup_chars")),
-      (st, g) => when(st.getField("prev").isNull,
-        struct(g.as("prev"), lit(1L).as("run"),
-          lit(null).cast("string").as("best_gram"), lit(0L).as("best_cnt"),
-          lit(0L).as("dup_chars")))
-        .when(g === st.getField("prev"),
-          struct(g.as("prev"), (st.getField("run") + 1L).as("run"),
-            st.getField("best_gram").as("best_gram"),
-            st.getField("best_cnt").as("best_cnt"),
-            st.getField("dup_chars").as("dup_chars")))
-        .otherwise {
-          // run boundary: fold the finished run into champion + dup sum
-          val (bg, bc) = champion(st)
-          struct(g.as("prev"), lit(1L).as("run"), bg.as("best_gram"),
-            bc.as("best_cnt"), dupAcc(st).as("dup_chars"))
-        },
-      st => when(st.getField("prev").isNull, lit(null).cast(GramStatsType))
-        .otherwise {
-          val (bg, bc) = champion(st)
-          struct(bg.as("top_gram"), bc.as("top_cnt"), dupAcc(st).as("dup_chars"))
-        })
-  }
+  /** SQL type of the per-document gram-run statistics struct
+    * (`top_gram`, `top_cnt`, `dup_chars`) that
+    * [[graft.expr.WordGramRunStatsExpr]] computes; the sorted-run fold
+    * kept in the test tree (`TextReference.gramRunStats`) casts its
+    * empty-array NULL to it. */
+  private[graft] val GramStatsType = "struct<top_gram:string,top_cnt:bigint,dup_chars:bigint>"
 
   /** Per-document repetition metrics over word `n`-grams:
     *   - `top_gram` / `top_cnt`: the most frequent n-gram (count-desc,
@@ -117,9 +64,10 @@ object Repetition {
     * original text, so the expression works on zero-copy UTF8String
     * slices (the array-building `transform`+`slice`+`concat_ws` was
     * 2.1 s of q130's 2.5 s at sf0.1 — CurateProbe r18). Value-identical
-    * by the run-fold argument on [[gramRunStats]], whose HOF form is
-    * the committed reference twin (RepetitionKernelSpec pins all three
-    * forms against each other). Docs shorter than `n` words still
+    * by the run-fold argument (the expression's scaladoc); the HOF
+    * sorted-run fold `TextReference.gramRunStats` in the test tree is
+    * its reference (RepetitionKernelSpec pins all three forms against
+    * each other). Docs shorter than `n` words still
     * produce no row (the explode-form dropped their empty arrays; here
     * an explicit word-count filter does). */
   def ngramRepetition(df: DataFrame, id: String, text: String, n: Int): DataFrame = {

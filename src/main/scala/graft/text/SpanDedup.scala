@@ -37,27 +37,16 @@ object SpanDedup {
     * r18 kernel: the chunks come from [[graft.expr.WordSpanChunksExpr]]
     * — zero-copy byte spans instead of the split/slice/concat_ws array
     * build, value-identical by the single-space contiguity argument
-    * pinned in SpanDedupSpec (the expression's scaladoc carries the
-    * full equivalence proof). `coalesce(text, "")` preserves the array
-    * form's NULL-text behavior (one empty span, span_no 1 — the
-    * `concat_ws` of a NULL slice). */
+    * (the expression's scaladoc carries the full equivalence proof);
+    * SpanDedupSpec pins it to that array form,
+    * `TextReference.spansArrayForm` in the test tree.
+    * `coalesce(text, "")` preserves the array form's NULL-text
+    * behavior (one empty span, span_no 1 — the `concat_ws` of a NULL
+    * slice). */
   def spans(df: DataFrame, id: String, text: String, w: Int): DataFrame =
     df.select(col(id), explode(graft.expr.WordSpanChunksExpr.column(
         coalesce(col(text), lit("")), w)).as("__s"))
       .select(col(id), col("__s.span_no").as("span_no"), col("__s.span").as("span"))
-
-  /** Pre-r18 array-form twin of [[spans]], kept for the parity spec. */
-  private[graft] def spansArrayForm(df: DataFrame, id: String, text: String,
-                                    w: Int): DataFrame = {
-    val ws = split(col(text), " ")
-    val nSpans = ceil(size(ws).cast("double") / w).cast("int")
-    val chunks = transform(
-      sequence(lit(1), greatest(nSpans, lit(1))),
-      i => struct(i.cast("long").as("span_no"),
-        concat_ws(" ", slice(ws, (i - 1) * w + 1, lit(w))).as("span")))
-    df.select(col(id), explode(chunks).as("__s"))
-      .select(col(id), col("__s.span_no").as("span_no"), col("__s.span").as("span"))
-  }
 
   /** Corpus-wide keep-first span dedup. Returns one row per document:
     * span counts before/after plus the reconstructed text (surviving

@@ -148,8 +148,9 @@ object TextAnalysis {
     *
     * Backed by the codegen'd graft.expr.WinnowExpr (rolling Karp–Rabin
     * hashes + monotonic-deque window minima, O(len) per doc); the HOF
-    * twin [[winnowHof]] below is the readable reference it is pinned
-    * against and the shape of the q290 DuckDB oracle. The expression
+    * form `TextReference.winnowHof` in the test tree is the readable
+    * reference it is pinned against and the shape of the q290 DuckDB
+    * oracle. The expression
     * emits each document's distinct selection set directly, so no
     * global `.distinct()` shuffle is needed. */
   def winnow(df: DataFrame, idCol: Column, textCol: Column,
@@ -158,31 +159,6 @@ object TextAnalysis {
         graft.expr.WinnowExpr.column(textCol, k, w).as("__sel"))
       .select(col("id"), explode(col("__sel")).as("__s"))
       .select(col("id"), col("__s.pos").as("pos"), col("__s.fp").as("fp"))
-
-  /** The Column/HOF formulation of [[winnow]] — the readable reference
-    * the codegen'd expression is pinned against (TextOpsSpec parity)
-    * and the formula the DuckDB oracle replays. O(len²) exploded-row
-    * traffic per doc — not the production path. */
-  def winnowHof(df: DataFrame, idCol: Column, textCol: Column,
-                k: Int = 8, w: Int = 4): DataFrame = {
-    val m = (length(textCol) - (k - 1)).cast("int")
-    val base = df.select(idCol.as("id"), textCol.as("__t"), m.as("__m"))
-      .filter(col("__m") >= 1)
-    val hashes = transform(sequence(lit(1), col("__m")),
-      i => graft.functions.PortableHash.polyHash(col("__t").substr(i, lit(k))))
-    val wEff = least(lit(w), col("__m"))
-    val sel = base
-      .withColumn("__h", hashes)
-      .withColumn("__we", wEff)
-      .withColumn("__j", explode(sequence(lit(1), col("__m") - col("__we") + 1)))
-      .withColumn("__win", slice(col("__h"), col("__j"), col("__we")))
-      .withColumn("pos", (col("__j") + col("__we") -
-        array_position(reverse(col("__win")), array_min(col("__win"))))
-        .cast("long"))
-    sel.select(col("id"), col("pos"),
-        element_at(col("__h"), col("pos").cast("int")).as("fp"))
-      .distinct()
-  }
 
   /** MOSS-style span-overlap candidate pairs from [[winnow]]
     * fingerprints: docs sharing ≥ `minShared` distinct selected

@@ -54,7 +54,7 @@ class CmSketchSpec extends SparkSpec {
   test("array build ≡ explode build, rows schema and values (r18 kernel swap)") {
     val arr = SketchRollup.cmSketchTable(ledger, Seq("g"), col("period"),
       col("item"), Depth, Width)
-    val exp = SketchRollup.cmSketchTableExplode(ledger, Seq("g"), col("period"),
+    val exp = SketchRollupReference.cmSketchTableExplode(ledger, Seq("g"), col("period"),
       col("item"), Depth, Width)
     assert(arr.schema == exp.schema,
       s"schemas differ:\n${arr.schema}\n${exp.schema}")

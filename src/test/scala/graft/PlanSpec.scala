@@ -100,21 +100,12 @@ class PlanSpec extends SparkSpec {
     val plan = graft.operators.FeatureStore.wide(weekly,
       Seq("l_partkey", "l_suppkey"), "week_start", "qty_sum")
       .queryExecution.executedPlan.toString
-    // Exchange budget: 1 weekly-grain groupBy (fact) + the EWMA kernel's
-    // narrow repartition + 1 series exchange for the window families
-    // (the kernel's MapPartitions erases partitioning metadata, so the
-    // windows re-shuffle — measured cheaper than the 2-exchange
-    // kernel-last order, which pays the wide-row encoder tax; see
-    // FeatureStore doc). ~60 window columns must NOT each add an
-    // exchange.
+    // Exchange budget: 1 weekly-grain groupBy (fact) + 1 series exchange.
+    // The EWMA kernel is a running window aggregate on the same series
+    // window, so it shares that exchange with the window families; ~60
+    // window columns must NOT each add an exchange.
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges <= 3, s"$exchanges exchanges:\n$plan")
-    // and the no-kernel variant is exactly the two relational exchanges
-    val plainPlan = graft.operators.FeatureStore.wide(weekly,
-      Seq("l_partkey", "l_suppkey"), "week_start", "qty_sum", withEwma = false)
-      .queryExecution.executedPlan.toString
-    val plainExchanges = "Exchange hashpartitioning".r.findAllIn(plainPlan).length
-    assert(plainExchanges <= 2, s"$plainExchanges exchanges:\n$plainPlan")
+    assert(exchanges == 2, s"$exchanges exchanges:\n$plan")
   }
 
   test("sessionization: lag + running session counter share ONE user exchange") {
@@ -452,8 +443,8 @@ class PlanSpec extends SparkSpec {
     // r17: the half-step joins are materialized behind localCheckpoints
     // and the scoring tail is the norm-pruned mipsTopK mapPartitions
     // over the broadcast item array — the FINAL plan must contain NO
-    // join at all (the 12x-at-10x crossJoin form is retired; its shape
-    // is pinned separately via crossScoreTopK in the parity spec)
+    // join at all (the 12x-at-10x crossJoin form is retired; R17OpsSpec
+    // pins the output to it via RecommendReference.crossScoreTopK)
     val plan = SparkEntry.queries("q283_als_portable")(spark, dir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), plan)
@@ -537,8 +528,8 @@ class PlanSpec extends SparkSpec {
   test("als portable: scoring top-k never becomes a window sort") {
     // r17: the tail is the MIPS kernel (per-user insertion top-k inside
     // mapPartitions) — no rank window, no sort of scored item lists.
-    // The bounded-heap aggregate pin lives on in crossScoreTopK's
-    // RecommendSpec row-for-row test.
+    // The bounded-heap aggregate that RecommendReference.crossScoreTopK
+    // uses keeps its RecommendSpec row-for-row test.
     val plan = SparkEntry.queries("q283_als_portable")(spark, dir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("WindowGroupLimit"), plan)

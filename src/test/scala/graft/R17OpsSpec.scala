@@ -176,7 +176,7 @@ class R17OpsSpec extends SparkSpec {
       (0 until 5).map(i => (1000L + i, 1.0, 0.0)))
       .toDF("i", "f1", "f2")
     val mips = graft.model.Recommend.mipsTopK(users, items, 5, "user", "item")
-    val cross = graft.model.Recommend.crossScoreTopK(users, items, 5, "user", "item")
+    val cross = RecommendReference.crossScoreTopK(users, items, 5, "user", "item")
     assert(mips.count() == cross.count())
     assert(mips.except(cross).isEmpty && cross.except(mips).isEmpty,
       "MIPS pruning must not change a single row vs the exhaustive cross form")

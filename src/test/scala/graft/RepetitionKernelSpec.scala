@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.text.Repetition
 
 /** r18 gram-kernel equivalence pins: the zero-copy byte-span expression
   * ([[graft.expr.WordGramRunStatsExpr]]), the HOF sorted-run fold
-  * ([[Repetition.gramRunStats]]) and the ORIGINAL explode → (doc, gram)
+  * ([[TextReference.gramRunStats]]) and the ORIGINAL explode → (doc, gram)
   * aggregate → ranking-window form must produce the identical
   * (top_gram, top_cnt, dup_chars) triple on an adversarial corpus —
   * multi-space runs (empty words), leading/trailing spaces, multi-byte
@@ -64,7 +63,7 @@ class RepetitionKernelSpec extends SparkSpec {
       transform(sequence(lit(1), size(ws) - (n - 1)),
         i => concat_ws(" ", slice(ws, i, lit(n)))))
       .otherwise(array().cast("array<string>"))
-    df.select(col("doc_id"), Repetition.gramRunStats(grams).as("st"))
+    df.select(col("doc_id"), TextReference.gramRunStats(grams).as("st"))
       .filter(col("st").isNotNull)
       .select(col("doc_id"), col("st.top_gram"), col("st.top_cnt"), col("st.dup_chars"))
       .as[(Long, String, Long, Long)].collect().sortBy(_._1).toSeq

@@ -323,7 +323,7 @@ class SequentialKernelsSpec extends SparkSpec {
       val win = SequentialKernels.withEwma(df, Seq("k"), Seq(col("t")), "v", alpha, "e")
         .orderBy("k", "t").select("k", "t", "e")
         .as[(String, Int, Option[Double])].collect().toSeq
-      val fold = SequentialKernels.withEwmaFold(df, Seq("k"), Seq(col("t")), "v", alpha, "e")
+      val fold = SequentialKernelsReference.withEwmaFold(df, Seq("k"), Seq(col("t")), "v", alpha, "e")
         .orderBy("k", "t").select("k", "t", "e")
         .as[(String, Int, Option[Double])].collect().toSeq
       assert(win == fold, s"alpha=$alpha\nwin =$win\nfold=$fold")
@@ -341,15 +341,15 @@ class SequentialKernelsSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     val k = Seq("k"); val o = Seq(col("t"))
     assert(rows(SequentialKernels.withHolt(df, k, o, "v", 0.3, 0.4), "holt_level", "holt_trend")
-      == rows(SequentialKernels.withHoltFold(df, k, o, "v", 0.3, 0.4), "holt_level", "holt_trend"))
+      == rows(SequentialKernelsReference.withHoltFold(df, k, o, "v", 0.3, 0.4), "holt_level", "holt_trend"))
     assert(rows(SequentialKernels.withCroston(df, k, o, "v", 0.2), "croston_forecast")
-      == rows(SequentialKernels.withCrostonFold(df, k, o, "v", 0.2), "croston_forecast"))
+      == rows(SequentialKernelsReference.withCrostonFold(df, k, o, "v", 0.2), "croston_forecast"))
     assert(rows(SequentialKernels.withCroston(df, k, o, "v", 0.2, sba = true), "croston_forecast")
-      == rows(SequentialKernels.withCrostonFold(df, k, o, "v", 0.2, sba = true), "croston_forecast"))
+      == rows(SequentialKernelsReference.withCrostonFold(df, k, o, "v", 0.2, sba = true), "croston_forecast"))
     assert(rows(SequentialKernels.withTsb(df, k, o, "v", 0.3, 0.2), "tsb_forecast")
-      == rows(SequentialKernels.withTsbFold(df, k, o, "v", 0.3, 0.2), "tsb_forecast"))
+      == rows(SequentialKernelsReference.withTsbFold(df, k, o, "v", 0.3, 0.2), "tsb_forecast"))
     assert(rows(SequentialKernels.withEwmVar(df, k, o, "v", 0.25), "ewm_mean", "ewm_var")
-      == rows(SequentialKernels.withEwmVarFold(df, k, o, "v", 0.25), "ewm_mean", "ewm_var"))
+      == rows(SequentialKernelsReference.withEwmVarFold(df, k, o, "v", 0.25), "ewm_mean", "ewm_var"))
   }
 
   test("grid fits: array form ≡ fold form bit-for-bit on an adversarial frame " +

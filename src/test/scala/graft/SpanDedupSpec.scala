@@ -39,11 +39,11 @@ class SpanDedupSpec extends SparkSpec {
     for (w <- Seq(1, 3, 4)) {
       val a = SpanDedup.spans(adv, "doc_id", "text", w)
         .orderBy("doc_id", "span_no").collect().map(_.toSeq).toSeq
-      val b = SpanDedup.spansArrayForm(adv, "doc_id", "text", w)
+      val b = TextReference.spansArrayForm(adv, "doc_id", "text", w)
         .orderBy("doc_id", "span_no").collect().map(_.toSeq).toSeq
       assert(a == b, s"w=$w")
       assert(SpanDedup.spans(adv, "doc_id", "text", w).schema ==
-        SpanDedup.spansArrayForm(adv, "doc_id", "text", w).schema)
+        TextReference.spansArrayForm(adv, "doc_id", "text", w).schema)
     }
   }
 

@@ -210,7 +210,7 @@ class StreamingSpec extends SparkSpec {
       (ts("2024-01-01 10:25:00"), "click", 5.0),
       (ts("2024-01-01 10:35:00"), "view", 2.0))
       .toDF("ts", "event_type", "value")
-    val b = EventsStream.windowedTopKBatch(batch, k = 2, "1 hour")
+    val b = EventsStreamReference.windowedTopKBatch(batch, k = 2, "1 hour")
       .select(col("window_start").cast("string"), col("event_type"),
         col("top_values"))
       .as[(String, String, Seq[Double])].collect()

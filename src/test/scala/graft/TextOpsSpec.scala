@@ -58,7 +58,7 @@ class TextOpsSpec extends SparkSpec {
         (9004L, "")).toDF("doc_id", "text"))
     val fast = graft.text.TextAnalysis.winnow(docs, col("doc_id"), col("text"))
       .select("id", "pos", "fp").as[(Long, Long, Long)].collect().sorted.toSeq
-    val ref = graft.text.TextAnalysis.winnowHof(docs, col("doc_id"), col("text"))
+    val ref = TextReference.winnowHof(docs, col("doc_id"), col("text"))
       .select("id", "pos", "fp").as[(Long, Long, Long)].collect().sorted.toSeq
     assert(fast == ref)
   }
