@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.etl.{Cleaning, Enrichment}
 import graft.functions.Calendar
-import graft.io.{Sinks, SubmissionValidator}
+import graft.io.Sinks
 import graft.metrics.Metrics
 import graft.operators.{AggFeatures, SeriesWindow, WindowFeatures}
 import graft.post.PostProcess
@@ -239,6 +239,20 @@ object Jobs {
     graft.operators.FeatureStore.wideSelected(etl(spark, sfDir),
       Seq("l_partkey", "l_suppkey"), "week_start", "qty_sum", k)
 
+  /** The one tail of the three submission legs: the leg's own
+    * post-processing `steps`, then integerize, ship the quantity as a
+    * long and write through the validating sink. The returned frame
+    * reads the written CSV. */
+  private def ship(spark: SparkSession, grid: DataFrame, path: String,
+                   steps: PostProcess.Step*): DataFrame =
+    Sinks.csvSubmission(spark, PostProcess.chain(steps :+ PostProcess.integerize("quantidade"))(grid)
+      .withColumn("quantidade", col("quantidade").cast("long")), path)
+
+  /** The blend's and the champion's post-processing: clip at zero, cap at
+    * mean + 5σ. */
+  private val clipCap = Seq(PostProcess.nonNegative("quantidade"),
+    PostProcess.sigmaCap("quantidade", 5.0))
+
   /** §3.3 forecast + submission: per-series hurdle×EWMA blend forecast
     * for a 5-week horizon grid, post-processed, validated, written. */
   def forecastSubmission(spark: SparkSession, sfDir: String, outDir: String): DataFrame = {
@@ -255,14 +269,26 @@ object Jobs {
       .withColumn("semana", explode(sequence(lit(1), lit(5))))
       .select(col("semana"), col("l_suppkey").as("pdv"),
         col("l_partkey").as("produto"), col("ewma").as("quantidade"))
-    val processed = PostProcess.chain(Seq(
-      PostProcess.nonNegative("quantidade"),
-      PostProcess.sigmaCap("quantidade", 5.0),
-      PostProcess.integerize("quantidade")))(grid)
-      .withColumn("quantidade", col("quantidade").cast("long"))
-    val back = Sinks.csvSubmission(spark, processed, s"$outDir/submission")
-    require(SubmissionValidator.isValid(back), "submission failed validation")
-    back
+    ship(spark, grid, s"$outDir/submission", clipCap: _*)
+  }
+
+  /** The champion forecast as a submission grid, handed to `use`. The
+    * grid is materialized once: post-processing reads it more than once
+    * (sigmaCap's mean/σ aggregate and the capped rows; the competitive
+    * cap's percentile and the scaled rows), and without the checkpoint
+    * each read would re-run the whole champion plan. The grid's and the
+    * series' checkpoints are released when `use` returns, so `use` must
+    * return a frame that no longer reads them (the sink's read-back). */
+  private def withChampionGrid(spark: SparkSession, sfDir: String)
+                              (use: DataFrame => DataFrame): DataFrame = {
+    val fc = graft.seq.Champion.championForecast(etl(spark, sfDir),
+      Seq("l_partkey", "l_suppkey"), Seq(col("week_start")), "qty_sum",
+      h = 5, m = 13)
+    val grid = fc.select(col("step").cast("int").as("semana"),
+      col("l_suppkey").as("pdv"), col("l_partkey").as("produto"),
+      col("forecast").as("quantidade")).localCheckpoint(true)
+    try use(grid)
+    finally Seq(grid, fc).foreach(org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints)
   }
 
   /** §3.3 champion path: per-series model SELECTION drives the
@@ -273,93 +299,53 @@ object Jobs {
     * sink discipline as [[forecastSubmission]]. This is the
     * reference's actual per-series loop wired end to end: every
     * series forecasts with whichever family member its own history
-    * scores best (length-1 series degrade to the mean member).
-    *
-    * The post-pick grid is materialized once before post-processing:
-    * sigmaCap reads the grid twice (its own mean/σ aggregate and the
-    * capped rows), and without the checkpoint each read would re-run
-    * the whole champion plan. The grid's and the series' checkpoints
-    * are released once the shipped CSV has been validated (the
-    * returned frame reads the CSV, not them). */
-  def championSubmission(spark: SparkSession, sfDir: String, outDir: String): DataFrame = {
-    val weekly = etl(spark, sfDir)
-    val fc = graft.seq.Champion.championForecast(weekly,
-      Seq("l_partkey", "l_suppkey"), Seq(col("week_start")), "qty_sum",
-      h = 5, m = 13)
-    val grid = fc.select(col("step").cast("int").as("semana"),
-      col("l_suppkey").as("pdv"), col("l_partkey").as("produto"),
-      col("forecast").as("quantidade")).localCheckpoint(true)
-    try {
-      val processed = PostProcess.chain(Seq(
-        PostProcess.nonNegative("quantidade"),
-        PostProcess.sigmaCap("quantidade", 5.0),
-        PostProcess.integerize("quantidade")))(grid)
-        .withColumn("quantidade", col("quantidade").cast("long"))
-      val back = Sinks.csvSubmission(spark, processed, s"$outDir/submission_champion")
-      require(SubmissionValidator.isValid(back), "champion submission failed validation")
-      back
-    } finally Seq(grid, fc).foreach(org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints)
+    * scores best (length-1 series degrade to the mean member). */
+  def championSubmission(spark: SparkSession, sfDir: String, outDir: String): DataFrame =
+    withChampionGrid(spark, sfDir)(ship(spark, _, s"$outDir/submission_champion", clipCap: _*))
+
+  /** The competitive adjustment factor for `ourScore` on a (team, score)
+    * leaderboard, lower score better (reference
+    * submission_pipeline.py:385-404 and leaderboard_analyzer.py): ×1.01
+    * in the leader zone (rank 1-3), else ×0.98 when the gap to the
+    * 3rd-lowest score is under 2.0, else ×1.0. The zones below the
+    * leader's (contender, middle pack, bottom) do not move the factor.
+    * The board is dimension-sized: one driver action collects its
+    * sorted scores. */
+  private[graft] def competitiveFactor(board: DataFrame, ourScore: Double): Double = {
+    val scores = board.select(col("score").cast("double").as("s"))
+      .filter(col("s").isNotNull).orderBy(col("s")).collect().map(_.getDouble(0))
+    // _estimate_rank (leaderboard_analyzer.py:374-379): first board
+    // position whose score is >= ours
+    val rank = scores.count(_ < ourScore) + 1
+    if (rank <= 3) 1.01
+    // past the leader zone, the three lowest scores are all below ours
+    else if (ourScore - scores(2) < 2.0) 0.98
+    else 1.0
   }
 
   /** Competitive-informed submission (reference
     * submission_pipeline.py:373-404 + the leaderboard_analyzer zone
     * machinery): the champion forecast grid runs the reference's BASIC
     * post-processing (non-negative clip + cap at the predictions' own
-    * exact 99.5th percentile, :373-383), then the competitive
-    * adjustment (:385-404): ×1.01 when our position on `board` is the
-    * leader zone, ×0.98 when the gap to the 3rd score is under 2.0,
-    * ×1.0 otherwise — then integerize, validate and ship through the
-    * same sink discipline.
-    *
-    * `board` is a (team, score) leaderboard (lower score better);
-    * `ourScore` is this pipeline's own score on the same scale. The
-    * position/gap scalars come from two driver-side actions on the
-    * dimension-sized board (the documented bounded pattern); the cap
-    * quantile rides the plan as a broadcast 1-row cross join.
+    * exact 99.5th percentile, :373-383), then the
+    * [[competitiveFactor]] adjustment — then integerize, validate and
+    * ship through the same sink discipline. `board` is a (team, score)
+    * leaderboard (lower score better); `ourScore` is this pipeline's own
+    * score on the same scale. The cap quantile rides the plan as a
+    * broadcast 1-row cross join.
     */
   def competitiveSubmission(spark: SparkSession, sfDir: String, outDir: String,
                             board: DataFrame, ourScore: Double): DataFrame = {
     import graft.functions.Funcs.pct
-    // _estimate_rank (leaderboard_analyzer.py:374-379): first board
-    // position whose score is >= ours; zone ladder at :381-391
-    val better = board.filter(col("score") < ourScore).count()
-    val total = board.count()
-    val rank = better + 1
-    val zone =
-      if (rank <= 3) "leader"
-      else if (rank <= 10) "contender"
-      else if (rank <= total * 0.5) "middle_pack"
-      else "bottom"
-    // the reference's k-th-score-or-zero convention (analyze_gaps)
-    val top3Score =
-      if (total >= 3)
-        board.orderBy(col("score"), col("team")).limit(3)
-          .orderBy(col("score").desc).limit(1)
-          .select(col("score")).collect().head.getDouble(0)
-      else 0.0
-    val gapToTop3 = math.abs(ourScore - top3Score)
-    val factor =
-      if (zone == "leader") 1.01
-      else if (gapToTop3 < 2.0) 0.98
-      else 1.0
-    val weekly = etl(spark, sfDir)
-    val fc = graft.seq.Champion.championForecast(weekly,
-      Seq("l_partkey", "l_suppkey"), Seq(col("week_start")), "qty_sum",
-      h = 5, m = 13)
-    val grid = fc.select(col("step").cast("int").as("semana"),
-      col("l_suppkey").as("pdv"), col("l_partkey").as("produto"),
-      col("forecast").as("quantidade"))
-    val clipped = PostProcess.nonNegative("quantidade")(grid)
-    val cap = clipped.agg(pct(col("quantidade"), 0.995).as("__cap"))
-    val processed = clipped.crossJoin(broadcast(cap))
-      .withColumn("quantidade",
-        least(col("quantidade"), col("__cap")) * lit(factor))
-      .drop("__cap")
-    val finalized = PostProcess.integerize("quantidade")(processed)
-      .withColumn("quantidade", col("quantidade").cast("long"))
-    val back = Sinks.csvSubmission(spark, finalized, s"$outDir/submission_competitive")
-    require(SubmissionValidator.isValid(back), "competitive submission failed validation")
-    back
+    val factor = competitiveFactor(board, ourScore)
+    withChampionGrid(spark, sfDir) { grid =>
+      val clipped = PostProcess.nonNegative("quantidade")(grid)
+      val cap = clipped.agg(pct(col("quantidade"), 0.995).as("__cap"))
+      val capped = clipped.crossJoin(broadcast(cap))
+        .withColumn("quantidade", least(col("quantidade"), col("__cap")) * lit(factor))
+        .drop("__cap")
+      ship(spark, capped, s"$outDir/submission_competitive")
+    }
   }
 
   /** Champion-vs-blend backtest — the "which strategy ships?" report.

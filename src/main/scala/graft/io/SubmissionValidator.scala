@@ -7,35 +7,43 @@ import org.apache.spark.sql.functions._
   * (reference: scripts/submissions/validate_submission.py:63-266):
   * schema, week ∈ [1,5], non-negative integer quantities, no nulls, no
   * duplicate (week, store, product) keys, plus distribution stats.
-  * ONE aggregation pass over the submission frame produces the report;
-  * `isValid` reduces it to a boolean.
+  * ONE scan of the submission frame produces the report: every count
+  * derives from its grouping by the key; `isValid` reduces it to a
+  * boolean.
   */
 object SubmissionValidator {
 
   val RequiredColumns: Seq[String] = Seq("semana", "pdv", "produto", "quantidade")
 
-  /** Violation-count report as a 1-row DataFrame. */
-  def report(df: DataFrame, week: Column = col("semana"), store: Column = col("pdv"),
-             product: Column = col("produto"), qty: Column = col("quantidade")): DataFrame = {
-    val dupes = df.groupBy(week.as("w"), store.as("s"), product.as("p"))
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1)
-      .agg(coalesce(sum(col("c") - 1), lit(0L)).as("dup_rows"))
-    df.agg(
-      count(lit(1)).as("total_rows"),
-      sum(when(week.isNull || store.isNull || product.isNull || qty.isNull, 1L)
-        .otherwise(0L)).as("null_rows"),
-      sum(when(week < 1 || week > 5, 1L).otherwise(0L)).as("bad_week_rows"),
-      sum(when(qty < 0, 1L).otherwise(0L)).as("negative_qty_rows"),
-      sum(when(qty =!= qty.cast("long"), 1L).otherwise(0L)).as("non_integer_rows"),
-      countDistinct(week).as("n_weeks"),
-      countDistinct(store).as("n_stores"),
-      countDistinct(product).as("n_products"),
-      min(qty).as("qty_min"), max(qty).as("qty_max"),
-      avg(qty).as("qty_mean"))
-      .crossJoin(broadcast(dupes))
+  /** Violation-count report as a 1-row DataFrame. Row counts are summed
+    * over the key groups: a key column is constant inside its group, so
+    * the week and null-key tests count whole groups. The counts read 0,
+    * not null, on an empty frame. */
+  def report(df: DataFrame): DataFrame = {
+    val (week, qty) = (col("semana"), col("quantidade"))
+    val nullKey = week.isNull || col("pdv").isNull || col("produto").isNull
+    def total(c: Column): Column = coalesce(sum(c), lit(0L))
+    df.groupBy(week, col("pdv"), col("produto")).agg(
+      count(lit(1)).as("c"), count(qty).as("c_qty"),
+      sum(when(qty < 0, 1L).otherwise(0L)).as("c_neg"),
+      sum(when(qty =!= qty.cast("long"), 1L).otherwise(0L)).as("c_frac"),
+      min(qty).as("q_min"), max(qty).as("q_max"), sum(qty.cast("double")).as("q_sum"))
+      .agg(
+        total(col("c")).as("total_rows"),
+        total(when(nullKey, col("c")).otherwise(col("c") - col("c_qty"))).as("null_rows"),
+        total(when(week < 1 || week > 5, col("c"))).as("bad_week_rows"),
+        total(col("c_neg")).as("negative_qty_rows"),
+        total(col("c_frac")).as("non_integer_rows"),
+        countDistinct(week).as("n_weeks"),
+        countDistinct(col("pdv")).as("n_stores"),
+        countDistinct(col("produto")).as("n_products"),
+        min(col("q_min")).as("qty_min"), max(col("q_max")).as("qty_max"),
+        try_divide(sum(col("q_sum")), sum(col("c_qty"))).as("qty_mean"),
+        total(when(col("c") > 1, col("c") - 1)).as("dup_rows"))
   }
 
-  /** Hard gate: schema present and every violation count zero. */
+  /** Hard gate: schema present and every violation count zero (so an
+    * empty frame passes). */
   def isValid(df: DataFrame): Boolean = {
     if (!RequiredColumns.forall(df.columns.contains)) return false
     val r = report(df).select("null_rows", "bad_week_rows", "negative_qty_rows",

@@ -153,8 +153,38 @@ class JobsSpec extends SparkSpec {
     assert(leadTotal > 0 && aggrTotal > 0)
     // ×0.98 vs ×1.01 on identical pre-adjustment grids
     assert(aggrTotal <= leadTotal)
-    // both validate through the submission contract (isValid ran in
-    // the job); structural sanity on the shipped grid
+    // both validate through the submission contract (the sink ran
+    // isValid); structural sanity on the shipped grid
     assert(lead.columns.toSeq == Seq("semana", "pdv", "produto", "quantidade"))
+  }
+
+  test("competitiveFactor: the 3rd score counts tied scores, one per board row") {
+    // sorted scores 1, 2, 2, 2, 9, 10, ...: the 3rd-lowest is 2.0 (a tie
+    // at places 2-4), not 9.0 (the 3rd distinct score)
+    val tied = (Seq(1.0, 2.0, 2.0, 2.0) ++ (9 to 20).map(_.toDouble)).zipWithIndex
+      .map { case (sc, i) => (s"t$i", sc) }.toDF("team", "score")
+    // rank 5 (contender), gap |3.5 - 2| = 1.5 < 2.0 → ×0.98
+    assert(graft.app.Jobs.competitiveFactor(tied, 3.5) == 0.98)
+    // rank 5, gap 2.5 → ×1.0
+    assert(graft.app.Jobs.competitiveFactor(tied, 4.5) == 1.0)
+    // rank 2 → leader → ×1.01
+    assert(graft.app.Jobs.competitiveFactor(tied, 1.5) == 1.01)
+    // fewer than three rows: every score ranks in the leader zone
+    val two = Seq(("a", 0.5), ("b", 0.7)).toDF("team", "score")
+    assert(graft.app.Jobs.competitiveFactor(two, 9.0) == 1.01)
+  }
+
+  test("SparkEntry.entry: a one-row forecast scorecard at sf0.001") {
+    val rows = graft.SparkEntry.entry(spark).collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    assert(r.schema.fieldNames.toSeq ==
+      Seq("wmape", "mape", "smape", "mae", "rmse", "bias", "n_rows"))
+    assert(r.getAs[Long]("n_rows") > 0L)
+    Seq("wmape", "smape", "mae", "rmse").foreach { c =>
+      val v = r.getAs[Double](c)
+      assert(!v.isNaN && v >= 0.0, s"$c=$v")
+    }
+    assert(r.getAs[Double]("rmse") >= r.getAs[Double]("mae"))
   }
 }
