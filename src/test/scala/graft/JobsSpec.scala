@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Composed-job invariants for the application layer (the per-leg math
@@ -101,14 +102,18 @@ class JobsSpec extends SparkSpec {
   }
 
   test("championSubmission releases every checkpoint it pins") {
-    // the series checkpoint and the materialized post-pick grid must not
-    // outlive the call: persistentRdds holds strong references, so a
-    // leaked block set grows the heap with every submission
+    // the series checkpoint and the materialized grid must not outlive
+    // the call: persistentRdds holds strong references, so a leaked
+    // block set grows the heap with every submission
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val tmp = java.nio.file.Files.createTempDirectory("graft_champ_rel").toString
-    graft.app.Jobs.championSubmission(spark, dir, tmp)
-    assert(sc.getPersistentRDDs.keySet == before)
+    Seq[(SparkSession, String, String) => DataFrame](
+      graft.app.Jobs.championSubmission, graft.app.Jobs.forecastSubmission)
+      .foreach { leg =>
+        val before = sc.getPersistentRDDs.keySet
+        leg(spark, dir, tmp)
+        assert(sc.getPersistentRDDs.keySet == before)
+      }
   }
 
   test("diagnosticsRun: one alert frame with drift, quality and health legs") {

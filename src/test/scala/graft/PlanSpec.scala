@@ -1,7 +1,15 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.app.Jobs
 import graft.core.Tables
+import graft.seq.Champion
 
 /** Physical-plan assertions: the scale-critical properties the engine
   * promises — pushdown, pruning, broadcast joins, no cartesian
@@ -587,5 +595,76 @@ class PlanSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     val tailScans = "lineitem\\.parquet".r.findAllIn(tail).length
     assert(tailScans == 0, s"$tailScans lineitem scans in the tail (want 0):\n$tail")
+  }
+
+  // ---- the ETL's one product-key exchange
+
+  /** (action name, executed plan) of every query `body` runs, eager
+    * checkpoints included. */
+  private def plansRun(body: => Unit): Seq[(String, SparkPlan)] = {
+    val plans = ArrayBuffer.empty[(String, SparkPlan)]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized(plans += funcName -> qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      GraftSqlBridge.statusJobs(spark) // drains the listener bus
+    } finally spark.listenerManager.unregister(listener)
+    plans.synchronized(plans.toList)
+  }
+
+  /** The shuffle exchanges an executed plan ran, through its adaptive
+    * wrapper and query stages; a reused exchange is not counted again. */
+  private def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+    case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+    case q: QueryStageExec => shuffles(q.plan)
+    case x: ShuffleExchangeExec => x +: x.children.flatMap(shuffles)
+    case other => other.children.flatMap(shuffles)
+  }
+
+  /** Shuffles run to build and collect `build()`'s frame; its
+    * checkpoints are released after. */
+  private def shufflesToCollect(build: () => DataFrame): Int = {
+    var out: DataFrame = null
+    val ran = plansRun { out = build(); out.collect() }
+    GraftSqlBridge.unpersistCheckpoints(out)
+    ran.map { case (_, p) => shuffles(p).size }.sum
+  }
+
+  test("feature store: dedup, weekly grain and series windows ride ONE l_partkey exchange") {
+    val plan = Jobs.featureStore(spark, dir).queryExecution.executedPlan.toString
+    val exchanges = "Exchange hashpartitioning\\([^)]*\\)".r.findAllIn(plan).toList
+    assert(exchanges.size == 1, s"${exchanges.size} exchanges:\n$plan")
+    assert(exchanges.head.matches("Exchange hashpartitioning\\(l_partkey#\\d+L?, \\d+\\)"),
+      plan)
+  }
+
+  test("champion: the series checkpoint over the ETL runs ONE exchange") {
+    var fc: DataFrame = null
+    val ran = plansRun {
+      fc = Champion.championForecast(Jobs.etl(spark, dir), Seq("l_partkey", "l_suppkey"),
+        Seq(col("week_start")), "qty_sum", h = 5, m = 13)
+    }
+    GraftSqlBridge.unpersistCheckpoints(fc)
+    val ckpt = ran.collect {
+      case ("localCheckpoint", p) if p.output.exists(_.name == Champion.LenCol) => p
+    }
+    assert(ckpt.size == 1, s"${ckpt.size} series checkpoints seen")
+    val n = shuffles(ckpt.head).size
+    assert(n == 1, s"$n exchanges:\n${ckpt.head}")
+  }
+
+  test("championBacktest and diagnosticsRun: the ETL exchange adds no shuffle") {
+    // both re-key the weekly grain by supplier, so the l_partkey exchange
+    // cannot carry their windows; it replaces the dedup and weekly
+    // exchanges, one shuffle fewer than the 18 and 12 of the two-exchange
+    // ETL
+    val backtest = shufflesToCollect(() => Jobs.championBacktest(spark, dir, h = 3))
+    assert(backtest <= 17, s"championBacktest ran $backtest shuffles")
+    val diagnostics = shufflesToCollect(() => Jobs.diagnosticsRun(spark, dir))
+    assert(diagnostics <= 11, s"diagnosticsRun ran $diagnostics shuffles")
   }
 }
