@@ -197,10 +197,12 @@ object SparkEntry {
     * row per (series, member) carrying the score and the member's
     * forecasts — is series-grain tiny and localCheckpointed once per
     * (session, sfDir), so a sweep that runs them all pays the eight
-    * per-series fits ONCE. The four frames (pick, blend, scoreboard,
-    * forecast union) are window/explode tails over that one
-    * checkpoint, with values identical to the one-plan
-    * championForecast/blendForecast/scoreboard paths. */
+    * per-series fits ONCE, in the one series pass that writes the
+    * checkpoint (no series checkpoint of its own below it). The four
+    * frames (pick, blend, scoreboard, forecast union) are
+    * window/explode tails over that one checkpoint, with values
+    * identical to the one-plan championForecast/blendForecast/scoreboard
+    * paths. */
   private def championShared(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
     Memos.memo(s, "champion", d) {
       val weekly = Enrichment.weeklyAggregate(li(s, d), col("l_shipdate"),

@@ -58,7 +58,7 @@ object Jobs {
     * it, and the broadcast join to `part` keeps the stream side's
     * partitioning, so the dedup window, the weekly aggregate and the
     * series windows above [[etl]] (the feature store's, the forecast
-    * leg's, the champion's length window) all ride this one exchange.
+    * leg's, the champion's whole member pass) all ride this one exchange.
     * The step relies on no product dominating the line items, since each
     * part's rows land in one partition: the busiest `l_partkey` holds
     * 0.082% of the line items at sf0.01 (2,000 parts) and 0.009% at
@@ -293,16 +293,16 @@ object Jobs {
     * the scaled rows), and above the ETL's one exchange there is no
     * shuffle a second read could reuse, so without the checkpoint each
     * read would re-run the ETL tail, the series windows and, for the
-    * champion, the member kernels. The grid's checkpoints and those in
-    * `fc`'s lineage (the champion's series checkpoint) are released when
-    * `use` returns, so `use` must return a frame that no longer reads
-    * them (the sink's read-back). */
+    * champion, the member kernels. `fc` itself materializes nothing:
+    * the champion's member pass runs inside the grid's one plan. The
+    * grid's checkpoint is released when `use` returns, so `use` must
+    * return a frame that no longer reads it (the sink's read-back). */
   private def withGrid(fc: DataFrame)(use: DataFrame => DataFrame): DataFrame = {
     val grid = fc.select(col("step").cast("int").as("semana"),
       col("l_suppkey").as("pdv"), col("l_partkey").as("produto"),
       col("forecast").as("quantidade")).localCheckpoint(true)
     try use(grid)
-    finally Seq(grid, fc).foreach(org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints)
+    finally org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints(grid)
   }
 
   /** The champion forecast over the weekly grain, 5 steps ahead. */

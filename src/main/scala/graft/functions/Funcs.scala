@@ -147,6 +147,14 @@ object Funcs {
         1e4, "microMean")
     else microSumDec(c)) / count(lit(1)) + lit(0.0)
 
+  /** [[microMean]] over a window: the same quantized sum, guard and
+    * count as window aggregates, so every row carries its frame's exact
+    * mean, bit-identical to the grouped form's. */
+  def microMeanOver(c: Column, w: org.apache.spark.sql.expressions.WindowSpec): Column =
+    guardedLongSumOver(microLong(
+      graft.expr.RoundHalfUpExpr.column(c.cast("double") * lit(1e4))),
+      1e4, w, "microMean") / count(lit(1)).over(w) + lit(0.0)
+
   /** Exact sum of a 4dp-grid column via guarded-long micro-int
     * accumulation — the summand of [[microMean]], shared by every
     * operator that needs partial-aggregation-order-independent error

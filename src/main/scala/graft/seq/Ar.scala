@@ -14,10 +14,12 @@ import graft.functions.Funcs.r
   *
   * fit by ordinary least squares over the rows where both lags exist,
   * solved in closed form from nine sufficient sums via Cramer's rule
-  * on the 3×3 normal equations. Execution shape: one series window for
-  * the lags, one map-side-combinable aggregate for the sums, the
-  * key-grain coefficient table joined back — no iteration, no driver
-  * loop, no per-group materialization.
+  * on the 3×3 normal equations. Execution shape: [[fitted]] takes the
+  * lags and the sums from one series window (the sums as unbounded
+  * window aggregates, so no coefficient table is joined back); the
+  * forecasters collapse each series with one map-side-combinable
+  * aggregate. No iteration, no driver loop, no per-group
+  * materialization.
   *
   * Determinism convention (the q213 Theta recipe, unified here in r10):
   * every value quantizes to the 1e-4 grid once (round(x·1e4) as a
@@ -48,34 +50,36 @@ object Ar {
 
   private val DetEps = 1e-8
 
-  /** Key-grain coefficient table: (keys..., ar_c, ar_phi1, ar_phi2).
-    * Series with no regression rows are absent. */
-  private def coefs(indexed: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val key = keyCols.map(col)
-    val sample = indexed.filter(col("__l2").isNotNull)
-    // exact micro-int accumulation (see object scaladoc): m() quantizes
-    // to decimal micro-units for the exact sum, mL() is the long twin
-    // used as the second product factor (decimal × long stays decimal)
+  /** The nine exact sufficient sums of the regression rows (`rows`:
+    * where `l2`, and so `l1`, exists) as aggregate functions, in the order
+    * [[solve]] reads them: n, Σy, Σl1, Σl2, Σy·l1, Σy·l2, Σl1², Σl2²,
+    * Σl1·l2. Linear sums are in 1e-4 units, products in 1e-8 units,
+    * all in decimal(38,0) (see the object scaladoc). */
+  private def rawSums(y: Column, l1: Column, l2: Column, rows: Column): Seq[Column] = {
+    // m() quantizes to decimal micro-units for the exact sum, mL() is
+    // the long twin used as the second product factor (decimal × long
+    // stays decimal); the operands, not each sum, are NULLed outside
+    // `rows`, so every quantized operand is generated and evaluated once
     val dec = "decimal(38,0)"
+    val Seq(yr, l1r, l2r) = Seq(y, l1, l2).map(when(rows, _))
     def m(c: Column) = graft.expr.RoundHalfUpExpr.column(c * lit(1e4)).cast(dec)
     def mL(c: Column) = graft.expr.RoundHalfUpExpr.column(c * lit(1e4)).cast("long")
+    Seq(count(when(rows, lit(1))), sum(m(yr)), sum(m(l1r)), sum(m(l2r)),
+      sum(m(yr) * mL(l1r)), sum(m(yr) * mL(l2r)), sum(m(l1r) * mL(l1r)),
+      sum(m(l2r) * mL(l2r)), sum(m(l1r) * mL(l2r)))
+  }
+
+  /** (c, φ1, φ2) by Cramer's rule on the symmetric normal matrix
+    * [[n,s1,s2],[s1,s11,s12],[s2,s12,s22]] from [[rawSums]]' values,
+    * rounded; NULL where there is no regression row. Only the cheap
+    * fallbacks are conditional, so the determinant, which every
+    * coefficient's test reads, is generated and evaluated once. */
+  private def solve(raw: Seq[Column]): Seq[Column] = {
     def d4(c: Column) = c.cast("double") / lit(1e4) + lit(0.0)
     def d8(c: Column) = c.cast("double") / lit(1e8) + lit(0.0)
-    val (y, l1, l2) = (col("__y"), col("__l1"), col("__l2"))
-    val sums = sample.groupBy(key: _*).agg(
-      count(lit(1)).cast("double").as("__n"),
-      d4(sum(m(y))).as("__sy"),
-      d4(sum(m(l1))).as("__s1"),
-      d4(sum(m(l2))).as("__s2"),
-      d8(sum(m(y) * mL(l1))).as("__sy1"),
-      d8(sum(m(y) * mL(l2))).as("__sy2"),
-      d8(sum(m(l1) * mL(l1))).as("__s11"),
-      d8(sum(m(l2) * mL(l2))).as("__s22"),
-      d8(sum(m(l1) * mL(l2))).as("__s12"))
-    val (n, sy, s1, s2) = (col("__n"), col("__sy"), col("__s1"), col("__s2"))
-    val (sy1, sy2, s11, s22, s12) =
-      (col("__sy1"), col("__sy2"), col("__s11"), col("__s22"), col("__s12"))
-    // Cramer on the symmetric normal matrix [[n,s1,s2],[s1,s11,s12],[s2,s12,s22]]
+    val n = raw(0).cast("double")
+    val Seq(sy, s1, s2) = raw.slice(1, 4).map(d4)
+    val Seq(sy1, sy2, s11, s22, s12) = raw.drop(4).map(d8)
     val det = n * (s11 * s22 - s12 * s12) - s1 * (s1 * s22 - s12 * s2) +
       s2 * (s1 * s12 - s11 * s2)
     val detC = sy * (s11 * s22 - s12 * s12) - s1 * (sy1 * s22 - s12 * sy2) +
@@ -85,11 +89,26 @@ object Ar {
     val detP2 = n * (s11 * sy2 - s12 * sy1) - s1 * (s1 * sy2 - sy1 * s2) +
       sy * (s1 * s12 - s11 * s2)
     val ok = (n >= 3) && abs(det) >= DetEps
-    sums.select(key ++ Seq(
-      r(when(ok, detC / det).otherwise(sy / n)).as("ar_c"),
-      r(when(ok, detP1 / det).otherwise(lit(0.0))).as("ar_phi1"),
-      r(when(ok, detP2 / det).otherwise(lit(0.0))).as("ar_phi2")): _*)
+    val flat = when(n >= 1, lit(0.0))
+    Seq(when(ok, detC / det).otherwise(sy / n), when(ok, detP1 / det).otherwise(flat),
+      when(ok, detP2 / det).otherwise(flat)).map(c => r(c))
   }
+
+  /** Key-grain coefficient table: (keys..., ar_c, ar_phi1, ar_phi2).
+    * Series with no regression rows are absent. */
+  private def coefs(indexed: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val names = (0 until 9).map(i => s"__s$i")
+    val sums = rawSums(col("__y"), col("__l1"), col("__l2"), lit(true)).zip(names)
+      .map { case (c, n) => c.as(n) }
+    indexed.filter(col("__l2").isNotNull).groupBy(keyCols.map(col): _*)
+      .agg(sums.head, sums.tail: _*)
+      .select(keyCols.map(col) ++ solve(names.map(col)).zip(coefCols("ar_"))
+        .map { case (c, n) => c.as(n) }: _*)
+  }
+
+  /** The coefficient column names of a fit prefix. */
+  private def coefCols(prefix: String): Seq[String] =
+    Seq("c", "phi1", "phi2").map(prefix + _)
 
   private def indexedLags(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
                           valueCol: String): DataFrame = {
@@ -101,15 +120,50 @@ object Ar {
 
   /** Adds `ar_c`/`ar_phi1`/`ar_phi2` plus `ar_fitted` (the one-step
     * in-sample prediction c + φ1·x_{t−1} + φ2·x_{t−2}; null where a
-    * lag is missing or the series was too short to fit). `ord` must be
-    * unique per key; `valueCol` non-null. */
+    * lag is missing; every column null where the series is too short
+    * to regress). `ord` must be unique per key; `valueCol` non-null.
+    *
+    * The coefficients are unbounded series-window aggregates, so the
+    * fit rides the lag window's exchange and sort with no coefficient
+    * table joined back. The sums are exact decimal sums, so their value
+    * does not depend on the order a window or a partial aggregate adds
+    * in: the coefficients equal the grouped form's bit for bit. */
   def fitted(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
              valueCol: String): DataFrame = {
-    val indexed = indexedLags(df, keyCols, ord, valueCol)
-    indexed.join(coefs(indexed, keyCols), keyCols, "left")
-      .withColumn("ar_fitted", when(col("__l2").isNotNull,
-        r(col("ar_c") + col("ar_phi1") * col("__l1") + col("ar_phi2") * col("__l2"))))
-      .drop("__y", "__l1", "__l2")
+    val (y, l1, l2) = (col("__y"), col("__l1"), col("__l2"))
+    indexedLags(df, keyCols, ord, valueCol)
+      .select(col("*") +: fitSums(keyCols, ord, y, l1, l2, "ar_"): _*)
+      .select(col("*") +: fitCoefs("ar_"): _*)
+      .select(col("*"), fittedOf(l1, l2, "ar_"))
+      .drop(sumCols("ar_") ++ Seq("__y", "__l1", "__l2"): _*)
+  }
+
+  private def sumCols(prefix: String): Seq[String] = (0 until 9).map(i => s"__${prefix}s$i")
+
+  /** A fit's nine sums as unbounded series-window aggregates, one column
+    * each; the champion family takes its ar2 and ari sums (ari from x's
+    * own lags) in one window pass with them. A series with a NULL key
+    * sums no row, so its coefficients are NULL, as a left join of the
+    * grouped table would give them. */
+  private[seq] def fitSums(keyCols: Seq[String], ord: Seq[Column], y: Column, l1: Column,
+                           l2: Column, prefix: String): Seq[Column] = {
+    val wAll = Window.partitionBy(keyCols.map(col): _*).orderBy(ord: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val keyed = keyCols.map(col(_).isNotNull).reduce(_ && _)
+    rawSums(y, l1, l2, l2.isNotNull && keyed).zip(sumCols(prefix))
+      .map { case (s, n) => s.over(wAll).as(n) }
+  }
+
+  /** `<prefix>c`, `<prefix>phi1`, `<prefix>phi2` from the [[fitSums]]
+    * columns. */
+  private[seq] def fitCoefs(prefix: String): Seq[Column] =
+    solve(sumCols(prefix).map(col)).zip(coefCols(prefix)).map { case (v, n) => v.as(n) }
+
+  /** `<prefix>fitted`: c + φ1·l1 + φ2·l2 from the coefficient columns,
+    * rounded; NULL where a lag is missing. */
+  private[seq] def fittedOf(l1: Column, l2: Column, prefix: String): Column = {
+    val Seq(c, p1, p2) = coefCols(prefix).map(col)
+    when(l2.isNotNull, r(c + p1 * l1 + p2 * l2)).as(prefix + "fitted")
   }
 
   /** The rounded h-step recursion over one series' coefficients and its

@@ -3,7 +3,7 @@ package graft.seq
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.Funcs.{microMean, r}
+import graft.functions.Funcs.{microMeanOver, r}
 
 /** Per-series model selection — the engine-side equivalent of the
   * reference's auto-ARIMA champion pick
@@ -63,40 +63,45 @@ import graft.functions.Funcs.{microMean, r}
   * candidate, and a candidate it cannot identify is skipped).
   *
   * Pruning: the one-plan consumers (championForecast, blendForecast,
-  * scoreboard) store each series' length in the series checkpoint and
-  * feed each member only the series at least its minimum long. A
-  * pruned row could never score, so every scored row, rank, Akaike
-  * weight and forecast is unchanged; on short-history data (most
-  * retail series hold one or two weeks) the kernels then run over a
-  * small fraction of the series. The materialized member table
-  * ([[pickBlendScoreFcs]], which pickAndBlend and pickBlendScore
-  * share) is not pruned: its forecast union shows unscored members'
-  * rows, and the backtest that calls pickAndBlend keeps only
-  * supplier-grain series longer than h, where the filters would remove
-  * little while each distinct minimum costs its own exchange.
+  * scoreboard) feed each member's per-row sums and kernels only the
+  * series at least its member's minimum long (NULL inputs elsewhere),
+  * and build each member's row only on those series. A pruned row could
+  * never score, so every scored row, rank, Akaike weight and forecast is
+  * unchanged; on short-history data (most retail series hold one or two
+  * weeks) the costly per-series kernels then run over a small fraction
+  * of the series. The materialized member table ([[pickBlendScoreFcs]],
+  * which pickAndBlend and pickBlendScore share) is not pruned: its
+  * forecast union shows unscored members' rows.
   *
-  * Execution shape: the input series frame (null-key rows dropped) is
-  * localCheckpointed once, and each member is ONE chain over it that
-  * ends in one row per (series, member) carrying both the score
-  * (__mrank, __k, sse, neff, aic) and the member's h-step forecasts as
-  * an array (__fc). Score and forecast come from the same fit: the
-  * per-row state (lags, Holt level/trend, Theta's SES, the packed grid
-  * fits) is read once, and a key-grain aggregate folds it into the SSE
-  * and the last-row state the forecaster extrapolates. The eight
-  * member rows union into one member table (at most #series × 8 rows),
-  * and every consumer is one tail over it: a key-partitioned window
-  * (argmin, AIC minimum or rank) plus an explode of the forecast
-  * arrays, with no join or exchange keyed on the member. The plan thus
-  * holds each member kernel exactly once (ChampionSpec pins that), and
-  * the chains fed the same series share one exchange of the
-  * checkpoint. A member's length filter sits on the checkpoint scan,
-  * below that exchange, so a pruned row is never shuffled. A member
-  * that does not score a series (too short to identify it) has a NULL
-  * aic there but may still forecast, e.g. snaive's partial season;
-  * only [[pickBlendScoreFcs]]'s forecast union shows those rows, so
-  * its table feeds every member every series. Scales in the series count,
+  * Execution shape: ONE pass over the series, with no checkpoint, no
+  * per-member exchange, no join and no union. Four window passes, all
+  * `partitionBy(keys).orderBy(ord)`, carry every per-row state: the row
+  * number, the series length, x's lags, the exact mean and Holt's
+  * running state and lags; the ar2 and ari coefficients
+  * ([[Ar.fitSums]], ari from x's own lags) and Theta's trend
+  * ([[Theta.trendSums]]) as unbounded-window exact sums; Theta's SES
+  * and the lag of its fitted value. Windows
+  * that share a partitioning and an order run in one sort of one
+  * exchange, and an input already hash-partitioned on a subset of the
+  * keys (the ETL's `l_partkey` exchange) needs none. One
+  * `groupBy(keys)` aggregate on that same partitioning then yields each
+  * member's SSE and residual count, the last row's state, snaive's
+  * season bases and the packed cells of the two grid fits
+  * ([[graft.expr.GridFitExpr]], each in its own projection so it runs
+  * once per series). One projection builds the eight member rows, which
+  * explode into the member table (at most #series × 8 rows), and every
+  * consumer is one tail over it: a key-partitioned window (argmin, AIC
+  * minimum or rank) plus an explode of the forecast arrays, with no
+  * join or exchange keyed on the member. The plan thus holds each
+  * member kernel exactly once (ChampionSpec pins that). A member that
+  * does not score a series (too short to identify it) has a NULL aic
+  * there but may still forecast, e.g. snaive's partial season; only
+  * [[pickBlendScoreFcs]]'s forecast union shows those rows, so its
+  * table feeds every member every series. Scales in the series count,
   * never materializes a per-group vector beyond the grid fits' packed
-  * cells.
+  * cells. Under `arrayFits=false` (the scale fallback) the two grid
+  * members keep their streaming-fold forms, joined on the series key to
+  * the per-series aggregate.
   *
   * `valueCol` must be non-null. ChampionSpec pins every consumer row
   * for row against the replaced two-pipeline form.
@@ -121,15 +126,18 @@ object Champion {
     "mean_naive" -> 1, "snaive" -> (m + 1), "ar2" -> 5, "ari" -> 6,
     "ma1" -> 2, "arma11" -> 3, "theta" -> 2, "holt_damped" -> 3)
 
-  /** The series checkpoint's length column (`__n` is the grid fits'). */
+  /** The series-length column: a window count on every row of the
+    * series pass, read by the member guards and carried to the series'
+    * row. */
   private[graft] val LenCol = "__slen"
 
   /** The member table: one row per (series, member) with keys...,
     * model, __mrank, __k, sse, neff, aic (NULL where the member does not
     * score the series) and __fc, the member's forecasts as an
     * array<struct<step, forecast>> (NULL where it does not forecast).
-    * With `prune`, each member sees only the series at least its
-    * [[minLength]] long, so the table holds no row a member could not
+    * With `prune`, each member's sums and kernels see only series at
+    * least its [[minLength]] long and no member row is built below the
+    * member's minimum, so the table holds no row a member could not
     * score. See the object scaladoc for the shape. */
   private def memberTable(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                           valueCol: String, h: Int, m: Int,
@@ -138,153 +146,166 @@ object Champion {
     require(h >= 1 && h <= m, "horizon must lie in [1, m]")
     val keys = keyCols.map(col)
     val x = col(valueCol).cast("double")
-    val nonNull = df.filter(keys.map(_.isNotNull).reduce(_ && _))
-    val perSeries = Window.partitionBy(keys: _*)
-    // pruning stores each series' length in the checkpoint; unpruned,
-    // only snaive needs it, on a window it shares with its lag
-    val src = (if (prune) nonNull.withColumn(LenCol, count(lit(1)).over(perSeries))
-      else nonNull).localCheckpoint(true)
-    val seriesLen = if (prune) col(LenCol) else count(lit(1)).over(perSeries)
     val wAsc = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val rn = row_number().over(wAsc)
+    val wAll = wAsc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val minLen = minLength(m)
+    val Seq(rn, n, mu, l1, l2, l3, t) =
+      Seq("__rn", LenCol, "__mu", "__l1", "__l2", "__l3", "__t").map(col)
+    // ari's first differences and their lags, from x's own lags
+    val (d, dl1, dl2) = (x - l1, l1 - l2, l2 - l3)
+    /** `c` where the named member can score the series when pruning
+      * (NULL on shorter series), else `c`. */
+    def fed(name: String)(c: Column): Column =
+      if (prune && minLen(name) > 1) when(n >= minLen(name), c) else c
+    val (line, z) = Theta.line(t, col(valueCol))
 
-    /** The series the named member is fed (mean_naive reads `src`). */
-    def fed(name: String): DataFrame =
-      if (prune) src.filter(col(LenCol) >= minLen(name)) else src
+    // ---- per-row state in four window passes over one series
+    // partitioning and order, so one sort of one exchange. Theta's fit
+    // and each Cramer solve follow passes of their own: Spark generates
+    // the projections between two passes (and the next pass's inputs)
+    // as one method, and a method past the JIT's 8,000-byte limit runs
+    // interpreted
+    val src = df.filter(keys.map(_.isNotNull).reduce(_ && _))
+    val rows = src
+      // 1: index, length, exact mean, x's lags, Holt's running state
+      .select(col("*"), row_number().over(wAsc).as("__rn"),
+        count(lit(1)).over(wAll).as(LenCol), microMeanOver(x, wAll).as("__mu"),
+        lag(x, 1).over(wAsc).as("__l1"), lag(x, 2).over(wAsc).as("__l2"),
+        lag(x, 3).over(wAsc).as("__l3"), lag(x, m).over(wAsc).as("__lm"),
+        SequentialKernels.holtState(keyCols, ordCols, valueCol, alpha, beta).as("__holt"))
+      .withColumn("__t", rn.cast("double"))
+      // 2: Holt's lags; theta's trend sums and the ari sums
+      .select(Seq(col("*"), lag(col("__holt.level"), 1).over(wAsc).as("__pl"),
+        lag(col("__holt.trend"), 1).over(wAsc).as("__pt")) ++
+        Theta.trendSums(fed("theta")(t), fed("theta")(col(valueCol)), wAll) ++
+        Ar.fitSums(keyCols, ordCols, d, dl1, fed("ari")(dl2), "ari_"): _*)
+      .select(col("*") +: Theta.trendCoefs: _*)
+      .select(col("*"), line.as("__line"), z.as("__z"))
+      // 3: Theta's SES; the ar2 sums
+      .select(Seq(col("*"),
+        graft.expr.EwmaExpr.over(col("__z"), alpha, keys, ordCols).as("__ses")) ++
+        Ar.fitSums(keyCols, ordCols, x, l1, fed("ar2")(l2), "ar_"): _*)
+      .select(col("*") +: Ar.fitCoefs("ar_"): _*)
+      .withColumn("__thf", Theta.fittedOf(col("__line"), col("__ses")))
+      // 4: the lag of Theta's fitted value
+      .withColumn("__pf", lag(col("__thf"), 1).over(wAsc))
+      .select(col("*") +: Ar.fitCoefs("ari_"): _*)
 
-    /** The member's row: its score where `scored`, its forecasts. */
-    def member(d: DataFrame, name: String, rank: Int, k: Int, scored: Column,
-               fc: Column): DataFrame =
-      d.select(keys ++ Seq(lit(name).as("model"), lit(rank).as("__mrank"),
-        lit(k.toDouble).as("__k"), when(scored, col("sse")).as("sse"),
-        when(scored, col("neff")).as("neff"), fc.as("__fc")): _*)
+    // ---- one aggregate per series: every member's SSE and residual
+    // count, the last row's state (ar2's and ari's recursions start from
+    // the last two levels and differences, theta extends from the last
+    // index and SES level, holt from the last (level, trend)), snaive's
+    // season bases (step s reads row n − m + s) and, for the grid fits,
+    // the packed cells
+    val arFit = Ar.fittedOf(l1, l2, "ar_")
+    val ariFit = Ar.fittedOf(dl1, dl2, "ari_")
+    // theta's honest one-step prediction (the reference's fittedvalues
+    // convention — no peek at x_t): from ŷ_t = ½·l_t + ½·ses_{t−1} and
+    // ses_{t−1} = 2·fitted_{t−1} − l_{t−1}, it is fitted_{t−1} + b/2
+    val thPrev = col("__pf")
+    // holt_damped: x̂_t = l_{t−1} + φ_d·b_{t−1}, defined once the trend
+    // exists (t ≥ 3)
+    val (pl, pt) = (col("__pl"), col("__pt"))
+    def neff(fit: Column) = count(fit).cast("double")
+    val last = struct(Seq(n, mu, x.as("__xn"), l1.as("__xn1"), d.as("__dn"), dl1.as("__dn1"),
+      col("ar_c"), col("ar_phi1"), col("ar_phi2"), col("ari_c"), col("ari_phi1"),
+      col("ari_phi2"), col("theta_a"), col("theta_b"), t.as("__tn"), col("__ses").as("__sesn"),
+      col("__holt.level").as("__ln"), col("__holt.trend").as("__bn")): _*)
+    val grids = SequentialKernels.arrayFits(df)
+    val perSeries = rows.groupBy(keys: _*).agg(max(when(rn === n, last)).as("__last"),
+      (1 to h).map(s => max(when(rn === n - m + s, x)).as(s"__b$s")) ++ Seq(
+        sqSum(x - r(mu)).as("mean_sse"),
+        sqSum(x - col("__lm")).as("sn_sse"), neff(col("__lm")).as("sn_neff"),
+        sqSum(x - arFit).as("ar_sse"), neff(arFit).as("ar_neff"),
+        // ari scores on the diff scale: x_t − (x_{t−1} + d̂_t) = Δx_t − d̂_t
+        sqSum(d - ariFit).as("ari_sse"), neff(ariFit).as("ari_neff"),
+        sqSum(x - r(thPrev + col("theta_b") / 2)).as("th_sse"), neff(thPrev).as("th_neff"),
+        sqSum(x - r(pl + lit(damp) * pt)).as("ho_sse"), neff(pt).as("ho_neff")) ++
+        // the grid kernels' shortest member (ma1) bounds the cells kept
+        (if (grids) Seq(SequentialKernels.cellsOf(ordCols, valueCol, fed("ma1"))
+          .as("__cells")) else Nil): _*)
+      .select(col("*"), col("__last.*")).drop("__last")
 
-    // ---- mean_naive: rounded exact mean, flat forecast
-    val mu = src.groupBy(keys: _*).agg(r(microMean(x)).as("__mu"))
-    val mean = member(src.join(mu, keyCols).groupBy(keys: _*).agg(
-      sqSum(x - col("__mu")).as("sse"), count(lit(1)).cast("double").as("neff"),
-      max(col("__mu")).as("__mu")),
-      "mean_naive", 0, 1, lit(true), steps(Seq.fill(h)(col("__mu"))))
+    // ---- the grid fits, one kernel call per series (guarded by the
+    // member's minimum when pruning); the arrayFits=false fallback joins
+    // the streaming folds on the key
+    val fits = if (grids)
+      perSeries
+        .withColumn("__ma1", fed("ma1")(
+          SequentialKernels.ma1Winner(col("__cells"), mu, ordCols.size)))
+        .withColumn("__arma", fed("arma11")(
+          SequentialKernels.arma11Winner(col("__cells"), mu, ordCols.size)))
+        .select(Seq(col("*")) ++ SequentialKernels.ma1Cols(col("__ma1"), mu) ++
+          SequentialKernels.arma11Cols(col("__arma"), mu): _*)
+        .drop("__cells", "__ma1", "__arma")
+    else
+      perSeries
+        .join(SequentialKernels.fitMa1Full(src, keyCols, ordCols, valueCol), keyCols)
+        .join(SequentialKernels.fitArma11Full(src, keyCols, ordCols, valueCol), keyCols)
 
-    // ---- snaive: last season's value, both as fit and as forecast
-    // (forecast step s reads row n − m + s; a series shorter than a
-    // season forecasts the steps whose base row exists)
-    val sn = fed("snaive").withColumn("__lm", lag(x, m).over(wAsc))
-      .withColumn("__rn", rn)
-      .withColumn("__n", seriesLen)
-      .groupBy(keys: _*).agg(
-        sqSum(x - col("__lm")).as("sse"),
-        count(col("__lm")).cast("double").as("neff"),
-        sort_array(collect_list(when(col("__rn") > col("__n") - m &&
-          col("__rn") <= col("__n") - m + h,
-          struct((col("__rn") - (col("__n") - m)).cast("long").as("step"),
-            r(x).as("forecast"))))).as("__fc"))
-    val snaive = member(sn, "snaive", 1, 0, lit(true),
-      when(size(col("__fc")) > 0, col("__fc")))
-
-    // ---- ar2: the OLS fit's own rounded one-step predictions; the
-    // forecast recursion starts from the last two observations
-    val ar = Ar.fitted(fed("ar2").withColumn("__rn", rn)
-      .withColumn("__xp", lag(x, 1).over(wAsc)), keyCols, ordCols, valueCol)
-      .groupBy(keys: _*).agg(
-        sqSum(x - col("ar_fitted")).as("sse"),
-        count(col("ar_fitted")).cast("double").as("neff"),
-        max(col("ar_c")).as("ar_c"), max(col("ar_phi1")).as("ar_phi1"),
-        max(col("ar_phi2")).as("ar_phi2"),
-        max_by(x, col("__rn")).as("__xn"), max_by(col("__xp"), col("__rn")).as("__xn1"))
-    val ar2 = member(ar, "ar2", 2, 3, col("neff") >= 3,
-      when(col("neff") >= 1 && col("__xn1").isNotNull,
-        steps(Ar.forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"),
-          col("__xn"), col("__xn1"), h))))
-
-    // ---- ari: AR(2) on first differences; the one-step residual on
-    // the original scale equals the diff-scale residual
-    // (x_t − (x_{t−1} + d̂_t) = Δx_t − d̂_t), so the diff fit scores it.
-    // The forecast integrates the diff steps from the last level as a
-    // left fold (0 + d̂_1, then + d̂_s), the order a running sum adds in
-    val dif = fed("ari").withColumn("__d", x - lag(x, 1).over(wAsc))
-      .withColumn("__rn", rn)
-      .filter(col("__d").isNotNull)
-      .withColumn("__dp", lag(col("__d"), 1).over(wAsc))
-    val ari0 = Ar.fitted(dif, keyCols, ordCols, "__d")
-      .groupBy(keys: _*).agg(
-        sqSum(col("__d") - col("ar_fitted")).as("sse"),
-        count(col("ar_fitted")).cast("double").as("neff"),
-        max(col("ar_c")).as("ar_c"), max(col("ar_phi1")).as("ar_phi1"),
-        max(col("ar_phi2")).as("ar_phi2"),
-        max_by(col("__d"), col("__rn")).as("__dn"),
-        max_by(col("__dp"), col("__rn")).as("__dn1"),
-        max_by(x, col("__rn")).as("__yn"))
-    val ariCum = Ar.forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"),
+    // ---- one projection: the eight member rows, exploded; pruning
+    // leaves out each member row below the member's minimum
+    def member(name: String, rank: Int, k: Int, scored: Column, sse: Column,
+               neff: Column, fc: Column): Column =
+      fed(name)(struct(lit(name).as("model"), lit(rank).as("__mrank"),
+        lit(k.toDouble).as("__k"), when(scored, sse).as("sse"),
+        when(scored, neff).as("neff"), fc.as("__fc")))
+    val (arNeff, ariNeff) = (col("ar_neff"), col("ari_neff"))
+    // snaive: step s exists where its base row n − m + s does (a series
+    // shorter than a season forecasts the steps whose base is observed)
+    val snFc = slice(steps((1 to h).map(s => r(col(s"__b$s")))),
+      greatest(lit(m + 1) - n, lit(1L)).cast("int"), lit(h))
+    // ari integrates the diff steps from the last level as a left fold
+    // (0 + d̂_1, then + d̂_s), the order a running sum adds in
+    val ariCum = Ar.forecastSteps(col("ari_c"), col("ari_phi1"), col("ari_phi2"),
       col("__dn"), col("__dn1"), h).scanLeft(lit(0.0))(_ + _).tail
-    val ari = member(ari0, "ari", 3, 3, col("neff") >= 3,
-      when(col("neff") >= 1, steps(ariCum.map(c => r(col("__yn") + c)))))
-
-    // ---- ma1: the CLS grid fit's own SSE; forecast μ + θ·ε_n then flat
-    val ma = member(SequentialKernels.fitMa1FullCounted(fed("ma1"), keyCols, ordCols, valueCol)
-      .withColumn("sse", col("ma1_sse"))
-      .withColumn("neff", col("__n").cast("double")),
-      "ma1", 4, 2, col("__n") >= 2, steps((1 to h).map { s =>
-        if (s == 1) r(col("ma1_mu") + col("ma1_theta") * col("ma1_eps_last"))
-        else r(col("ma1_mu"))
-      }))
-
-    // ---- arma11: the (φ,θ) grid fit's own SSE (conditioned on t ≥ 2)
     val armaSteps = (1 to h).foldLeft(Vector.empty[Column]) { (acc, s) =>
       acc :+ (
         if (s == 1) r(col("arma_mu") + col("arma_phi") * col("arma_xc_last") +
           col("arma_theta") * col("arma_eps_last"))
         else r(col("arma_mu") + col("arma_phi") * (acc(s - 2) - col("arma_mu"))))
     }
-    val arma = member(SequentialKernels.fitArma11FullCounted(fed("arma11"), keyCols, ordCols, valueCol)
-      .withColumn("sse", col("arma_sse"))
-      .withColumn("neff", (col("__n") - 1).cast("double")),
-      "arma11", 5, 3, col("__n") >= 3, steps(armaSteps))
-
-    // ---- theta: scored on its honest one-step prediction (the
-    // reference's fittedvalues convention — no peek at x_t). From
-    // ŷ_t = ½·l_t + ½·ses_{t−1} and ses_{t−1} = 2·fitted_{t−1} −
-    // l_{t−1}, the prediction collapses to fitted_{t−1} + b/2. The
-    // forecast extends the trend from the last index and carries the
-    // last SES level flat
-    val th = Theta.fittedFull(fed("theta"), keyCols, ordCols, valueCol, alpha)
-      .withColumn("__pf", lag(col("theta_fitted"), 1).over(wAsc))
-      .groupBy(keys: _*).agg(
-        sqSum(x - r(col("__pf") + col("theta_b") / 2)).as("sse"),
-        count(col("__pf")).cast("double").as("neff"),
-        max(col("theta_a")).as("theta_a"), max(col("theta_b")).as("theta_b"),
-        max(col("__t")).as("__tn"), max_by(col("__ses"), col("__t")).as("__sesn"))
-    val theta = member(th, "theta", 6, 2, lit(true), steps((1 to h).map(s =>
-      Theta.forecastStep(col("theta_a"), col("theta_b"), col("__tn"), col("__sesn"), s))))
-
-    // ---- holt_damped: one-step x̂_t = l_{t−1} + φ_d·b_{t−1} (defined
-    // once the trend exists, t ≥ 3), damped extrapolation from the
-    // last rounded (level, trend) beyond
-    val ho = SequentialKernels.withHolt(fed("holt_damped").withColumn("__rn", rn), keyCols,
-      ordCols, valueCol, alpha, beta)
-      .withColumn("__pl", lag(col("holt_level"), 1).over(wAsc))
-      .withColumn("__pt", lag(col("holt_trend"), 1).over(wAsc))
-      .groupBy(keys: _*).agg(
-        sqSum(x - r(col("__pl") + lit(damp) * col("__pt"))).as("sse"),
-        count(col("__pt")).cast("double").as("neff"),
-        max_by(col("holt_level"), col("__rn")).as("__ln"),
-        max_by(col("holt_trend"), col("__rn")).as("__bn"))
-    val holt = member(ho, "holt_damped", 7, 2, lit(true),
-      when(col("__bn").isNotNull, steps(SequentialKernels.dampedSteps(
-        r(col("__ln")), r(col("__bn")), damp, h))))
-
-    Seq(mean, snaive, ar2, ari, ma, arma, theta, holt).reduce(_ unionByName _)
+    val members = Seq(
+      member("mean_naive", 0, 1, lit(true), col("mean_sse"), n.cast("double"),
+        steps(Seq.fill(h)(r(mu)))),
+      member("snaive", 1, 0, lit(true), col("sn_sse"), col("sn_neff"),
+        when(size(snFc) > 0, snFc)),
+      member("ar2", 2, 3, arNeff >= 3, col("ar_sse"), arNeff,
+        when(arNeff >= 1 && col("__xn1").isNotNull,
+          steps(Ar.forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"),
+            col("__xn"), col("__xn1"), h)))),
+      member("ari", 3, 3, ariNeff >= 3, col("ari_sse"), ariNeff,
+        when(ariNeff >= 1, steps(ariCum.map(c => r(col("__xn") + c))))),
+      // ma1: forecast μ + θ·ε_n then flat
+      member("ma1", 4, 2, n >= 2, col("ma1_sse"), n.cast("double"),
+        steps((1 to h).map { s =>
+          if (s == 1) r(col("ma1_mu") + col("ma1_theta") * col("ma1_eps_last"))
+          else r(col("ma1_mu"))
+        })),
+      // arma11: the (φ,θ) fit's SSE is conditioned on t ≥ 2
+      member("arma11", 5, 3, n >= 3, col("arma_sse"), (n - 1).cast("double"),
+        steps(armaSteps)),
+      // theta: the trend extends from the last index, the last SES
+      // level carries flat
+      member("theta", 6, 2, lit(true), col("th_sse"), col("th_neff"),
+        steps((1 to h).map(s => Theta.forecastStep(col("theta_a"), col("theta_b"),
+          col("__tn"), col("__sesn"), s)))),
+      // holt_damped: damped extrapolation from the last rounded
+      // (level, trend)
+      member("holt_damped", 7, 2, lit(true), col("ho_sse"), col("ho_neff"),
+        when(col("__bn").isNotNull, steps(SequentialKernels.dampedSteps(
+          r(col("__ln")), r(col("__bn")), damp, h)))))
+    val exploded = fits.select(keys :+ explode(array(members: _*)).as("__m"): _*)
+    (if (prune) exploded.filter(col("__m").isNotNull) else exploded)
+      .select(keys ++ Seq("model", "__mrank", "__k", "sse", "neff", "__fc")
+        .map(f => col(s"__m.$f").as(f)): _*)
       .withColumn("aic", when(col("sse").isNotNull && col("neff") >= 1,
         r(col("neff") * log(greatest(col("sse"), lit(1e-8)) / col("neff")) +
           lit(2.0) * col("__k"))))
   }
 
   /** Series window in pick order: (aic, member order) with the unscored
-    * rows last. Consumers test `aic IS NOT NULL` only ABOVE their
-    * window: a filter on the member table itself would be pushed
-    * through the union into each member's projection, inlining — and so
-    * re-running — the grid fits that `sse` derives from. */
+    * rows last; consumers test `aic IS NOT NULL` above it. */
   private def pickOrder(keyCols: Seq[String]) =
     Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col("aic").asc_nulls_last, col("__mrank"))
@@ -336,8 +357,8 @@ object Champion {
     * [[pickBlendScoreFcs]], so unpruned) — for multi-consumer jobs like
     * the walk-forward backtest, which would otherwise fit the family
     * once per consumer. The single-query paths (championForecast /
-    * blendForecast / scoreboard) checkpoint only the series frame and
-    * run the member table inside their one plan. */
+    * blendForecast / scoreboard) run the member table inside their one
+    * plan and materialize nothing. */
   def pickAndBlend(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                    valueCol: String, h: Int = 4, m: Int = 13,
                    alpha: Double = 0.3, beta: Double = 0.1,
@@ -375,13 +396,8 @@ object Champion {
                         valueCol: String, h: Int = 4, m: Int = 13,
                         alpha: Double = 0.3, beta: Double = 0.1,
                         damp: Double = 0.9): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val t0 = memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta, damp,
-      prune = false)
-    val t = t0.localCheckpoint(true)
-    // every returned frame derives from t now — the series checkpoint's
-    // blocks are dead weight, and persistentRdds would otherwise pin
-    // them for the JVM's life
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints(t0)
+    val t = memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta, damp,
+      prune = false).localCheckpoint(true)
     val keys = keyCols.map(col)
     (pickFrom(t, keyCols), blendFromTable(t, keyCols), scoreboardFrom(t, keyCols),
       exploded(t, keys :+ col("model")))

@@ -59,7 +59,7 @@ object SequentialKernels {
 
   /** Read from the input frame's own session when the fit is built:
     * setting the conf after building the DataFrame has no effect. */
-  private def arrayFits(df: DataFrame): Boolean =
+  private[seq] def arrayFits(df: DataFrame): Boolean =
     df.sparkSession.conf.get(ArrayFitsConf, "true").toBoolean
 
   /** Shared packed-series stage of the array-form grid fits: one hash
@@ -74,25 +74,31 @@ object SequentialKernels {
     df.filter(keys.map(_.isNotNull).reduce(_ && _))
       .groupBy(keys: _*)
       .agg(graft.functions.Funcs.microMean(col(valueCol)).as("__mu"),
-        sort_array(collect_list(struct(
-          ordCols.zipWithIndex.map { case (o, i) => o.as(s"__o$i") } :+
-            col(valueCol).cast("double").as("__v"): _*))).as("__cells"))
+        cellsOf(ordCols, valueCol).as("__cells"))
   }
+
+  /** The series' (ord…, value) cells sorted by `ordCols`, as an
+    * aggregate: the packed input of [[graft.expr.GridFitExpr]], its
+    * value at index `ordCols.size`. `fed` may NULL a row's cell to leave
+    * it out. */
+  private[seq] def cellsOf(ordCols: Seq[Column], valueCol: String,
+                           fed: Column => Column = c => c): Column =
+    sort_array(collect_list(fed(struct(
+      ordCols.zipWithIndex.map { case (o, i) => o.as(s"__o$i") } :+
+        col(valueCol).cast("double").as("__v"): _*))))
 
   /** One-projection grid fit over the packed series: every member's
     * recursion and the (sse, params…)-ascending winner pick run inside
     * [[graft.expr.GridFitExpr]] — one compiled call per SERIES row.
     * The `__best` struct materializes in its own projection
     * (CollapseProject keeps multi-referenced non-cheap aliases), so
-    * the caller's field extraction never re-runs the fit. `__n` is the
-    * series' row count (the cell array's length), pruned unless read. */
+    * the caller's field extraction never re-runs the fit. */
   private def gridArrayFit(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                            valueCol: String, kind: String,
                            members: Seq[Seq[Double]]): DataFrame =
     packedSeries(df, keyCols, ordCols, valueCol)
       .withColumn("__best", graft.expr.GridFitExpr.column(
         col("__cells"), col("__mu"), vIdx = ordCols.size, kind, members))
-      .withColumn("__n", size(col("__cells")).cast("long"))
       .drop("__cells")
 
   /** Default CLS grids of the MA(1) and ARMA(1,1) fits. */
@@ -100,11 +106,32 @@ object SequentialKernels {
   private val Arma11PhiGrid = Seq(-0.5, 0.0, 0.5, 0.9)
   private val Arma11ThetaGrid = Seq(-0.4, 0.0, 0.4)
 
-  /** Appends `__n`, the series' row count, to a one-row-per-series fit
-    * (the fold forms' route; the array forms read it off the cells). */
-  private def withSeriesCount(fit: DataFrame, df: DataFrame,
-                              keyCols: Seq[String]): DataFrame =
-    fit.join(df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__n")), keyCols)
+  /** The default-grid MA(1) and ARMA(1,1) winners over a series' packed
+    * [[cellsOf]] cells and exact mean, as the champion family fits them. */
+  private[seq] def ma1Winner(cells: Column, mu: Column, nOrd: Int): Column =
+    graft.expr.GridFitExpr.column(cells, mu, nOrd, "ma1", Ma1Grid.map(Seq(_)))
+
+  private[seq] def arma11Winner(cells: Column, mu: Column, nOrd: Int): Column =
+    graft.expr.GridFitExpr.column(cells, mu, nOrd, "arma11", arma11Pairs(
+      Arma11PhiGrid, Arma11ThetaGrid))
+
+  private def arma11Pairs(phiGrid: Seq[Double], thetaGrid: Seq[Double]): Seq[Seq[Double]] =
+    for (p <- phiGrid; t <- thetaGrid) yield Seq(p, t)
+
+  /** [[fitMa1Full]]'s columns from a winner struct `b` and the series
+    * mean `mu`. */
+  private[seq] def ma1Cols(b: Column, mu: Column): Seq[Column] =
+    Seq(b.getField("theta").as("ma1_theta"),
+      graft.functions.Funcs.r(b.getField("sse")).as("ma1_sse"),
+      mu.as("ma1_mu"), b.getField("e").as("ma1_eps_last"))
+
+  /** [[fitArma11Full]]'s columns from a winner struct `b` and the series
+    * mean `mu`. */
+  private[seq] def arma11Cols(b: Column, mu: Column): Seq[Column] =
+    Seq(b.getField("phi").as("arma_phi"), b.getField("theta").as("arma_theta"),
+      graft.functions.Funcs.r(b.getField("sse")).as("arma_sse"),
+      mu.as("arma_mu"), b.getField("e").as("arma_eps_last"),
+      b.getField("xcn").as("arma_xc_last"))
 
   /** Typed primitive extraction of a fold's value column, resolved once
     * from the schema — the folds run once per fact row, so a per-row
@@ -260,16 +287,20 @@ object SequentialKernels {
     // native running window aggregate (see withEwma) — prunable,
     // exchange-sharing, no Row ser/deser; bit-identical to
     // SequentialKernelsReference.withHoltFold (SequentialKernelsSpec)
-    val st = graft.expr.SeqKernelExprs.windowed(
-      graft.expr.HoltExpr(
-        org.apache.spark.sql.GraftBridge.expression(col(valueCol).cast("double")),
-        alpha, beta),
-      keyCols.map(col), ordCols)
-    df.withColumn("__holt", st)
+    df.withColumn("__holt", holtState(keyCols, ordCols, valueCol, alpha, beta))
       .withColumn(levelCol, col("__holt.level"))
       .withColumn(trendCol, col("__holt.trend"))
       .drop("__holt")
   }
+
+  /** [[withHolt]]'s (level, trend) struct as one window column. */
+  private[seq] def holtState(keyCols: Seq[String], ordCols: Seq[Column], valueCol: String,
+                             alpha: Double, beta: Double): Column =
+    graft.expr.SeqKernelExprs.windowed(
+      graft.expr.HoltExpr(
+        org.apache.spark.sql.GraftBridge.expression(col(valueCol).cast("double")),
+        alpha, beta),
+      keyCols.map(col), ordCols)
 
   /** MA(1) innovation recursion — the moving-average member of the
     * sequential family (the MA side of the reference's ARIMA engine,
@@ -354,31 +385,15 @@ object SequentialKernels {
     else fitMa1FullFold(df, keyCols, ordCols, valueCol, grid)
   }
 
-  /** [[fitMa1Full]] on the default grid plus `__n`, the series' row
-    * count — the champion family's n_eff without a second pass. */
-  private[seq] def fitMa1FullCounted(df: DataFrame, keyCols: Seq[String],
-                                     ordCols: Seq[Column], valueCol: String): DataFrame =
-    if (arrayFits(df)) fitMa1FullArray(df, keyCols, ordCols, valueCol, Ma1Grid, counted = true)
-    else withSeriesCount(fitMa1FullFold(df, keyCols, ordCols, valueCol, Ma1Grid),
-      df, keyCols)
-
   /** Array form of [[fitMa1Full]] ([[ArrayFitsConf]]): per θ, state
     * (ε, SSE) starts at (0, 0) and each non-null observation applies
     *   ε' = xc − θ·ε ;  SSE' = SSE + ε'·ε'
     * — the fold form's exact chain. */
   private def fitMa1FullArray(df: DataFrame, keyCols: Seq[String],
                               ordCols: Seq[Column], valueCol: String,
-                              grid: Seq[Double], counted: Boolean = false): DataFrame = {
-    val keys = keyCols.map(col)
-    val fitted = gridArrayFit(df, keyCols, ordCols, valueCol,
-      "ma1", grid.map(Seq(_)))
-    val b = col("__best")
-    fitted.select(keys ++ Seq(b.getField("theta").as("ma1_theta"),
-      graft.functions.Funcs.r(b.getField("sse")).as("ma1_sse"),
-      col("__mu").as("ma1_mu"),
-      b.getField("e").as("ma1_eps_last")) ++
-      (if (counted) Seq(col("__n")) else Nil): _*)
-  }
+                              grid: Seq[Double]): DataFrame =
+    gridArrayFit(df, keyCols, ordCols, valueCol, "ma1", grid.map(Seq(_)))
+      .select(keyCols.map(col) ++ ma1Cols(col("__best"), col("__mu")): _*)
 
   /** Pre-r18 streaming-fold form of [[fitMa1Full]] — the
     * [[ArrayFitsConf]] fallback and the parity spec's reference
@@ -613,15 +628,6 @@ object SequentialKernels {
     else fitArma11FullFold(df, keyCols, ordCols, valueCol, phiGrid, thetaGrid)
   }
 
-  /** [[fitArma11Full]] on the default grids plus `__n`, the series' row
-    * count — the champion family's n_eff without a second pass. */
-  private[seq] def fitArma11FullCounted(df: DataFrame, keyCols: Seq[String],
-                                        ordCols: Seq[Column], valueCol: String): DataFrame =
-    if (arrayFits(df)) fitArma11FullArray(df, keyCols, ordCols, valueCol,
-      Arma11PhiGrid, Arma11ThetaGrid, counted = true)
-    else withSeriesCount(fitArma11FullFold(df, keyCols, ordCols, valueCol,
-      Arma11PhiGrid, Arma11ThetaGrid), df, keyCols)
-
   /** Array form of [[fitArma11Full]] ([[ArrayFitsConf]]): per (φ, θ),
     * state (xcₚ, ε, SSE) — the first non-null observation only seeds
     * xcₚ (ε₁ = 0, no SSE term, the fold's conditioning); each later
@@ -631,20 +637,9 @@ object SequentialKernels {
     * exactly like the fold's absent state. */
   private def fitArma11FullArray(df: DataFrame, keyCols: Seq[String],
                                  ordCols: Seq[Column], valueCol: String,
-                                 phiGrid: Seq[Double], thetaGrid: Seq[Double],
-                                 counted: Boolean = false): DataFrame = {
-    val pairs = for (p <- phiGrid; t <- thetaGrid) yield Seq(p, t)
-    val keys = keyCols.map(col)
-    val fitted = gridArrayFit(df, keyCols, ordCols, valueCol, "arma11", pairs)
-    val b = col("__best")
-    fitted.select(keys ++ Seq(b.getField("phi").as("arma_phi"),
-      b.getField("theta").as("arma_theta"),
-      graft.functions.Funcs.r(b.getField("sse")).as("arma_sse"),
-      col("__mu").as("arma_mu"),
-      b.getField("e").as("arma_eps_last"),
-      b.getField("xcn").as("arma_xc_last")) ++
-      (if (counted) Seq(col("__n")) else Nil): _*)
-  }
+                                 phiGrid: Seq[Double], thetaGrid: Seq[Double]): DataFrame =
+    gridArrayFit(df, keyCols, ordCols, valueCol, "arma11", arma11Pairs(phiGrid, thetaGrid))
+      .select(keyCols.map(col) ++ arma11Cols(col("__best"), col("__mu")): _*)
 
   /** Pre-r18 streaming-fold form of [[fitArma11Full]] — the
     * [[ArrayFitsConf]] fallback and the parity spec's reference

@@ -1,7 +1,7 @@
 package graft.seq
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.functions.Funcs.r
 
@@ -13,14 +13,13 @@ import graft.functions.Funcs.r
   *   SES          s_t = α·z_t + (1−α)·s_{t−1}
   *   fitted       ŷ_t = ½·l_t + ½·s_t
   *
-  * Execution shape: one aggregate collapses each series to five exact
-  * sufficient sums (n, Σt, Σx, Σt², Σtx) — map-side combinable, one
-  * shuffle on the key; a and b derive in closed form (Cramer), are
+  * Execution shape: five exact sufficient sums per series (n, Σt, Σx,
+  * Σt², Σtx) as unbounded windows over the index window, one shuffle on
+  * the key; a and b derive in closed form (Cramer) on every row, are
   * ROUNDED (the determinism convention: every recursion input is
-  * bit-identical cross-engine), joined back on the key, and the SES
-  * rides the same sort-within-partitions streaming fold as the other
-  * kernels. Oracle: OLS sums + the q73 recursive-CTE recipe over the
-  * rounded theta2 values (q213).
+  * bit-identical cross-engine), and the SES is a running window
+  * aggregate on the same exchange and sort. Oracle: OLS sums + the q73
+  * recursive-CTE recipe over the rounded theta2 values (q213).
   *
   * Determinism of the sums: the value micro-rounds to the 1e-4 grid
   * per row (round(x·1e4) as a long) and every sufficient sum
@@ -98,37 +97,64 @@ object Theta {
 
   /** The fit with its working columns (__t index, __l trend line, __z
     * theta2 value, __ses smoothed state) still attached — the forecast
-    * reads the last-row state from here. */
+    * reads the last-row state from here.
+    *
+    * The trend sums are unbounded series-window aggregates over the
+    * index window, so the coefficients ride its exchange and sort with
+    * no coefficient table joined back. They are exact decimal sums, so
+    * their value does not depend on the order the window adds in: a and
+    * b equal the grouped form's bit for bit. Rows with a NULL key drop,
+    * as the inner join of that form dropped them. */
   private[seq] def fittedFull(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
                          valueCol: String, alpha: Double): DataFrame = {
     val key = keyCols.map(col)
     val w = Window.partitionBy(key: _*).orderBy(ord: _*)
-    val indexed = df.withColumn("__t", row_number().over(w).cast("double"))
-    val x = col(valueCol)
-    val dec = "decimal(38,0)"
-    val tL = col("__t").cast(dec)
-    val xm = graft.expr.RoundHalfUpExpr.column(x * 1e4).cast(dec)
-    val sums = indexed.groupBy(key: _*).agg(
-      count(lit(1)).as("__n"),
-      sum(tL).as("__st"),
-      sum(xm).as("__sxm"),
-      sum(tL * col("__t").cast("long")).as("__stt"),
-      sum(tL * graft.expr.RoundHalfUpExpr.column(x * 1e4).cast("long")).as("__stxm"))
-    val nD = col("__n").cast(dec)
-    val bRaw = (nD * col("__stxm") - col("__st") * col("__sxm")).cast("double") /
-      lit(1e4) /
-      (nD * col("__stt") - col("__st") * col("__st")).cast("double")
-    // single-observation series have a degenerate denominator: flat trend
-    val coefs = sums
-      .withColumn("theta_b", r(when(col("__n") > 1, bRaw).otherwise(lit(0.0))))
-      .withColumn("theta_a",
-        r((col("__sxm").cast("double") / lit(1e4) -
-          col("theta_b") * col("__st").cast("double")) / col("__n").cast("double")))
-      .select(key ++ Seq(col("theta_a"), col("theta_b")): _*)
-    val withLine = indexed.join(coefs, keyCols)
-      .withColumn("__l", col("theta_a") + col("theta_b") * col("__t"))
-      .withColumn("__z", r(lit(2.0) * x - col("__l")))
+    val wAll = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val indexed = df.filter(key.map(_.isNotNull).reduce(_ && _))
+      .withColumn("__t", row_number().over(w).cast("double"))
+    val (l, z) = line(col("__t"), col(valueCol))
+    val withLine = indexed.select(col("*") +: trendSums(col("__t"), col(valueCol), wAll): _*)
+      .select(col("*") +: trendCoefs: _*)
+      .drop(TrendSumCols: _*)
+      .select(col("*"), l.as("__l"), z.as("__z"))
     SequentialKernels.withEwma(withLine, keyCols, ord, "__z", alpha, "__ses")
-      .withColumn("theta_fitted", r(lit(0.5) * col("__l") + lit(0.5) * col("__ses")))
+      .withColumn("theta_fitted", fittedOf(col("__l"), col("__ses")))
   }
+
+  private val TrendSumCols = Seq("__th_n", "__th_st", "__th_sxm", "__th_stt", "__th_stxm")
+
+  /** The trend line's five exact sums (n, Σt, Σx, Σt², Σtx; x in 1e-4
+    * micro-units, all decimal(38,0)) over index `t`, as window
+    * aggregates over `wAll`, one column each. */
+  private[seq] def trendSums(t: Column, x: Column, wAll: WindowSpec): Seq[Column] = {
+    val dec = "decimal(38,0)"
+    val tL = t.cast(dec)
+    val xm = graft.expr.RoundHalfUpExpr.column(x * 1e4).cast(dec)
+    Seq(count(lit(1)), sum(tL), sum(xm), sum(tL * t.cast("long")),
+      sum(tL * graft.expr.RoundHalfUpExpr.column(x * 1e4).cast("long")))
+      .zip(TrendSumCols).map { case (s, n) => s.over(wAll).as(n) }
+  }
+
+  /** `theta_b` and `theta_a`, rounded, from the [[trendSums]] columns. */
+  private[seq] def trendCoefs: Seq[Column] = {
+    val Seq(n, st, sxm, stt, stxm) = TrendSumCols.map(col)
+    val nD = n.cast("decimal(38,0)")
+    val bRaw = (nD * stxm - st * sxm).cast("double") / lit(1e4) /
+      (nD * stt - st * st).cast("double")
+    // single-observation series have a degenerate denominator: flat trend
+    val b = r(when(n > 1, bRaw).otherwise(lit(0.0)))
+    Seq(b.as("theta_b"),
+      r((sxm.cast("double") / lit(1e4) - b * st.cast("double")) / n.cast("double")).as("theta_a"))
+  }
+
+  /** The trend line l = a + b·t and the theta2 value z = r(2·x − l) at
+    * index `t` with value `x`. */
+  private[seq] def line(t: Column, x: Column): (Column, Column) = {
+    val l = col("theta_a") + col("theta_b") * t
+    (l, r(lit(2.0) * x - l))
+  }
+
+  /** ŷ = r(½·l + ½·ses). */
+  private[seq] def fittedOf(l: Column, ses: Column): Column =
+    r(lit(0.5) * l + lit(0.5) * ses)
 }

@@ -2,14 +2,15 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, GreaterThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, CaseWhen, CreateNamedStruct, Expression, GetStructField, GreaterThanOrEqual, If, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.{FilterExec, QueryExecution, RDDScanExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.GraftSqlBridge
+import graft.expr.GridFitExpr
 import graft.seq.Champion
 
 /** Champion model-selection contracts (the auto-ARIMA pick, reference
@@ -352,15 +353,17 @@ class ChampionSpec extends SparkSpec {
   }
 
   test("real weekly grain (sf0.001 part x supplier): every consumer matches the reference") {
+    // cached, not checkpointed: the consumers read their input directly,
+    // so releasing their checkpoints would release a checkpointed input
     val weekly = graft.app.Jobs.etl(spark, "/root/testdata/sf0.001")
       .select(col("l_partkey"), col("l_suppkey"), col("week_start"), col("qty_sum").as("v"))
-      .localCheckpoint(true)
+      .cache()
     try {
       val keys = Seq("l_partkey", "l_suppkey")
       assert(weekly.select(keys.map(col): _*).distinct().count() > 1000)
       assertConsumersMatch(weekly, keys, "week_start", 5)
       assertFramesMatch(weekly, keys, "week_start", 5)
-    } finally release(weekly)
+    } finally weekly.unpersist()
   }
 
   // ---- plan shape
@@ -407,39 +410,52 @@ class ChampionSpec extends SparkSpec {
     assert(keyedOnModel.isEmpty, keyedOnModel.mkString("\n"))
   }
 
-  /** The k of each length filter (`series length >= k`) a node applies. */
-  private def lengthFilters(p: SparkPlan): Seq[Int] = p match {
-    case f: FilterExec => f.condition.collect {
-      case GreaterThanOrEqual(a: Attribute, Literal(k, _)) if a.name == Champion.LenCol =>
-        k.toString.toInt
-    }
-    case _ => Nil
+  /** The series-length column, as an attribute or a struct field. */
+  private def isLength(e: Expression): Boolean = e match {
+    case a: Attribute => a.name == Champion.LenCol
+    case f: GetStructField => f.extractFieldName == Champion.LenCol
+    case _ => false
   }
 
-  test("plan guard: every member but mean_naive reads the series through its length filter") {
+  /** Each grid kernel a node evaluates only where the series length
+    * reaches a literal k: (kernel kind, k). */
+  private def kernelGuards(p: SparkPlan): Seq[(String, Int)] = {
+    def guard(cond: Expression, value: Expression): Seq[(String, Int)] = (cond, value) match {
+      case (GreaterThanOrEqual(n, Literal(k, _)), g: GridFitExpr) if isLength(n) =>
+        Seq(g.kind -> k.toString.toInt)
+      case _ => Nil
+    }
+    p.expressions.flatMap(_.collect {
+      case CaseWhen(Seq((cond, value)), _) => guard(cond, value)
+      case If(cond, value, _) => guard(cond, value)
+    }.flatten)
+  }
+
+  /** Each member row a node builds only where the series length reaches
+    * a literal k: (member, k). */
+  private def memberGuards(p: SparkPlan): Seq[(String, Int)] = p.expressions.flatMap(_.collect {
+    case CaseWhen(Seq((GreaterThanOrEqual(n, Literal(k, _)), s: CreateNamedStruct)),
+      None) if isLength(n) => s.valExprs.head.toString -> k.toString.toInt
+  })
+
+  test("plan guard: pruned kernels and member rows run only on series at their minimum") {
     val fc = Champion.championForecast(boundarySeries.toDF("key", "t", "v"), Seq("key"),
       Seq(col("t")), "v", h = 5, m = 13)
-    try {
-      fc.collect()
-      val unions = subtree(fc.queryExecution.executedPlan).collect { case u: UnionExec => u }
-      assert(unions.size == 1)
-      val minLen = Champion.minLength(13)
-      val seen = unions.head.children.map { branch =>
-        val nodes = subtree(branch)
-        val model = nodes.flatMap(_.expressions).flatMap(_.collect {
-          case Alias(Literal(v, _), "model") => v.toString
-        }).head
-        // the filter that sits directly on each scan of the series checkpoint
-        val onScans = nodes.flatMap(p => inputs(p).collect {
-          case s: RDDScanExec if s.output.exists(_.name == Champion.LenCol) => lengthFilters(p)
-        })
-        assert(onScans.nonEmpty, model)
-        val want = if (model == "mean_naive") Nil else Seq(minLen(model))
-        assert(onScans.forall(_ == want), s"$model reads the series through $onScans")
-        model
-      }
-      assert(seen.toSet == minLen.keySet)
-    } finally release(fc)
+    fc.collect()
+    val nodes = subtree(fc.queryExecution.executedPlan)
+    val minLen = Champion.minLength(13)
+    // the grid kernels: each evaluated only under its member's minimum
+    val kernels = nodes.flatMap(_.expressions).flatMap(_.collect { case g: GridFitExpr => g })
+    val guarded = nodes.flatMap(kernelGuards)
+    assert(kernels.size == 2 && guarded.size == 2,
+      nodes.flatMap(_.expressions).filter(_.exists(_.isInstanceOf[GridFitExpr])).mkString("\n"))
+    assert(guarded.toMap == Map("ma1" -> minLen("ma1"), "arma11" -> minLen("arma11")))
+    // the explode builds each member's row only where the series reaches
+    // the member's minimum (mean_naive's is 1: every series)
+    val rows = nodes.collect { case g: GenerateExec => memberGuards(g) }.filter(_.nonEmpty)
+    assert(rows.size == 1, nodes.mkString("\n"))
+    assert(rows.head.toMap == minLen - "mean_naive" && rows.head.size == minLen.size - 1,
+      rows.head)
   }
 
   test("plan guard: pickBlendScoreFcs fits every member on every series") {
@@ -458,9 +474,10 @@ class ChampionSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
     try {
       val tables = plans.synchronized(plans.toList)
-        .filter(p => subtree(p).exists(_.isInstanceOf[UnionExec]))
+        .filter(p => subtree(p).exists(_.isInstanceOf[GenerateExec]))
       assert(tables.nonEmpty, "the member table's checkpoint was not seen")
-      assert(tables.flatMap(subtree).flatMap(lengthFilters).isEmpty)
+      val nodes = tables.flatMap(subtree)
+      assert(nodes.flatMap(kernelGuards).isEmpty && nodes.flatMap(memberGuards).isEmpty)
     } finally release(got._1)
   }
 }

@@ -102,9 +102,9 @@ class JobsSpec extends SparkSpec {
   }
 
   test("championSubmission releases every checkpoint it pins") {
-    // the series checkpoint and the materialized grid must not outlive
-    // the call: persistentRdds holds strong references, so a leaked
-    // block set grows the heap with every submission
+    // the materialized grid must not outlive the call: persistentRdds
+    // holds strong references, so a leaked block set grows the heap with
+    // every submission
     val sc = spark.sparkContext
     val tmp = java.nio.file.Files.createTempDirectory("graft_champ_rel").toString
     Seq[(SparkSession, String, String) => DataFrame](

@@ -21,7 +21,12 @@ class QTimeSpec extends SparkSpec {
         assert(phases.map(_.name) == Seq("build", "exec"))
         assert(recorded.nonEmpty && phases.forall(_.wallS > 0))
         assert(phases.flatMap(_.jobs.map(_.jobId)).toSet == recorded, s"$q pass $pass")
-        phases.foreach(p => assert(p.line(q, pass).startsWith(s"QPROF $q pass=$pass phase=${p.name} ")))
+        phases.foreach { p =>
+          val line = p.line(q, pass)
+          assert(line.startsWith(s"QPROF $q pass=$pass phase=${p.name} "))
+          assert(line.endsWith(s" codegen_compiles=${p.codegenCompiles}") && p.codegenCompiles >= 0,
+            line)
+        }
       }
       // the enrich join broadcasts, so its broadcast jobs were among those attributed
       val df = SparkEntry.queries("q23_enrich_join")(s, dir)
