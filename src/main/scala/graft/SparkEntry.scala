@@ -43,8 +43,8 @@ object SparkEntry {
     * BOUNDED and EVICTABLE (r12 verdict ask #3 — the previous
     * identityHashCode-keyed unbounded maps pinned checkpointed RDD
     * blocks for the JVM's life in a long-lived multi-session service):
-    * at most `spark.graft.memo.maxSessions` sessions (default 8) hold
-    * entries (LRU by access),
+    * at most [[Memos.MaxSessions]] sessions hold entries (LRU by
+    * access),
     * eviction UNPERSISTS the evicted session's checkpoint blocks
     * (SparkContext.persistentRdds holds strong references, so merely
     * dropping ours would still pin the blocks forever), and
@@ -55,48 +55,18 @@ object SparkEntry {
     * why the explicit release is the intended lifecycle and the bound
     * the backstop. */
   private object Memos {
-    /** Session-conf key sizing the LRU bound (default 8) so a service
-      * operator can size the registry to their session churn without
-      * rebuilding the library. Read from the ACCESSING session at each
-      * memo/registration, so the effective bound follows the live conf;
-      * sessions that never set it keep the default. */
-    val MaxSessionsKey = "spark.graft.memo.maxSessions"
-    val DefaultMaxSessions = 8
-    private def maxSessionsOf(s: SparkSession): Int =
-      try {
-        val n = s.conf.get(MaxSessionsKey, DefaultMaxSessions.toString).toInt
-        if (n >= 1) n else DefaultMaxSessions
-      } catch { case _: NumberFormatException => DefaultMaxSessions }
+    /** The LRU bound on sessions holding entries. */
+    val MaxSessions = 8
 
-    // written only under reg's lock, read by removeEldestEntry (which
-    // LinkedHashMap calls inside our own locked put)
-    private var bound = DefaultMaxSessions
     private val reg = new java.util.LinkedHashMap[
         SparkSession, java.util.concurrent.ConcurrentHashMap[String, AnyRef]](
         16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[SparkSession,
             java.util.concurrent.ConcurrentHashMap[String, AnyRef]]): Boolean = {
-        val evict = size() > bound
+        val evict = size() > MaxSessions
         if (evict) releaseFrames(e.getValue)
         evict
-      }
-    }
-
-    /** Converge the registry DOWN to the live bound (call under the
-      * lock, after the accessing session has been touched so it sits at
-      * the access-order tail). `removeEldestEntry` only fires once per
-      * put — it caps growth but a bound LOWERED below the current size
-      * would otherwise never be reached (each put adds one and evicts
-      * one, holding the old size forever). Iteration order is
-      * least-recently-accessed first, so this sheds the stalest
-      * sessions and never the caller's. */
-    private def shrinkToBound(): Unit = {
-      val it = reg.entrySet().iterator()
-      while (reg.size() > bound && it.hasNext) {
-        val e = it.next()
-        releaseFrames(e.getValue)
-        it.remove()
       }
     }
 
@@ -115,10 +85,8 @@ object SparkEntry {
       * losing duplicate shares no blocks with the winner). */
     def memo[T <: AnyRef](s: SparkSession, slot: String, d: String)(build: => T): T = {
       val m = reg.synchronized {
-        bound = maxSessionsOf(s)
         var v = reg.get(s)
         if (v == null) { v = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]; reg.put(s, v) }
-        shrinkToBound()
         v
       }
       val k = slot + "|" + d
@@ -132,9 +100,7 @@ object SparkEntry {
             // evicted mid-build: register a fresh map (NOT m — its other
             // entries' blocks were released by the eviction)
             val v = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
-            bound = maxSessionsOf(s)
             reg.put(s, v)
-            shrinkToBound()
             v
           }
           val prev = cur.putIfAbsent(k, built)
@@ -157,7 +123,6 @@ object SparkEntry {
 
     private def frames(v: Any): Seq[DataFrame] = v match {
       case df: DataFrame => Seq(df)
-      case it: Iterable[_] => it.flatMap(frames).toSeq
       case p: Product => p.productIterator.flatMap(frames).toSeq
       case _ => Seq.empty
     }
@@ -213,49 +178,38 @@ object SparkEntry {
 
   /** q299/q300/q309 share the extended-order member tables the way the
     * champion trio shares the family's: the fourteen-member board and
-    * the full forecast union are series-grain tiny, localCheckpointed
-    * once per (session, sfDir), riding the championShared family
-    * tables — so a sweep running them pays the six extended fits
-    * ONCE and q300 is a pure winner join. */
-  private def extShared(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val t = Memos.memo(s, "ext", d) {
+    * the full forecast union ([[graft.seq.OrderSearch.extendedFrom]])
+    * are series-grain tiny, localCheckpointed once per (session,
+    * sfDir), riding the championShared family tables and the memoized
+    * member fits (extFitShared, smaShared, sarmaShared) — so a sweep
+    * running them pays each extended fit ONCE, shared with
+    * q297/q298/q307/q308/q310, and q300 is a pure winner join. */
+  private def extShared(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    Memos.memo(s, "ext", d) {
       val (weekly, d2base, a21base, a22base, lastLevel) = extFitShared(s, d)
-      val shared = championShared(s, d)
-      // the seasonal fit bases checkpointed inside the member build ride
-      // the memo value so releaseMemos frees their blocks too
-      val bases = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      val (extScores, extFcs) = graft.seq.OrderSearch.extMemberTablesFrom(
-        d2base, a21base, a22base, lastLevel, weekly,
-        Seq("l_suppkey"), Seq(col("week_start")), "qty_sum", h = 4, m = 13,
-        onCheckpoint = bases += _)
-      val board = graft.seq.OrderSearch.boardFrom(
-        shared._3.drop("rank"), extScores, Seq("l_suppkey")).localCheckpoint(true)
-      val fcs = shared._4.select(col("l_suppkey"), col("model"), col("step"),
-        col("forecast")).unionByName(extFcs).localCheckpoint(true)
-      (board, fcs, bases.toList)
+      val (_, _, famBoard, famFcs) = championShared(s, d)
+      val (board, fcs) = graft.seq.OrderSearch.extendedFrom(famBoard, famFcs,
+        d2base, a21base, a22base, lastLevel, smaShared(s, d), sarmaShared(s, d),
+        weekly, Seq("l_suppkey"), Seq(col("week_start")), "qty_sum", h = 4, m = 13)
+      (board.localCheckpoint(true), fcs.localCheckpoint(true))
     }
-    (t._1, t._2)
-  }
 
   /** The SIXTEEN-member board + forecast union (q336/q337): the
     * extended fourteen (extShared) widened with the promoted ma3/ar5
     * members (r15 verdict optional ask #7 — the parked 3 ≤ p,q ≤ 5
     * probes as board members). Every underlying fit rides an existing
     * memo (extShared, ma3Shared, ywShared), so the widening itself is
-    * two series-grain unions + one re-rank. */
+    * two series-grain unions + one re-rank
+    * ([[graft.seq.OrderSearch.widen]]). */
   private def fullShared(s: SparkSession, d: String): (DataFrame, DataFrame) =
     Memos.memo(s, "full", d) {
       val (extBoard, extFcs) = extShared(s, d)
       val (weekly, _, _, _, _) = extFitShared(s, d)
-      val wide = graft.seq.OrderSearch.wideMemberScoresFrom(
-        ma3Shared(s, d), ywShared(s, d), weekly, Seq("l_suppkey"), "qty_sum")
-      val board = graft.seq.OrderSearch.boardFrom(
-        extBoard.drop("rank"), wide, Seq("l_suppkey")).localCheckpoint(true)
-      val fcs = extFcs.unionByName(
-        graft.seq.OrderSearch.wideMemberForecastsFrom(
-          ma3Shared(s, d), ywShared(s, d), Seq("l_suppkey"), h = 4))
-        .localCheckpoint(true)
-      (board, fcs)
+      val (wideScores, wideFcs) = graft.seq.OrderSearch.wideMembersFrom(
+        ma3Shared(s, d), ywShared(s, d), weekly, Seq("l_suppkey"), "qty_sum", h = 4)
+      val (board, fcs) = graft.seq.OrderSearch.widen(extBoard, extFcs,
+        wideScores, wideFcs, Seq("l_suppkey"))
+      (board.localCheckpoint(true), fcs.localCheckpoint(true))
     }
 
   /** The extended members' expensive state — the weekly frame plus the
@@ -1386,7 +1340,7 @@ object SparkEntry {
     // the extShared memoized board + forecast union)
     "q309_blend_ext" -> ((s, d) => {
       val (board, fcs) = extShared(s, d)
-      graft.seq.OrderSearch.blendFromBoards(board, fcs, Seq("l_suppkey"))
+      graft.seq.Champion.blendFrom(board, fcs, Seq("l_suppkey"))
     }),
     // SARIMA(0,0,1)(0,1,0)_m: MA(1) CLS on the lag-m seasonal
     // differences, seasonally integrated against the observed last
@@ -4529,7 +4483,7 @@ object SparkEntry {
                  FROM smaint)"""
 
   /** q297 oracle: the ARMA(2,1)-on-diffs recursion, winner triple by
-    * (sse, φ₁, φ₂, θ), integrated forecast — mirrors arima211Forecast. */
+    * (sse, φ₁, φ₂, θ), integrated forecast — mirrors arima211ForecastFrom. */
   private lazy val arima211Sql: String =
     s"""$championMembersSql,
            $extOrderBlocksSql
@@ -4538,7 +4492,7 @@ object SparkEntry {
          FROM a2int"""
 
   /** q298 oracle: the MA(1)-on-second-diffs recursion, doubly
-    * integrated — mirrors OrderSearch.arima021Forecast. */
+    * integrated — mirrors OrderSearch.arima021ForecastFrom. */
   private lazy val arima021Sql: String =
     s"""$championMembersSql,
            $extOrderBlocksSql
@@ -4558,7 +4512,7 @@ object SparkEntry {
 
   /** q308 oracle: the MA(1)-on-seasonal-diffs recursion, seasonally
     * integrated against the observed last season — mirrors
-    * OrderSearch.sarima011Forecast. */
+    * OrderSearch.sarima011ForecastFrom. */
   private lazy val sarima011Sql: String =
     s"""$championMembersSql,
            $extOrderBlocksSql
@@ -4568,7 +4522,7 @@ object SparkEntry {
   /** q310 oracle: the ARMA(1,1)-on-seasonal-diffs recursion (the joint
     * seasonal member), winner pair by (sse, φ, θ), seasonally
     * integrated against the observed last season — mirrors
-    * OrderSearch.sarma11Forecast. */
+    * OrderSearch.sarma11ForecastFrom. */
   private lazy val sarma11Sql: String =
     s"""$championMembersSql,
            $extOrderBlocksSql
@@ -4818,7 +4772,7 @@ object SparkEntry {
 
   /** q300 oracle: the fourteen-member argmin, winner's forecast
     * joined from the family fcs union plus the six extended
-    * forecasters — mirrors OrderSearch.championForecastExt. */
+    * forecasters — mirrors OrderSearch.extendedFrom + pickFrom. */
   private lazy val championExtSql: String =
     s"""$championMembersSql,
            $extOrderBlocksSql,

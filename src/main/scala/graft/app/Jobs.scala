@@ -397,8 +397,8 @@ object Jobs {
       .select(col("l_suppkey"), (col("__rn") - (col("__n") - h)).cast("long").as("step"),
         col("qty_sum").as("actual"))
     // ONE member-pipeline execution serves both strategies
-    // (Champion.pickAndBlend materializes the series-grain tables)
-    val (champRaw, blendRaw) = graft.seq.Champion.pickAndBlend(train,
+    // (Champion.pickBlendScoreFcs materializes the series-grain table)
+    val (champRaw, blendRaw, _, _) = graft.seq.Champion.pickBlendScoreFcs(train,
       Seq("l_suppkey"), Seq(col("week_start")), "qty_sum", h = h, m = 13)
     val champ = champRaw.select(col("l_suppkey"), col("step"), col("forecast"))
     val blend = blendRaw
@@ -421,6 +421,21 @@ object Jobs {
       .unionByName(leg("naive", naive))
   }
 
+  /** The model paths' input and feature columns: the feature store
+    * with `label` = next week's qty_sum per series (rows without a next
+    * week drop, NULL features fill to 0). */
+  private def labelledFeatures(spark: SparkSession,
+                               sfDir: String): (DataFrame, Seq[String]) = {
+    val sw = Window.partitionBy(col("l_partkey"), col("l_suppkey"))
+      .orderBy(col("week_start"))
+    (featureStore(spark, sfDir)
+      .withColumn("label", lead(col("qty_sum"), 1).over(sw))
+      .filter(col("label").isNotNull)
+      .na.fill(0.0),
+      Seq("qty_sum", "lag_1", "lag_4", "roll_mean_4", "roll_std_4", "momentum_1",
+        "stability", "ewma_03", "month", "dow", "quarter", "week_of_year"))
+  }
+
   /** §3.3 model path: GBT trained on the feature store (the MLlib
     * stand-in for the reference's LightGBM), forecasting the NEXT
     * week's quantity from features computed through the current week —
@@ -429,14 +444,7 @@ object Jobs {
     * holdout; returns (model WMAPE, naive carry-forward WMAPE). */
   def gbtForecast(spark: SparkSession, sfDir: String,
                   holdoutWeeks: Int = 4): (Double, Double) = {
-    val sw = Window.partitionBy(col("l_partkey"), col("l_suppkey"))
-      .orderBy(col("week_start"))
-    val features = featureStore(spark, sfDir)
-      .withColumn("label", lead(col("qty_sum"), 1).over(sw))
-      .filter(col("label").isNotNull)
-      .na.fill(0.0)
-    val featCols = Seq("qty_sum", "lag_1", "lag_4", "roll_mean_4", "roll_std_4",
-      "momentum_1", "stability", "ewma_03", "month", "dow", "quarter", "week_of_year")
+    val (features, featCols) = labelledFeatures(spark, sfDir)
     val (_, hi) = graft.cv.TimeSplits.dateBounds(features, col("week_start"))
     val cut = hi.minusWeeks(holdoutWeeks)
     val train = features.filter(col("week_start") <= lit(cut.toString))
@@ -453,16 +461,6 @@ object Jobs {
     (gbtWmape, naiveWmape)
   }
 
-  /** §3.3 stacked path (M12 learned leg, end-to-end): three base
-    * forecasters — GBT over the feature store, the EWMA level carry,
-    * and the 4-week rolling mean — are combined by a linear meta-model
-    * fit on a META window that postdates all base training, then scored
-    * on the untouched final holdout. Walk-forward discipline throughout:
-    * base-train < meta < holdout, so neither fit ever sees its own
-    * evaluation residuals. The stacker is validation-gated: it ships
-    * only if it beats every single on the meta window. Returns
-    * (selected candidate's holdout WMAPE, best single's holdout WMAPE).
-    */
   /** Forecast-to-policy inventory plan: per supplier series, the
     * seasonal-naive lead-time demand (L steps of
     * [[graft.seq.Baselines.forecasts]]) plus the z·σ·√L buffer from
@@ -492,16 +490,19 @@ object Jobs {
           .as("order_target"))
   }
 
+  /** §3.3 stacked path (M12 learned leg, end-to-end): three base
+    * forecasters — GBT over the feature store, the EWMA level carry,
+    * and the 4-week rolling mean — are combined by a linear meta-model
+    * fit on a META window that postdates all base training, then scored
+    * on the untouched final holdout. Walk-forward discipline throughout:
+    * base-train < meta < holdout, so neither fit ever sees its own
+    * evaluation residuals. The stacker is validation-gated: it ships
+    * only if it beats every single on the meta window. Returns
+    * (selected candidate's holdout WMAPE, best single's holdout WMAPE).
+    */
   def stackedForecast(spark: SparkSession, sfDir: String,
                       metaWeeks: Int = 8, holdoutWeeks: Int = 4): (Double, Double) = {
-    val sw = Window.partitionBy(col("l_partkey"), col("l_suppkey"))
-      .orderBy(col("week_start"))
-    val features = featureStore(spark, sfDir)
-      .withColumn("label", lead(col("qty_sum"), 1).over(sw))
-      .filter(col("label").isNotNull)
-      .na.fill(0.0)
-    val featCols = Seq("qty_sum", "lag_1", "lag_4", "roll_mean_4", "roll_std_4",
-      "momentum_1", "stability", "ewma_03", "month", "dow", "quarter", "week_of_year")
+    val (features, featCols) = labelledFeatures(spark, sfDir)
     val (_, hi) = graft.cv.TimeSplits.dateBounds(features, col("week_start"))
     val cutMeta = hi.minusWeeks(metaWeeks + holdoutWeeks)
     val cutSel = hi.minusWeeks(metaWeeks / 2 + holdoutWeeks)

@@ -26,9 +26,6 @@ object Funcs {
     */
   def dowMon0(d: Column): Column = (dayofweek(d) + lit(5)) % lit(7)
 
-  /** is_weekend under pandas convention (dow ∈ {5,6} = Sat/Sun). */
-  def isWeekend(d: Column): Column = dowMon0(d) >= lit(5)
-
   /** Clip a column into [lo, hi] (reference D10 `np.clip`). */
   def clip(c: Column, lo: Column, hi: Column): Column = greatest(least(c, hi), lo)
 

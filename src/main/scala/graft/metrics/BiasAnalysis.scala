@@ -165,7 +165,7 @@ object BiasAnalysis {
     // the grains table is tiny (groups × (1 + Σ|segments|)) but has
     // THREE consumers (overall / dimension / trend) that would each
     // re-run the fact-sized GROUPING-SETS pass — materialize once
-    // (the champion pickAndBlend house pattern)
+    // (the Champion.pickBlendScoreFcs house pattern)
     val base = grouped.select(keys ++ Seq(dimension.as("dimension"),
       segment.as("segment"), col("n"),
       r(col("__s") / n).as("mean_bias"),

@@ -207,11 +207,6 @@ object WindowFeatures {
   def interPurchaseGapDays(date: Column, sw: SeriesWindow): Column =
     datediff(date, lag(date, 1).over(sw.w))
 
-  /** W19 — lifecycle ages: first/last date over the group + day distances
-    * (reference: behavioral_features_engine.py:222-253). */
-  def firstDate(date: Column, sw: SeriesWindow): Column = min(date).over(sw.group)
-  def lastDate(date: Column, sw: SeriesWindow): Column = max(date).over(sw.group)
-
   /** W19 (stage leg) — 4-way lifecycle stage from age / recency vs the
     * dataset max date (reference: behavioral_features_engine.py:239-253). */
   def lifecycleStage(ageDays: Column, daysSinceLast: Column): Column =

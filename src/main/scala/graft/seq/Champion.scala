@@ -69,9 +69,8 @@ import graft.functions.Funcs.{microMeanOver, r}
   * never score, so every scored row, rank, Akaike weight and forecast is
   * unchanged; on short-history data (most retail series hold one or two
   * weeks) the costly per-series kernels then run over a small fraction
-  * of the series. The materialized member table ([[pickBlendScoreFcs]],
-  * which pickAndBlend and pickBlendScore share) is not pruned: its
-  * forecast union shows unscored members' rows.
+  * of the series. The materialized member table ([[pickBlendScoreFcs]])
+  * is not pruned: its forecast union shows unscored members' rows.
   *
   * Execution shape: ONE pass over the series, with no checkpoint, no
   * per-member exchange, no join and no union. Four window passes, all
@@ -113,6 +112,11 @@ object Champion {
     * σ² convention), rounded at emit. NULL residuals are skipped. */
   private def sqSum(resid: Column): Column =
     r(graft.functions.Funcs.microSumSq(resid))
+
+  /** AIC = n_eff·ln(max(SSE, 1e-8)/n_eff) + 2k on the 4dp grid — the
+    * one score form every searched member is ranked by. */
+  private[seq] def aic(sse: Column, neff: Column, k: Column): Column =
+    r(neff * log(greatest(sse, lit(1e-8)) / neff) + lit(2.0) * k)
 
   /** Forecast array literal: element s is (step = s, forecast = fs(s−1)). */
   private def steps(fs: Seq[Column]): Column =
@@ -300,8 +304,7 @@ object Champion {
       .select(keys ++ Seq("model", "__mrank", "__k", "sse", "neff", "__fc")
         .map(f => col(s"__m.$f").as(f)): _*)
       .withColumn("aic", when(col("sse").isNotNull && col("neff") >= 1,
-        r(col("neff") * log(greatest(col("sse"), lit(1e-8)) / col("neff")) +
-          lit(2.0) * col("__k"))))
+        aic(col("sse"), col("neff"), col("__k"))))
   }
 
   /** Series window in pick order: (aic, member order) with the unscored
@@ -353,40 +356,18 @@ object Champion {
     scoreboardFrom(memberTable(df, keyCols, ordCols, valueCol, h, m, alpha, beta,
       damp, prune = true), keyCols)
 
-  /** Both consumers from ONE member-table execution (see
-    * [[pickBlendScoreFcs]], so unpruned) — for multi-consumer jobs like
-    * the walk-forward backtest, which would otherwise fit the family
-    * once per consumer. The single-query paths (championForecast /
-    * blendForecast / scoreboard) run the member table inside their one
-    * plan and materialize nothing. */
-  def pickAndBlend(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                   valueCol: String, h: Int = 4, m: Int = 13,
-                   alpha: Double = 0.3, beta: Double = 0.1,
-                   damp: Double = 0.9): (DataFrame, DataFrame) = {
-    val (pick, blend, _) = pickBlendScore(df, keyCols, ordCols, valueCol,
-      h, m, alpha, beta, damp)
-    (pick, blend)
-  }
-
-  /** All THREE consumers — champion pick, Akaike blend and the
-    * order-search scoreboard — from one materialized member table (the
-    * pickAndBlend contract extended with the q286 trace). */
-  def pickBlendScore(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                     valueCol: String, h: Int = 4, m: Int = 13,
-                     alpha: Double = 0.3, beta: Double = 0.1,
-                     damp: Double = 0.9): (DataFrame, DataFrame, DataFrame) = {
-    val (pick, blend, board, _) = pickBlendScoreFcs(df, keyCols, ordCols,
-      valueCol, h, m, alpha, beta, damp)
-    (pick, blend, board)
-  }
-
-  /** [[pickBlendScore]] plus the member FORECAST union (keys..., model,
-    * step, forecast) as a fourth frame — what an extended search
-    * ([[OrderSearch.championForecastExt]]) joins its winner against
-    * without re-fitting the family. The member table is
+  /** All four consumers from ONE member-table execution — champion
+    * pick, Akaike blend, the order-search scoreboard (the q286 trace)
+    * and the member FORECAST union (keys..., model, step, forecast) —
+    * for multi-consumer jobs like the walk-forward backtest, which would
+    * otherwise fit the family once per consumer, and for an extended
+    * search ([[OrderSearch.extendedFrom]]), which widens the board and
+    * union without re-fitting the family. The member table is
     * localCheckpointed ONCE (series-grain: #series × 8 rows) and all
     * four frames are tails over that one checkpoint, so the eight
-    * member fits run once however many frames are consumed.
+    * member fits run once however many frames are consumed. The
+    * single-query paths (championForecast / blendForecast / scoreboard)
+    * run the member table inside their one plan and materialize nothing.
     *
     * This table is NOT pruned: the forecast union is the one frame that
     * shows members which do not score a series (ma1, arma11 and theta
@@ -449,9 +430,11 @@ object Champion {
       keyCols.map(col) :+ col("__w")), keyCols)
 
   /** Akaike-weight tail over a long-form scoreboard (keys..., model,
-    * aic) and forecast union (keys..., model, step, forecast) — the
-    * extended order search's boards. */
-  private[seq] def blendFrom(board: DataFrame, fcs: DataFrame,
+    * aic) and forecast union (keys..., model, step, forecast) — e.g. the
+    * extended order search's (board, fcs) from [[OrderSearch.widen]].
+    * Output as [[blendForecast]]: keys..., step, blend_forecast,
+    * n_members. */
+  def blendFrom(board: DataFrame, fcs: DataFrame,
                              keyCols: Seq[String]): DataFrame = {
     val wts = weighted(board, keyCols)
       .select(keyCols.map(col) ++ Seq(col("model"), col("__w")): _*)

@@ -93,21 +93,13 @@ object OrderSearch {
         col("y_last"), col("dy_last")): _*)
   }
 
-  /** h-step ARIMA(0,2,1) forecast by double integration: on the Δ²
-    * scale f_1 = r(μ + θ·ε_n) and f_{s≥2} = r(μ) (the MA(1) forecast),
-    * then Δŷ_{n+s} = r(Δy_n + Σ_{j≤s} f_j) and
+  /** h-step ARIMA(0,2,1) forecast by double integration over an
+    * ALREADY-BUILT [[arima021Full]] table: on the Δ² scale
+    * f_1 = r(μ + θ·ε_n) and f_{s≥2} = r(μ) (the MA(1) forecast), then
+    * Δŷ_{n+s} = r(Δy_n + Σ_{j≤s} f_j) and
     * ŷ_{n+s} = r(y_n + Σ_{j≤s} Δŷ_{n+j}) — every summand lives on the
     * 4dp grid so the per-step rounding chain is exact in both engines.
     * One row per (series, step), with the winning θ and SSE attached. */
-  def arima021Forecast(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                       valueCol: String, h: Int,
-                       grid: Seq[Double] = Seq(-0.8, -0.4, 0.0, 0.4, 0.8)): DataFrame =
-    arima021ForecastFrom(arima021Full(df, keyCols, ordCols, valueCol, grid),
-      keyCols, h)
-
-  /** The [[arima021Forecast]] integration tail over an ALREADY-BUILT
-    * [[arima021Full]] table — so a caller holding a materialized fit
-    * derives the forecast without re-running the fold. */
   def arima021ForecastFrom(base: DataFrame, keyCols: Seq[String], h: Int): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
     val keys = keyCols.map(col)
@@ -215,15 +207,6 @@ object OrderSearch {
         col("sarma_sse"), col("step"), col("sarma_forecast")): _*)
   }
 
-  /** [[sarma11Full]] + [[sarma11ForecastFrom]] in one call. */
-  def sarma11Forecast(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                      valueCol: String, h: Int, m: Int,
-                      phiGrid: Seq[Double] = Seq(-0.5, 0.0, 0.5, 0.9),
-                      thetaGrid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame =
-    sarma11ForecastFrom(
-      sarma11Full(df, keyCols, ordCols, valueCol, m, phiGrid, thetaGrid),
-      seasonalBase(df, keyCols, ordCols, valueCol, h, m), keyCols, h)
-
   /** The last-season base frame the seasonal integration adds forecasts
     * onto: (keys..., step, `__base` = y_{n−m+step}) for step 1..h —
     * the snaive/sari base convention; needs h ≤ m so every step's base
@@ -261,14 +244,6 @@ object OrderSearch {
         col("sma_forecast")): _*)
   }
 
-  /** [[sarima011Full]] + [[sarima011ForecastFrom]] in one call. */
-  def sarima011Forecast(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                        valueCol: String, h: Int, m: Int,
-                        grid: Seq[Double] = Seq(-0.8, -0.4, 0.0, 0.4, 0.8)): DataFrame =
-    sarima011ForecastFrom(
-      sarima011Full(df, keyCols, ordCols, valueCol, m, grid),
-      seasonalBase(df, keyCols, ordCols, valueCol, h, m), keyCols, h)
-
   /** Fixed tiebreak order across the sixteen searched members (r16:
     * ma3/ar5 promoted from parked probes to board members — the r15
     * verdict's optional ask #7, closing the 3 ≤ p,q ≤ 5 gap with the
@@ -280,82 +255,41 @@ object OrderSearch {
     "arima021" -> 8, "arima211" -> 9, "sari" -> 10, "arima212" -> 11,
     "sma" -> 12, "sarma" -> 13, "ma3" -> 14, "ar5" -> 15)
 
-  /** MA(3) + AR(5) member SCORE rows over already-built fit tables
-    * ([[SequentialKernels.fitMa3Full]] / [[graft.seq.YuleWalker.ar5Full]]
-    * — the q311/q313 probes' shared state, fit once per session):
-    * ma3 follows the family's MA(q) conventions (n_eff = series length,
-    * the CLS recursion conditions nothing; k = θ₁+θ₂+θ₃+μ = 4; entry
-    * gate n ≥ 4 = k, the ma1 n ≥ k rule); ar5 scores its
-    * lag-5-conditioned SSE over yw_neff = n − 5 rows (k = φ₁..φ₅+μ = 6;
-    * the fit table itself gates n_eff ≥ 3). Same (model, k, sse,
-    * n_eff, aic) schema as every member — union into [[boardFrom]]. */
-  def wideMemberScoresFrom(ma3Full: DataFrame, ar5Full: DataFrame,
-                           df: DataFrame, keyCols: Seq[String],
-                           valueCol: String): DataFrame = {
-    val keys = keyCols.map(col)
-    def aicOf(sse: Column, neff: Column, k: Double): Column =
-      r(neff * log(greatest(sse, lit(1e-8)) / neff) + lit(2.0 * k))
-    val counts = df.groupBy(keys: _*).agg(count(col(valueCol)).as("__n"))
-    val ma3Score = ma3Full.join(counts, keyCols).filter(col("__n") >= 4)
-      .select(keys ++ Seq(lit("ma3").as("model"), lit(4.0).as("k"),
-        col("ma3_sse").as("sse"), col("__n").cast("double").as("n_eff"),
-        aicOf(col("ma3_sse"), col("__n").cast("double"), 4.0).as("aic")): _*)
-    val ar5Score = ar5Full.filter(col("yw_neff") >= 1)
-      .select(keys ++ Seq(lit("ar5").as("model"), lit(6.0).as("k"),
-        col("yw_sse").as("sse"), col("yw_neff").cast("double").as("n_eff"),
-        aicOf(col("yw_sse"), col("yw_neff").cast("double"), 6.0).as("aic")): _*)
-    ma3Score.unionByName(ar5Score)
-  }
+  /** One member's score rows (keys..., model, k, sse, n_eff, aic), the
+    * AIC in the family's form ([[Champion.aic]]). */
+  private def scored(t: DataFrame, keyCols: Seq[String], model: String, k: Double,
+                     sse: Column, neff: Column): DataFrame =
+    t.select(keyCols.map(col) ++ Seq(lit(model).as("model"), lit(k).as("k"),
+      sse.as("sse"), neff.as("n_eff"), Champion.aic(sse, neff, lit(k)).as("aic")): _*)
 
-  /** MA(3) + AR(5) member FORECAST rows (keys..., model, step,
-    * forecast) over the same fit tables — the union leg [[pickFrom]]
-    * joins the full-board winner against. */
-  def wideMemberForecastsFrom(ma3Full: DataFrame, ar5Full: DataFrame,
-                              keyCols: Seq[String], h: Int): DataFrame = {
-    val keys = keyCols.map(col)
-    val ma3Fc = graft.seq.SequentialKernels.ma3ForecastFrom(ma3Full, keyCols, h)
-      .select(keys ++ Seq(lit("ma3").as("model"), col("step"),
-        col("ma3_forecast").as("forecast")): _*)
-    val ar5Fc = graft.seq.YuleWalker.ar5ForecastFrom(ar5Full, keyCols, h)
-      .select(keys ++ Seq(lit("ar5").as("model"), col("step"),
-        col("forecast")): _*)
-    ma3Fc.unionByName(ar5Fc)
-  }
+  /** One member's forecast rows (keys..., model, step, forecast). */
+  private def forecasts(t: DataFrame, keyCols: Seq[String], model: String,
+                        forecast: String): DataFrame =
+    t.select(keyCols.map(col) ++ Seq(lit(model).as("model"), col("step"),
+      col(forecast).as("forecast")): _*)
 
-  /** The fourteen-member order-search scoreboard: the Champion family's
-    * eight rows per series ([[Champion.scoreboard]] columns model, k,
-    * sse, n_eff, aic) unioned with the (0,2,1), (2,1,1), (2,1,2) and
-    * seasonal sari/sma members and re-ranked by (aic, member order). Same
-    * output schema as the family scoreboard — (keys..., model, k, sse,
-    * n_eff, aic, rank) — so diagnostics consumers swap in the wider
-    * search unchanged. */
-  def extendedScoreboard(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                         valueCol: String, h: Int = 4, m: Int = 13,
-                         alpha: Double = 0.3, beta: Double = 0.1,
-                         damp: Double = 0.9): DataFrame =
-    extendedScoreboardFrom(
-      Champion.scoreboard(df, keyCols, ordCols, valueCol, h, m, alpha, beta, damp),
-      df, keyCols, ordCols, valueCol, m)
-
-  /** The six extended members' score AND forecast tables from ONE
-    * fit execution each — the [[Champion]] memberTables discipline:
-    * the (0,2,1), (2,1,1) and (2,1,2) grid-fit bases are
-    * localCheckpointed (series-grain tiny) so the score row and the
-    * forecast recursion read the same materialized fit instead of
-    * re-running the fold; the sari member's fit and forecast are both
-    * cheap closed-form aggregates (no fold), so they stay
-    * unmaterialized.
-    *
-    * Scores: (keys..., model, k, sse, n_eff, aic) gated per member
-    * ((0,2,1) ≥ 2 Δ² residuals, (2,1,1)/(2,1,2) ≥ 2 conditioned diff
-    * residuals, sari ≥ 3 seasonal-diff regression rows — each
-    * strictly tighter than its forecaster's support, so every scored
-    * member forecasts). Forecasts: (keys..., model, step, forecast). */
-  def extMemberTables(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                      valueCol: String, h: Int = 4, m: Int = 13): (DataFrame, DataFrame) = {
-    val (d2base, a21base, a22base, lastLevel) = extFitBases(df, keyCols, ordCols, valueCol)
-    extMemberTablesFrom(d2base, a21base, a22base, lastLevel, df, keyCols, ordCols,
-      valueCol, h, m)
+  /** MA(3) + AR(5) member (score, forecast) rows over already-built fit
+    * tables ([[SequentialKernels.fitMa3Full]] /
+    * [[graft.seq.YuleWalker.ar5Full]] — the q311/q313 probes' shared
+    * state, fit once per session): ma3 follows the family's MA(q)
+    * conventions (n_eff = series length, the CLS recursion conditions
+    * nothing; k = θ₁+θ₂+θ₃+μ = 4; entry gate n ≥ 4 = k, the ma1 n ≥ k
+    * rule); ar5 scores its lag-5-conditioned SSE over yw_neff = n − 5
+    * rows (k = φ₁..φ₅+μ = 6; the fit table itself gates n_eff ≥ 3).
+    * Same schemas as every member — widen a board with [[widen]]. */
+  def wideMembersFrom(ma3Full: DataFrame, ar5Full: DataFrame,
+                      df: DataFrame, keyCols: Seq[String],
+                      valueCol: String, h: Int): (DataFrame, DataFrame) = {
+    val counts = df.groupBy(keyCols.map(col): _*).agg(count(col(valueCol)).as("__n"))
+    val ma3Score = scored(ma3Full.join(counts, keyCols).filter(col("__n") >= 4),
+      keyCols, "ma3", 4.0, col("ma3_sse"), col("__n").cast("double"))
+    val ar5Score = scored(ar5Full.filter(col("yw_neff") >= 1),
+      keyCols, "ar5", 6.0, col("yw_sse"), col("yw_neff").cast("double"))
+    val ma3Fc = forecasts(SequentialKernels.ma3ForecastFrom(ma3Full, keyCols, h),
+      keyCols, "ma3", "ma3_forecast")
+    val ar5Fc = forecasts(YuleWalker.ar5ForecastFrom(ar5Full, keyCols, h),
+      keyCols, "ar5", "forecast")
+    (ma3Score.unionByName(ar5Score), ma3Fc.unionByName(ar5Fc))
   }
 
   /** The three grid-fit bases the extended members rank and forecast
@@ -386,129 +320,111 @@ object OrderSearch {
     (d2base, a21base, a22base, lastLevel)
   }
 
-  /** [[extMemberTables]] over ALREADY-BUILT [[extFitBases]] frames —
-    * the score rows and forecast recursions read the materialized
-    * fits; only the sari member (cheap closed-form aggregates, no
-    * fold) computes from `df` here. `onCheckpoint` observes every
-    * checkpoint this call creates (the seasonal sma/sarma fit bases)
-    * so a memoizing caller can unpersist them on eviction — Spark's
-    * persistentRdds pins them for the JVM's life otherwise. */
-  def extMemberTablesFrom(d2base: DataFrame, a21base: DataFrame,
-                          a22base: DataFrame,
-                          lastLevel: DataFrame, df: DataFrame,
-                          keyCols: Seq[String], ordCols: Seq[Column],
-                          valueCol: String, h: Int = 4, m: Int = 13,
-                          onCheckpoint: DataFrame => Unit = _ => ()): (DataFrame, DataFrame) = {
+  /** The fourteen-member extended order search: the Champion family's
+    * scoreboard and forecast union (the [[Champion.pickBlendScoreFcs]]
+    * frames, so the family fits once) widened with the (0,2,1),
+    * (2,1,1), (2,1,2), sari, sma and sarma members. The member fits
+    * come in ALREADY BUILT — the [[extFitBases]] frames, the
+    * [[sarima011Full]] and [[sarma11Full]] tables over `df` — so the
+    * score rows and forecast recursions read materialized fits; only
+    * the sari member (cheap closed-form aggregates, no fold) computes
+    * from `df` here.
+    *
+    * Each member scores only where identified ((0,2,1) ≥ 2 Δ²
+    * residuals, (2,1,1)/(2,1,2) ≥ 2 conditioned diff residuals, sari ≥
+    * 3 seasonal-diff regression rows, sma ≥ 2 and sarma ≥ 3
+    * seasonal-diff rows) — each strictly tighter than its forecaster's
+    * support, so every scored member forecasts and the winner join
+    * ([[pickFrom]]) never drops a series. Returns (board, fcs) as
+    * [[widen]] does. */
+  def extendedFrom(familyBoard: DataFrame, familyFcs: DataFrame,
+                   d2base: DataFrame, a21base: DataFrame, a22base: DataFrame,
+                   lastLevel: DataFrame, smaBase: DataFrame, sarmaBase: DataFrame,
+                   df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
+                   valueCol: String, h: Int = 4, m: Int = 13): (DataFrame, DataFrame) = {
     val keys = keyCols.map(col)
-    def aicOf(sse: Column, neff: Column, k: Double): Column =
-      r(neff * log(greatest(sse, lit(1e-8)) / neff) + lit(2.0 * k))
-    val d2Score = d2base.filter(col("d2_neff") >= 2)
-      .select(keys ++ Seq(lit("arima021").as("model"), lit(2.0).as("k"),
-        col("d2_sse").as("sse"), col("d2_neff").as("n_eff"),
-        aicOf(col("d2_sse"), col("d2_neff"), 2.0).as("aic")): _*)
-    val d2Fc = arima021ForecastFrom(d2base, keyCols, h)
-      .select(keys ++ Seq(lit("arima021").as("model"), col("step"),
-        col("arima_forecast").as("forecast")): _*)
-    val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val a21Score = a21base.filter(col("arma2_neff") >= 2)
-      .select(keys ++ Seq(lit("arima211").as("model"), lit(4.0).as("k"),
-        col("arma2_sse").as("sse"), col("arma2_neff").as("n_eff"),
-        aicOf(col("arma2_sse"), col("arma2_neff"), 4.0).as("aic")): _*)
-    val a21Fc = SequentialKernels.arima211ForecastFrom(a21base, lastLevel,
-      keyCols, h)
-      .select(keys ++ Seq(lit("arima211").as("model"), col("step"),
-        col("arima_forecast").as("forecast")): _*)
-    val a22Score = a22base.filter(col("arma22_neff") >= 2)
-      .select(keys ++ Seq(lit("arima212").as("model"), lit(5.0).as("k"),
-        col("arma22_sse").as("sse"), col("arma22_neff").as("n_eff"),
-        aicOf(col("arma22_sse"), col("arma22_neff"), 5.0).as("aic")): _*)
-    val a22Fc = SequentialKernels.arima212ForecastFrom(a22base, lastLevel,
-      keyCols, h)
-      .select(keys ++ Seq(lit("arima212").as("model"), col("step"),
-        col("arima_forecast").as("forecast")): _*)
+    val d2Score = scored(d2base.filter(col("d2_neff") >= 2), keyCols,
+      "arima021", 2.0, col("d2_sse"), col("d2_neff"))
+    val d2Fc = forecasts(arima021ForecastFrom(d2base, keyCols, h), keyCols,
+      "arima021", "arima_forecast")
+    val a21Score = scored(a21base.filter(col("arma2_neff") >= 2), keyCols,
+      "arima211", 4.0, col("arma2_sse"), col("arma2_neff"))
+    val a21Fc = forecasts(SequentialKernels.arima211ForecastFrom(a21base, lastLevel,
+      keyCols, h), keyCols, "arima211", "arima_forecast")
+    val a22Score = scored(a22base.filter(col("arma22_neff") >= 2), keyCols,
+      "arima212", 5.0, col("arma22_sse"), col("arma22_neff"))
+    val a22Fc = forecasts(SequentialKernels.arima212ForecastFrom(a22base, lastLevel,
+      keyCols, h), keyCols, "arima212", "arima_forecast")
     // ---- sari — SARIMA(2,0,0)(0,1,0)_m: AR(2) on the lag-m SEASONAL
     // differences (the Ar.forecastSeasonalIntegrated / q254 fit),
     // scored exactly like the family's ari member (k = 3, n_eff the
     // regression-row count, ≥ 3 to be identified) — the seasonal-D leg
     // of the reference's search space (pmdarima max_D = 1)
+    val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
     val sd = df.withColumn("__sd",
       col(valueCol).cast("double") - lag(col(valueCol).cast("double"), m).over(w))
       .filter(col("__sd").isNotNull)
-    val sqSum = (resid: Column) =>
-      r(graft.functions.Funcs.microSumSq(resid))
-    val sariScore = Ar.fitted(sd, keyCols, ordCols, "__sd")
+    val sariFit = Ar.fitted(sd, keyCols, ordCols, "__sd")
       .filter(col("ar_fitted").isNotNull)
       .withColumn("__res", col("__sd") - col("ar_fitted"))
-      .groupBy(keys: _*).agg(sqSum(col("__res")).as("sse"),
+      .groupBy(keys: _*).agg(r(graft.functions.Funcs.microSumSq(col("__res"))).as("sse"),
         count(lit(1)).cast("double").as("n_eff"))
-      .filter(col("n_eff") >= 3)
-      .select(keys ++ Seq(lit("sari").as("model"), lit(3.0).as("k"),
-        col("sse"), col("n_eff"),
-        aicOf(col("sse"), col("n_eff"), 3.0).as("aic")): _*)
-    val sariFc = Ar.forecastSeasonalIntegrated(df, keyCols, ordCols,
-      valueCol, m, h)
-      .select(keys ++ Seq(lit("sari").as("model"), col("step"),
-        col("sari_forecast").as("forecast")): _*)
+    val sariScore = scored(sariFit.filter(col("n_eff") >= 3), keyCols,
+      "sari", 3.0, col("sse"), col("n_eff"))
+    val sariFc = forecasts(Ar.forecastSeasonalIntegrated(df, keyCols, ordCols,
+      valueCol, m, h), keyCols, "sari", "sari_forecast")
     // ---- sma — SARIMA(0,0,1)(0,1,0)_m: MA(1) on the lag-m seasonal
-    // differences (the seasonal-Q leg; k = θ + μ = 2, ≥ 2 diff rows);
-    // one fold, materialized once for the score row AND the forecast
-    val smaBase = sarima011Full(df, keyCols, ordCols, valueCol, m)
-      .localCheckpoint(true)
-    onCheckpoint(smaBase)
-    val smaScore = smaBase.filter(col("sma_neff") >= 2)
-      .select(keys ++ Seq(lit("sma").as("model"), lit(2.0).as("k"),
-        col("sma_sse").as("sse"), col("sma_neff").as("n_eff"),
-        aicOf(col("sma_sse"), col("sma_neff"), 2.0).as("aic")): _*)
+    // differences (the seasonal-Q leg; k = θ + μ = 2, ≥ 2 diff rows)
+    val smaScore = scored(smaBase.filter(col("sma_neff") >= 2), keyCols,
+      "sma", 2.0, col("sma_sse"), col("sma_neff"))
     val seasonBase = seasonalBase(df, keyCols, ordCols, valueCol, h, m)
-    val smaFc = sarima011ForecastFrom(smaBase, seasonBase, keyCols, h)
-      .select(keys ++ Seq(lit("sma").as("model"), col("step"),
-        col("sma_forecast").as("forecast")): _*)
+    val smaFc = forecasts(sarima011ForecastFrom(smaBase, seasonBase, keyCols, h),
+      keyCols, "sma", "sma_forecast")
     // ---- sarma — SARIMA(1,0,1)(0,1,0)_m: the JOINT seasonal member,
     // ARMA(1,1) on the lag-m seasonal differences (P and Q legs fit
     // together, the reference's seasonal_order=(1,1,1,m) shape;
     // k = φ + θ + μ = 3; the CLS conditions on the first diff row, so
     // n_eff = nsd − 1 and identification needs nsd ≥ 3, the family
-    // arma11 gate on the seasonal scale); one fold, materialized once
-    val sarmaBase = sarma11Full(df, keyCols, ordCols, valueCol, m)
-      .localCheckpoint(true)
-    onCheckpoint(sarmaBase)
-    val sarmaScore = sarmaBase.filter(col("sarma_nsd") >= 3)
-      .select(keys ++ Seq(lit("sarma").as("model"), lit(3.0).as("k"),
-        col("sarma_sse").as("sse"),
-        (col("sarma_nsd") - 1).as("n_eff"),
-        aicOf(col("sarma_sse"), col("sarma_nsd") - 1, 3.0).as("aic")): _*)
-    val sarmaFc = sarma11ForecastFrom(sarmaBase, seasonBase, keyCols, h)
-      .select(keys ++ Seq(lit("sarma").as("model"), col("step"),
-        col("sarma_forecast").as("forecast")): _*)
-    (d2Score.unionByName(a21Score).unionByName(a22Score).unionByName(sariScore)
-      .unionByName(smaScore).unionByName(sarmaScore),
+    // arma11 gate on the seasonal scale)
+    val sarmaScore = scored(sarmaBase.filter(col("sarma_nsd") >= 3), keyCols,
+      "sarma", 3.0, col("sarma_sse"), col("sarma_nsd") - 1)
+    val sarmaFc = forecasts(sarma11ForecastFrom(sarmaBase, seasonBase, keyCols, h),
+      keyCols, "sarma", "sarma_forecast")
+    widen(familyBoard, familyFcs,
+      d2Score.unionByName(a21Score).unionByName(a22Score).unionByName(sariScore)
+        .unionByName(smaScore).unionByName(sarmaScore),
       d2Fc.unionByName(a21Fc).unionByName(a22Fc).unionByName(sariFc)
-        .unionByName(smaFc).unionByName(sarmaFc))
+        .unionByName(smaFc).unionByName(sarmaFc),
+      keyCols)
   }
 
-  /** Union + re-rank tail: the family scoreboard rows (rank ignored)
-    * with the extended member scores, ranked by (aic, member order). */
-  def boardFrom(familyBoard: DataFrame, extScores: DataFrame,
-                keyCols: Seq[String]): DataFrame = {
+  /** A searched board widened by member rows: `board` (keys..., model,
+    * k, sse, n_eff, aic; its rank ignored) unioned with the members'
+    * `scores` and re-ranked by (aic, member order), and `fcs` (keys...,
+    * model, step, forecast) unioned with their forecast rows. Returns
+    * (board, fcs) — the same schemas, so [[pickFrom]] and
+    * [[Champion.blendFrom]] read any width of search, and diagnostics
+    * consumers swap in the wider board unchanged. */
+  def widen(board: DataFrame, fcs: DataFrame, scores: DataFrame,
+            memberFcs: DataFrame, keyCols: Seq[String]): (DataFrame, DataFrame) = {
     val keys = keyCols.map(col)
-    val base = familyBoard
-      .select(keys ++ Seq(col("model"), col("k"), col("sse"), col("n_eff"),
-        col("aic")): _*)
-    val all = base.unionByName(
-      extScores.select(keys ++ Seq(col("model"), col("k"), col("sse"),
-        col("n_eff"), col("aic")): _*))
+    val scoreCols = keys ++ Seq(col("model"), col("k"), col("sse"), col("n_eff"),
+      col("aic"))
+    val fcCols = keys ++ Seq(col("model"), col("step"), col("forecast"))
     val mrank = MemberRank.foldLeft(lit(99)) { case (acc, (name, rk)) =>
       when(col("model") === name, rk).otherwise(acc)
     }
     val wRank = Window.partitionBy(keys: _*).orderBy(col("aic"), col("__mrank"))
-    all.withColumn("__mrank", mrank)
+    (board.select(scoreCols: _*).unionByName(scores.select(scoreCols: _*))
+      .withColumn("__mrank", mrank)
       .withColumn("rank", row_number().over(wRank).cast("long"))
-      .select(keys ++ Seq(col("model"), col("k"), col("sse"), col("n_eff"),
-        col("aic"), col("rank")): _*)
+      .select(scoreCols :+ col("rank"): _*),
+      fcs.select(fcCols: _*).unionByName(memberFcs.select(fcCols: _*)))
   }
 
   /** Winner-join tail: rank-1 per series joined against a forecast
-    * union (keys..., model, step, forecast). */
+    * union (keys..., model, step, forecast). Output: keys...,
+    * champion, aic, step, forecast. */
   def pickFrom(board: DataFrame, fcs: DataFrame, keyCols: Seq[String]): DataFrame = {
     val keys = keyCols.map(col)
     board.filter(col("rank") === 1)
@@ -518,60 +434,4 @@ object OrderSearch {
       .select(keys ++ Seq(col("model").as("champion"), col("aic"),
         col("step"), col("forecast")): _*)
   }
-
-  /** [[extendedScoreboard]] over an ALREADY-BUILT family scoreboard
-    * (the [[Champion.scoreboard]] output, rank column ignored) — so a
-    * caller holding a memoized family table pays only the six new
-    * member fits. `m` is the seasonal period the sari member
-    * differences at (must match the family board's m). */
-  def extendedScoreboardFrom(familyBoard: DataFrame, df: DataFrame,
-                             keyCols: Seq[String], ordCols: Seq[Column],
-                             valueCol: String, m: Int = 13): DataFrame =
-    boardFrom(familyBoard,
-      extMemberTables(df, keyCols, ordCols, valueCol, m = m)._1, keyCols)
-
-  /** The extended champion: argmin over the FOURTEEN-member scoreboard,
-    * the winner's h-step forecast joined back — [[Champion
-    * .championForecast]] widened to the searched orders. Consumes an
-    * already-materialized family scoreboard and forecast union (the
-    * [[Champion.pickBlendScoreFcs]] frames) so the family fits once;
-    * the extended members fit once each via [[extMemberTables]].
-    * Output mirrors championForecast: (keys..., champion, aic, step,
-    * forecast). Every scoreboard-eligible member's forecaster emits
-    * rows, so the winner join never drops a series. */
-  def championForecastExt(familyBoard: DataFrame, familyFcs: DataFrame,
-                          df: DataFrame, keyCols: Seq[String],
-                          ordCols: Seq[Column], valueCol: String,
-                          h: Int = 4, m: Int = 13): DataFrame = {
-    val keys = keyCols.map(col)
-    val (extScores, extFcs) = extMemberTables(df, keyCols, ordCols, valueCol, h, m)
-    val fcs = familyFcs.select(keys ++ Seq(col("model"), col("step"),
-      col("forecast")): _*).unionByName(extFcs)
-    pickFrom(boardFrom(familyBoard, extScores, keyCols), fcs, keyCols)
-  }
-
-  /** Akaike-weight blend over the FOURTEEN-member board —
-    * [[Champion.blendForecast]] widened to the searched orders: per
-    * series w ∝ exp(−Δaic/2) over every identified member, blend =
-    * Σ(w·f)/Σw as exact micro-int sums (the q267 arithmetic,
-    * unchanged). Consumes the same already-materialized family frames
-    * as [[championForecastExt]]; callers holding the extShared memo
-    * pass its (board, fcs) directly to [[Champion.blendFrom]]. */
-  def blendForecastExt(familyBoard: DataFrame, familyFcs: DataFrame,
-                       df: DataFrame, keyCols: Seq[String],
-                       ordCols: Seq[Column], valueCol: String,
-                       h: Int = 4, m: Int = 13): DataFrame = {
-    val keys = keyCols.map(col)
-    val (extScores, extFcs) = extMemberTables(df, keyCols, ordCols, valueCol, h, m)
-    val fcs = familyFcs.select(keys ++ Seq(col("model"), col("step"),
-      col("forecast")): _*).unionByName(extFcs)
-    blendFromBoards(boardFrom(familyBoard, extScores, keyCols), fcs, keyCols)
-  }
-
-  /** The blend tail over ALREADY-BUILT (board, forecast-union) frames
-    * — e.g. a memoized extended board. Exact [[Champion]] blend
-    * arithmetic. */
-  def blendFromBoards(board: DataFrame, fcs: DataFrame,
-                      keyCols: Seq[String]): DataFrame =
-    Champion.blendFrom(board, fcs, keyCols)
 }

@@ -923,8 +923,8 @@ object SequentialKernels {
         col("__xp1").as("arma2_xc_prev")): _*)
   }
 
-  /** h-step ARMA(2,1) forecast from the CLS grid fit: with the winning
-    * (φ₁, φ₂, θ), future innovations zero,
+  /** h-step ARMA(2,1) forecast over an ALREADY-BUILT [[fitArma21Full]]
+    * table: with the winning (φ₁, φ₂, θ), future innovations zero,
     *
     *   f_1 = r( μ + φ₁·(x_n − μ) + φ₂·(x_{n−1} − μ) + θ·ε_n )
     *   f_2 = r( μ + φ₁·(f_1 − μ) + φ₂·(x_n − μ) )
@@ -932,18 +932,6 @@ object SequentialKernels {
     *
     * each step rounded before feeding forward (recursive-CTE-replayable
     * chain). One row per (series, step). */
-  def arma21Forecast(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                     valueCol: String, h: Int,
-                     phi1Grid: Seq[Double] = Seq(-0.5, 0.0, 0.5, 0.9),
-                     phi2Grid: Seq[Double] = Seq(-0.3, 0.0, 0.3),
-                     thetaGrid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame =
-    arma21ForecastFrom(fitArma21Full(df, keyCols, ordCols, valueCol,
-      phi1Grid, phi2Grid, thetaGrid), keyCols, h)
-
-  /** The [[arma21Forecast]] step recursion over an ALREADY-BUILT
-    * [[fitArma21Full]] table — so a caller holding a materialized fit
-    * (e.g. the extended order search's member tables) derives the
-    * forecast without re-running the fold. */
   def arma21ForecastFrom(base: DataFrame, keyCols: Seq[String], h: Int): DataFrame = {
     import graft.functions.Funcs.r
     require(h >= 1, "horizon must be at least 1")
@@ -972,37 +960,13 @@ object SequentialKernels {
 
   /** ARIMA(2,1,1) by composition — the d = 1 member of the ARMA(2,1)
     * class, one order past the family's ARIMA(1,1,1)
-    * ([[arima111Forecast]]): the CLS grid fit runs on the first
-    * differences and the h diff forecasts integrate back from the last
-    * observed level (ŷ_{n+s} = r(y_n + Σ_{j≤s} d̂_{n+j}), the q249
-    * integration machinery). Series with < 2 observations drop. Emits
-    * the winning (φ₁, φ₂, θ) and diff-scale SSE alongside each step. */
-  def arima211Forecast(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                       valueCol: String, h: Int,
-                       phi1Grid: Seq[Double] = Seq(-0.5, 0.0, 0.5, 0.9),
-                       phi2Grid: Seq[Double] = Seq(-0.3, 0.0, 0.3),
-                       thetaGrid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(h >= 1, "horizon must be at least 1")
-    val keys = keyCols.map(col)
-    val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val wd = Window.partitionBy(keys: _*).orderBy(ordCols.map(_.desc): _*)
-    val dy = df.withColumn("__yraw", col(valueCol).cast("double"))
-      .withColumn("__dy", col("__yraw") - lag(col("__yraw"), 1).over(w))
-    val lastLevel = dy.withColumn("__rdL", row_number().over(wd))
-      .filter(col("__rdL") === 1)
-      .select(keys :+ col("__yraw").as("__yn"): _*)
-    val diffed = dy.filter(col("__dy").isNotNull).drop("__yraw")
-    arima211ForecastFrom(fitArma21Full(diffed, keyCols, ordCols, "__dy",
-      phi1Grid, phi2Grid, thetaGrid), lastLevel, keyCols, h)
-  }
-
-  /** The [[arima211Forecast]] integration tail over an ALREADY-BUILT
+    * ([[arima111Forecast]]): over an ALREADY-BUILT
     * [[fitArma21Full]]-on-first-differences table plus the
-    * last-observed-level frame (keys..., `__yn`) — so a caller holding
-    * a materialized fit (the extended order search's shared bases)
-    * derives the integrated forecast without re-running the grid
-    * fold. Arithmetic is the exact [[arima211Forecast]] chain. */
+    * last-observed-level frame (keys..., `__yn`) — both from
+    * [[OrderSearch.extFitBases]] — the h diff forecasts integrate back
+    * from the last observed level (ŷ_{n+s} = r(y_n + Σ_{j≤s} d̂_{n+j}),
+    * the q249 integration machinery). Emits the winning (φ₁, φ₂, θ)
+    * and diff-scale SSE alongside each step. */
   def arima211ForecastFrom(base: DataFrame, lastLevel: DataFrame,
                            keyCols: Seq[String], h: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

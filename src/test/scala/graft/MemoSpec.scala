@@ -55,36 +55,20 @@ class MemoSpec extends SparkSpec {
     assert(SparkEntry.memoSessionCount == base)
   }
 
-  test("the LRU bound is conf-tunable via spark.graft.memo.maxSessions " +
-    "(service operators size it without rebuilding)") {
-    val sessions = (1 to 4).map { _ =>
-      val s = spark.newSession()
-      s.conf.set("spark.graft.memo.maxSessions", "2")
-      s
-    }
-    sessions.foreach(s => SparkEntry.queries("q308_sarima011")(s, dir).count())
-    assert(SparkEntry.memoSessionCount <= 2,
-      s"conf bound 2 must hold, saw ${SparkEntry.memoSessionCount}")
-    // an evicted-but-active session transparently rebuilds on its next miss
-    assert(SparkEntry.queries("q308_sarima011")(sessions.head, dir).count() > 0)
-    sessions.foreach(SparkEntry.releaseMemos)
-  }
-
-  test("a bound LOWERED below the registry's current size converges on the " +
-    "next access (removeEldestEntry alone only caps growth)") {
-    // grow to 4 sessions under the default bound...
-    val grown = (1 to 4).map(_ => spark.newSession())
-    grown.foreach(s => SparkEntry.queries("q308_sarima011")(s, dir).count())
-    assert(SparkEntry.memoSessionCount >= 4)
-    // ...then one newcomer arrives with the bound lowered to 2: the
-    // registry must shed stale sessions down to the new bound, not
-    // hold the grown size forever
-    val tight = spark.newSession()
-    tight.conf.set("spark.graft.memo.maxSessions", "2")
-    SparkEntry.queries("q308_sarima011")(tight, dir).count()
-    assert(SparkEntry.memoSessionCount <= 2,
-      s"lowered bound 2 must converge, saw ${SparkEntry.memoSessionCount}")
-    (grown :+ tight).foreach(SparkEntry.releaseMemos)
+  test("the extended board fits each seasonal base once: q308 and q310 " +
+    "after q299 checkpoint nothing new") {
+    val sc = spark.sparkContext
+    val s = spark.newSession()
+    // q299 builds the fourteen-member board over the memoized sma and
+    // sarma fit tables, so q308/q310 must be pure memo hits on them
+    SparkEntry.queries("q299_order_search_ext")(s, dir).count()
+    val before = sc.getPersistentRDDs.keySet
+    SparkEntry.queries("q308_sarima011")(s, dir).count()
+    SparkEntry.queries("q310_sarma11")(s, dir).count()
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty && sc.getPersistentRDDs.size <= before.size,
+      s"q308/q310 re-fit a seasonal base q299 already checkpointed: new $added")
+    SparkEntry.releaseMemos(s)
   }
 
   test("the registry is bounded: LRU eviction frees the evicted session's " +
@@ -109,6 +93,8 @@ class MemoSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.size <= basePersisted + 8 * perSession,
       s"evicted sessions must not leak blocks: ${sc.getPersistentRDDs.size} " +
         s"persisted vs base $basePersisted + 8x$perSession cap")
+    // an evicted-but-active session transparently rebuilds on its next miss
+    assert(SparkEntry.queries("q308_sarima011")(sessions.head, dir).count() > 0)
     sessions.foreach(SparkEntry.releaseMemos)
     assert(SparkEntry.memoSessionCount <= base)
     assert(sc.getPersistentRDDs.size <= basePersisted,

@@ -1,13 +1,27 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.seq.{OrderSearch, SequentialKernels}
+import graft.seq.{Champion, OrderSearch, SequentialKernels}
 
 class OrderSearchSpec extends SparkSpec {
   import spark.implicits._
 
   private def series(rows: (String, Int, java.lang.Double)*) =
     rows.toSeq.toDF("k", "t", "v")
+
+  /** The extended (board, fcs) of series `g` ordered by `t`, built the
+    * way the registered queries build it: the family frames, the fit
+    * bases and the seasonal fits, widened by [[OrderSearch.extendedFrom]]. */
+  private def extended(df: DataFrame, h: Int, m: Int): (DataFrame, DataFrame) = {
+    val (keys, ord) = (Seq("g"), Seq(col("t")))
+    val (_, _, famBoard, famFcs) = Champion.pickBlendScoreFcs(df, keys, ord, "v",
+      h = h, m = m)
+    val (d2base, a21base, a22base, lastLevel) = OrderSearch.extFitBases(df, keys, ord, "v")
+    OrderSearch.extendedFrom(famBoard, famFcs, d2base, a21base, a22base, lastLevel,
+      OrderSearch.sarima011Full(df, keys, ord, "v", m),
+      OrderSearch.sarma11Full(df, keys, ord, "v", m), df, keys, ord, "v", h, m)
+  }
 
   test("ARMA(2,1) CLS fold matches the hand-computed recursion for one triple") {
     // series 10,14,8,12,16 → μ = 12; centered −2,2,−4,0,4.
@@ -51,7 +65,8 @@ class OrderSearchSpec extends SparkSpec {
     // all f^Δ² = μ = 2, so the forecast continues the quadratic:
     // Δŷ = 11,13,15 → ŷ = 36,49,64
     val df = series((1 to 5).map(t => ("a", t, java.lang.Double.valueOf(t * t))): _*)
-    val out = OrderSearch.arima021Forecast(df, Seq("k"), Seq(col("t")), "v", h = 3)
+    val out = OrderSearch.arima021ForecastFrom(
+      OrderSearch.arima021Full(df, Seq("k"), Seq(col("t")), "v"), Seq("k"), h = 3)
       .orderBy("step").select("step", "arima_forecast")
       .as[(Long, Double)].collect().toSeq
     assert(out == Seq((1L, 36.0), (2L, 49.0), (3L, 64.0)))
@@ -117,13 +132,14 @@ class OrderSearchSpec extends SparkSpec {
     val pat = Seq(7.0, 11.0, 4.0)
     val df = series((1 to 9).map(t =>
       ("a", t, java.lang.Double.valueOf(pat((t - 1) % 3)))): _*)
-    val out = OrderSearch.sarima011Forecast(df, Seq("k"), Seq(col("t")), "v",
-      h = 3, m = 3)
+    val fit = OrderSearch.sarima011Full(df, Seq("k"), Seq(col("t")), "v", m = 3)
+    val out = OrderSearch.sarima011ForecastFrom(fit,
+      OrderSearch.seasonalBase(df, Seq("k"), Seq(col("t")), "v", h = 3, m = 3),
+      Seq("k"), h = 3)
       .orderBy("step").select("step", "sma_forecast")
       .as[(Long, Double)].collect().toSeq
     assert(out == Seq((1L, 7.0), (2L, 11.0), (3L, 4.0)))
-    val theta = OrderSearch.sarima011Full(df, Seq("k"), Seq(col("t")), "v", m = 3)
-      .select("sma_theta").as[Double].head()
+    val theta = fit.select("sma_theta").as[Double].head()
     assert(theta == -0.8)
   }
 
@@ -134,13 +150,14 @@ class OrderSearchSpec extends SparkSpec {
     val pat = Seq(7.0, 11.0, 4.0)
     val df = series((1 to 9).map(t =>
       ("a", t, java.lang.Double.valueOf(pat((t - 1) % 3)))): _*)
-    val out = OrderSearch.sarma11Forecast(df, Seq("k"), Seq(col("t")), "v",
-      h = 3, m = 3)
+    val base = OrderSearch.sarma11Full(df, Seq("k"), Seq(col("t")), "v", m = 3)
+    val out = OrderSearch.sarma11ForecastFrom(base,
+      OrderSearch.seasonalBase(df, Seq("k"), Seq(col("t")), "v", h = 3, m = 3),
+      Seq("k"), h = 3)
       .orderBy("step").select("step", "sarma_forecast")
       .as[(Long, Double)].collect().toSeq
     assert(out == Seq((1L, 7.0), (2L, 11.0), (3L, 4.0)))
-    val fit = OrderSearch.sarma11Full(df, Seq("k"), Seq(col("t")), "v", m = 3)
-      .select("sarma_phi", "sarma_theta", "sarma_nsd")
+    val fit = base.select("sarma_phi", "sarma_theta", "sarma_nsd")
       .as[(Double, Double, Double)].head()
     assert(fit == ((-0.5, -0.4, 6.0)))
   }
@@ -180,8 +197,7 @@ class OrderSearchSpec extends SparkSpec {
       ("L", t, java.lang.Double.valueOf(t + (if (t % 2 == 0) 3.0 else -3.0))))
     val short = (1 to 3).map(t => ("S", t, java.lang.Double.valueOf(t * 2.0)))
     val df = (long ++ short).toDF("g", "t", "v")
-    val sb = OrderSearch.extendedScoreboard(df, Seq("g"), Seq(col("t")), "v",
-      h = 2, m = 4)
+    val (sb, _) = extended(df, h = 2, m = 4)
     val byKey = sb.select("g", "model").as[(String, String)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(byKey("L").contains("arima021") && byKey("L").contains("arima211"))
@@ -210,10 +226,8 @@ class OrderSearchSpec extends SparkSpec {
       ("W", t, java.lang.Double.valueOf(math.round(
         50 + 20 * math.sin(t * 1.3) + 3 * t) * 1.0)))
     val df = (long ++ wavy).toDF("g", "t", "v")
-    val (_, _, famBoard, famFcs) = graft.seq.Champion.pickBlendScoreFcs(
-      df, Seq("g"), Seq(col("t")), "v", h = 3, m = 4)
-    val picked = OrderSearch.championForecastExt(famBoard, famFcs, df,
-      Seq("g"), Seq(col("t")), "v", h = 3, m = 4)
+    val (board, fcs) = extended(df, h = 3, m = 4)
+    val picked = OrderSearch.pickFrom(board, fcs, Seq("g"))
     val rows = picked.select("g", "champion", "step")
       .as[(String, String, Long)].collect()
     assert(rows.count(_._1 == "L") == 3, rows.toSeq)
@@ -225,12 +239,9 @@ class OrderSearchSpec extends SparkSpec {
     assert(rows.map(_._2).toSet.subsetOf(members), rows.map(_._2).toSet)
     // the extended blend mixes EVERY identified member: h rows per
     // series, n_members = that series' scoreboard row count
-    val board = OrderSearch.extendedScoreboardFrom(famBoard, df,
-      Seq("g"), Seq(col("t")), "v", m = 4)
     val boardN = board.groupBy(col("g")).count()
       .as[(String, Long)].collect().toMap
-    val blend = OrderSearch.blendForecastExt(famBoard, famFcs, df,
-      Seq("g"), Seq(col("t")), "v", h = 3, m = 4)
+    val blend = Champion.blendFrom(board, fcs, Seq("g"))
       .select("g", "step", "n_members").as[(String, Long, Long)].collect()
     assert(blend.count(_._1 == "L") == 3 && blend.count(_._1 == "W") == 3)
     blend.foreach { case (g, _, nm) => assert(nm == boardN(g), s"$g: $nm") }
@@ -240,7 +251,8 @@ class OrderSearchSpec extends SparkSpec {
     // linear series: diffs constant 3 → every triple ties at SSE 0 on
     // the centered-zero diffs; forecast continues the line
     val df = series((1 to 6).map(t => ("a", t, java.lang.Double.valueOf(3.0 * t))): _*)
-    val out = SequentialKernels.arima211Forecast(df, Seq("k"), Seq(col("t")), "v", h = 3)
+    val (_, a21base, _, lastLevel) = OrderSearch.extFitBases(df, Seq("k"), Seq(col("t")), "v")
+    val out = SequentialKernels.arima211ForecastFrom(a21base, lastLevel, Seq("k"), h = 3)
       .orderBy("step").select("step", "arima_forecast")
       .as[(Long, Double)].collect().toSeq
     assert(out == Seq((1L, 21.0), (2L, 24.0), (3L, 27.0)))

@@ -187,15 +187,4 @@ class R14OpsSpec extends SparkSpec {
       s"off-peak = $out")
     assert(Seq(-3L, -2L, -1L, 0L, 1L, 2L, 3L).forall(l => out((2, l)) == 0.0))
   }
-
-  test("arma21Forecast one-call convenience == fit + forecastFrom") {
-    val df = (1 to 40).map(t => (1, t, 10.0 + 3.0 * math.sin(t / 3.0)))
-      .toDF("k", "t", "v")
-    val direct = graft.seq.SequentialKernels.arma21Forecast(
-      df, Seq("k"), Seq(col("t")), "v", h = 3)
-    val staged = graft.seq.SequentialKernels.arma21ForecastFrom(
-      graft.seq.SequentialKernels.fitArma21Full(df, Seq("k"), Seq(col("t")), "v"),
-      Seq("k"), h = 3)
-    assert(direct.exceptAll(staged).isEmpty && staged.exceptAll(direct).isEmpty)
-  }
 }
