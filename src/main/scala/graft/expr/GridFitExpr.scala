@@ -10,51 +10,49 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Per-series conditional-least-squares GRID FIT over a packed cell
-  * array — the compiled kernel of the array-form MA/ARMA fits
-  * ([[graft.seq.SequentialKernels.ArrayFitsConf]]).
+/** Per-series conditional-least-squares GRID FIT — the one kernel of
+  * the MA/ARMA fits in [[graft.seq.SequentialKernels]].
   *
-  * Input: the series' (ord…, value)-sorted cell struct array (the value
-  * field at `vIdx`) and the exact micro-int series mean. One `eval` per
-  * SERIES row runs every grid member's innovation recursion over the
-  * cells in plain compiled JVM arithmetic — the exact update loops of
-  * the streaming-fold twins in `SequentialKernels` (same flat primitive
-  * state, same operand association) — and returns the
-  * (sse, params…)-ascending winner as a struct.
+  * The kernel is a streaming accumulator per kind ([[GridFitExpr.Acc]]):
+  * `add(xc)` advances every grid member's innovation recursion by one
+  * centred value in flat primitive state, and `winner` returns the
+  * (sse, params…)-ascending winner as a struct. Two shapes feed it
+  * cells ([[graft.seq.SequentialKernels.ArrayFitsConf]]): this
+  * expression, one `eval` per SERIES row over the series' packed
+  * (ord…, value)-sorted cell array (the value field at `vIdx`) and its
+  * exact micro-int mean; and the streaming fold, which holds one
+  * accumulator per series over the sorted rows. Both run the same
+  * update loops, so both give the same bits.
   *
   * Why an expression and not higher-order functions: the interpreted
   * HOF form of the same fold was measured 5–10× SLOWER than the
-  * streaming fold on the wide grids (ArProbe r18: ARMA(2,1) 1.2 → 6.5 s,
+  * compiled loop on the wide grids (ArProbe r18: ARMA(2,1) 1.2 → 6.5 s,
   * ARMA(2,2) 2.2 → 19.5 s at sf0.1 supplier grain — ~2 µs per
-  * member·cell of lambda interpretation vs ~30 ns compiled). This
-  * kernel keeps the array form's two-exchange plan AND the fold's
-  * per-cell cost; the per-row CodegenFallback boundary is irrelevant at
-  * series grain.
+  * member·cell of lambda interpretation vs ~30 ns compiled). The
+  * per-row CodegenFallback boundary is irrelevant at series grain.
   *
-  * Skip rule: a cell contributes only when `value − μ` is non-NULL —
-  * exactly the fold twins' `case (None, st) => st` over the centered
-  * column (a NULL value, or the all-values-degenerate μ = NULL case,
-  * leaves the state untouched). A NaN value with a non-NULL μ flows
-  * through as a NaN innovation in both forms.
+  * Skip rule: a cell contributes only when `value − μ` is non-NULL (a
+  * NULL value, or the all-values-degenerate μ = NULL case, leaves the
+  * state untouched). A NaN value with a non-NULL μ flows through as a
+  * NaN innovation.
   *
   * Winner pick: lexicographic (sse, params…) minimum via
   * `java.lang.Double.compare` — NaN sorts largest and equals itself,
-  * matching the fold form's window `ORDER BY sse, params…` under
-  * Spark's NaN semantics. (`Double.compare` orders −0.0 < 0.0 where
-  * Spark compares them equal; SSE is a sum of squares, and a −0.0 grid
-  * param is normalized to 0.0 in `memberArr`, so the pick and the
-  * reported winner never see −0.0.)
+  * as a window `ORDER BY sse, params…` orders under Spark's NaN
+  * semantics. (`Double.compare` orders −0.0 < 0.0 where Spark compares
+  * them equal; SSE is a sum of squares, and a −0.0 grid param is
+  * normalized to 0.0 in [[GridFitExpr.memberArray]], so the pick and
+  * the reported winner never see −0.0.)
   *
-  * SequentialKernelsSpec pins every kind against its fold twin
-  * bit-for-bit on an adversarial frame.
+  * SequentialKernelsSpec pins every kind, in both shapes, against the
+  * streaming-fold reference kept in the test tree, bit for bit on an
+  * adversarial frame.
   */
 case class GridFitExpr(cells: Expression, mu: Expression, vIdx: Int,
                        kind: String, members: Seq[Seq[Double]])
   extends Expression with CodegenFallback {
 
-  require(members.nonEmpty, "grid must be non-empty")
-  require(members.forall(_.length == GridFitExpr.outType(kind).fieldIndex("sse")),
-    s"every $kind grid member needs one value per parameter")
+  GridFitExpr.checkMembers(kind, members)
 
   override def prettyName: String = s"graft_grid_fit_$kind"
   override def children: Seq[Expression] = Seq(cells, mu)
@@ -70,9 +68,8 @@ case class GridFitExpr(cells: Expression, mu: Expression, vIdx: Int,
         s"(${cells.dataType.catalogString}, ${mu.dataType.catalogString})")
   }
 
-  @transient private lazy val memberArr: Array[Array[Double]] =
-    members.map(_.map(v => if (v == 0.0) 0.0 else v).toArray).toArray
-  @transient private lazy val kindId: Int = GridFitExpr.kindId(kind)
+  @transient private lazy val fresh: () => GridFitExpr.Acc =
+    GridFitExpr.accumulatorOf(kind, members)
   @transient private lazy val cellWidth: Int =
     cells.dataType.asInstanceOf[ArrayType]
       .elementType.asInstanceOf[StructType].length
@@ -82,7 +79,7 @@ case class GridFitExpr(cells: Expression, mu: Expression, vIdx: Int,
     val muV = mu.eval(input)
     GridFitExpr.compute(
       if (cd == null) null else cd.asInstanceOf[ArrayData],
-      muV.asInstanceOf[java.lang.Double], vIdx, cellWidth, kindId, memberArr)
+      muV.asInstanceOf[java.lang.Double], vIdx, cellWidth, fresh())
   }
 
   override protected def withNewChildrenInternal(
@@ -125,182 +122,211 @@ object GridFitExpr {
       d("xcn", nullable = true), d("xcp")))
   }
 
+  private def checkMembers(kind: String, members: Seq[Seq[Double]]): Unit = {
+    require(members.nonEmpty, "grid must be non-empty")
+    require(members.forall(_.length == outType(kind).fieldIndex("sse")),
+      s"every $kind grid member needs one value per parameter")
+  }
+
   def column(cells: Column, mu: Column, vIdx: Int, kind: String,
              members: Seq[Seq[Double]]): Column =
     GraftBridge.column(GridFitExpr(GraftBridge.expression(cells),
       GraftBridge.expression(mu), vIdx, kind, members))
 
-  /** Lexicographic (sse, params…) argmin over the member states —
-    * strict improvement keeps the earlier member, and distinct members
-    * cannot tie on the full tuple, so scan order is free. */
-  private def pick(memberArr: Array[Array[Double]], sses: Array[Double]): Int = {
-    var best = 0
-    var i = 1
-    while (i < memberArr.length) {
-      var c = java.lang.Double.compare(sses(i), sses(best))
-      var f = 0
-      while (c == 0 && f < memberArr(i).length) {
-        c = java.lang.Double.compare(memberArr(i)(f), memberArr(best)(f))
-        f += 1
-      }
-      if (c < 0) best = i
-      i += 1
+  /** The grid as flat arrays, a −0.0 param normalized to 0.0. */
+  private def memberArray(members: Seq[Seq[Double]]): Array[Array[Double]] =
+    members.map(_.map(v => if (v == 0.0) 0.0 else v).toArray).toArray
+
+  /** A factory of fresh accumulators of grid `kind` over `members`,
+    * serializable into a task closure. */
+  def accumulatorOf(kind: String, members: Seq[Seq[Double]]): () => Acc = {
+    checkMembers(kind, members)
+    val id = kindId(kind)
+    val m = memberArray(members)
+    () => id match {
+      case Ma1 => new Ma1Acc(m)
+      case Ma3 => new Ma3Acc(m)
+      case Arma11 => new Arma11Acc(m)
+      case Arma21 => new Arma21Acc(m)
+      case Arma22 => new Arma22Acc(m)
     }
-    best
   }
 
-  /** One compiled pass: the fold twins' update loops over the cells,
-    * then the winner pick. `mu == null` (degenerate all-skip series)
-    * and NULL cell values leave the state at its zeros — the fold's
-    * absent-state `finish`. */
-  def compute(cells: ArrayData, mu: java.lang.Double, vIdx: Int,
-              cellWidth: Int, kindId: Int,
-              memberArr: Array[Array[Double]]): InternalRow = {
-    val nM = memberArr.length
-    val n = if (cells == null || mu == null) 0 else cells.numElements()
-    val muV = if (mu == null) 0.0 else mu.doubleValue()
-    kindId match {
-      case Ma1 =>
-        val e = new Array[Double](nM)
-        val sse = new Array[Double](nM)
-        var r = 0
-        while (r < n) {
-          val row = cells.getStruct(r, cellWidth)
-          if (!row.isNullAt(vIdx)) {
-            val xc = row.getDouble(vIdx) - muV
-            var i = 0
-            while (i < nM) {
-              val ne = xc - memberArr(i)(0) * e(i)
-              e(i) = ne
-              sse(i) += ne * ne
-              i += 1
-            }
-          }
-          r += 1
+  /** Feeds the packed cells to `acc`: each non-NULL value, centred on
+    * `mu`, in array order. `mu == null` (degenerate all-skip series) and
+    * NULL cell values leave the state at its zeros. */
+  private def compute(cells: ArrayData, mu: java.lang.Double, vIdx: Int,
+                      cellWidth: Int, acc: Acc): InternalRow = {
+    if (cells != null && mu != null) {
+      val muV = mu.doubleValue()
+      val n = cells.numElements()
+      var r = 0
+      while (r < n) {
+        val row = cells.getStruct(r, cellWidth)
+        if (!row.isNullAt(vIdx)) acc.add(row.getDouble(vIdx) - muV)
+        r += 1
+      }
+    }
+    acc.winner
+  }
+
+  /** Streaming CLS state of one series over every grid member: `add`
+    * each non-NULL centred value in series order (it allocates
+    * nothing), then read the `winner`. Every innovation starts at 0 and
+    * every SSE at 0. */
+  sealed abstract class Acc(protected val m: Array[Array[Double]]) {
+    protected val nM: Int = m.length
+    protected val sse = new Array[Double](nM)
+    def add(xc: Double): Unit
+    def winner: InternalRow
+    /** Lexicographic (sse, params…) argmin over the members — strict
+      * improvement keeps the earlier member, and distinct members
+      * cannot tie on the full tuple, so scan order is free. */
+    protected def best: Int = {
+      var b = 0
+      var i = 1
+      while (i < nM) {
+        var c = java.lang.Double.compare(sse(i), sse(b))
+        var f = 0
+        while (c == 0 && f < m(i).length) {
+          c = java.lang.Double.compare(m(i)(f), m(b)(f))
+          f += 1
         }
-        val b = pick(memberArr, sse)
-        new GenericInternalRow(Array[Any](memberArr(b)(0), sse(b), e(b)))
-      case Ma3 =>
-        val e = new Array[Double](nM)
-        val ep = new Array[Double](nM)
-        val epp = new Array[Double](nM)
-        val sse = new Array[Double](nM)
-        var r = 0
-        while (r < n) {
-          val row = cells.getStruct(r, cellWidth)
-          if (!row.isNullAt(vIdx)) {
-            val xc = row.getDouble(vIdx) - muV
-            var i = 0
-            while (i < nM) {
-              val m = memberArr(i)
-              val ne = xc - m(0) * e(i) - m(1) * ep(i) - m(2) * epp(i)
-              epp(i) = ep(i)
-              ep(i) = e(i)
-              e(i) = ne
-              sse(i) += ne * ne
-              i += 1
-            }
-          }
-          r += 1
+        if (c < 0) b = i
+        i += 1
+      }
+      b
+    }
+    protected def row(vs: Any*): InternalRow = new GenericInternalRow(vs.toArray)
+  }
+
+  /** MA(1): ε' = xc − θ·ε. */
+  private final class Ma1Acc(m0: Array[Array[Double]]) extends Acc(m0) {
+    private val e = new Array[Double](nM)
+    def add(xc: Double): Unit = {
+      val m = this.m; val e = this.e; val sse = this.sse
+      var i = 0
+      while (i < nM) {
+        val ne = xc - m(i)(0) * e(i)
+        e(i) = ne
+        sse(i) += ne * ne
+        i += 1
+      }
+    }
+    def winner: InternalRow = { val b = best; row(m(b)(0), sse(b), e(b)) }
+  }
+
+  /** MA(3): ε' = xc − θ₁·ε − θ₂·ε₋₁ − θ₃·ε₋₂, the ε memory shifting. */
+  private final class Ma3Acc(m0: Array[Array[Double]]) extends Acc(m0) {
+    private val e = new Array[Double](nM)
+    private val ep = new Array[Double](nM)
+    private val epp = new Array[Double](nM)
+    def add(xc: Double): Unit = {
+      val e = this.e; val ep = this.ep; val epp = this.epp; val sse = this.sse
+      var i = 0
+      while (i < nM) {
+        val mi = m(i)
+        val ne = xc - mi(0) * e(i) - mi(1) * ep(i) - mi(2) * epp(i)
+        epp(i) = ep(i)
+        ep(i) = e(i)
+        e(i) = ne
+        sse(i) += ne * ne
+        i += 1
+      }
+    }
+    def winner: InternalRow = {
+      val b = best
+      row(m(b)(0), m(b)(1), m(b)(2), sse(b), e(b), ep(b), epp(b))
+    }
+  }
+
+  /** ARMA(1,1): the first value only seeds xcₚ (ε₁ = 0, no SSE term);
+    * each later one applies ε' = xc − φ·xcₚ − θ·ε. xc_last is NULL
+    * until a value arrives. */
+  private final class Arma11Acc(m0: Array[Array[Double]]) extends Acc(m0) {
+    private val e = new Array[Double](nM)
+    private var xp = 0.0
+    private var seen = false
+    def add(xc: Double): Unit = {
+      if (!seen) seen = true
+      else {
+        val m = this.m; val e = this.e; val sse = this.sse; val p = xp
+        var i = 0
+        while (i < nM) {
+          val mi = m(i)
+          val ne = xc - mi(0) * p - mi(1) * e(i)
+          e(i) = ne
+          sse(i) += ne * ne
+          i += 1
         }
-        val b = pick(memberArr, sse)
-        new GenericInternalRow(Array[Any](memberArr(b)(0), memberArr(b)(1),
-          memberArr(b)(2), sse(b), e(b), ep(b), epp(b)))
-      case Arma11 =>
-        val e = new Array[Double](nM)
-        val sse = new Array[Double](nM)
-        var xp = 0.0
-        var seen = false
-        var r = 0
-        while (r < n) {
-          val row = cells.getStruct(r, cellWidth)
-          if (!row.isNullAt(vIdx)) {
-            val xc = row.getDouble(vIdx) - muV
-            if (!seen) { seen = true } else {
-              var i = 0
-              while (i < nM) {
-                val m = memberArr(i)
-                val ne = xc - m(0) * xp - m(1) * e(i)
-                e(i) = ne
-                sse(i) += ne * ne
-                i += 1
-              }
-            }
-            xp = xc
-          }
-          r += 1
-        }
-        val b = pick(memberArr, sse)
-        new GenericInternalRow(Array[Any](memberArr(b)(0), memberArr(b)(1),
-          sse(b), e(b), if (seen) xp else null))
-      case Arma21 =>
-        val e = new Array[Double](nM)
-        val sse = new Array[Double](nM)
-        var xp1 = 0.0
-        var xp2 = 0.0
-        var nObs = 0.0
-        var nSse = 0.0
-        var r = 0
-        while (r < n) {
-          val row = cells.getStruct(r, cellWidth)
-          if (!row.isNullAt(vIdx)) {
-            val xc = row.getDouble(vIdx) - muV
-            if (nObs == 0.0) { xp1 = xc; nObs = 1 }
-            else if (nObs == 1.0) { xp2 = xp1; xp1 = xc; nObs = 2 }
-            else {
-              val p1 = xp1; val p2 = xp2
-              var i = 0
-              while (i < nM) {
-                val m = memberArr(i)
-                val ne = xc - m(0) * p1 - m(1) * p2 - m(2) * e(i)
-                e(i) = ne
-                sse(i) += ne * ne
-                i += 1
-              }
-              xp2 = xp1; xp1 = xc; nObs += 1; nSse += 1
-            }
-          }
-          r += 1
-        }
-        val b = pick(memberArr, sse)
-        new GenericInternalRow(Array[Any](memberArr(b)(0), memberArr(b)(1),
-          memberArr(b)(2), sse(b), e(b), nSse,
-          if (nObs > 0.0) xp1 else null, xp2))
-      case Arma22 =>
-        val e = new Array[Double](nM)
-        val ep = new Array[Double](nM)
-        val sse = new Array[Double](nM)
-        var xp1 = 0.0
-        var xp2 = 0.0
-        var nObs = 0.0
-        var nSse = 0.0
-        var r = 0
-        while (r < n) {
-          val row = cells.getStruct(r, cellWidth)
-          if (!row.isNullAt(vIdx)) {
-            val xc = row.getDouble(vIdx) - muV
-            if (nObs == 0.0) { xp1 = xc; nObs = 1 }
-            else if (nObs == 1.0) { xp2 = xp1; xp1 = xc; nObs = 2 }
-            else {
-              val p1 = xp1; val p2 = xp2
-              var i = 0
-              while (i < nM) {
-                val m = memberArr(i)
-                val ne = xc - m(0) * p1 - m(1) * p2 - m(2) * e(i) - m(3) * ep(i)
-                ep(i) = e(i)
-                e(i) = ne
-                sse(i) += ne * ne
-                i += 1
-              }
-              xp2 = xp1; xp1 = xc; nObs += 1; nSse += 1
-            }
-          }
-          r += 1
-        }
-        val b = pick(memberArr, sse)
-        new GenericInternalRow(Array[Any](memberArr(b)(0), memberArr(b)(1),
-          memberArr(b)(2), memberArr(b)(3), sse(b), e(b), ep(b), nSse,
-          if (nObs > 0.0) xp1 else null, xp2))
+      }
+      xp = xc
+    }
+    def winner: InternalRow = {
+      val b = best
+      row(m(b)(0), m(b)(1), sse(b), e(b), if (seen) xp else null)
+    }
+  }
+
+  /** State shared by the p = 2 kinds: the first TWO values only shift
+    * the xc memory (the two-row conditioning); `nSse` counts the SSE
+    * terms. xc₁ reports NULL until a value arrives, xc₂ starts 0.0. */
+  private sealed abstract class Ar2Acc(m0: Array[Array[Double]]) extends Acc(m0) {
+    protected var xp1 = 0.0
+    protected var xp2 = 0.0
+    protected var nObs = 0.0
+    protected var nSse = 0.0
+    protected def update(xc: Double, p1: Double, p2: Double): Unit
+    def add(xc: Double): Unit = {
+      if (nObs == 0.0) { xp1 = xc; nObs = 1 }
+      else if (nObs == 1.0) { xp2 = xp1; xp1 = xc; nObs = 2 }
+      else {
+        update(xc, xp1, xp2)
+        xp2 = xp1; xp1 = xc; nObs += 1; nSse += 1
+      }
+    }
+    protected def xcn: Any = if (nObs > 0.0) xp1 else null
+  }
+
+  /** ARMA(2,1): ε' = xc − φ₁·xc₁ − φ₂·xc₂ − θ·ε. */
+  private final class Arma21Acc(m0: Array[Array[Double]]) extends Ar2Acc(m0) {
+    private val e = new Array[Double](nM)
+    protected def update(xc: Double, p1: Double, p2: Double): Unit = {
+      val m = this.m; val e = this.e; val sse = this.sse
+      var i = 0
+      while (i < nM) {
+        val mi = m(i)
+        val ne = xc - mi(0) * p1 - mi(1) * p2 - mi(2) * e(i)
+        e(i) = ne
+        sse(i) += ne * ne
+        i += 1
+      }
+    }
+    def winner: InternalRow = {
+      val b = best
+      row(m(b)(0), m(b)(1), m(b)(2), sse(b), e(b), nSse, xcn, xp2)
+    }
+  }
+
+  /** ARMA(2,2): ε' = xc − φ₁·xc₁ − φ₂·xc₂ − θ₁·ε − θ₂·ε₋₁. */
+  private final class Arma22Acc(m0: Array[Array[Double]]) extends Ar2Acc(m0) {
+    private val e = new Array[Double](nM)
+    private val ep = new Array[Double](nM)
+    protected def update(xc: Double, p1: Double, p2: Double): Unit = {
+      val m = this.m; val e = this.e; val ep = this.ep; val sse = this.sse
+      var i = 0
+      while (i < nM) {
+        val mi = m(i)
+        val ne = xc - mi(0) * p1 - mi(1) * p2 - mi(2) * e(i) - mi(3) * ep(i)
+        ep(i) = e(i)
+        e(i) = ne
+        sse(i) += ne * ne
+        i += 1
+      }
+    }
+    def winner: InternalRow = {
+      val b = best
+      row(m(b)(0), m(b)(1), m(b)(2), m(b)(3), sse(b), e(b), ep(b), nSse, xcn, xp2)
     }
   }
 }

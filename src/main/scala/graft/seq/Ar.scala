@@ -203,9 +203,7 @@ object Ar {
     val base = lastVals.join(coefs(indexed, keyCols), keyCols)
     val steps = forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"),
       col("__xn"), col("__xn1"), h)
-    base.select(key :+ posexplode(array(steps: _*)).as(Seq("__p", "ar_forecast")): _*)
-      .withColumn("step", (col("__p") + 1).cast("long"))
-      .select(key ++ Seq(col("step"), col("ar_forecast")): _*)
+    SequentialKernels.stepRows(base, keyCols, steps, "ar_forecast")
   }
 
   /** h-step forecasts WITH prediction intervals — the engine-side
@@ -325,22 +323,9 @@ object Ar {
   def forecastIntegrated(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
                          valueCol: String, h: Int): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
-    val key = keyCols.map(col)
-    val w = Window.partitionBy(key: _*).orderBy(ord: _*)
-    val wd = Window.partitionBy(key: _*).orderBy(ord.map(_.desc): _*)
-    val dy = df.withColumn("__yraw", col(valueCol).cast("double"))
-      .withColumn("__dy", col("__yraw") - lag(col("__yraw"), 1).over(w))
-    val lastLevel = dy.withColumn("__rd", row_number().over(wd))
-      .filter(col("__rd") === 1)
-      .select(key :+ col("__yraw").as("__yn"): _*)
-    val diffed = dy.filter(col("__dy").isNotNull)
-      .drop("__yraw")
-    val wcum = Window.partitionBy(key: _*).orderBy(col("step"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    forecast(diffed, keyCols, ord, "__dy", h)
-      .join(lastLevel, keyCols)
-      .withColumn("ari_forecast",
-        r(col("__yn") + sum(col("ar_forecast")).over(wcum)))
-      .select(key ++ Seq(col("step"), col("ari_forecast")): _*)
+    val (diffed, lastLevel) = SequentialKernels.firstDiffs(df, keyCols, ord, valueCol)
+    SequentialKernels.integrated(forecast(diffed, keyCols, ord, "__dy", h), lastLevel,
+      keyCols, "ar_forecast", "ari_forecast")
+      .select((keyCols ++ Seq("step", "ari_forecast")).map(col): _*)
   }
 }

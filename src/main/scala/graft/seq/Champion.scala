@@ -99,8 +99,9 @@ import graft.functions.Funcs.{microMeanOver, r}
   * table feeds every member every series. Scales in the series count,
   * never materializes a per-group vector beyond the grid fits' packed
   * cells. Under `arrayFits=false` (the scale fallback) the two grid
-  * members keep their streaming-fold forms, joined on the series key to
-  * the per-series aggregate.
+  * members stream their series through the same kernel
+  * ([[SequentialKernels.fitMa1Full]], [[SequentialKernels.fitArma11Full]])
+  * and join on the series key to the per-series aggregate.
   *
   * `valueCol` must be non-null. ChampionSpec pins every consumer row
   * for row against the replaced two-pipeline form.
@@ -263,12 +264,6 @@ object Champion {
     // (0 + d̂_1, then + d̂_s), the order a running sum adds in
     val ariCum = Ar.forecastSteps(col("ari_c"), col("ari_phi1"), col("ari_phi2"),
       col("__dn"), col("__dn1"), h).scanLeft(lit(0.0))(_ + _).tail
-    val armaSteps = (1 to h).foldLeft(Vector.empty[Column]) { (acc, s) =>
-      acc :+ (
-        if (s == 1) r(col("arma_mu") + col("arma_phi") * col("arma_xc_last") +
-          col("arma_theta") * col("arma_eps_last"))
-        else r(col("arma_mu") + col("arma_phi") * (acc(s - 2) - col("arma_mu"))))
-    }
     val members = Seq(
       member("mean_naive", 0, 1, lit(true), col("mean_sse"), n.cast("double"),
         steps(Seq.fill(h)(r(mu)))),
@@ -282,13 +277,12 @@ object Champion {
         when(ariNeff >= 1, steps(ariCum.map(c => r(col("__xn") + c))))),
       // ma1: forecast μ + θ·ε_n then flat
       member("ma1", 4, 2, n >= 2, col("ma1_sse"), n.cast("double"),
-        steps((1 to h).map { s =>
-          if (s == 1) r(col("ma1_mu") + col("ma1_theta") * col("ma1_eps_last"))
-          else r(col("ma1_mu"))
-        })),
+        steps(SequentialKernels.armaSteps(col("ma1_mu"), Nil, Seq(col("ma1_theta")), Nil,
+          Seq(col("ma1_eps_last")), h))),
       // arma11: the (φ,θ) fit's SSE is conditioned on t ≥ 2
       member("arma11", 5, 3, n >= 3, col("arma_sse"), (n - 1).cast("double"),
-        steps(armaSteps)),
+        steps(SequentialKernels.armaSteps(col("arma_mu"), Seq(col("arma_phi")),
+          Seq(col("arma_theta")), Seq(col("arma_xc_last")), Seq(col("arma_eps_last")), h))),
       // theta: the trend extends from the last index, the last SES
       // level carries flat
       member("theta", 6, 2, lit(true), col("th_sse"), col("th_neff"),

@@ -73,7 +73,7 @@ object OrderSearch {
     * and dy_last (= Δy_n) for the double integration. */
   def arima021Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                    valueCol: String,
-                   grid: Seq[Double] = Seq(-0.8, -0.4, 0.0, 0.4, 0.8)): DataFrame = {
+                   grid: Seq[Double] = SequentialKernels.Ma1Grid): DataFrame = {
     val keys = keyCols.map(col)
     val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
     val wd = Window.partitionBy(keys: _*).orderBy(ordCols.map(_.desc): _*)
@@ -103,16 +103,12 @@ object OrderSearch {
   def arima021ForecastFrom(base: DataFrame, keyCols: Seq[String], h: Int): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
     val keys = keyCols.map(col)
-    val steps = (1 to h).map { s =>
-      if (s == 1) r(col("d2_mu") + col("d2_theta") * col("d2_eps_last"))
-      else r(col("d2_mu"))
-    }
+    val steps = SequentialKernels.armaSteps(col("d2_mu"), Nil, Seq(col("d2_theta")), Nil,
+      Seq(col("d2_eps_last")), h)
     val wcum = Window.partitionBy(keys: _*).orderBy(col("step"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    base.select(keys ++ Seq(col("d2_theta"), col("d2_sse"), col("y_last"),
-      col("dy_last")) :+
-      posexplode(array(steps: _*)).as(Seq("__p", "__f2")): _*)
-      .withColumn("step", (col("__p") + 1).cast("long"))
+    SequentialKernels.stepRows(base,
+      keyCols ++ Seq("d2_theta", "d2_sse", "y_last", "dy_last"), steps, "__f2")
       .withColumn("__dhat", r(col("dy_last") + sum(col("__f2")).over(wcum)))
       .withColumn("arima_forecast", r(col("y_last") + sum(col("__dhat")).over(wcum)))
       .select(keys ++ Seq(col("d2_theta"), col("d2_sse"), col("step"),
@@ -128,7 +124,7 @@ object OrderSearch {
     * sma_eps_last. */
   def sarima011Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                     valueCol: String, m: Int,
-                    grid: Seq[Double] = Seq(-0.8, -0.4, 0.0, 0.4, 0.8)): DataFrame = {
+                    grid: Seq[Double] = SequentialKernels.Ma1Grid): DataFrame = {
     val keys = keyCols.map(col)
     val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
     val sd = df.withColumn("__sd", col(valueCol).cast("double")
@@ -157,8 +153,8 @@ object OrderSearch {
     * sarma_xc_last (the forecast state). */
   def sarma11Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                   valueCol: String, m: Int,
-                  phiGrid: Seq[Double] = Seq(-0.5, 0.0, 0.5, 0.9),
-                  thetaGrid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame = {
+                  phiGrid: Seq[Double] = SequentialKernels.PhiGrid,
+                  thetaGrid: Seq[Double] = SequentialKernels.ThetaGrid): DataFrame = {
     val keys = keyCols.map(col)
     val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
     val sd = df.withColumn("__sd", col(valueCol).cast("double")
@@ -190,17 +186,10 @@ object OrderSearch {
                           keyCols: Seq[String], h: Int): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
     val keys = keyCols.map(col)
-    val steps = (1 to h).foldLeft(Vector.empty[Column]) { (acc, s) =>
-      val f =
-        if (s == 1) r(col("sarma_mu") + col("sarma_phi") * col("sarma_xc_last") +
-          col("sarma_theta") * col("sarma_eps_last"))
-        else r(col("sarma_mu") + col("sarma_phi") * (acc(s - 2) - col("sarma_mu")))
-      acc :+ f
-    }
-    base.select(keys ++ Seq(col("sarma_phi"), col("sarma_theta"),
-      col("sarma_sse")) :+
-      posexplode(array(steps: _*)).as(Seq("__p", "__f")): _*)
-      .withColumn("step", (col("__p") + 1).cast("long"))
+    val steps = SequentialKernels.armaSteps(col("sarma_mu"), Seq(col("sarma_phi")),
+      Seq(col("sarma_theta")), Seq(col("sarma_xc_last")), Seq(col("sarma_eps_last")), h)
+    SequentialKernels.stepRows(base, keyCols ++ Seq("sarma_phi", "sarma_theta", "sarma_sse"),
+      steps, "__f")
       .join(seasonBase, keyCols :+ "step")
       .withColumn("sarma_forecast", r(col("__base") + col("__f")))
       .select(keys ++ Seq(col("sarma_phi"), col("sarma_theta"),
@@ -231,13 +220,9 @@ object OrderSearch {
                             keyCols: Seq[String], h: Int): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
     val keys = keyCols.map(col)
-    val steps = (1 to h).map { s =>
-      if (s == 1) r(col("sma_mu") + col("sma_theta") * col("sma_eps_last"))
-      else r(col("sma_mu"))
-    }
-    base.select(keys ++ Seq(col("sma_theta"), col("sma_sse")) :+
-      posexplode(array(steps: _*)).as(Seq("__p", "__f")): _*)
-      .withColumn("step", (col("__p") + 1).cast("long"))
+    val steps = SequentialKernels.armaSteps(col("sma_mu"), Nil, Seq(col("sma_theta")), Nil,
+      Seq(col("sma_eps_last")), h)
+    SequentialKernels.stepRows(base, keyCols ++ Seq("sma_theta", "sma_sse"), steps, "__f")
       .join(seasonBase, keyCols :+ "step")
       .withColumn("sma_forecast", r(col("__base") + col("__f")))
       .select(keys ++ Seq(col("sma_theta"), col("sma_sse"), col("step"),
@@ -302,17 +287,9 @@ object OrderSearch {
     * championShared memo discipline). */
   def extFitBases(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                   valueCol: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val keys = keyCols.map(col)
-    val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val wd = Window.partitionBy(keys: _*).orderBy(ordCols.map(_.desc): _*)
     val d2base = arima021Full(df, keyCols, ordCols, valueCol).localCheckpoint(true)
-    val dy0 = df.withColumn("__yraw", col(valueCol).cast("double"))
-      .withColumn("__dy", col("__yraw") - lag(col("__yraw"), 1).over(w))
-    val lastLevel = dy0.withColumn("__rdL", row_number().over(wd))
-      .filter(col("__rdL") === 1)
-      .select(keys :+ col("__yraw").as("__yn"): _*)
-      .localCheckpoint(true)
-    val diffed = dy0.filter(col("__dy").isNotNull).drop("__yraw")
+    val (diffed, level) = SequentialKernels.firstDiffs(df, keyCols, ordCols, valueCol)
+    val lastLevel = level.localCheckpoint(true)
     val a21base = SequentialKernels.fitArma21Full(diffed, keyCols, ordCols, "__dy")
       .localCheckpoint(true)
     val a22base = SequentialKernels.fitArma22Full(diffed, keyCols, ordCols, "__dy")

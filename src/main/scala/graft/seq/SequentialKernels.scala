@@ -16,14 +16,14 @@ import org.apache.spark.sql.types._
   * ([[graft.expr.SeqKernelExprs]], [[graft.expr.EwmaExpr]]): Catalyst
   * prunes them when a consumer drops their columns, and they share the
   * series exchange and sort with neighboring window features. The
-  * other recursions (Holt-Winters, CUSUM, the MA(1) filter and the
-  * grid fits' `arrayFits=false` fallback) run [[keyedFold]] or
-  * [[keyedFoldLast]]: ONE hash shuffle on the series key, a sort
-  * within partitions by (key, order), then a streaming fold over the
-  * sorted iterator detecting key-run boundaries. Neither shape
-  * materializes a whole group in memory (unlike `groupByKey.
-  * flatMapGroups`), so a pathological million-row series streams
-  * instead of OOMing.
+  * MA/ARMA grid fits run one kernel per kind
+  * ([[graft.expr.GridFitExpr]]) fed in one of two ways
+  * ([[ArrayFitsConf]]). Holt-Winters, CUSUM and the MA(1) filter run
+  * [[keyedFold]]: ONE hash shuffle on the series key, a sort within
+  * partitions by (key, order), then a streaming fold over the sorted
+  * iterator detecting key-run boundaries. Neither shape materializes a
+  * whole group in memory (unlike `groupByKey.flatMapGroups`), so a
+  * pathological million-row series streams instead of OOMing.
   *
   * Null values leave the state unchanged and emit the current state
   * (pandas `ewm(ignore_na=False)`-adjacent; exact NaN weighting of
@@ -31,30 +31,27 @@ import org.apache.spark.sql.types._
   */
 object SequentialKernels {
 
-  /** Session conf selecting the grid FITS' execution shape (r18, the
-    * QuantileReg.SinglePassConf pattern): `true` (the unset default) =
-    * array form — each series' values pack into ONE sorted array inside
-    * the same hash aggregate that computes the exact micro-int mean,
-    * and every grid member's innovation recursion plus the
-    * (sse, params…)-ascending winner pick run inside a single
-    * projection. That replaces the fold form's FOUR-exchange pipeline
-    * (mean aggregate + mean join + fold repartition/sort + pick window
-    * — the MapPartitions fold reports unknown partitioning, so the
-    * window re-shuffles) with TWO exchanges and no boxed-Row pass, and
-    * is bit-identical: the recursions replicate the fold's IEEE chains
-    * operation for operation, and the comparator pick reproduces the
-    * window's (sse, params…) ascending order including Spark's
-    * NaN-largest comparison semantics (SequentialKernelsSpec pins the
-    * toggle). `false` = the streaming fold form — the recovery shape
-    * for a series whose packed value array cannot fit one task (the
-    * fits' series are calendar-bounded weekly grains, so that regime
-    * is not expected even at 100 TB).
+  /** Session conf selecting how the grid fits feed cells to their one
+    * kernel ([[graft.expr.GridFitExpr]]; r18, the
+    * QuantileReg.SinglePassConf pattern). `true` (the unset default):
+    * each series' values pack into ONE sorted array inside the hash
+    * aggregate that computes the exact micro-int mean, and the kernel
+    * runs as an expression in one projection, one call per series —
+    * two exchanges and no boxed-Row pass. `false`: the series streams
+    * through [[keyedFoldLast]] with one kernel accumulator per series
+    * as the fold state, so no series is ever packed whole — the
+    * recovery shape for a series whose value array cannot fit one
+    * task (the fits' series are calendar-bounded weekly grains, so
+    * that regime is not expected even at 100 TB). It costs the mean
+    * aggregate, the mean join and the fold's repartition and sort.
+    * Both shapes run the same update loops and the same winner pick,
+    * so they agree bit for bit (SequentialKernelsSpec pins both
+    * against the streaming-fold reference in the test tree).
     *
-    * Array-form constraints (all in-repo callers satisfy them; the
-    * fold form has the same documented requirements): `ordCols` must
-    * be plain ascending orderable columns, unique per series — the
-    * cells sort by struct order exactly as the fold sorts within
-    * partitions. */
+    * Constraints on both shapes (all in-repo callers satisfy them):
+    * `ordCols` must be plain ascending orderable columns, unique per
+    * series — the cells sort by struct order exactly as the fold sorts
+    * within partitions. */
   val ArrayFitsConf = "spark.graft.arrayFits"
 
   /** Read from the input frame's own session when the fit is built:
@@ -66,8 +63,8 @@ object SequentialKernels {
     * aggregate per series yields the exact micro-int mean (the
     * centeredOnMu convention — NULL values still count in the divisor)
     * and the (ordCols…)-sorted (ord…, value) struct array. Null-key
-    * rows drop first: the fold form's centeredOnMu INNER join can
-    * never match them, so the array form must not emit their group. */
+    * rows drop first: the streaming shape's centeredOnMu INNER join can
+    * never match them, so the packed shape must not emit their group. */
   private def packedSeries(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                            valueCol: String): DataFrame = {
     val keys = keyCols.map(col)
@@ -87,24 +84,48 @@ object SequentialKernels {
       ordCols.zipWithIndex.map { case (o, i) => o.as(s"__o$i") } :+
         col(valueCol).cast("double").as("__v"): _*))))
 
-  /** One-projection grid fit over the packed series: every member's
-    * recursion and the (sse, params…)-ascending winner pick run inside
-    * [[graft.expr.GridFitExpr]] — one compiled call per SERIES row.
-    * The `__best` struct materializes in its own projection
-    * (CollapseProject keeps multi-referenced non-cheap aliases), so
-    * the caller's field extraction never re-runs the fit. */
-  private def gridArrayFit(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                           valueCol: String, kind: String,
-                           members: Seq[Seq[Double]]): DataFrame =
-    packedSeries(df, keyCols, ordCols, valueCol)
-      .withColumn("__best", graft.expr.GridFitExpr.column(
-        col("__cells"), col("__mu"), vIdx = ordCols.size, kind, members))
-      .drop("__cells")
+  /** The grid fit of `kind` over `members` ([[graft.expr.GridFitExpr]])
+    * per series: keys…, `__mu` (the exact micro-int series mean) and
+    * the `__best` winner struct, with the cells fed as [[ArrayFitsConf]]
+    * selects. Packed: the kernel runs as an expression over each
+    * series' cell array; `__best` materializes in its own projection
+    * (CollapseProject keeps multi-referenced non-cheap aliases), so the
+    * caller's field extraction never re-runs the fit. Streaming: the
+    * mean-centred rows fold into one accumulator per series, whose
+    * winner fields are re-packed as `__best` — no explode, no pick
+    * window. */
+  private def gridFit(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
+                      valueCol: String, kind: String,
+                      members: Seq[Seq[Double]]): DataFrame =
+    if (arrayFits(df))
+      packedSeries(df, keyCols, ordCols, valueCol)
+        .withColumn("__best", graft.expr.GridFitExpr.column(
+          col("__cells"), col("__mu"), vIdx = ordCols.size, kind, members))
+        .drop("__cells")
+    else {
+      val fields = graft.expr.GridFitExpr.outType(kind).fieldNames.toSeq
+      val fresh = graft.expr.GridFitExpr.accumulatorOf(kind, members)
+      keyedFoldLast[graft.expr.GridFitExpr.Acc](centeredOnMu(df, keyCols, valueCol),
+        keyCols, ordCols, "__xc", fields.map("__b_" + _)) {
+        case (None, st) => st
+        case (Some(xc), st) =>
+          val s = if (st.isEmpty) Some(fresh()) else st
+          s.get.add(xc)
+          s
+      } { st =>
+        val w = st.getOrElse(fresh()).winner
+        fields.indices.map(i => if (w.isNullAt(i)) None else Some(w.getDouble(i)))
+      }.select(keyCols.map(col) ++ Seq(col("__mu"),
+        struct(fields.map(f => col(s"__b_$f").as(f)): _*).as("__best")): _*)
+    }
 
-  /** Default CLS grids of the MA(1) and ARMA(1,1) fits. */
-  private val Ma1Grid = Seq(-0.8, -0.4, 0.0, 0.4, 0.8)
-  private val Arma11PhiGrid = Seq(-0.5, 0.0, 0.5, 0.9)
-  private val Arma11ThetaGrid = Seq(-0.4, 0.0, 0.4)
+  /** Default CLS grids: θ of MA(1); φ (φ₁ of the p = 2 fits); θ of
+    * ARMA(1,1), every θ of MA(3) and θ₁ of the q ≥ 1 p = 2 fits; and φ₂
+    * and θ₂ of the p = 2 fits. */
+  private[seq] val Ma1Grid = Seq(-0.8, -0.4, 0.0, 0.4, 0.8)
+  private[seq] val PhiGrid = Seq(-0.5, 0.0, 0.5, 0.9)
+  private[seq] val ThetaGrid = Seq(-0.4, 0.0, 0.4)
+  private[seq] val Lag2Grid = Seq(-0.3, 0.0, 0.3)
 
   /** The default-grid MA(1) and ARMA(1,1) winners over a series' packed
     * [[cellsOf]] cells and exact mean, as the champion family fits them. */
@@ -113,7 +134,7 @@ object SequentialKernels {
 
   private[seq] def arma11Winner(cells: Column, mu: Column, nOrd: Int): Column =
     graft.expr.GridFitExpr.column(cells, mu, nOrd, "arma11", arma11Pairs(
-      Arma11PhiGrid, Arma11ThetaGrid))
+      PhiGrid, ThetaGrid))
 
   private def arma11Pairs(phiGrid: Seq[Double], thetaGrid: Seq[Double]): Seq[Seq[Double]] =
     for (p <- phiGrid; t <- thetaGrid) yield Seq(p, t)
@@ -132,6 +153,64 @@ object SequentialKernels {
       graft.functions.Funcs.r(b.getField("sse")).as("arma_sse"),
       mu.as("arma_mu"), b.getField("e").as("arma_eps_last"),
       b.getField("xcn").as("arma_xc_last"))
+
+  /** [[fitMa3Full]]'s columns from a winner struct `b` and the series
+    * mean `mu`. */
+  private def ma3Cols(b: Column, mu: Column): Seq[Column] =
+    Seq(b.getField("theta1").as("ma3_theta1"), b.getField("theta2").as("ma3_theta2"),
+      b.getField("theta3").as("ma3_theta3"),
+      graft.functions.Funcs.r(b.getField("sse")).as("ma3_sse"),
+      mu.as("ma3_mu"), b.getField("e").as("ma3_eps_last"),
+      b.getField("ep").as("ma3_eps_prev"), b.getField("epp").as("ma3_eps_prev2"))
+
+  /** [[fitArma21Full]]'s columns from a winner struct `b` and the series
+    * mean `mu`. */
+  private def arma21Cols(b: Column, mu: Column): Seq[Column] =
+    Seq(b.getField("phi1").as("arma2_phi1"), b.getField("phi2").as("arma2_phi2"),
+      b.getField("theta").as("arma2_theta"),
+      graft.functions.Funcs.r(b.getField("sse")).as("arma2_sse"),
+      b.getField("nsse").as("arma2_neff"), mu.as("arma2_mu"),
+      b.getField("e").as("arma2_eps_last"), b.getField("xcn").as("arma2_xc_last"),
+      b.getField("xcp").as("arma2_xc_prev"))
+
+  /** [[fitArma22Full]]'s columns from a winner struct `b` and the series
+    * mean `mu`. */
+  private def arma22Cols(b: Column, mu: Column): Seq[Column] =
+    Seq(b.getField("phi1").as("arma22_phi1"), b.getField("phi2").as("arma22_phi2"),
+      b.getField("theta1").as("arma22_theta1"), b.getField("theta2").as("arma22_theta2"),
+      graft.functions.Funcs.r(b.getField("sse")).as("arma22_sse"),
+      b.getField("nsse").as("arma22_neff"), mu.as("arma22_mu"),
+      b.getField("e").as("arma22_eps_last"), b.getField("ep").as("arma22_eps_prev"),
+      b.getField("xcn").as("arma22_xc_last"), b.getField("xcp").as("arma22_xc_prev"))
+
+  /** The h rounded steps of a mean-centred ARMA(p ≤ 2, q ≤ 3) forecast,
+    * future innovations zero:
+    *
+    *   f_s = r( μ + Σᵢ φᵢ·z_{s−i} + Σ_{j≥s} θⱼ·ε_{n+s−j} )
+    *
+    * with z_k = f_k − μ for k ≥ 1 and the stored centred level for
+    * k ≤ 0 (`xcs` = z_0, z_{−1}, …; `eps` = ε_n, ε_{n−1}, …). The AR
+    * terms add first, then the MA terms, each in index order, and each
+    * step is rounded before it feeds forward, so a recursive-CTE
+    * oracle replays the identical chain. */
+  private[seq] def armaSteps(mu: Column, phis: Seq[Column], thetas: Seq[Column],
+                             xcs: Seq[Column], eps: Seq[Column], h: Int): Seq[Column] =
+    (1 to h).foldLeft(Vector.empty[Column]) { (f, s) =>
+      val ar = phis.zipWithIndex.map { case (phi, i) =>
+        val k = s - i - 1
+        phi * (if (k >= 1) f(k - 1) - mu else xcs(-k))
+      }
+      val ma = thetas.zipWithIndex.collect { case (th, j) if j + 1 >= s => th * eps(j + 1 - s) }
+      f :+ graft.functions.Funcs.r((ar ++ ma).foldLeft(mu)(_ + _))
+    }
+
+  /** One row per (series, step): `base`'s columns `cols`, then the
+    * forecast `steps` exploded as (step, `outCol`), step counting from 1. */
+  private[seq] def stepRows(base: DataFrame, cols: Seq[String], steps: Seq[Column],
+                            outCol: String): DataFrame =
+    base.select(cols.map(col) :+ posexplode(array(steps: _*)).as(Seq("__p", outCol)): _*)
+      .withColumn("step", (col("__p") + 1).cast("long"))
+      .select((cols :+ "step" :+ outCol).map(col): _*)
 
   /** Typed primitive extraction of a fold's value column, resolved once
     * from the schema — the folds run once per fact row, so a per-row
@@ -190,10 +269,11 @@ object SequentialKernels {
     * grids); this form updates a primitive state in place and writes
     * |series| rows total, no window. `step` mutates/returns the state;
     * `finish` converts the final state to the output columns. */
-  private def keyedFoldLast[S](df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                               valueCol: String, outCols: Seq[String])(
-                               step: (Option[Double], Option[S]) => Option[S])(
-                               finish: Option[S] => Seq[Option[Double]]): DataFrame = {
+  private[graft] def keyedFoldLast[S](df: DataFrame, keyCols: Seq[String],
+                                      ordCols: Seq[Column], valueCol: String,
+                                      outCols: Seq[String])(
+                                      step: (Option[Double], Option[S]) => Option[S])(
+                                      finish: Option[S] => Seq[Option[Double]]): DataFrame = {
     val outSchema = StructType(df.schema.fields ++
       outCols.map(c => StructField(c, DoubleType, nullable = true)))
     val enc = RowEncoder.encoderFor(outSchema)
@@ -302,6 +382,25 @@ object SequentialKernels {
         alpha, beta),
       keyCols.map(col), ordCols)
 
+  /** Shared mean-centering stage of the MA/ARMA fits: the exact
+    * micro-int series mean joined back on the series key (AQE
+    * broadcasts it when small; at scale it co-partitions with the
+    * fold's exchange). The source frame feeds BOTH the mean aggregate
+    * and the centered series; a localCheckpoint of it was MEASURED a
+    * wash and rejected (ArProbe r18: q253 2.60 -> 2.44 s, q255 flat —
+    * AQE's runtime exchange reuse already shares the upstream weekly
+    * aggregate across the two consumers, so the checkpoint only trades
+    * lineage replay for a materialize while pinning non-reconstructible
+    * blocks; the q262 rejected-alternative discipline). */
+  private[graft] def centeredOnMu(df: DataFrame, keyCols: Seq[String],
+                                  valueCol: String): DataFrame = {
+    val keys = keyCols.map(col)
+    val mu = df.groupBy(keys: _*)
+      .agg(graft.functions.Funcs.microMean(col(valueCol)).as("__mu"))
+    df.join(mu, keyCols)
+      .withColumn("__xc", col(valueCol).cast("double") - col("__mu"))
+  }
+
   /** MA(1) innovation recursion — the moving-average member of the
     * sequential family (the MA side of the reference's ARIMA engine,
     * src/models/arima_temporal.py:339-345 fits (2,1,2); the innovation
@@ -322,25 +421,6 @@ object SequentialKernels {
     * A single-exchange [[keyedFold]]; a
     * recursive-CTE oracle replays the identical scalar chain (q250).
     */
-  /** Shared mean-centering stage of the MA/ARMA fits: the exact
-    * micro-int series mean joined back on the series key (AQE
-    * broadcasts it when small; at scale it co-partitions with the
-    * fold's exchange). The source frame feeds BOTH the mean aggregate
-    * and the centered series; a localCheckpoint of it was MEASURED a
-    * wash and rejected (ArProbe r18: q253 2.60 -> 2.44 s, q255 flat —
-    * AQE's runtime exchange reuse already shares the upstream weekly
-    * aggregate across the two consumers, so the checkpoint only trades
-    * lineage replay for a materialize while pinning non-reconstructible
-    * blocks; the q262 rejected-alternative discipline). */
-  private def centeredOnMu(df: DataFrame, keyCols: Seq[String],
-                           valueCol: String): DataFrame = {
-    val keys = keyCols.map(col)
-    val mu = df.groupBy(keys: _*)
-      .agg(graft.functions.Funcs.microMean(col(valueCol)).as("__mu"))
-    df.join(mu, keyCols)
-      .withColumn("__xc", col(valueCol).cast("double") - col("__mu"))
-  }
-
   def withMa1(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
               valueCol: String, theta: Double,
               residCol: String = "ma1_resid",
@@ -376,75 +456,13 @@ object SequentialKernels {
   /** [[fitMa1]] with the winner's forecast-relevant state attached:
     * `ma1_mu` (the exact micro-int series mean) and `ma1_eps_last` (the
     * winning θ's final innovation) — what the MA(1) h-step forecast
-    * consumes (f_1 = μ + θ·ε_n, f_{s≥2} = μ). Same single vectorized
-    * fold, one extra emitted double per grid point. */
+    * consumes (f_1 = μ + θ·ε_n, f_{s≥2} = μ). The kernel keeps each
+    * θ's last innovation next to its SSE. */
   def fitMa1Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                  valueCol: String, grid: Seq[Double] = Ma1Grid): DataFrame = {
     require(grid.nonEmpty, "theta grid must be non-empty")
-    if (arrayFits(df)) fitMa1FullArray(df, keyCols, ordCols, valueCol, grid)
-    else fitMa1FullFold(df, keyCols, ordCols, valueCol, grid)
-  }
-
-  /** Array form of [[fitMa1Full]] ([[ArrayFitsConf]]): per θ, state
-    * (ε, SSE) starts at (0, 0) and each non-null observation applies
-    *   ε' = xc − θ·ε ;  SSE' = SSE + ε'·ε'
-    * — the fold form's exact chain. */
-  private def fitMa1FullArray(df: DataFrame, keyCols: Seq[String],
-                              ordCols: Seq[Column], valueCol: String,
-                              grid: Seq[Double]): DataFrame =
-    gridArrayFit(df, keyCols, ordCols, valueCol, "ma1", grid.map(Seq(_)))
+    gridFit(df, keyCols, ordCols, valueCol, "ma1", grid.map(Seq(_)))
       .select(keyCols.map(col) ++ ma1Cols(col("__best"), col("__mu")): _*)
-
-  /** Pre-r18 streaming-fold form of [[fitMa1Full]] — the
-    * [[ArrayFitsConf]] fallback and the parity spec's reference
-    * twin. */
-  private[graft] def fitMa1FullFold(df: DataFrame, keyCols: Seq[String],
-                                    ordCols: Seq[Column], valueCol: String,
-                                    grid: Seq[Double]): DataFrame = {
-    val keys = keyCols.map(col)
-    val nG = grid.size
-    val gridArr = grid.toArray
-    val centered = centeredOnMu(df, keyCols, valueCol)
-    val sseCols = grid.indices.map(i => s"__sse$i")
-    val epsCols = grid.indices.map(i => s"__e$i")
-    // series-end fold: flat primitive state [e_i, sse_i]*, mutated in
-    // place — same IEEE chain per θ as the per-row form, one output
-    // row per series
-    val last = keyedFoldLast[Array[Double]](
-      centered, keyCols, ordCols, "__xc", sseCols ++ epsCols) {
-      case (None, st) => st
-      case (Some(xc), stOpt) =>
-        val a = stOpt.getOrElse(new Array[Double](2 * nG))
-        var i = 0
-        while (i < nG) {
-          val ne = xc - gridArr(i) * a(2 * i)
-          a(2 * i) = ne
-          a(2 * i + 1) += ne * ne
-          i += 1
-        }
-        Some(a)
-    } { st =>
-      val a = st.getOrElse(new Array[Double](2 * nG))
-      grid.indices.map(i => Some(a(2 * i + 1))) ++
-        grid.indices.map(i => Some(a(2 * i)))
-    }
-    val pairs = last.select(keys ++ Seq(col("__mu")) :+
-      explode(array(grid.zipWithIndex.map {
-        case (th, i) => struct(lit(th).as("theta"), col(s"__sse$i").as("sse"),
-          col(s"__e$i").as("eps"))
-      }: _*)).as("__p"): _*)
-      .select(keys ++ Seq(col("__mu"), col("__p.theta").as("theta"),
-        col("__p.sse").as("sse"), col("__p.eps").as("eps")): _*)
-    // both engines fold the identical IEEE chain per θ, so ordering by
-    // the RAW sse (rounding only the reported value) picks the same θ
-    import org.apache.spark.sql.expressions.Window
-    val wPick = Window.partitionBy(keys: _*).orderBy(col("sse"), col("theta"))
-    pairs.withColumn("__rn", row_number().over(wPick))
-      .filter(col("__rn") === 1)
-      .select(keys ++ Seq(col("theta").as("ma1_theta"),
-        graft.functions.Funcs.r(col("sse")).as("ma1_sse"),
-        col("__mu").as("ma1_mu"),
-        col("eps").as("ma1_eps_last")): _*)
   }
 
   /** MA(3) fit by conditional least squares over a LITERAL θ³ grid —
@@ -452,8 +470,8 @@ object SequentialKernels {
     * order-search GRID-SCALE PROBE (the reference configures
     * max_q = 5, arima_temporal.py:69-70, but its stepwise walk
     * practically never leaves the (2,2) box on weekly retail series —
-    * COVERAGE.md boundary note): the same series-end fold pattern,
-    * state (ε_{t−1}, ε_{t−2}, ε_{t−3}, SSE) per grid triple,
+    * COVERAGE.md boundary note): the same grid kernel, state
+    * (ε_{t−1}, ε_{t−2}, ε_{t−3}, SSE) per grid triple,
     *
     *   ε_t = (x_t − μ) − θ₁·ε_{t−1} − θ₂·ε_{t−2} − θ₃·ε_{t−3}
     *
@@ -463,99 +481,11 @@ object SequentialKernels {
     * _prev/_prev2 — the forecast state. Ties break to the smallest
     * triple in both engines. */
   def fitMa3Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                 valueCol: String,
-                 grid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame = {
+                 valueCol: String, grid: Seq[Double] = ThetaGrid): DataFrame = {
     require(grid.nonEmpty, "theta grid must be non-empty")
-    if (arrayFits(df)) fitMa3FullArray(df, keyCols, ordCols, valueCol, grid)
-    else fitMa3FullFold(df, keyCols, ordCols, valueCol, grid)
-  }
-
-  /** Array form of [[fitMa3Full]] ([[ArrayFitsConf]]): per θ-triple,
-    * state (ε, ε₋₁, ε₋₂, SSE) starts at zeros and each non-null
-    * observation applies
-    *   ε' = xc − θ₁·ε − θ₂·ε₋₁ − θ₃·ε₋₂ ;  SSE' = SSE + ε'·ε'
-    * with the ε memory shifting — the fold form's exact chain. */
-  private def fitMa3FullArray(df: DataFrame, keyCols: Seq[String],
-                              ordCols: Seq[Column], valueCol: String,
-                              grid: Seq[Double]): DataFrame = {
     val triples = for (t1 <- grid; t2 <- grid; t3 <- grid) yield Seq(t1, t2, t3)
-    val keys = keyCols.map(col)
-    val fitted = gridArrayFit(df, keyCols, ordCols, valueCol, "ma3", triples)
-    val b = col("__best")
-    fitted.select(keys ++ Seq(b.getField("theta1").as("ma3_theta1"),
-      b.getField("theta2").as("ma3_theta2"),
-      b.getField("theta3").as("ma3_theta3"),
-      graft.functions.Funcs.r(b.getField("sse")).as("ma3_sse"),
-      col("__mu").as("ma3_mu"),
-      b.getField("e").as("ma3_eps_last"),
-      b.getField("ep").as("ma3_eps_prev"),
-      b.getField("epp").as("ma3_eps_prev2")): _*)
-  }
-
-  /** Pre-r18 streaming-fold form of [[fitMa3Full]] — the
-    * [[ArrayFitsConf]] fallback and the parity spec's reference
-    * twin. */
-  private[graft] def fitMa3FullFold(df: DataFrame, keyCols: Seq[String],
-                                    ordCols: Seq[Column], valueCol: String,
-                                    grid: Seq[Double]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val triples = for (t1 <- grid; t2 <- grid; t3 <- grid) yield (t1, t2, t3)
-    val keys = keyCols.map(col)
-    val nT = triples.size
-    val tripleArr = triples.toArray
-    val centered = centeredOnMu(df, keyCols, valueCol)
-    val sseCols = triples.indices.map(i => s"__sse$i")
-    val eCols = triples.indices.map(i => s"__e$i")
-    val epCols = triples.indices.map(i => s"__ep$i")
-    val eppCols = triples.indices.map(i => s"__epp$i")
-    // flat primitive state [(e_i, ep_i, epp_i, sse_i)*] mutated in place
-    val last = keyedFoldLast[Array[Double]](
-      centered, keyCols, ordCols, "__xc",
-      sseCols ++ eCols ++ epCols ++ eppCols) {
-      case (None, st) => st
-      case (Some(xc), stOpt) =>
-        val a = stOpt.getOrElse(new Array[Double](4 * nT))
-        var i = 0
-        while (i < nT) {
-          val (t1, t2, t3) = tripleArr(i)
-          val ne = xc - t1 * a(4 * i) - t2 * a(4 * i + 1) - t3 * a(4 * i + 2)
-          a(4 * i + 2) = a(4 * i + 1)
-          a(4 * i + 1) = a(4 * i)
-          a(4 * i) = ne
-          a(4 * i + 3) += ne * ne
-          i += 1
-        }
-        Some(a)
-    } { st =>
-      val a = st.getOrElse(new Array[Double](4 * nT))
-      triples.indices.map(i => Some(a(4 * i + 3))) ++
-        triples.indices.map(i => Some(a(4 * i))) ++
-        triples.indices.map(i => Some(a(4 * i + 1))) ++
-        triples.indices.map(i => Some(a(4 * i + 2)))
-    }
-    val longForm = last.select(keys ++ Seq(col("__mu")) :+
-      explode(array(triples.zipWithIndex.map {
-        case ((t1, t2, t3), i) => struct(lit(t1).as("theta1"),
-          lit(t2).as("theta2"), lit(t3).as("theta3"),
-          col(s"__sse$i").as("sse"), col(s"__e$i").as("eps"),
-          col(s"__ep$i").as("epsp"), col(s"__epp$i").as("epspp"))
-      }: _*)).as("__p"): _*)
-      .select(keys ++ Seq(col("__mu"), col("__p.theta1").as("theta1"),
-        col("__p.theta2").as("theta2"), col("__p.theta3").as("theta3"),
-        col("__p.sse").as("sse"), col("__p.eps").as("eps"),
-        col("__p.epsp").as("epsp"), col("__p.epspp").as("epspp")): _*)
-    val wPick = Window.partitionBy(keys: _*)
-      .orderBy(col("sse"), col("theta1"), col("theta2"), col("theta3"))
-    longForm.withColumn("__rn", row_number().over(wPick))
-      .filter(col("__rn") === 1)
-      .select(keys ++ Seq(col("theta1").as("ma3_theta1"),
-        col("theta2").as("ma3_theta2"),
-        col("theta3").as("ma3_theta3"),
-        graft.functions.Funcs.r(col("sse")).as("ma3_sse"),
-        col("__mu").as("ma3_mu"),
-        col("eps").as("ma3_eps_last"),
-        col("epsp").as("ma3_eps_prev"),
-        col("epspp").as("ma3_eps_prev2")): _*)
+    gridFit(df, keyCols, ordCols, valueCol, "ma3", triples)
+      .select(keyCols.map(col) ++ ma3Cols(col("__best"), col("__mu")): _*)
   }
 
   /** h-step MA(3) forecast over an ALREADY-BUILT [[fitMa3Full]] table:
@@ -568,25 +498,12 @@ object SequentialKernels {
     *
     * One row per (series, step) with the winning triple attached. */
   def ma3ForecastFrom(base: DataFrame, keyCols: Seq[String], h: Int): DataFrame = {
-    import graft.functions.Funcs.r
     require(h >= 1, "horizon must be at least 1")
-    val keys = keyCols.map(col)
-    val steps = (1 to h).map {
-      case 1 => r(col("ma3_mu") + col("ma3_theta1") * col("ma3_eps_last") +
-        col("ma3_theta2") * col("ma3_eps_prev") +
-        col("ma3_theta3") * col("ma3_eps_prev2"))
-      case 2 => r(col("ma3_mu") + col("ma3_theta2") * col("ma3_eps_last") +
-        col("ma3_theta3") * col("ma3_eps_prev"))
-      case 3 => r(col("ma3_mu") + col("ma3_theta3") * col("ma3_eps_last"))
-      case _ => r(col("ma3_mu"))
-    }
-    base.select(keys ++ Seq(col("ma3_theta1"), col("ma3_theta2"),
-      col("ma3_theta3"), col("ma3_sse")) :+
-      posexplode(array(steps: _*)).as(Seq("__p", "ma3_forecast")): _*)
-      .withColumn("step", (col("__p") + 1).cast("long"))
-      .select(keys ++ Seq(col("ma3_theta1"), col("ma3_theta2"),
-        col("ma3_theta3"), col("ma3_sse"), col("step"),
-        col("ma3_forecast")): _*)
+    val steps = armaSteps(col("ma3_mu"), Nil,
+      Seq("ma3_theta1", "ma3_theta2", "ma3_theta3").map(col), Nil,
+      Seq("ma3_eps_last", "ma3_eps_prev", "ma3_eps_prev2").map(col), h)
+    stepRows(base, keyCols ++ Seq("ma3_theta1", "ma3_theta2", "ma3_theta3", "ma3_sse"),
+      steps, "ma3_forecast")
   }
 
   /** Joint ARMA(1,1) fit by conditional least squares over a LITERAL
@@ -597,16 +514,16 @@ object SequentialKernels {
     *   ε_t = (x_t − μ) − φ·(x_{t−1} − μ) − θ·ε_{t−1},  conditioned on
     *   the first observation (ε_1 = 0, SSE over t ≥ 2)
     *
-    * Every (φ, θ) pair's innovation state advances in ONE vectorized
-    * fold per series (the previous centered value rides the state, so
+    * Every (φ, θ) pair's innovation state advances in ONE kernel pass
+    * per series (the previous centered value rides the state, so
     * no lag column or extra window is needed); the series end yields
     * each pair's SSE and the (sse, φ, θ)-smallest wins — ties (e.g.
     * single-row series) break to the smallest pair in both engines.
     * Returns one row per series: arma_phi, arma_theta, arma_sse. */
   def fitArma11(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                 valueCol: String,
-                phiGrid: Seq[Double] = Arma11PhiGrid,
-                thetaGrid: Seq[Double] = Arma11ThetaGrid): DataFrame =
+                phiGrid: Seq[Double] = PhiGrid,
+                thetaGrid: Seq[Double] = ThetaGrid): DataFrame =
     fitArma11Full(df, keyCols, ordCols, valueCol, phiGrid, thetaGrid)
       .select(keyCols.map(col) ++ Seq(col("arma_phi"), col("arma_theta"),
         col("arma_sse")): _*)
@@ -615,98 +532,16 @@ object SequentialKernels {
     * `arma_mu` (the exact micro-int series mean), `arma_eps_last` (the
     * winning pair's final innovation) and `arma_xc_last` (the final
     * centered observation) — everything the h-step forecast recursion
-    * consumes. Same single vectorized fold: each pair's innovation
-    * rides the emitted columns next to its SSE, so the state costs one
-    * extra double column per grid pair and no new exchange. */
+    * consumes. The kernel keeps each pair's innovation next to its
+    * SSE, so the state costs one double per grid pair and no new
+    * exchange. */
   def fitArma11Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                     valueCol: String,
-                    phiGrid: Seq[Double] = Arma11PhiGrid,
-                    thetaGrid: Seq[Double] = Arma11ThetaGrid): DataFrame = {
+                    phiGrid: Seq[Double] = PhiGrid,
+                    thetaGrid: Seq[Double] = ThetaGrid): DataFrame = {
     require(phiGrid.nonEmpty && thetaGrid.nonEmpty, "grids must be non-empty")
-    if (arrayFits(df)) fitArma11FullArray(df, keyCols, ordCols, valueCol,
-      phiGrid, thetaGrid)
-    else fitArma11FullFold(df, keyCols, ordCols, valueCol, phiGrid, thetaGrid)
-  }
-
-  /** Array form of [[fitArma11Full]] ([[ArrayFitsConf]]): per (φ, θ),
-    * state (xcₚ, ε, SSE) — the first non-null observation only seeds
-    * xcₚ (ε₁ = 0, no SSE term, the fold's conditioning); each later
-    * one applies
-    *   ε' = xc − φ·xcₚ − θ·ε ;  SSE' = SSE + ε'·ε' ;  xcₚ' = xc
-    * xcₚ starts NULL so an all-null series reports a NULL xc_last,
-    * exactly like the fold's absent state. */
-  private def fitArma11FullArray(df: DataFrame, keyCols: Seq[String],
-                                 ordCols: Seq[Column], valueCol: String,
-                                 phiGrid: Seq[Double], thetaGrid: Seq[Double]): DataFrame =
-    gridArrayFit(df, keyCols, ordCols, valueCol, "arma11", arma11Pairs(phiGrid, thetaGrid))
+    gridFit(df, keyCols, ordCols, valueCol, "arma11", arma11Pairs(phiGrid, thetaGrid))
       .select(keyCols.map(col) ++ arma11Cols(col("__best"), col("__mu")): _*)
-
-  /** Pre-r18 streaming-fold form of [[fitArma11Full]] — the
-    * [[ArrayFitsConf]] fallback and the parity spec's reference
-    * twin. */
-  private[graft] def fitArma11FullFold(df: DataFrame, keyCols: Seq[String],
-                                       ordCols: Seq[Column], valueCol: String,
-                                       phiGrid: Seq[Double],
-                                       thetaGrid: Seq[Double]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pairs = for (p <- phiGrid; t <- thetaGrid) yield (p, t)
-    val keys = keyCols.map(col)
-    val nP = pairs.size
-    val pairArr = pairs.toArray
-    val centered = centeredOnMu(df, keyCols, valueCol)
-    val sseCols = pairs.indices.map(i => s"__sse$i")
-    val epsCols = pairs.indices.map(i => s"__e$i")
-    // series-end fold; flat primitive state [xp, (e_i, sse_i)*] mutated
-    // in place — identical IEEE chain per pair, one output row per
-    // series (the per-row form paid a 24-column boxed row per fact row
-    // plus a descending sort)
-    val last = keyedFoldLast[Array[Double]](
-      centered, keyCols, ordCols, "__xc", sseCols ++ epsCols :+ "__xcn") {
-      case (None, st) => st
-      case (Some(xc), None) =>
-        // first observation is conditioned on: ε_1 = 0, SSE starts at 0
-        val a = new Array[Double](1 + 2 * nP)
-        a(0) = xc
-        Some(a)
-      case (Some(xc), Some(a)) =>
-        val xp = a(0)
-        var i = 0
-        while (i < nP) {
-          val (ph, th) = pairArr(i)
-          val e = xc - ph * xp - th * a(1 + 2 * i)
-          a(1 + 2 * i) = e
-          a(2 + 2 * i) += e * e
-          i += 1
-        }
-        a(0) = xc
-        Some(a)
-    } { st =>
-      val a = st.getOrElse(new Array[Double](1 + 2 * nP))
-      // xc_n rides the STATE (a(0) = last non-null centered value), not
-      // the emitted row's own __xc — a trailing NULL value row would
-      // otherwise report xc_last = NULL while eps reflects the last
-      // non-null observation (inconsistent forecast state)
-      (pairs.indices.map(i => Some(a(2 + 2 * i))) ++
-        pairs.indices.map(i => Some(a(1 + 2 * i)))) :+ st.map(_(0))
-    }
-    val longForm = last.select(keys ++ Seq(col("__mu"), col("__xcn")) :+
-      explode(array(pairs.zipWithIndex.map {
-        case ((ph, th), i) => struct(lit(ph).as("phi"), lit(th).as("theta"),
-          col(s"__sse$i").as("sse"), col(s"__e$i").as("eps"))
-      }: _*)).as("__p"): _*)
-      .select(keys ++ Seq(col("__mu"), col("__xcn"),
-        col("__p.phi").as("phi"), col("__p.theta").as("theta"),
-        col("__p.sse").as("sse"), col("__p.eps").as("eps")): _*)
-    val wPick = Window.partitionBy(keys: _*)
-      .orderBy(col("sse"), col("phi"), col("theta"))
-    longForm.withColumn("__rn", row_number().over(wPick))
-      .filter(col("__rn") === 1)
-      .select(keys ++ Seq(col("phi").as("arma_phi"),
-        col("theta").as("arma_theta"),
-        graft.functions.Funcs.r(col("sse")).as("arma_sse"),
-        col("__mu").as("arma_mu"),
-        col("eps").as("arma_eps_last"),
-        col("__xcn").as("arma_xc_last")): _*)
   }
 
   /** h-step ARMA(1,1) forecast from the CLS grid fit — the forecasting
@@ -724,22 +559,13 @@ object SequentialKernels {
     * series tie the grid to its smallest pair with ε_n = 0). */
   def arma11Forecast(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                      valueCol: String, h: Int,
-                     phiGrid: Seq[Double] = Seq(-0.5, 0.0, 0.5, 0.9),
-                     thetaGrid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame = {
-    import graft.functions.Funcs.r
+                     phiGrid: Seq[Double] = PhiGrid,
+                     thetaGrid: Seq[Double] = ThetaGrid): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
-    val keys = keyCols.map(col)
     val base = fitArma11Full(df, keyCols, ordCols, valueCol, phiGrid, thetaGrid)
-    val steps = (1 to h).foldLeft(Vector.empty[Column]) { (acc, s) =>
-      val f =
-        if (s == 1) r(col("arma_mu") + col("arma_phi") * col("arma_xc_last") +
-          col("arma_theta") * col("arma_eps_last"))
-        else r(col("arma_mu") + col("arma_phi") * (acc(s - 2) - col("arma_mu")))
-      acc :+ f
-    }
-    base.select(keys :+ posexplode(array(steps: _*)).as(Seq("__p", "arma_forecast")): _*)
-      .withColumn("step", (col("__p") + 1).cast("long"))
-      .select(keys ++ Seq(col("step"), col("arma_forecast")): _*)
+    stepRows(base, keyCols, armaSteps(col("arma_mu"), Seq(col("arma_phi")),
+      Seq(col("arma_theta")), Seq(col("arma_xc_last")), Seq(col("arma_eps_last")), h),
+      "arma_forecast")
   }
 
   /** ARIMA(1,1,1) by composition (the d = 1 ARMA member — the
@@ -756,10 +582,22 @@ object SequentialKernels {
     * differences) drop. */
   def arima111Forecast(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                        valueCol: String, h: Int,
-                       phiGrid: Seq[Double] = Seq(-0.5, 0.0, 0.5, 0.9),
-                       thetaGrid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                       phiGrid: Seq[Double] = PhiGrid,
+                       thetaGrid: Seq[Double] = ThetaGrid): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
+    val (diffed, lastLevel) = firstDiffs(df, keyCols, ordCols, valueCol)
+    integrated(arma11Forecast(diffed, keyCols, ordCols, "__dy", h, phiGrid, thetaGrid),
+      lastLevel, keyCols, "arma_forecast", "arima_forecast")
+      .select((keyCols ++ Seq("step", "arima_forecast")).map(col): _*)
+  }
+
+  /** The first-difference base of a d = 1 member: `df` with `__dy` =
+    * y_t − y_{t−1} (each series' first row dropped), and the
+    * last-observed-level frame (keys..., `__yn` = y_n) that
+    * [[integrated]] adds the diff forecasts onto. */
+  private[seq] def firstDiffs(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
+                              valueCol: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
     val keys = keyCols.map(col)
     val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
     val wd = Window.partitionBy(keys: _*).orderBy(ordCols.map(_.desc): _*)
@@ -768,14 +606,25 @@ object SequentialKernels {
     val lastLevel = dy.withColumn("__rdL", row_number().over(wd))
       .filter(col("__rdL") === 1)
       .select(keys :+ col("__yraw").as("__yn"): _*)
-    val diffed = dy.filter(col("__dy").isNotNull).drop("__yraw")
-    val wcum = Window.partitionBy(keys: _*).orderBy(col("step"))
+    (dy.filter(col("__dy").isNotNull).drop("__yraw"), lastLevel)
+  }
+
+  /** The d = 1 integration tail: `fc`'s diff forecasts `diffCol`
+    * integrate back from the last observed level as `outCol`,
+    *
+    *   ŷ_{n+s} = r( y_n + Σ_{j≤s} d̂_{n+j} )
+    *
+    * (the q249 ARI machinery: the cumulative sum runs in step order
+    * inside one key partition, both engines left-folding the same
+    * rounded diff forecasts). Series without a last level drop. */
+  private[seq] def integrated(fc: DataFrame, lastLevel: DataFrame, keyCols: Seq[String],
+                              diffCol: String, outCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wcum = Window.partitionBy(keyCols.map(col): _*).orderBy(col("step"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    arma11Forecast(diffed, keyCols, ordCols, "__dy", h, phiGrid, thetaGrid)
-      .join(lastLevel, keyCols)
-      .withColumn("arima_forecast",
-        graft.functions.Funcs.r(col("__yn") + sum(col("arma_forecast")).over(wcum)))
-      .select(keys ++ Seq(col("step"), col("arima_forecast")): _*)
+    fc.join(lastLevel, keyCols)
+      .withColumn(outCol,
+        graft.functions.Funcs.r(col("__yn") + sum(col(diffCol)).over(wcum)))
   }
 
   /** Joint ARMA(2,1) fit by conditional least squares over a LITERAL
@@ -790,7 +639,7 @@ object SequentialKernels {
     * conditioned on the first TWO observations (ε_1 = ε_2 = 0, SSE
     * over t ≥ 3 — one more conditioning row than ARMA(1,1) because the
     * second AR lag only exists from t = 3). Every grid triple advances
-    * in ONE vectorized fold per series (both centered lags ride the
+    * in ONE kernel pass per series (both centered lags ride the
     * state); the series end yields each triple's SSE and the
     * (sse, φ₁, φ₂, θ)-smallest wins, ties breaking to the smallest
     * triple in both engines. Returns one row per series with the
@@ -801,126 +650,15 @@ object SequentialKernels {
     * single-observation series, where every triple ties at SSE 0). */
   def fitArma21Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                     valueCol: String,
-                    phi1Grid: Seq[Double] = Seq(-0.5, 0.0, 0.5, 0.9),
-                    phi2Grid: Seq[Double] = Seq(-0.3, 0.0, 0.3),
-                    thetaGrid: Seq[Double] = Seq(-0.4, 0.0, 0.4)): DataFrame = {
+                    phi1Grid: Seq[Double] = PhiGrid,
+                    phi2Grid: Seq[Double] = Lag2Grid,
+                    thetaGrid: Seq[Double] = ThetaGrid): DataFrame = {
     require(phi1Grid.nonEmpty && phi2Grid.nonEmpty && thetaGrid.nonEmpty,
       "grids must be non-empty")
-    if (arrayFits(df)) fitArma21FullArray(df, keyCols, ordCols, valueCol,
-      phi1Grid, phi2Grid, thetaGrid)
-    else fitArma21FullFold(df, keyCols, ordCols, valueCol,
-      phi1Grid, phi2Grid, thetaGrid)
-  }
-
-  /** Array form of [[fitArma21Full]] ([[ArrayFitsConf]]): per triple,
-    * state (xc₁, xc₂, nObs, nSse, ε, SSE) — the first TWO non-null
-    * observations only shift the xc memory (ε = 0, no SSE term, the
-    * fold's two-row conditioning); each later one applies
-    *   ε' = xc − φ₁·xc₁ − φ₂·xc₂ − θ·ε ;  SSE' = SSE + ε'·ε'
-    * with the xc memory shifting. xc₁ starts NULL (all-null series →
-    * NULL xc_last), xc₂ starts 0.0 (the fold's array default — a
-    * single-observation series reports xc_prev = 0.0). */
-  private def fitArma21FullArray(df: DataFrame, keyCols: Seq[String],
-                                 ordCols: Seq[Column], valueCol: String,
-                                 phi1Grid: Seq[Double], phi2Grid: Seq[Double],
-                                 thetaGrid: Seq[Double]): DataFrame = {
     val triples = for (p1 <- phi1Grid; p2 <- phi2Grid; t <- thetaGrid)
       yield Seq(p1, p2, t)
-    val keys = keyCols.map(col)
-    val fitted = gridArrayFit(df, keyCols, ordCols, valueCol, "arma21", triples)
-    val b = col("__best")
-    fitted.select(keys ++ Seq(b.getField("phi1").as("arma2_phi1"),
-      b.getField("phi2").as("arma2_phi2"),
-      b.getField("theta").as("arma2_theta"),
-      graft.functions.Funcs.r(b.getField("sse")).as("arma2_sse"),
-      b.getField("nsse").as("arma2_neff"),
-      col("__mu").as("arma2_mu"),
-      b.getField("e").as("arma2_eps_last"),
-      b.getField("xcn").as("arma2_xc_last"),
-      b.getField("xcp").as("arma2_xc_prev")): _*)
-  }
-
-  /** Pre-r18 streaming-fold form of [[fitArma21Full]] — the
-    * [[ArrayFitsConf]] fallback and the parity spec's reference
-    * twin. */
-  private[graft] def fitArma21FullFold(df: DataFrame, keyCols: Seq[String],
-                                       ordCols: Seq[Column], valueCol: String,
-                                       phi1Grid: Seq[Double], phi2Grid: Seq[Double],
-                                       thetaGrid: Seq[Double]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val triples = for (p1 <- phi1Grid; p2 <- phi2Grid; t <- thetaGrid)
-      yield (p1, p2, t)
-    val keys = keyCols.map(col)
-    val centered = centeredOnMu(df, keyCols, valueCol)
-    val sseCols = triples.indices.map(i => s"__sse$i")
-    val epsCols = triples.indices.map(i => s"__e$i")
-    val nT = triples.size
-    val tripleArr = triples.toArray
-    // series-end fold; flat primitive state
-    // [xp1, xp2, nObs, nSse, (e_i, sse_i)*] mutated in place. The
-    // series-end state carries everything the pick needs: each
-    // triple's ε_n and SSE, xc_n (slot 0) and xc_{n−1} (slot 1 after
-    // the last update) and the SSE term count.
-    val last = keyedFoldLast[Array[Double]](
-      centered, keyCols, ordCols, "__xc",
-      sseCols ++ epsCols ++ Seq("__xp1", "__nsse", "__xcn")) {
-      case (None, st) => st
-      case (Some(xc), None) =>
-        // first observation: conditioned (ε_1 = 0, no SSE term)
-        val a = new Array[Double](4 + 2 * nT)
-        a(0) = xc
-        a(2) = 1
-        Some(a)
-      case (Some(xc), Some(a)) =>
-        if (a(2) == 1.0) {
-          // second observation: still conditioned (ε_2 = 0, no SSE term)
-          a(1) = a(0); a(0) = xc; a(2) = 2
-        } else {
-          val xp1 = a(0); val xp2 = a(1)
-          var i = 0
-          while (i < nT) {
-            val (p1, p2, th) = tripleArr(i)
-            val e = xc - p1 * xp1 - p2 * xp2 - th * a(4 + 2 * i)
-            a(4 + 2 * i) = e
-            a(5 + 2 * i) += e * e
-            i += 1
-          }
-          a(1) = a(0); a(0) = xc; a(2) += 1; a(3) += 1
-        }
-        Some(a)
-    } { st =>
-      val a = st.getOrElse(new Array[Double](4 + 2 * nT))
-      // xc_n rides the state (slot 0 = last non-null centered value) so
-      // a trailing NULL value row can't desync xc_last from eps/xp1
-      triples.indices.map(i => Some(a(5 + 2 * i))) ++
-        triples.indices.map(i => Some(a(4 + 2 * i))) ++
-        Seq(Some(a(1)), Some(a(3))) :+ st.map(_(0))
-    }
-    val longForm = last.select(keys ++ Seq(col("__mu"), col("__xcn"),
-      col("__xp1"), col("__nsse")) :+
-      explode(array(triples.zipWithIndex.map {
-        case ((p1, p2, th), i) => struct(lit(p1).as("phi1"), lit(p2).as("phi2"),
-          lit(th).as("theta"), col(s"__sse$i").as("sse"), col(s"__e$i").as("eps"))
-      }: _*)).as("__p"): _*)
-      .select(keys ++ Seq(col("__mu"), col("__xcn"), col("__xp1"), col("__nsse"),
-        col("__p.phi1").as("phi1"), col("__p.phi2").as("phi2"),
-        col("__p.theta").as("theta"),
-        col("__p.sse").as("sse"), col("__p.eps").as("eps")): _*)
-    // both engines fold the identical IEEE chain per triple: order by
-    // RAW sse, round only the reported value
-    val wPick = Window.partitionBy(keys: _*)
-      .orderBy(col("sse"), col("phi1"), col("phi2"), col("theta"))
-    longForm.withColumn("__rn", row_number().over(wPick))
-      .filter(col("__rn") === 1)
-      .select(keys ++ Seq(col("phi1").as("arma2_phi1"),
-        col("phi2").as("arma2_phi2"),
-        col("theta").as("arma2_theta"),
-        graft.functions.Funcs.r(col("sse")).as("arma2_sse"),
-        col("__nsse").as("arma2_neff"),
-        col("__mu").as("arma2_mu"),
-        col("eps").as("arma2_eps_last"),
-        col("__xcn").as("arma2_xc_last"),
-        col("__xp1").as("arma2_xc_prev")): _*)
+    gridFit(df, keyCols, ordCols, valueCol, "arma21", triples)
+      .select(keyCols.map(col) ++ arma21Cols(col("__best"), col("__mu")): _*)
   }
 
   /** h-step ARMA(2,1) forecast over an ALREADY-BUILT [[fitArma21Full]]
@@ -933,29 +671,12 @@ object SequentialKernels {
     * each step rounded before feeding forward (recursive-CTE-replayable
     * chain). One row per (series, step). */
   def arma21ForecastFrom(base: DataFrame, keyCols: Seq[String], h: Int): DataFrame = {
-    import graft.functions.Funcs.r
     require(h >= 1, "horizon must be at least 1")
-    val keys = keyCols.map(col)
-    val steps = (1 to h).foldLeft(Vector.empty[Column]) { (acc, s) =>
-      val f =
-        if (s == 1) r(col("arma2_mu") + col("arma2_phi1") * col("arma2_xc_last") +
-          col("arma2_phi2") * col("arma2_xc_prev") +
-          col("arma2_theta") * col("arma2_eps_last"))
-        else if (s == 2) r(col("arma2_mu") +
-          col("arma2_phi1") * (acc(0) - col("arma2_mu")) +
-          col("arma2_phi2") * col("arma2_xc_last"))
-        else r(col("arma2_mu") +
-          col("arma2_phi1") * (acc(s - 2) - col("arma2_mu")) +
-          col("arma2_phi2") * (acc(s - 3) - col("arma2_mu")))
-      acc :+ f
-    }
-    base.select(keys ++ Seq(col("arma2_phi1"), col("arma2_phi2"),
-      col("arma2_theta"), col("arma2_sse")) :+
-      posexplode(array(steps: _*)).as(Seq("__p", "arma2_forecast")): _*)
-      .withColumn("step", (col("__p") + 1).cast("long"))
-      .select(keys ++ Seq(col("arma2_phi1"), col("arma2_phi2"),
-        col("arma2_theta"), col("arma2_sse"), col("step"),
-        col("arma2_forecast")): _*)
+    val steps = armaSteps(col("arma2_mu"), Seq(col("arma2_phi1"), col("arma2_phi2")),
+      Seq(col("arma2_theta")), Seq(col("arma2_xc_last"), col("arma2_xc_prev")),
+      Seq(col("arma2_eps_last")), h)
+    stepRows(base, keyCols ++ Seq("arma2_phi1", "arma2_phi2", "arma2_theta", "arma2_sse"),
+      steps, "arma2_forecast")
   }
 
   /** ARIMA(2,1,1) by composition — the d = 1 member of the ARMA(2,1)
@@ -968,20 +689,11 @@ object SequentialKernels {
     * the q249 integration machinery). Emits the winning (φ₁, φ₂, θ)
     * and diff-scale SSE alongside each step. */
   def arima211ForecastFrom(base: DataFrame, lastLevel: DataFrame,
-                           keyCols: Seq[String], h: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(h >= 1, "horizon must be at least 1")
-    val keys = keyCols.map(col)
-    val wcum = Window.partitionBy(keys: _*).orderBy(col("step"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    arma21ForecastFrom(base, keyCols, h)
-      .join(lastLevel, keyCols)
-      .withColumn("arima_forecast",
-        graft.functions.Funcs.r(col("__yn") + sum(col("arma2_forecast")).over(wcum)))
-      .select(keys ++ Seq(col("arma2_phi1"), col("arma2_phi2"),
-        col("arma2_theta"), col("arma2_sse"), col("step"),
-        col("arima_forecast")): _*)
-  }
+                           keyCols: Seq[String], h: Int): DataFrame =
+    integrated(arma21ForecastFrom(base, keyCols, h), lastLevel, keyCols,
+      "arma2_forecast", "arima_forecast")
+      .select((keyCols ++ Seq("arma2_phi1", "arma2_phi2", "arma2_theta", "arma2_sse",
+        "step", "arima_forecast")).map(col): _*)
 
   /** ARMA(2,2) conditional-least-squares fit on the literal
     * (φ₁, φ₂, θ₁, θ₂) grid — the q = 2 extension of [[fitArma21Full]]
@@ -992,7 +704,7 @@ object SequentialKernels {
     *
     *   ε_t = xc_t − φ₁·xc_{t−1} − φ₂·xc_{t−2} − θ₁·ε_{t−1} − θ₂·ε_{t−2}
     *
-    * folded once over the series per grid quadruple (flat primitive
+    * run once over the series per grid quadruple (flat primitive
     * state, 3 doubles per quadruple: ε_{t−1}, ε_{t−2}, SSE). Winner by
     * RAW sse with ties to the smallest (φ₁, φ₂, θ₁, θ₂); one row per
     * series: the winning quadruple, r(sse), the residual count
@@ -1000,136 +712,16 @@ object SequentialKernels {
     * xc_n / xc_{n−1} — everything the forecast recursion needs. */
   def fitArma22Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                     valueCol: String,
-                    phi1Grid: Seq[Double] = Seq(-0.5, 0.0, 0.5, 0.9),
-                    phi2Grid: Seq[Double] = Seq(-0.3, 0.0, 0.3),
-                    theta1Grid: Seq[Double] = Seq(-0.4, 0.0, 0.4),
-                    theta2Grid: Seq[Double] = Seq(-0.3, 0.0, 0.3)): DataFrame = {
+                    phi1Grid: Seq[Double] = PhiGrid,
+                    phi2Grid: Seq[Double] = Lag2Grid,
+                    theta1Grid: Seq[Double] = ThetaGrid,
+                    theta2Grid: Seq[Double] = Lag2Grid): DataFrame = {
     require(phi1Grid.nonEmpty && phi2Grid.nonEmpty &&
       theta1Grid.nonEmpty && theta2Grid.nonEmpty, "grids must be non-empty")
-    if (arrayFits(df)) fitArma22FullArray(df, keyCols, ordCols, valueCol,
-      phi1Grid, phi2Grid, theta1Grid, theta2Grid)
-    else fitArma22FullFold(df, keyCols, ordCols, valueCol,
-      phi1Grid, phi2Grid, theta1Grid, theta2Grid)
-  }
-
-  /** Array form of [[fitArma22Full]] ([[ArrayFitsConf]]): per
-    * quadruple, state (xc₁, xc₂, nObs, nSse, ε, ε₋₁, SSE) — the first
-    * TWO non-null observations only shift the xc memory (the fold's
-    * conditioning); each later one applies
-    *   ε' = xc − φ₁·xc₁ − φ₂·xc₂ − θ₁·ε − θ₂·ε₋₁ ;  SSE' = SSE + ε'·ε'
-    * with both memories shifting. Defaults as in
-    * [[fitArma21FullArray]]. */
-  private def fitArma22FullArray(df: DataFrame, keyCols: Seq[String],
-                                 ordCols: Seq[Column], valueCol: String,
-                                 phi1Grid: Seq[Double], phi2Grid: Seq[Double],
-                                 theta1Grid: Seq[Double],
-                                 theta2Grid: Seq[Double]): DataFrame = {
     val quads = for (p1 <- phi1Grid; p2 <- phi2Grid; t1 <- theta1Grid;
                      t2 <- theta2Grid) yield Seq(p1, p2, t1, t2)
-    val keys = keyCols.map(col)
-    val fitted = gridArrayFit(df, keyCols, ordCols, valueCol, "arma22", quads)
-    val b = col("__best")
-    fitted.select(keys ++ Seq(b.getField("phi1").as("arma22_phi1"),
-      b.getField("phi2").as("arma22_phi2"),
-      b.getField("theta1").as("arma22_theta1"),
-      b.getField("theta2").as("arma22_theta2"),
-      graft.functions.Funcs.r(b.getField("sse")).as("arma22_sse"),
-      b.getField("nsse").as("arma22_neff"),
-      col("__mu").as("arma22_mu"),
-      b.getField("e").as("arma22_eps_last"),
-      b.getField("ep").as("arma22_eps_prev"),
-      b.getField("xcn").as("arma22_xc_last"),
-      b.getField("xcp").as("arma22_xc_prev")): _*)
-  }
-
-  /** Pre-r18 streaming-fold form of [[fitArma22Full]] — the
-    * [[ArrayFitsConf]] fallback and the parity spec's reference
-    * twin. */
-  private[graft] def fitArma22FullFold(df: DataFrame, keyCols: Seq[String],
-                                       ordCols: Seq[Column], valueCol: String,
-                                       phi1Grid: Seq[Double], phi2Grid: Seq[Double],
-                                       theta1Grid: Seq[Double],
-                                       theta2Grid: Seq[Double]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val quads = for (p1 <- phi1Grid; p2 <- phi2Grid; t1 <- theta1Grid;
-                     t2 <- theta2Grid) yield (p1, p2, t1, t2)
-    val keys = keyCols.map(col)
-    val centered = centeredOnMu(df, keyCols, valueCol)
-    val sseCols = quads.indices.map(i => s"__sse$i")
-    val epsCols = quads.indices.map(i => s"__e$i")
-    val epsPrevCols = quads.indices.map(i => s"__ep$i")
-    val nQ = quads.size
-    val quadArr = quads.toArray
-    // series-end fold; flat primitive state
-    // [xp1, xp2, nObs, nSse, (e_i, ep_i, sse_i)*] mutated in place;
-    // slot 0 holds xc_n, slot 1 holds xc_{n−1}.
-    val last = keyedFoldLast[Array[Double]](
-      centered, keyCols, ordCols, "__xc",
-      sseCols ++ epsCols ++ epsPrevCols ++ Seq("__xp1", "__nsse", "__xcn")) {
-      case (None, st) => st
-      case (Some(xc), None) =>
-        // first observation: conditioned (ε_1 = 0, no SSE term)
-        val a = new Array[Double](4 + 3 * nQ)
-        a(0) = xc
-        a(2) = 1
-        Some(a)
-      case (Some(xc), Some(a)) =>
-        if (a(2) == 1.0) {
-          // second observation: still conditioned (ε_2 = 0, no SSE term)
-          a(1) = a(0); a(0) = xc; a(2) = 2
-        } else {
-          val xp1 = a(0); val xp2 = a(1)
-          var i = 0
-          while (i < nQ) {
-            val (p1, p2, t1, t2) = quadArr(i)
-            val e = xc - p1 * xp1 - p2 * xp2 - t1 * a(4 + 3 * i) - t2 * a(5 + 3 * i)
-            a(5 + 3 * i) = a(4 + 3 * i)
-            a(4 + 3 * i) = e
-            a(6 + 3 * i) += e * e
-            i += 1
-          }
-          a(1) = a(0); a(0) = xc; a(2) += 1; a(3) += 1
-        }
-        Some(a)
-    } { st =>
-      val a = st.getOrElse(new Array[Double](4 + 3 * nQ))
-      // xc_n rides the state (slot 0 = last non-null centered value) so
-      // a trailing NULL value row can't desync xc_last from eps/xp1
-      quads.indices.map(i => Some(a(6 + 3 * i))) ++
-        quads.indices.map(i => Some(a(4 + 3 * i))) ++
-        quads.indices.map(i => Some(a(5 + 3 * i))) ++
-        Seq(Some(a(1)), Some(a(3))) :+ st.map(_(0))
-    }
-    val longForm = last.select(keys ++ Seq(col("__mu"), col("__xcn"),
-      col("__xp1"), col("__nsse")) :+
-      explode(array(quads.zipWithIndex.map {
-        case ((p1, p2, t1, t2), i) => struct(lit(p1).as("phi1"),
-          lit(p2).as("phi2"), lit(t1).as("theta1"), lit(t2).as("theta2"),
-          col(s"__sse$i").as("sse"), col(s"__e$i").as("eps"),
-          col(s"__ep$i").as("epsp"))
-      }: _*)).as("__p"): _*)
-      .select(keys ++ Seq(col("__mu"), col("__xcn"), col("__xp1"), col("__nsse"),
-        col("__p.phi1").as("phi1"), col("__p.phi2").as("phi2"),
-        col("__p.theta1").as("theta1"), col("__p.theta2").as("theta2"),
-        col("__p.sse").as("sse"), col("__p.eps").as("eps"),
-        col("__p.epsp").as("epsp")): _*)
-    // both engines fold the identical IEEE chain per quadruple: order
-    // by RAW sse, round only the reported value
-    val wPick = Window.partitionBy(keys: _*)
-      .orderBy(col("sse"), col("phi1"), col("phi2"), col("theta1"), col("theta2"))
-    longForm.withColumn("__rn", row_number().over(wPick))
-      .filter(col("__rn") === 1)
-      .select(keys ++ Seq(col("phi1").as("arma22_phi1"),
-        col("phi2").as("arma22_phi2"),
-        col("theta1").as("arma22_theta1"),
-        col("theta2").as("arma22_theta2"),
-        graft.functions.Funcs.r(col("sse")).as("arma22_sse"),
-        col("__nsse").as("arma22_neff"),
-        col("__mu").as("arma22_mu"),
-        col("eps").as("arma22_eps_last"),
-        col("epsp").as("arma22_eps_prev"),
-        col("__xcn").as("arma22_xc_last"),
-        col("__xp1").as("arma22_xc_prev")): _*)
+    gridFit(df, keyCols, ordCols, valueCol, "arma22", quads)
+      .select(keyCols.map(col) ++ arma22Cols(col("__best"), col("__mu")): _*)
   }
 
   /** h-step ARMA(2,2) forecast from the CLS grid fit: with the winning
@@ -1142,31 +734,13 @@ object SequentialKernels {
     * each step rounded before feeding forward (recursive-CTE-replayable
     * chain). One row per (series, step). */
   def arma22ForecastFrom(base: DataFrame, keyCols: Seq[String], h: Int): DataFrame = {
-    import graft.functions.Funcs.r
     require(h >= 1, "horizon must be at least 1")
-    val keys = keyCols.map(col)
-    val steps = (1 to h).foldLeft(Vector.empty[Column]) { (acc, s) =>
-      val f =
-        if (s == 1) r(col("arma22_mu") + col("arma22_phi1") * col("arma22_xc_last") +
-          col("arma22_phi2") * col("arma22_xc_prev") +
-          col("arma22_theta1") * col("arma22_eps_last") +
-          col("arma22_theta2") * col("arma22_eps_prev"))
-        else if (s == 2) r(col("arma22_mu") +
-          col("arma22_phi1") * (acc(0) - col("arma22_mu")) +
-          col("arma22_phi2") * col("arma22_xc_last") +
-          col("arma22_theta2") * col("arma22_eps_last"))
-        else r(col("arma22_mu") +
-          col("arma22_phi1") * (acc(s - 2) - col("arma22_mu")) +
-          col("arma22_phi2") * (acc(s - 3) - col("arma22_mu")))
-      acc :+ f
-    }
-    base.select(keys ++ Seq(col("arma22_phi1"), col("arma22_phi2"),
-      col("arma22_theta1"), col("arma22_theta2"), col("arma22_sse")) :+
-      posexplode(array(steps: _*)).as(Seq("__p", "arma22_forecast")): _*)
-      .withColumn("step", (col("__p") + 1).cast("long"))
-      .select(keys ++ Seq(col("arma22_phi1"), col("arma22_phi2"),
-        col("arma22_theta1"), col("arma22_theta2"), col("arma22_sse"),
-        col("step"), col("arma22_forecast")): _*)
+    val steps = armaSteps(col("arma22_mu"), Seq(col("arma22_phi1"), col("arma22_phi2")),
+      Seq(col("arma22_theta1"), col("arma22_theta2")),
+      Seq(col("arma22_xc_last"), col("arma22_xc_prev")),
+      Seq(col("arma22_eps_last"), col("arma22_eps_prev")), h)
+    stepRows(base, keyCols ++ Seq("arma22_phi1", "arma22_phi2", "arma22_theta1",
+      "arma22_theta2", "arma22_sse"), steps, "arma22_forecast")
   }
 
   /** The ARIMA(2,1,2) integration tail over an ALREADY-BUILT
@@ -1175,20 +749,11 @@ object SequentialKernels {
     * statsmodels-fallback order (arima_temporal.py:341) by the exact
     * [[arima211ForecastFrom]] integration chain. */
   def arima212ForecastFrom(base: DataFrame, lastLevel: DataFrame,
-                           keyCols: Seq[String], h: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(h >= 1, "horizon must be at least 1")
-    val keys = keyCols.map(col)
-    val wcum = Window.partitionBy(keys: _*).orderBy(col("step"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    arma22ForecastFrom(base, keyCols, h)
-      .join(lastLevel, keyCols)
-      .withColumn("arima_forecast",
-        graft.functions.Funcs.r(col("__yn") + sum(col("arma22_forecast")).over(wcum)))
-      .select(keys ++ Seq(col("arma22_phi1"), col("arma22_phi2"),
-        col("arma22_theta1"), col("arma22_theta2"), col("arma22_sse"),
-        col("step"), col("arima_forecast")): _*)
-  }
+                           keyCols: Seq[String], h: Int): DataFrame =
+    integrated(arma22ForecastFrom(base, keyCols, h), lastLevel, keyCols,
+      "arma22_forecast", "arima_forecast")
+      .select((keyCols ++ Seq("arma22_phi1", "arma22_phi2", "arma22_theta1",
+        "arma22_theta2", "arma22_sse", "step", "arima_forecast")).map(col): _*)
 
   /** M5 — Croston's method (and the SBA bias-corrected variant):
     * exponential smoothing of the nonzero-demand sizes (z) and the

@@ -1,8 +1,8 @@
 package graft
 
 /** The session-scoped memo registry behind the shared fit tables
-  * (championShared / extShared / extFitShared / smaShared /
-  * sarmaShared): bounded, evictable, and releasing a session's entries
+  * (weeklyShared / championShared / extShared / extFitShared /
+  * smaShared / sarmaShared): bounded, evictable, and releasing a session's entries
   * actually frees its localCheckpointed blocks — the r12 verdict's
   * multi-session-service leak fix (the previous identityHashCode-keyed
   * unbounded maps pinned checkpointed RDDs for the JVM's life). */
@@ -71,13 +71,41 @@ class MemoSpec extends SparkSpec {
     SparkEntry.releaseMemos(s)
   }
 
+  test("q259 then q299 aggregate lineitem to the weekly grain once per session") {
+    val sc = spark.sparkContext
+    val s = spark.newSession()
+    // stages that read a parquet file: lineitem is the only table q259
+    // and q299 read, so each such stage is a pass over it
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries("q259_champion")(s, dir).count()
+      org.apache.spark.sql.GraftSqlBridge.statusJobs(s) // drains the listener bus
+      val q259Scans = scans.get
+      SparkEntry.queries("q299_order_search_ext")(s, dir).count()
+      org.apache.spark.sql.GraftSqlBridge.statusJobs(s)
+      assert(q259Scans >= 1, "q259 must aggregate lineitem")
+      assert(scans.get == q259Scans,
+        s"q299 scanned lineitem again (${scans.get - q259Scans} stages) " +
+          "instead of reading the weekly grain q259 memoized")
+    } finally {
+      sc.removeSparkListener(listener)
+      SparkEntry.releaseMemos(s)
+    }
+  }
+
   test("the registry is bounded: LRU eviction frees the evicted session's " +
     "blocks instead of accumulating for the JVM's life") {
     val sc = spark.sparkContext
     val base = SparkEntry.memoSessionCount
     val basePersisted = sc.getPersistentRDDs.size
     // far past the cap; each session memoizes the sma fit table plus
-    // the extFit bases it rides on (6 checkpointed frames per session)
+    // the weekly frame it rides on (2 checkpointed frames per session)
     val sessions = (1 to 12).map(_ => spark.newSession())
     var perSession = 0
     sessions.zipWithIndex.foreach { case (s, i) =>

@@ -32,16 +32,18 @@ class OrderSearchSpec extends SparkSpec {
     // SSE = 4.4² + 3.16² + 3.936² = 19.36 + 9.9856 + 15.492096
     val df = series(("a", 1, 10.0), ("a", 2, 14.0), ("a", 3, 8.0),
       ("a", 4, 12.0), ("a", 5, 16.0))
-    val out = SequentialKernels.fitArma21Full(df, Seq("k"), Seq(col("t")), "v",
-      phi1Grid = Seq(0.5), phi2Grid = Seq(0.3), thetaGrid = Seq(0.4))
-      .select("arma2_sse", "arma2_neff", "arma2_eps_last",
-        "arma2_xc_last", "arma2_xc_prev")
-      .as[(Double, Double, Double, Double, Double)].head()
     val expSse = 4.4 * 4.4 + 3.16 * 3.16 + 3.936 * 3.936
-    assert(math.abs(out._1 - expSse) < 1e-4)
-    assert(out._2 == 3.0) // three SSE terms (t = 3..5)
-    assert(math.abs(out._3 - 3.936) < 1e-12)
-    assert(out._4 == 4.0 && out._5 == 0.0)
+    for (arrayFits <- Seq(true, false)) {
+      val out = SequentialKernels.fitArma21Full(inFitsShape(df, arrayFits), Seq("k"),
+          Seq(col("t")), "v", phi1Grid = Seq(0.5), phi2Grid = Seq(0.3), thetaGrid = Seq(0.4))
+        .select("arma2_sse", "arma2_neff", "arma2_eps_last",
+          "arma2_xc_last", "arma2_xc_prev")
+        .as[(Double, Double, Double, Double, Double)].head()
+      assert(math.abs(out._1 - expSse) < 1e-4, s"arrayFits=$arrayFits")
+      assert(out._2 == 3.0, s"arrayFits=$arrayFits") // three SSE terms (t = 3..5)
+      assert(math.abs(out._3 - 3.936) < 1e-12, s"arrayFits=$arrayFits")
+      assert(out._4 == 4.0 && out._5 == 0.0, s"arrayFits=$arrayFits")
+    }
   }
 
   test("ARMA(2,1) grid pick is deterministic and per-series independent") {
@@ -81,19 +83,21 @@ class OrderSearchSpec extends SparkSpec {
     // SSE = 4.4² + 3.16² + 5.256²
     val df = series(("a", 1, 10.0), ("a", 2, 14.0), ("a", 3, 8.0),
       ("a", 4, 12.0), ("a", 5, 16.0))
-    val out = SequentialKernels.fitArma22Full(df, Seq("k"), Seq(col("t")), "v",
-      phi1Grid = Seq(0.5), phi2Grid = Seq(0.3),
-      theta1Grid = Seq(0.4), theta2Grid = Seq(0.3))
-      .select("arma22_sse", "arma22_neff", "arma22_eps_last",
-        "arma22_eps_prev", "arma22_xc_last", "arma22_xc_prev")
-      .as[(Double, Double, Double, Double, Double, Double)].head()
     val e5 = 4.0 - 0.3 * (-4.0) - 0.4 * 3.16 - 0.3 * (-4.4)
     val expSse = 4.4 * 4.4 + 3.16 * 3.16 + e5 * e5
-    assert(math.abs(out._1 - expSse) < 1e-4)
-    assert(out._2 == 3.0) // three SSE terms (t = 3..5)
-    assert(math.abs(out._3 - e5) < 1e-12)
-    assert(math.abs(out._4 - 3.16) < 1e-12)
-    assert(out._5 == 4.0 && out._6 == 0.0)
+    for (arrayFits <- Seq(true, false)) {
+      val out = SequentialKernels.fitArma22Full(inFitsShape(df, arrayFits), Seq("k"),
+          Seq(col("t")), "v", phi1Grid = Seq(0.5), phi2Grid = Seq(0.3),
+          theta1Grid = Seq(0.4), theta2Grid = Seq(0.3))
+        .select("arma22_sse", "arma22_neff", "arma22_eps_last",
+          "arma22_eps_prev", "arma22_xc_last", "arma22_xc_prev")
+        .as[(Double, Double, Double, Double, Double, Double)].head()
+      assert(math.abs(out._1 - expSse) < 1e-4, s"arrayFits=$arrayFits")
+      assert(out._2 == 3.0, s"arrayFits=$arrayFits") // three SSE terms (t = 3..5)
+      assert(math.abs(out._3 - e5) < 1e-12, s"arrayFits=$arrayFits")
+      assert(math.abs(out._4 - 3.16) < 1e-12, s"arrayFits=$arrayFits")
+      assert(out._5 == 4.0 && out._6 == 0.0, s"arrayFits=$arrayFits")
+    }
   }
 
   test("ARMA(2,2) with θ2 = 0 grid degenerates to the ARMA(2,1) fit") {

@@ -65,10 +65,13 @@ class SequentialKernelsSpec extends SparkSpec {
       th -> sse
     }
     val (expTh, expSse) = sses.minBy { case (th, s) => (s, th) }
-    val out = SequentialKernels.fitMa1(df, Seq("k"), Seq(col("t")), "v")
-      .select("ma1_theta", "ma1_sse").as[(Double, Double)].head()
-    assert(out._1 == expTh)
-    assert(math.abs(out._2 - expSse) < 1e-4)
+    for (arrayFits <- Seq(true, false)) {
+      val out = SequentialKernels.fitMa1(inFitsShape(df, arrayFits), Seq("k"),
+          Seq(col("t")), "v")
+        .select("ma1_theta", "ma1_sse").as[(Double, Double)].head()
+      assert(out._1 == expTh, s"arrayFits=$arrayFits")
+      assert(math.abs(out._2 - expSse) < 1e-4, s"arrayFits=$arrayFits")
+    }
     assert(expTh == 0.4, s"planted theta should win the grid, SSEs: $sses")
   }
 
@@ -108,11 +111,14 @@ class SequentialKernelsSpec extends SparkSpec {
       (ph, th) -> sse
     }
     val ((expPh, expTh), expSse) = sses.minBy { case ((p, t), s) => (s, p, t) }
-    val out = SequentialKernels.fitArma11(df, Seq("k"), Seq(col("t")), "v")
-      .select("arma_phi", "arma_theta", "arma_sse")
-      .as[(Double, Double, Double)].head()
-    assert((out._1, out._2) == ((expPh, expTh)))
-    assert(math.abs(out._3 - expSse) < 1e-4)
+    for (arrayFits <- Seq(true, false)) {
+      val out = SequentialKernels.fitArma11(inFitsShape(df, arrayFits), Seq("k"),
+          Seq(col("t")), "v")
+        .select("arma_phi", "arma_theta", "arma_sse")
+        .as[(Double, Double, Double)].head()
+      assert((out._1, out._2) == ((expPh, expTh)), s"arrayFits=$arrayFits")
+      assert(math.abs(out._3 - expSse) < 1e-4, s"arrayFits=$arrayFits")
+    }
     assert((expPh, expTh) == ((0.5, 0.4)),
       s"planted pair should win the grid, SSEs: $sses")
   }
@@ -140,33 +146,33 @@ class SequentialKernelsSpec extends SparkSpec {
     // same last non-null centered value, not the emitted row's own
     // (NULL) centered value. μ still counts the NULL row per the house
     // count(*) convention: (10+14+8+12)/5 = 8.8.
-    val trail = series(("a", 1, 10.0), ("a", 2, 14.0), ("a", 3, 8.0), ("a", 4, 12.0),
-      ("a", 5, null))
     val xcLast = 12.0 - 8.8   // last non-null value, centered
     val xcPrev = 8.0 - 8.8
-    val t11 = SequentialKernels.fitArma11Full(trail, Seq("k"), Seq(col("t")), "v")
-      .select("arma_xc_last").as[java.lang.Double].head()
-    assert(t11 != null && math.abs(t11 - xcLast) < 1e-12)
-    val t21 = SequentialKernels.fitArma21Full(trail, Seq("k"), Seq(col("t")), "v")
-      .select("arma2_xc_last", "arma2_xc_prev")
-      .as[(java.lang.Double, java.lang.Double)].head()
-    assert(t21._1 != null && math.abs(t21._1 - xcLast) < 1e-12)
-    assert(math.abs(t21._2 - xcPrev) < 1e-12)
-    val t22 = SequentialKernels.fitArma22Full(trail, Seq("k"), Seq(col("t")), "v")
-      .select("arma22_xc_last", "arma22_xc_prev")
-      .as[(java.lang.Double, java.lang.Double)].head()
-    assert(t22._1 != null && math.abs(t22._1 - xcLast) < 1e-12)
-    assert(math.abs(t22._2 - xcPrev) < 1e-12)
-    // and the forecast built on the trailing-NULL fit is non-null
-    val fc = SequentialKernels.arma11Forecast(trail, Seq("k"), Seq(col("t")), "v", 2)
-      .select("arma_forecast").as[java.lang.Double].collect()
-    assert(fc.nonEmpty && fc.forall(_ != null))
+    for (arrayFits <- Seq(true, false)) {
+      val trail = inFitsShape(series(("a", 1, 10.0), ("a", 2, 14.0), ("a", 3, 8.0),
+        ("a", 4, 12.0), ("a", 5, null)), arrayFits)
+      val t11 = SequentialKernels.fitArma11Full(trail, Seq("k"), Seq(col("t")), "v")
+        .select("arma_xc_last").as[java.lang.Double].head()
+      assert(t11 != null && math.abs(t11 - xcLast) < 1e-12, s"arrayFits=$arrayFits")
+      val t21 = SequentialKernels.fitArma21Full(trail, Seq("k"), Seq(col("t")), "v")
+        .select("arma2_xc_last", "arma2_xc_prev")
+        .as[(java.lang.Double, java.lang.Double)].head()
+      assert(t21._1 != null && math.abs(t21._1 - xcLast) < 1e-12, s"arrayFits=$arrayFits")
+      assert(math.abs(t21._2 - xcPrev) < 1e-12, s"arrayFits=$arrayFits")
+      val t22 = SequentialKernels.fitArma22Full(trail, Seq("k"), Seq(col("t")), "v")
+        .select("arma22_xc_last", "arma22_xc_prev")
+        .as[(java.lang.Double, java.lang.Double)].head()
+      assert(t22._1 != null && math.abs(t22._1 - xcLast) < 1e-12, s"arrayFits=$arrayFits")
+      assert(math.abs(t22._2 - xcPrev) < 1e-12, s"arrayFits=$arrayFits")
+      // and the forecast built on the trailing-NULL fit is non-null
+      val fc = SequentialKernels.arma11Forecast(trail, Seq("k"), Seq(col("t")), "v", 2)
+        .select("arma_forecast").as[java.lang.Double].collect()
+      assert(fc.nonEmpty && fc.forall(_ != null), s"arrayFits=$arrayFits")
+    }
   }
 
   test("MA(3) grid fit matches a local replay of the 27-triple recursion") {
     val vals = Seq(10.0, 14.0, 8.0, 12.0, 6.0, 15.0, 9.0, 11.0)
-    val df = series(vals.zipWithIndex.map {
-      case (v, i) => ("a", i + 1, java.lang.Double.valueOf(v)) }: _*)
     val mu = vals.sum / vals.size
     val xc = vals.map(_ - mu)
     val grid = Seq(-0.4, 0.0, 0.4)
@@ -181,21 +187,25 @@ class SequentialKernelsSpec extends SparkSpec {
     }
     val ((e1, e2, e3), expSse) =
       sses.minBy { case ((a, b, c), ss) => (ss, a, b, c) }
-    val fit = SequentialKernels.fitMa3Full(df, Seq("k"), Seq(col("t")), "v")
-      .select("ma3_theta1", "ma3_theta2", "ma3_theta3", "ma3_sse")
-      .as[(Double, Double, Double, Double)].head()
-    assert((fit._1, fit._2, fit._3) == ((e1, e2, e3)), sses.toString)
-    assert(math.abs(fit._4 - expSse) < 1e-4)
-    // constant series: every triple ties at SSE 0 → the smallest wins
-    // and the forecast is flat at the mean
-    val const = series((1 to 6).map(t =>
-      ("a", t, java.lang.Double.valueOf(5.0))): _*)
-    val base = SequentialKernels.fitMa3Full(const, Seq("k"), Seq(col("t")), "v")
-    assert(base.select("ma3_theta1", "ma3_theta2", "ma3_theta3")
-      .as[(Double, Double, Double)].head() == ((-0.4, -0.4, -0.4)))
-    val fc = SequentialKernels.ma3ForecastFrom(base, Seq("k"), h = 5)
-      .select("ma3_forecast").as[Double].collect().toSeq
-    assert(fc == Seq.fill(5)(5.0))
+    for (arrayFits <- Seq(true, false)) {
+      val df = inFitsShape(series(vals.zipWithIndex.map {
+        case (v, i) => ("a", i + 1, java.lang.Double.valueOf(v)) }: _*), arrayFits)
+      val fit = SequentialKernels.fitMa3Full(df, Seq("k"), Seq(col("t")), "v")
+        .select("ma3_theta1", "ma3_theta2", "ma3_theta3", "ma3_sse")
+        .as[(Double, Double, Double, Double)].head()
+      assert((fit._1, fit._2, fit._3) == ((e1, e2, e3)), s"arrayFits=$arrayFits $sses")
+      assert(math.abs(fit._4 - expSse) < 1e-4, s"arrayFits=$arrayFits")
+      // constant series: every triple ties at SSE 0 → the smallest wins
+      // and the forecast is flat at the mean
+      val const = inFitsShape(series((1 to 6).map(t =>
+        ("a", t, java.lang.Double.valueOf(5.0))): _*), arrayFits)
+      val base = SequentialKernels.fitMa3Full(const, Seq("k"), Seq(col("t")), "v")
+      assert(base.select("ma3_theta1", "ma3_theta2", "ma3_theta3")
+        .as[(Double, Double, Double)].head() == ((-0.4, -0.4, -0.4)), s"arrayFits=$arrayFits")
+      val fc = SequentialKernels.ma3ForecastFrom(base, Seq("k"), h = 5)
+        .select("ma3_forecast").as[Double].collect().toSeq
+      assert(fc == Seq.fill(5)(5.0), s"arrayFits=$arrayFits")
+    }
   }
 
   test("EWM variance follows West's online recursion, hand-computed") {
@@ -354,6 +364,8 @@ class SequentialKernelsSpec extends SparkSpec {
 
   test("grid fits: array form ≡ fold form bit-for-bit on an adversarial frame " +
     "(r18 one-aggregate rewrite, conf toggle)") {
+    // both cell-feeding shapes of the one kernel against the
+    // streaming-fold reference (SequentialKernelsReference)
     // every parity-relevant regime in one frame: a normal multi-week
     // series with negatives and an interior NULL (state carries over),
     // a trailing-NULL series (xc_last from state, not the last row), a
@@ -393,28 +405,35 @@ class SequentialKernelsSpec extends SparkSpec {
             if (signedZero) dd else dd + 0.0)
           case other => other
         }).toSeq)
-    def both(build: => org.apache.spark.sql.DataFrame, signedZero: Boolean = true): Unit = {
-      val array = normalized(build, signedZero) // default: array form
-      val prev = spark.conf.getOption(SequentialKernels.ArrayFitsConf)
-      spark.conf.set(SequentialKernels.ArrayFitsConf, "false")
-      val fold = try normalized(build, signedZero) finally prev match {
-        case Some(v) => spark.conf.set(SequentialKernels.ArrayFitsConf, v)
-        case None    => spark.conf.unset(SequentialKernels.ArrayFitsConf)
+    def both(build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+             reference: org.apache.spark.sql.DataFrame,
+             signedZero: Boolean = true): Unit = {
+      val ref = normalized(reference, signedZero)
+      assert(ref._2.nonEmpty && !ref._2.exists(_.head == null)) // null key dropped
+      for (arrayFits <- Seq(true, false)) {
+        val out = normalized(build(inFitsShape(df, arrayFits)), signedZero)
+        assert(out._1 == ref._1, s"arrayFits=$arrayFits") // names + types
+        assert(out._2 == ref._2, s"arrayFits=$arrayFits") // exact values, NULLs included
       }
-      assert(array._1 == fold._1) // names + types (nullability is free)
-      assert(array._2 == fold._2) // exact values, NULL placement included
-      assert(array._2.nonEmpty && !array._2.exists(_.head == null)) // null key dropped
     }
-    both(SequentialKernels.fitMa1Full(df, k, o, "v"))
-    both(SequentialKernels.fitMa3Full(df, k, o, "v"))
-    both(SequentialKernels.fitArma11Full(df, k, o, "v"))
-    both(SequentialKernels.fitArma21Full(df, k, o, "v"))
-    both(SequentialKernels.fitArma22Full(df, k, o, "v"))
-    // a public grid holding −0.0 next to 0.0: the fold's window orders
-    // them equal; the array form normalizes −0.0 to 0.0, so it picks the
-    // same winner up to the sign of zero and never reports −0.0
+    val R = SequentialKernelsReference
+    val (ma1Grid, phiGrid, thetaGrid, lag2Grid) =
+      (Seq(-0.8, -0.4, 0.0, 0.4, 0.8), Seq(-0.5, 0.0, 0.5, 0.9), Seq(-0.4, 0.0, 0.4),
+        Seq(-0.3, 0.0, 0.3))
+    both(SequentialKernels.fitMa1Full(_, k, o, "v"), R.fitMa1FullFold(df, k, o, "v", ma1Grid))
+    both(SequentialKernels.fitMa3Full(_, k, o, "v"), R.fitMa3FullFold(df, k, o, "v", thetaGrid))
+    both(SequentialKernels.fitArma11Full(_, k, o, "v"),
+      R.fitArma11FullFold(df, k, o, "v", phiGrid, thetaGrid))
+    both(SequentialKernels.fitArma21Full(_, k, o, "v"),
+      R.fitArma21FullFold(df, k, o, "v", phiGrid, lag2Grid, thetaGrid))
+    both(SequentialKernels.fitArma22Full(_, k, o, "v"),
+      R.fitArma22FullFold(df, k, o, "v", phiGrid, lag2Grid, thetaGrid, lag2Grid))
+    // a public grid holding −0.0 next to 0.0: the reference's window
+    // orders them equal; the kernel normalizes −0.0 to 0.0, so it picks
+    // the same winner up to the sign of zero and never reports −0.0
     val zeroGrid = Seq(0.5, -0.0, 0.0)
-    both(SequentialKernels.fitMa1Full(df, k, o, "v", zeroGrid), signedZero = false)
+    both(SequentialKernels.fitMa1Full(_, k, o, "v", zeroGrid),
+      R.fitMa1FullFold(df, k, o, "v", zeroGrid), signedZero = false)
     val thetas = SequentialKernels.fitMa1Full(df, k, o, "v", zeroGrid)
       .collect().map(_.getAs[Double]("ma1_theta"))
     assert(thetas.contains(0.0))
@@ -437,5 +456,8 @@ class SequentialKernelsSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!plan(other.createDataFrame(rows)).contains("graft_grid_fit_"))
     assert(plan(spark.createDataFrame(rows)).contains("graft_grid_fit_"))
+    // the streaming shape picks the winner inside the kernel: no window
+    assert(!SequentialKernels.fitArma21Full(other.createDataFrame(rows).toDF("k", "t", "v"),
+      Seq("k"), Seq(col("t")), "v").queryExecution.executedPlan.toString.contains("Window"))
   }
 }

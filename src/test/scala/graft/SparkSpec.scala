@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -8,6 +8,13 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session shared across suites
+
+  /** `df` for a grid fit fed in the given shape
+    * (`SequentialKernels.ArrayFitsConf`): itself for the packed-array
+    * default, else its rows in a session set to the streaming fold. */
+  def inFitsShape(df: DataFrame, arrayFits: Boolean): DataFrame =
+    if (arrayFits) df
+    else SparkSpec.streamingFits.createDataFrame(df.collectAsList(), df.schema)
 }
 
 object SparkSpec {
@@ -21,4 +28,11 @@ object SparkSpec {
     .config("spark.sql.ansi.enabled", "false")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** A session of [[session]] whose grid fits stream their cells. */
+  lazy val streamingFits: SparkSession = {
+    val s = session.newSession()
+    s.conf.set(graft.seq.SequentialKernels.ArrayFitsConf, "false")
+    s
+  }
 }
