@@ -16,10 +16,11 @@ import graft.functions.Funcs.r
   * solved in closed form from nine sufficient sums via Cramer's rule
   * on the 3×3 normal equations. Execution shape: [[fitted]] takes the
   * lags and the sums from one series window (the sums as unbounded
-  * window aggregates, so no coefficient table is joined back); the
-  * forecasters collapse each series with one map-side-combinable
-  * aggregate. No iteration, no driver loop, no per-group
-  * materialization.
+  * window aggregates, so no coefficient table is joined back); every
+  * forecaster reads the coefficients, the last two values and the
+  * residual sums off that same pass in one [[SeriesTail]] aggregate
+  * per series, with no join, no checkpoint and no second order. No
+  * iteration, no driver loop, no per-group materialization.
   *
   * Determinism convention (the q213 Theta recipe, unified here in r10):
   * every value quantizes to the 1e-4 grid once (round(x·1e4) as a
@@ -94,18 +95,6 @@ object Ar {
       when(ok, detP2 / det).otherwise(flat)).map(c => r(c))
   }
 
-  /** Key-grain coefficient table: (keys..., ar_c, ar_phi1, ar_phi2).
-    * Series with no regression rows are absent. */
-  private def coefs(indexed: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val names = (0 until 9).map(i => s"__s$i")
-    val sums = rawSums(col("__y"), col("__l1"), col("__l2"), lit(true)).zip(names)
-      .map { case (c, n) => c.as(n) }
-    indexed.filter(col("__l2").isNotNull).groupBy(keyCols.map(col): _*)
-      .agg(sums.head, sums.tail: _*)
-      .select(keyCols.map(col) ++ solve(names.map(col)).zip(coefCols("ar_"))
-        .map { case (c, n) => c.as(n) }: _*)
-  }
-
   /** The coefficient column names of a fit prefix. */
   private def coefCols(prefix: String): Seq[String] =
     Seq("c", "phi1", "phi2").map(prefix + _)
@@ -129,13 +118,43 @@ object Ar {
     * does not depend on the order a window or a partial aggregate adds
     * in: the coefficients equal the grouped form's bit for bit. */
   def fitted(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
-             valueCol: String): DataFrame = {
+             valueCol: String): DataFrame =
+    fitRows(df, keyCols, ord, valueCol)
+      .drop(sumCols("ar_") ++ Seq("__y", "__l1", "__l2"): _*)
+
+  /** [[fitted]]'s window pass with its working columns attached: `__y`
+    * and its lags `__l1`/`__l2`, the nine sums, the coefficients and
+    * `ar_fitted` on every row. */
+  private def fitRows(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
+                      valueCol: String): DataFrame = {
     val (y, l1, l2) = (col("__y"), col("__l1"), col("__l2"))
     indexedLags(df, keyCols, ord, valueCol)
       .select(col("*") +: fitSums(keyCols, ord, y, l1, l2, "ar_"): _*)
       .select(col("*") +: fitCoefs("ar_"): _*)
       .select(col("*"), fittedOf(l1, l2, "ar_"))
-      .drop(sumCols("ar_") ++ Seq("__y", "__l1", "__l2"): _*)
+  }
+
+  /** One row per series the fit regresses (at least one regression
+    * row): keys..., `__count`, ar_c/ar_phi1/ar_phi2 from [[fitted]]'s
+    * window sums, the last two values `__xn` and `__xn1`, the exact sum
+    * of squared residuals of the rounded fit `__ss` and their count
+    * `__nfit`, then the `tail` columns ([[SeriesTail]]) — one aggregate
+    * over the fit's own window pass. `valueCol` may be NULL on a
+    * series' leading rows (a differenced series): such a row is no
+    * regression row and, as the last two values are, never read. */
+  private def lastState(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
+                        valueCol: String, tail: Seq[Column] = Nil): DataFrame = {
+    val (y, fit) = (col("__y"), col("ar_fitted"))
+    // residuals are 4dp-grid (fit is rounded), so their squares live on
+    // the 1e-8 grid: sum exact micro²-longs and divide back once — a raw
+    // double sum would be partial-agg-order dependent (the Theta
+    // knife-edge class)
+    SeriesTail.of(SeriesTail.indexed(fitRows(df, keyCols, ord, valueCol), keyCols, ord),
+      keyCols, coefCols("ar_").map(c => SeriesTail.last(col(c)).as(c)) ++ Seq(
+        SeriesTail.last(y).as("__xn"), SeriesTail.last(y, lit(1)).as("__xn1"),
+        graft.functions.Funcs.microSumSq(y - fit).as("__ss"), count(fit).as("__nfit")) ++
+        tail)
+      .filter(col("__nfit") >= 1)
   }
 
   private def sumCols(prefix: String): Seq[String] = (0 until 9).map(i => s"__${prefix}s$i")
@@ -186,25 +205,19 @@ object Ar {
     *   f_1 = c + φ1·x_n + φ2·x_{n−1}
     *   f_s = c + φ1·f_{s−1} + φ2·f_{s−2}   (forecasts feed back as lags)
     * each step rounded before feeding forward. Series too short to fit
-    * (no coefficient row) or shorter than 2 observations are dropped.
-    * The unrolled chain is pure column arithmetic at the key grain —
-    * h small (forecast horizons), so no exchange beyond the fit's. */
+    * (no regression row) are dropped. The unrolled chain is pure column
+    * arithmetic at the key grain — h small (forecast horizons), so no
+    * exchange beyond the fit's. */
   def forecast(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
                valueCol: String, h: Int): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
-    val key = keyCols.map(col)
-    val indexed = indexedLags(df, keyCols, ord, valueCol)
-    val w = Window.partitionBy(key: _*).orderBy(ord.map(_.desc): _*)
-    val lastVals = indexed.withColumn("__rd", row_number().over(w))
-      .groupBy(key: _*)
-      .agg(max(when(col("__rd") === 1, col("__y"))).as("__xn"),
-        max(when(col("__rd") === 2, col("__y"))).as("__xn1"))
-      .filter(col("__xn1").isNotNull)
-    val base = lastVals.join(coefs(indexed, keyCols), keyCols)
-    val steps = forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"),
-      col("__xn"), col("__xn1"), h)
-    SequentialKernels.stepRows(base, keyCols, steps, "ar_forecast")
+    SequentialKernels.stepRows(lastState(df, keyCols, ord, valueCol), keyCols,
+      steps(h), "ar_forecast")
   }
+
+  /** [[forecastSteps]] over a [[lastState]] row. */
+  private def steps(h: Int): Vector[Column] =
+    forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"), col("__xn"), col("__xn1"), h)
 
   /** h-step forecasts WITH prediction intervals — the engine-side
     * equivalent of the reference's `predict_with_intervals`
@@ -219,38 +232,18 @@ object Ar {
     * convention) and z a literal constant (default the 95% normal
     * quantile). ψ and the cumulative ψ² sum unroll as rounded column
     * arithmetic next to the forecast fold, so the recursive-CTE oracle
-    * replays the identical chain. Output grain: (keys, step,
-    * ar_forecast, ar_lo, ar_hi). */
+    * replays the identical chain. σ², the coefficients and the last
+    * two values come from the fit's one per-series aggregate
+    * ([[lastState]]). Output grain: (keys, step, ar_forecast, ar_lo,
+    * ar_hi). */
   def forecastIntervals(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
                         valueCol: String, h: Int,
                         z: Double = 1.959964): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
     val key = keyCols.map(col)
-    // three consumers (coefs, residual variance, last values) would
-    // each re-scan the source; checkpoint the lagged series once — the
-    // house pattern for multi-consumer grains (Dsir/OOF-encode)
-    val indexed = indexedLags(df, keyCols, ord, valueCol).localCheckpoint(true)
-    val cf = coefs(indexed, keyCols)
-    val resid = indexed.join(cf, keyCols)
-      .withColumn("__fit", when(col("__l2").isNotNull,
-        r(col("ar_c") + col("ar_phi1") * col("__l1") + col("ar_phi2") * col("__l2"))))
-      .filter(col("__fit").isNotNull)
-    // residuals are 4dp-grid (fit is rounded), so their squares live on
-    // the 1e-8 grid: sum exact micro²-longs in decimal and divide back
-    // once — a raw double avg would be partial-agg-order dependent (the
-    // Theta knife-edge class)
-    val sig = resid.groupBy(key: _*)
-      .agg(r(graft.functions.Funcs.microSumSq(col("__y") - col("__fit"))
-        / count(lit(1))).as("__s2"))
-    val w = Window.partitionBy(key: _*).orderBy(ord.map(_.desc): _*)
-    val lastVals = indexed.withColumn("__rd", row_number().over(w))
-      .groupBy(key: _*)
-      .agg(max(when(col("__rd") === 1, col("__y"))).as("__xn"),
-        max(when(col("__rd") === 2, col("__y"))).as("__xn1"))
-      .filter(col("__xn1").isNotNull)
-    val base = lastVals.join(cf, keyCols).join(sig, keyCols)
-    val steps = forecastSteps(col("ar_c"), col("ar_phi1"), col("ar_phi2"),
-      col("__xn"), col("__xn1"), h)
+    val base = lastState(df, keyCols, ord, valueCol)
+      .withColumn("__s2", r(col("__ss") / col("__nfit")))
+    val steps = this.steps(h)
     // ψ weights and the left-folded cumulative ψ² sums, both rounded
     // per step exactly as the oracle's recursive CTE carries them
     val psis = (1 until h).foldLeft(Vector[Column](lit(1.0))) { (acc, j) =>
@@ -287,22 +280,21 @@ object Ar {
   def forecastSeasonalIntegrated(df: DataFrame, keyCols: Seq[String],
                                  ord: Seq[Column], valueCol: String,
                                  m: Int, h: Int): DataFrame = {
+    val bases = (1 to h).map(s => col(s"__b$s"))
+    SequentialKernels.stepRows(seasonalState(df, keyCols, ord, valueCol, m, h), keyCols,
+      steps(h).zip(bases).map { case (f, b) => r(b + f) }, "sari_forecast")
+  }
+
+  /** The seasonal ARI's [[lastState]] row: the AR(2) fit on the lag-m
+    * differences, with the season bases `__b1`..`__bh` (y_{n−m+s}) read
+    * by the same aggregate. The extended order search scores its sari
+    * member from the same row. */
+  private[seq] def seasonalState(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
+                                 valueCol: String, m: Int, h: Int): DataFrame = {
     require(m >= 1, "seasonal period must be at least 1")
     require(h >= 1 && h <= m, "horizon must lie in [1, m] so bases are observed")
-    val key = keyCols.map(col)
-    val w = Window.partitionBy(key: _*).orderBy(ord: _*)
-    val wd = Window.partitionBy(key: _*).orderBy(ord.map(_.desc): _*)
-    val dy = df.withColumn("__yraw", col(valueCol).cast("double"))
-      .withColumn("__dy", col("__yraw") - lag(col("__yraw"), m).over(w))
-    val bases = dy.withColumn("__rd", row_number().over(wd))
-      .filter(col("__rd") <= m && col("__rd") > m - h)
-      .select(key ++ Seq((lit(m) - col("__rd") + 1).cast("long").as("step"),
-        col("__yraw").as("__base")): _*)
-    val diffed = dy.filter(col("__dy").isNotNull).drop("__yraw")
-    forecast(diffed, keyCols, ord, "__dy", h)
-      .join(bases, keyCols :+ "step")
-      .withColumn("sari_forecast", r(col("__base") + col("ar_forecast")))
-      .select(key ++ Seq(col("step"), col("sari_forecast")): _*)
+    lastState(SequentialKernels.diffs(df, keyCols, ord, valueCol, m, "__dy"), keyCols, ord,
+      "__dy", SeriesTail.bases(col(valueCol).cast("double"), lit(m), h))
   }
 
   /** ARI(2,1): the d=1 member of the family (reference fits
@@ -315,17 +307,17 @@ object Ar {
     *
     * The cumulative sum runs in step order inside one key partition
     * (both engines left-fold the same rounded diff forecasts, so the
-    * IEEE chain is identical). Series with fewer than 2 differences
-    * (3 observations) are dropped, matching the AR fit's own support
-    * rule on the differenced series. Pure composition: one extra lag
-    * window for the differencing, everything else rides the AR fit's
-    * exchanges. */
+    * IEEE chain is identical). Series the AR fit cannot regress on the
+    * differences are dropped, its own support rule. Pure composition:
+    * one extra lag window for the differencing, and the last level y_n
+    * is read by the fit's own aggregate. */
   def forecastIntegrated(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
                          valueCol: String, h: Int): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
-    val (diffed, lastLevel) = SequentialKernels.firstDiffs(df, keyCols, ord, valueCol)
-    SequentialKernels.integrated(forecast(diffed, keyCols, ord, "__dy", h), lastLevel,
-      keyCols, "ar_forecast", "ari_forecast")
+    val base = lastState(SequentialKernels.diffs(df, keyCols, ord, valueCol, 1, "__dy"),
+      keyCols, ord, "__dy", Seq(SeriesTail.last(col(valueCol).cast("double")).as("__yn")))
+    SequentialKernels.integrated(SequentialKernels.stepRows(base, keyCols :+ "__yn", steps(h),
+      "ar_forecast"), keyCols, "ar_forecast", "ari_forecast")
       .select((keyCols ++ Seq("step", "ari_forecast")).map(col): _*)
   }
 }

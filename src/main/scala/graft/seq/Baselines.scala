@@ -1,7 +1,6 @@
 package graft.seq
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Funcs.r
 
@@ -15,14 +14,21 @@ import graft.functions.Funcs.r
   * fixed-parameter model in src/models/arima_temporal.py:333-336), and
   * MASE (q210) scales by exactly the naive error this suite produces.
   *
-  * Fully relational: one ordered window indexes each series, one
-  * aggregate collapses it to (first, last, mean, n), the h steps
-  * explode map-side, and the seasonal lookup is ONE keyed join back to
-  * the indexed frame (left — series shorter than the period fall back
-  * to naive). Two series-key shuffles plus a dimension-sized join; no
-  * recursion, no state.
+  * Fully relational: one ordered window indexes each series, and one
+  * [[SeriesTail]] aggregate collapses it to (first, last, mean, n) and
+  * the seasonal lookup — each step's value one period back, NULL where
+  * the series is shorter than the period, so that step falls back to
+  * naive. The h steps explode map-side. One series-key shuffle; no
+  * join, no recursion, no state.
   */
 object Baselines {
+
+  /** One row per (series, step 1..h): `base`'s `cols`, `step` and
+    * `__sv`, the step's season base `__b<step>` ([[SeriesTail.bases]]). */
+  private def seasonSteps(base: DataFrame, cols: Seq[Column], h: Int): DataFrame =
+    base.select(cols :+ explode(array((1 to h).map(s =>
+      struct(lit(s).as("step"), col(s"__b$s").as("__sv"))): _*)).as("__e"): _*)
+      .select(col("*"), col("__e.step").as("step"), col("__e.__sv").as("__sv"))
 
   /** @return one row per (series, step 1..h):
     *         naive_fc, snaive_fc, drift_fc, mean_fc. */
@@ -31,27 +37,11 @@ object Baselines {
     require(h >= 1 && period >= 1, "h and period must be positive")
     val keyCols = keys.map(col)
     val v = col(value)
-    // the indexed series feeds BOTH the per-series collapse and the
-    // seasonal-lookup join — persist spill-to-disk for the reuse (one
-    // upstream scan), release once the (series × h) result is pinned
-    val idx = df
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(keyCols: _*).orderBy(ord)).cast("long"))
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy(keyCols: _*)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val per = idx.groupBy(keyCols: _*)
-      .agg(max(col("__n")).as("__n"),
-        max(when(col("__rn") === 1, v)).as("__first"),
-        max(when(col("__rn") === col("__n"), v)).as("__last"),
-        r(avg(v)).as("mean_fc"))
-    val steps = per
-      .withColumn("step", explode(array((1 to h).map(lit(_)): _*)))
-      .withColumn("__target",
-        col("__n") - period + (col("step") - 1) % period + 1)
-    val hist = idx.select(keyCols ++
-      Seq(col("__rn").as("__target"), v.as("__sv")): _*)
-    val out = steps
-      .join(hist, keys :+ "__target", "left")
+    val per = SeriesTail.of(SeriesTail.indexed(df, keys, Seq(ord)), keys,
+      Seq(SeriesTail.first(v).as("__first"), SeriesTail.last(v).as("__last"),
+        r(avg(v)).as("mean_fc")) ++ SeriesTail.bases(v, lit(period), h))
+    seasonSteps(per, keyCols ++ Seq(col(SeriesTail.Count).as("__n"), col("__first"),
+      col("__last"), col("mean_fc")), h)
       .select(keyCols ++ Seq(col("step"),
         col("__last").as("naive_fc"),
         coalesce(col("__sv"), col("__last")).as("snaive_fc"),
@@ -60,9 +50,6 @@ object Baselines {
             / (col("__n") - lit(1))))
           .otherwise(col("__last")).as("drift_fc"),
         col("mean_fc")): _*)
-      .localCheckpoint(true)
-    idx.unpersist(blocking = false)
-    out
   }
 
   /** Seasonal naive with a PER-SERIES period — the composition of
@@ -70,9 +57,9 @@ object Baselines {
     * baseline: each series wraps at its own detected period instead of
     * one hardcoded seasonality. `periods` carries one row per series
     * (`keys` + `periodCol`); series missing from it drop (inner join —
-    * detection ran on the same spine). Same two-shuffle shape as
-    * [[forecasts]] plus one keyed join against the (dimension-sized)
-    * period table.
+    * detection ran on the same spine). The period joins onto the series
+    * rows, so the seasonal lookup is read by the same one aggregate as
+    * in [[forecasts]].
     *
     * @return (keys, step 1..h, period, snaive_fc) */
   def seasonalNaiveAdaptive(df: DataFrame, keys: Seq[String], ord: Column,
@@ -81,28 +68,12 @@ object Baselines {
     require(h >= 1, "h must be positive")
     val keyCols = keys.map(col)
     val v = col(value)
-    val idx = df
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(keyCols: _*).orderBy(ord)).cast("long"))
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy(keyCols: _*)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val per = idx.groupBy(keyCols: _*)
-      .agg(max(col("__n")).as("__n"),
-        max(when(col("__rn") === col("__n"), v)).as("__last"))
-    val steps = per
-      .join(periods.select(keyCols :+ col(periodCol).as("period"): _*),
-        keys)
-      .withColumn("step", explode(array((1 to h).map(lit(_)): _*)))
-      .withColumn("__target",
-        col("__n") - col("period") + (col("step") - 1) % col("period") + 1)
-    val hist = idx.select(keyCols ++
-      Seq(col("__rn").as("__target"), v.as("__sv")): _*)
-    val out = steps
-      .join(hist, keys :+ "__target", "left")
+    val withPeriod = df.join(periods.select(keyCols :+ col(periodCol).as("period"): _*), keys)
+    // one period per series, so grouping by it keeps the series groups
+    val per = SeriesTail.of(SeriesTail.indexed(withPeriod, keys, Seq(ord)), keys :+ "period",
+      SeriesTail.last(v).as("__last") +: SeriesTail.bases(v, col("period"), h))
+    seasonSteps(per, keyCols ++ Seq(col("period"), col("__last")), h)
       .select(keyCols ++ Seq(col("step"), col("period"),
         coalesce(col("__sv"), col("__last")).as("snaive_fc")): _*)
-      .localCheckpoint(true)
-    idx.unpersist(blocking = false)
-    out
   }
 }

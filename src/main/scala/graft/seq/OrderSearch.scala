@@ -70,24 +70,22 @@ object OrderSearch {
     * per series with ≥ 3 observations (two differencing passes):
     * d2_theta, d2_sse, d2_neff (the residual count, n − 2), d2_mu (the
     * exact micro-int mean of Δ²x), d2_eps_last, plus y_last (= y_n)
-    * and dy_last (= Δy_n) for the double integration. */
+    * and dy_last (= Δy_n) for the double integration. The residual
+    * count and the last level and difference come from the grid fit's
+    * own per-series aggregate. */
   def arima021Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                    valueCol: String,
                    grid: Seq[Double] = SequentialKernels.Ma1Grid): DataFrame = {
-    val keys = keyCols.map(col)
-    val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val wd = Window.partitionBy(keys: _*).orderBy(ordCols.map(_.desc): _*)
-    val dy = df.withColumn("__yraw", col(valueCol).cast("double"))
-      .withColumn("__dy", col("__yraw") - lag(col("__yraw"), 1).over(w))
-      .withColumn("__d2", col("__dy") - lag(col("__dy"), 1).over(w))
-    val lastRow = dy.withColumn("__rdL", row_number().over(wd))
-      .filter(col("__rdL") === 1)
-      .select(keys ++ Seq(col("__yraw").as("y_last"), col("__dy").as("dy_last")): _*)
-    val d2 = dy.filter(col("__d2").isNotNull)
-    val fit = SequentialKernels.fitMa1Full(d2, keyCols, ordCols, "__d2", grid)
-    val neff = d2.groupBy(keys: _*).agg(count(lit(1)).cast("double").as("d2_neff"))
-    fit.join(neff, keyCols).join(lastRow, keyCols)
-      .select(keys ++ Seq(col("ma1_theta").as("d2_theta"),
+    require(grid.nonEmpty, "theta grid must be non-empty")
+    val dy = SequentialKernels.diffs(SeriesTail.indexed(df, keyCols, ordCols), keyCols,
+      ordCols, valueCol, 1, "__dy")
+    val d2 = SequentialKernels.diffs(dy, keyCols, ordCols, "__dy", 1, "__d2")
+      .filter(col("__d2").isNotNull)
+    val fit = SequentialKernels.gridFit(d2, keyCols, ordCols, "__d2", "ma1",
+      grid.map(Seq(_)), Seq(SeriesTail.last(col(valueCol).cast("double")).as("y_last"),
+        SeriesTail.last(col("__dy")).as("dy_last")))
+    winner(fit, keyCols, SequentialKernels.ma1Cols, "d2_neff")
+      .select(keyCols.map(col) ++ Seq(col("ma1_theta").as("d2_theta"),
         col("ma1_sse").as("d2_sse"), col("d2_neff"),
         col("ma1_mu").as("d2_mu"), col("ma1_eps_last").as("d2_eps_last"),
         col("y_last"), col("dy_last")): _*)
@@ -120,24 +118,38 @@ object OrderSearch {
     * space (pmdarima max_Q; this member is Q = 1, complementing the
     * sari member's seasonal-P side). One row per series with > m
     * observations: sma_theta, sma_sse, sma_neff (the seasonal-diff row
-    * count), sma_mu (the exact micro-int mean of the diffs) and
-    * sma_eps_last. */
+    * count, from the grid fit's own per-series aggregate), sma_mu (the
+    * exact micro-int mean of the diffs) and sma_eps_last. */
   def sarima011Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                     valueCol: String, m: Int,
                     grid: Seq[Double] = SequentialKernels.Ma1Grid): DataFrame = {
-    val keys = keyCols.map(col)
-    val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val sd = df.withColumn("__sd", col(valueCol).cast("double")
-      - lag(col(valueCol).cast("double"), m).over(w))
-      .filter(col("__sd").isNotNull)
-    val fit = SequentialKernels.fitMa1Full(sd, keyCols, ordCols, "__sd", grid)
-    val neff = sd.groupBy(keys: _*).agg(count(lit(1)).cast("double").as("sma_neff"))
-    fit.join(neff, keyCols)
-      .select(keys ++ Seq(col("ma1_theta").as("sma_theta"),
+    require(grid.nonEmpty, "theta grid must be non-empty")
+    winner(SequentialKernels.gridFit(seasonalDiffs(df, keyCols, ordCols, valueCol, m),
+      keyCols, ordCols, "__sd", "ma1", grid.map(Seq(_))), keyCols, SequentialKernels.ma1Cols,
+      "sma_neff")
+      .select(keyCols.map(col) ++ Seq(col("ma1_theta").as("sma_theta"),
         col("ma1_sse").as("sma_sse"), col("sma_neff"),
         col("ma1_mu").as("sma_mu"),
         col("ma1_eps_last").as("sma_eps_last")): _*)
   }
+
+  /** A [[SequentialKernels.gridFit]] frame's keys, its winner columns
+    * (`cols` of `__best` and `__mu`), every further column it carries,
+    * and its fed row count as the double `count`. */
+  private def winner(fit: DataFrame, keyCols: Seq[String],
+                     cols: (Column, Column) => Seq[Column], count: String): DataFrame = {
+    val fitCols = Seq("__best", "__mu", SeriesTail.Count)
+    fit.select(keyCols.map(col) ++ cols(col("__best"), col("__mu")) ++
+      fit.columns.diff(keyCols ++ fitCols).map(col) :+
+      col(SeriesTail.Count).cast("double").as(count): _*)
+  }
+
+  /** The lag-m seasonal differences `__sd` of `valueCol`, each series'
+    * first m rows dropped. */
+  private def seasonalDiffs(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
+                            valueCol: String, m: Int): DataFrame =
+    SequentialKernels.diffs(df, keyCols, ordCols, valueCol, m, "__sd")
+      .filter(col("__sd").isNotNull)
 
   /** SARIMA(1,0,1)(0,1,0)_m fit — the JOINT seasonal member: the
     * ARMA(1,1) CLS (φ, θ) grid fold run on the lag-m seasonal
@@ -147,24 +159,20 @@ object OrderSearch {
     * src/models/arima_temporal.py:224 — P and Q jointly, on the
     * seasonally differenced scale; the sari and sma members cover each
     * leg alone). One row per series with > m observations: sarma_phi,
-    * sarma_theta, sarma_sse, sarma_nsd (the seasonal-diff row count;
-    * the CLS conditions on the first diff, so n_eff = nsd − 1),
-    * sarma_mu (exact micro-int mean of the diffs), sarma_eps_last and
-    * sarma_xc_last (the forecast state). */
+    * sarma_theta, sarma_sse, sarma_nsd (the seasonal-diff row count,
+    * from the grid fit's own per-series aggregate; the CLS conditions
+    * on the first diff, so n_eff = nsd − 1), sarma_mu (exact micro-int
+    * mean of the diffs), sarma_eps_last and sarma_xc_last (the forecast
+    * state). */
   def sarma11Full(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                   valueCol: String, m: Int,
                   phiGrid: Seq[Double] = SequentialKernels.PhiGrid,
                   thetaGrid: Seq[Double] = SequentialKernels.ThetaGrid): DataFrame = {
-    val keys = keyCols.map(col)
-    val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val sd = df.withColumn("__sd", col(valueCol).cast("double")
-      - lag(col(valueCol).cast("double"), m).over(w))
-      .filter(col("__sd").isNotNull)
-    val fit = SequentialKernels.fitArma11Full(sd, keyCols, ordCols, "__sd",
-      phiGrid, thetaGrid)
-    val nsd = sd.groupBy(keys: _*).agg(count(lit(1)).cast("double").as("sarma_nsd"))
-    fit.join(nsd, keyCols)
-      .select(keys ++ Seq(col("arma_phi").as("sarma_phi"),
+    require(phiGrid.nonEmpty && thetaGrid.nonEmpty, "grids must be non-empty")
+    winner(SequentialKernels.gridFit(seasonalDiffs(df, keyCols, ordCols, valueCol, m),
+      keyCols, ordCols, "__sd", "arma11", SequentialKernels.arma11Pairs(phiGrid, thetaGrid)),
+      keyCols, SequentialKernels.arma11Cols, "sarma_nsd")
+      .select(keyCols.map(col) ++ Seq(col("arma_phi").as("sarma_phi"),
         col("arma_theta").as("sarma_theta"),
         col("arma_sse").as("sarma_sse"), col("sarma_nsd"),
         col("arma_mu").as("sarma_mu"),
@@ -204,11 +212,12 @@ object OrderSearch {
                    valueCol: String, h: Int, m: Int): DataFrame = {
     require(h >= 1 && h <= m, s"seasonal base needs 1 <= h <= m (got h=$h m=$m)")
     val keys = keyCols.map(col)
-    val wd = Window.partitionBy(keys: _*).orderBy(ordCols.map(_.desc): _*)
-    df.withColumn("__rd", row_number().over(wd))
-      .filter(col("__rd") <= m && col("__rd") > m - h)
-      .select(keys ++ Seq((lit(m) - col("__rd") + 1).cast("long").as("step"),
-        col(valueCol).cast("double").as("__base")): _*)
+    val steps = (1 to h).map(s => struct(lit(s.toLong).as("step"), col(s"__b$s").as("__base")))
+    SeriesTail.of(SeriesTail.indexed(df, keyCols, ordCols), keyCols,
+      SeriesTail.bases(col(valueCol).cast("double"), lit(m), h))
+      .select(keys ++ Seq(col(SeriesTail.Count), explode(array(steps: _*)).as("__e")): _*)
+      .filter(col(SeriesTail.Count) >= lit(m + 1) - col("__e.step"))
+      .select(keys ++ Seq(col("__e.step").as("step"), col("__e.__base").as("__base")): _*)
   }
 
   /** h-step SARIMA(0,0,1)(0,1,0)_m forecast over an ALREADY-BUILT
@@ -288,8 +297,11 @@ object OrderSearch {
   def extFitBases(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                   valueCol: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val d2base = arima021Full(df, keyCols, ordCols, valueCol).localCheckpoint(true)
-    val (diffed, level) = SequentialKernels.firstDiffs(df, keyCols, ordCols, valueCol)
-    val lastLevel = level.localCheckpoint(true)
+    val diffed = SequentialKernels.diffs(df, keyCols, ordCols, valueCol, 1, "__dy")
+      .filter(col("__dy").isNotNull)
+    val lastLevel = SeriesTail.of(SeriesTail.indexed(df, keyCols, ordCols), keyCols,
+      Seq(SeriesTail.last(col(valueCol).cast("double")).as("__yn")))
+      .select(keyCols.map(col) :+ col("__yn"): _*).localCheckpoint(true)
     val a21base = SequentialKernels.fitArma21Full(diffed, keyCols, ordCols, "__dy")
       .localCheckpoint(true)
     val a22base = SequentialKernels.fitArma22Full(diffed, keyCols, ordCols, "__dy")
@@ -319,7 +331,6 @@ object OrderSearch {
                    lastLevel: DataFrame, smaBase: DataFrame, sarmaBase: DataFrame,
                    df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                    valueCol: String, h: Int = 4, m: Int = 13): (DataFrame, DataFrame) = {
-    val keys = keyCols.map(col)
     val d2Score = scored(d2base.filter(col("d2_neff") >= 2), keyCols,
       "arima021", 2.0, col("d2_sse"), col("d2_neff"))
     val d2Fc = forecasts(arima021ForecastFrom(d2base, keyCols, h), keyCols,
@@ -337,17 +348,9 @@ object OrderSearch {
     // scored exactly like the family's ari member (k = 3, n_eff the
     // regression-row count, ≥ 3 to be identified) — the seasonal-D leg
     // of the reference's search space (pmdarima max_D = 1)
-    val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val sd = df.withColumn("__sd",
-      col(valueCol).cast("double") - lag(col(valueCol).cast("double"), m).over(w))
-      .filter(col("__sd").isNotNull)
-    val sariFit = Ar.fitted(sd, keyCols, ordCols, "__sd")
-      .filter(col("ar_fitted").isNotNull)
-      .withColumn("__res", col("__sd") - col("ar_fitted"))
-      .groupBy(keys: _*).agg(r(graft.functions.Funcs.microSumSq(col("__res"))).as("sse"),
-        count(lit(1)).cast("double").as("n_eff"))
-    val sariScore = scored(sariFit.filter(col("n_eff") >= 3), keyCols,
-      "sari", 3.0, col("sse"), col("n_eff"))
+    val sariScore = scored(Ar.seasonalState(df, keyCols, ordCols, valueCol, m, h)
+      .filter(col("__nfit") >= 3), keyCols, "sari", 3.0, r(col("__ss")),
+      col("__nfit").cast("double"))
     val sariFc = forecasts(Ar.forecastSeasonalIntegrated(df, keyCols, ordCols,
       valueCol, m, h), keyCols, "sari", "sari_forecast")
     // ---- sma — SARIMA(0,0,1)(0,1,0)_m: MA(1) on the lag-m seasonal

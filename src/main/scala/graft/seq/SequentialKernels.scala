@@ -59,20 +59,18 @@ object SequentialKernels {
   private[seq] def arrayFits(df: DataFrame): Boolean =
     df.sparkSession.conf.get(ArrayFitsConf, "true").toBoolean
 
-  /** Shared packed-series stage of the array-form grid fits: one hash
-    * aggregate per series yields the exact micro-int mean (the
-    * centeredOnMu convention — NULL values still count in the divisor)
-    * and the (ordCols…)-sorted (ord…, value) struct array. Null-key
-    * rows drop first: the streaming shape's centeredOnMu INNER join can
-    * never match them, so the packed shape must not emit their group. */
+  /** Shared packed-series stage of the array-form grid fits: one
+    * [[SeriesTail]] aggregate per series yields the row count, the
+    * exact micro-int mean (the centeredOnMu convention — NULL values
+    * still count in the divisor), the (ordCols…)-sorted (ord…, value)
+    * struct array and the `tail` columns. Null-key rows drop first: the
+    * streaming shape's centeredOnMu INNER join can never match them, so
+    * the packed shape must not emit their group. */
   private def packedSeries(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                           valueCol: String): DataFrame = {
-    val keys = keyCols.map(col)
-    df.filter(keys.map(_.isNotNull).reduce(_ && _))
-      .groupBy(keys: _*)
-      .agg(graft.functions.Funcs.microMean(col(valueCol)).as("__mu"),
-        cellsOf(ordCols, valueCol).as("__cells"))
-  }
+                           valueCol: String, tail: Seq[Column]): DataFrame =
+    SeriesTail.of(df.filter(keyCols.map(col(_).isNotNull).reduce(_ && _)), keyCols,
+      Seq(graft.functions.Funcs.microMean(col(valueCol)).as("__mu"),
+        cellsOf(ordCols, valueCol).as("__cells")) ++ tail)
 
   /** The series' (ord…, value) cells sorted by `ordCols`, as an
     * aggregate: the packed input of [[graft.expr.GridFitExpr]], its
@@ -85,27 +83,32 @@ object SequentialKernels {
         col(valueCol).cast("double").as("__v"): _*))))
 
   /** The grid fit of `kind` over `members` ([[graft.expr.GridFitExpr]])
-    * per series: keys…, `__mu` (the exact micro-int series mean) and
-    * the `__best` winner struct, with the cells fed as [[ArrayFitsConf]]
-    * selects. Packed: the kernel runs as an expression over each
-    * series' cell array; `__best` materializes in its own projection
+    * per series: keys…, the fed row count [[SeriesTail.Count]], `__mu`
+    * (the exact micro-int series mean), the `tail` columns (aggregates
+    * over the fed rows, [[SeriesTail]]) and the `__best` winner struct,
+    * all from the fit's one per-series aggregate, with the cells fed as
+    * [[ArrayFitsConf]] selects. Packed: the kernel runs as an expression
+    * over each series' cell array; `__best` materializes in its own projection
     * (CollapseProject keeps multi-referenced non-cheap aliases), so the
     * caller's field extraction never re-runs the fit. Streaming: the
     * mean-centred rows fold into one accumulator per series, whose
     * winner fields are re-packed as `__best` — no explode, no pick
     * window. */
-  private def gridFit(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                      valueCol: String, kind: String,
-                      members: Seq[Seq[Double]]): DataFrame =
+  private[seq] def gridFit(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
+                           valueCol: String, kind: String, members: Seq[Seq[Double]],
+                           tail: Seq[Column] = Nil): DataFrame =
     if (arrayFits(df))
-      packedSeries(df, keyCols, ordCols, valueCol)
+      packedSeries(df, keyCols, ordCols, valueCol, tail)
         .withColumn("__best", graft.expr.GridFitExpr.column(
           col("__cells"), col("__mu"), vIdx = ordCols.size, kind, members))
         .drop("__cells")
     else {
       val fields = graft.expr.GridFitExpr.outType(kind).fieldNames.toSeq
       val fresh = graft.expr.GridFitExpr.accumulatorOf(kind, members)
-      keyedFoldLast[graft.expr.GridFitExpr.Acc](centeredOnMu(df, keyCols, valueCol),
+      val centered = centeredOnMu(df, keyCols, valueCol, tail)
+      // the aggregate's columns, which every row of a series carries
+      val perSeries = centered.columns.filterNot((df.columns :+ "__xc").contains)
+      keyedFoldLast[graft.expr.GridFitExpr.Acc](centered,
         keyCols, ordCols, "__xc", fields.map("__b_" + _)) {
         case (None, st) => st
         case (Some(xc), st) =>
@@ -115,8 +118,8 @@ object SequentialKernels {
       } { st =>
         val w = st.getOrElse(fresh()).winner
         fields.indices.map(i => if (w.isNullAt(i)) None else Some(w.getDouble(i)))
-      }.select(keyCols.map(col) ++ Seq(col("__mu"),
-        struct(fields.map(f => col(s"__b_$f").as(f)): _*).as("__best")): _*)
+      }.select((keyCols ++ perSeries).map(col) :+
+        struct(fields.map(f => col(s"__b_$f").as(f)): _*).as("__best"): _*)
     }
 
   /** Default CLS grids: θ of MA(1); φ (φ₁ of the p = 2 fits); θ of
@@ -136,7 +139,7 @@ object SequentialKernels {
     graft.expr.GridFitExpr.column(cells, mu, nOrd, "arma11", arma11Pairs(
       PhiGrid, ThetaGrid))
 
-  private def arma11Pairs(phiGrid: Seq[Double], thetaGrid: Seq[Double]): Seq[Seq[Double]] =
+  private[seq] def arma11Pairs(phiGrid: Seq[Double], thetaGrid: Seq[Double]): Seq[Seq[Double]] =
     for (p <- phiGrid; t <- thetaGrid) yield Seq(p, t)
 
   /** [[fitMa1Full]]'s columns from a winner struct `b` and the series
@@ -383,9 +386,10 @@ object SequentialKernels {
       keyCols.map(col), ordCols)
 
   /** Shared mean-centering stage of the MA/ARMA fits: the exact
-    * micro-int series mean joined back on the series key (AQE
-    * broadcasts it when small; at scale it co-partitions with the
-    * fold's exchange). The source frame feeds BOTH the mean aggregate
+    * micro-int series mean, with the row count and the `tail` columns
+    * of the same [[SeriesTail]] aggregate, joined back on the series
+    * key (AQE broadcasts it when small; at scale it co-partitions with
+    * the fold's exchange). The source frame feeds BOTH the mean aggregate
     * and the centered series; a localCheckpoint of it was MEASURED a
     * wash and rejected (ArProbe r18: q253 2.60 -> 2.44 s, q255 flat —
     * AQE's runtime exchange reuse already shares the upstream weekly
@@ -393,10 +397,9 @@ object SequentialKernels {
     * lineage replay for a materialize while pinning non-reconstructible
     * blocks; the q262 rejected-alternative discipline). */
   private[graft] def centeredOnMu(df: DataFrame, keyCols: Seq[String],
-                                  valueCol: String): DataFrame = {
-    val keys = keyCols.map(col)
-    val mu = df.groupBy(keys: _*)
-      .agg(graft.functions.Funcs.microMean(col(valueCol)).as("__mu"))
+                                  valueCol: String, tail: Seq[Column] = Nil): DataFrame = {
+    val mu = SeriesTail.of(df, keyCols,
+      graft.functions.Funcs.microMean(col(valueCol)).as("__mu") +: tail)
     df.join(mu, keyCols)
       .withColumn("__xc", col(valueCol).cast("double") - col("__mu"))
   }
@@ -434,7 +437,7 @@ object SequentialKernels {
         (Seq(Some(e)), Some(e))
     }
       .withColumn(fittedCol, col(valueCol) - col(residCol))
-      .drop("__mu", "__xc")
+      .drop("__mu", "__xc", SeriesTail.Count)
   }
 
   /** MA(1) θ fit by conditional least squares over a LITERAL grid —
@@ -563,9 +566,7 @@ object SequentialKernels {
                      thetaGrid: Seq[Double] = ThetaGrid): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
     val base = fitArma11Full(df, keyCols, ordCols, valueCol, phiGrid, thetaGrid)
-    stepRows(base, keyCols, armaSteps(col("arma_mu"), Seq(col("arma_phi")),
-      Seq(col("arma_theta")), Seq(col("arma_xc_last")), Seq(col("arma_eps_last")), h),
-      "arma_forecast")
+    stepRows(base, keyCols, arma11Steps(h), "arma_forecast")
   }
 
   /** ARIMA(1,1,1) by composition (the d = 1 ARMA member — the
@@ -585,46 +586,51 @@ object SequentialKernels {
                        phiGrid: Seq[Double] = PhiGrid,
                        thetaGrid: Seq[Double] = ThetaGrid): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
-    val (diffed, lastLevel) = firstDiffs(df, keyCols, ordCols, valueCol)
-    integrated(arma11Forecast(diffed, keyCols, ordCols, "__dy", h, phiGrid, thetaGrid),
-      lastLevel, keyCols, "arma_forecast", "arima_forecast")
+    require(phiGrid.nonEmpty && thetaGrid.nonEmpty, "grids must be non-empty")
+    val diffed = diffs(SeriesTail.indexed(df, keyCols, ordCols), keyCols, ordCols,
+      valueCol, 1, "__dy").filter(col("__dy").isNotNull)
+    val base = gridFit(diffed, keyCols, ordCols, "__dy", "arma11",
+      arma11Pairs(phiGrid, thetaGrid),
+      Seq(SeriesTail.last(col(valueCol).cast("double")).as("__yn")))
+      .select(keyCols.map(col) ++ arma11Cols(col("__best"), col("__mu")) :+ col("__yn"): _*)
+    integrated(stepRows(base, keyCols :+ "__yn", arma11Steps(h), "arma_forecast"), keyCols,
+      "arma_forecast", "arima_forecast")
       .select((keyCols ++ Seq("step", "arima_forecast")).map(col): _*)
   }
 
-  /** The first-difference base of a d = 1 member: `df` with `__dy` =
-    * y_t − y_{t−1} (each series' first row dropped), and the
-    * last-observed-level frame (keys..., `__yn` = y_n) that
-    * [[integrated]] adds the diff forecasts onto. */
-  private[seq] def firstDiffs(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
-                              valueCol: String): (DataFrame, DataFrame) = {
+  /** [[armaSteps]] over a [[fitArma11Full]] row. */
+  private def arma11Steps(h: Int): Seq[Column] =
+    armaSteps(col("arma_mu"), Seq(col("arma_phi")), Seq(col("arma_theta")),
+      Seq(col("arma_xc_last")), Seq(col("arma_eps_last")), h)
+
+  /** `df` with `outCol` = v_t − v_{t−k} of `valueCol` over each series'
+    * order, NULL on the series' first k rows (a fit of the differences
+    * filters them out). Lag 1 is the d = 1 base, lag m the seasonal
+    * one, and Δ² is lag 1 applied twice. */
+  private[seq] def diffs(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
+                         valueCol: String, k: Int, outCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val keys = keyCols.map(col)
-    val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val wd = Window.partitionBy(keys: _*).orderBy(ordCols.map(_.desc): _*)
-    val dy = df.withColumn("__yraw", col(valueCol).cast("double"))
-      .withColumn("__dy", col("__yraw") - lag(col("__yraw"), 1).over(w))
-    val lastLevel = dy.withColumn("__rdL", row_number().over(wd))
-      .filter(col("__rdL") === 1)
-      .select(keys :+ col("__yraw").as("__yn"): _*)
-    (dy.filter(col("__dy").isNotNull).drop("__yraw"), lastLevel)
+    val v = col(valueCol).cast("double")
+    df.withColumn(outCol,
+      v - lag(v, k).over(Window.partitionBy(keyCols.map(col): _*).orderBy(ordCols: _*)))
   }
 
   /** The d = 1 integration tail: `fc`'s diff forecasts `diffCol`
-    * integrate back from the last observed level as `outCol`,
+    * integrate back from the last observed level `__yn` (a column of
+    * `fc`) as `outCol`,
     *
     *   ŷ_{n+s} = r( y_n + Σ_{j≤s} d̂_{n+j} )
     *
     * (the q249 ARI machinery: the cumulative sum runs in step order
     * inside one key partition, both engines left-folding the same
-    * rounded diff forecasts). Series without a last level drop. */
-  private[seq] def integrated(fc: DataFrame, lastLevel: DataFrame, keyCols: Seq[String],
-                              diffCol: String, outCol: String): DataFrame = {
+    * rounded diff forecasts). */
+  private[seq] def integrated(fc: DataFrame, keyCols: Seq[String], diffCol: String,
+                              outCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wcum = Window.partitionBy(keyCols.map(col): _*).orderBy(col("step"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    fc.join(lastLevel, keyCols)
-      .withColumn(outCol,
-        graft.functions.Funcs.r(col("__yn") + sum(col(diffCol)).over(wcum)))
+    fc.withColumn(outCol,
+      graft.functions.Funcs.r(col("__yn") + sum(col(diffCol)).over(wcum)))
   }
 
   /** Joint ARMA(2,1) fit by conditional least squares over a LITERAL
@@ -690,7 +696,7 @@ object SequentialKernels {
     * and diff-scale SSE alongside each step. */
   def arima211ForecastFrom(base: DataFrame, lastLevel: DataFrame,
                            keyCols: Seq[String], h: Int): DataFrame =
-    integrated(arma21ForecastFrom(base, keyCols, h), lastLevel, keyCols,
+    integrated(arma21ForecastFrom(base, keyCols, h).join(lastLevel, keyCols), keyCols,
       "arma2_forecast", "arima_forecast")
       .select((keyCols ++ Seq("arma2_phi1", "arma2_phi2", "arma2_theta", "arma2_sse",
         "step", "arima_forecast")).map(col): _*)
@@ -750,7 +756,7 @@ object SequentialKernels {
     * [[arima211ForecastFrom]] integration chain. */
   def arima212ForecastFrom(base: DataFrame, lastLevel: DataFrame,
                            keyCols: Seq[String], h: Int): DataFrame =
-    integrated(arma22ForecastFrom(base, keyCols, h), lastLevel, keyCols,
+    integrated(arma22ForecastFrom(base, keyCols, h).join(lastLevel, keyCols), keyCols,
       "arma22_forecast", "arima_forecast")
       .select((keyCols ++ Seq("arma22_phi1", "arma22_phi2", "arma22_theta1",
         "arma22_theta2", "arma22_sse", "step", "arima_forecast")).map(col): _*)
@@ -872,20 +878,12 @@ object SequentialKernels {
     import graft.functions.Funcs.r
     require(h >= 1, "horizon must be at least 1")
     require(phi > 0 && phi <= 1, "damping must be in (0, 1]")
-    val key = keyCols.map(col)
-    val holt = withHolt(df, keyCols, ordCols, valueCol, alpha, beta)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(key: _*).orderBy(ordCols.map(_.desc): _*)
-    val last = holt
-      .withColumn("__rd", row_number().over(w)).filter(col("__rd") === 1)
-      .filter(col("holt_trend").isNotNull)
-      .select(key ++ Seq(r(col("holt_level")).as("__l"),
-        r(col("holt_trend")).as("__b")): _*)
-    val steps = dampedSteps(col("__l"), col("__b"), phi, h).zipWithIndex.map {
-      case (f, i) => struct(lit(i + 1L).as("step"), f.as("holt_forecast"))
-    }
-    last.select(key :+ explode(array(steps: _*)).as("__s"): _*)
-      .select(key ++ Seq(col("__s.step"), col("__s.holt_forecast")): _*)
+    val last = SeriesTail.of(
+      SeriesTail.indexed(withHolt(df, keyCols, ordCols, valueCol, alpha, beta), keyCols, ordCols),
+      keyCols, Seq(SeriesTail.last(col("holt_level")).as("__l"),
+        SeriesTail.last(col("holt_trend")).as("__b")))
+      .filter(col("__b").isNotNull)
+    stepRows(last, keyCols, dampedSteps(r(col("__l")), r(col("__b")), phi, h), "holt_forecast")
   }
 
   /** The damped extrapolation steps r(l + b·Σ_{i≤s} φⁱ), s = 1..h, from
@@ -911,24 +909,13 @@ object SequentialKernels {
                           gamma: Double, m: Int, h: Int): DataFrame = {
     import graft.functions.Funcs.r
     require(h >= 1 && h <= m, "horizon must lie in [1, m]")
-    val key = keyCols.map(col)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(key: _*).orderBy(ordCols.map(_.desc): _*)
     val hw = withHoltWinters(df, keyCols, ordCols, valueCol, alpha, beta, gamma, m)
-      .withColumn("__rd", row_number().over(w))
-    val last = hw.filter(col("__rd") === 1)
-      .select(key ++ Seq(r(col("hw_level")).as("__l"),
-        r(col("hw_trend")).as("__b")): _*)
-    // desc rank rd maps to forecast step s = m − rd + 1 (row n+s−m)
-    val seas = hw.filter(col("__rd") <= m && col("__rd") >= m - h + 1)
-      .select(key ++ Seq((lit(m) - col("__rd") + 1).cast("int").as("step"),
-        r(col("hw_seasonal")).as("__s")): _*)
-    last.select(key ++ Seq(col("__l"), col("__b"),
-        explode(sequence(lit(1), lit(h))).as("step")): _*)
-      .join(seas, keyCols :+ "step", "left")
-      .select(key ++ Seq(col("step").cast("long").as("step"),
-        r(col("__l") + col("step") * col("__b") +
-          coalesce(col("__s"), lit(0.0))).as("hw_forecast")): _*)
+    val last = SeriesTail.of(SeriesTail.indexed(hw, keyCols, ordCols), keyCols,
+      Seq(SeriesTail.last(col("hw_level")).as("__l"), SeriesTail.last(col("hw_trend")).as("__tr")) ++
+        SeriesTail.bases(col("hw_seasonal"), lit(m), h))
+    stepRows(last, keyCols, (1 to h).map { s =>
+      r(r(col("__l")) + lit(s) * r(col("__tr")) + coalesce(r(col(s"__b$s")), lit(0.0)))
+    }, "hw_forecast")
   }
 
   /** Cumulative damping factors Σ_{i=1..s} φⁱ for s = 1..h, computed by

@@ -62,24 +62,17 @@ object Theta {
     *
     *   ŷ_{n+s} = r( ½·(a + b·(n+s)) + ½·ses_n )
     *
-    * One row per (series, step); everything derives from the fit's own
-    * frames, no new exchange grain. */
+    * One row per (series, step): the last index and SES state are read
+    * by one [[SeriesTail]] aggregate over the fit's own window pass, no
+    * new exchange grain. */
   def forecast(df: DataFrame, keyCols: Seq[String], ord: Seq[Column],
                valueCol: String, alpha: Double, h: Int): DataFrame = {
     require(h >= 1, "horizon must be at least 1")
-    val key = keyCols.map(col)
-    val full = fittedFull(df, keyCols, ord, valueCol, alpha)
-    val wd = Window.partitionBy(key: _*).orderBy(ord.map(_.desc): _*)
-    val last = full.withColumn("__rd", row_number().over(wd))
-      .filter(col("__rd") === 1)
-    val steps = (1 to h).map { s =>
-      struct(lit(s.toLong).as("step"),
-        forecastStep(col("theta_a"), col("theta_b"), col("__t"), col("__ses"), s)
-          .as("theta_forecast"))
-    }
-    last.select(key :+ explode(array(steps: _*)).as("__p"): _*)
-      .select(key ++ Seq(col("__p.step").as("step"),
-        col("__p.theta_forecast").as("theta_forecast")): _*)
+    val last = SeriesTail.of(
+      SeriesTail.indexed(fittedFull(df, keyCols, ord, valueCol, alpha), keyCols, ord), keyCols,
+      Seq("theta_a", "theta_b", "__t", "__ses").map(c => SeriesTail.last(col(c)).as(c)))
+    SequentialKernels.stepRows(last, keyCols, (1 to h).map(s =>
+      forecastStep(col("theta_a"), col("theta_b"), col("__t"), col("__ses"), s)), "theta_forecast")
   }
 
   /** Step `s` of the forecast from a series' trend coefficients, its

@@ -22,8 +22,9 @@ import graft.functions.Funcs.r
   * recursion emits along the way ARE the partial autocorrelations
   * (the PACF column pmdarima's order heuristics read).
   *
-  * Execution shape: one series-window pass for the five lags + the
-  * last-five pivot, one aggregate for the sufficient sums, scalar
+  * Execution shape: one series-window pass for the five lags and the
+  * ascending index the last-five pivot reads ([[SeriesTail]]), one
+  * aggregate for the sufficient sums and the pivot, scalar
   * Levinson at the key grain, one join-back pass for the in-sample
   * SSE. Two exchanges total on the series key, both map-side combined
   * — scales in the series count exactly like [[Ar]].
@@ -151,8 +152,7 @@ object YuleWalker {
     val mu = df.groupBy(keys: _*)
       .agg(graft.functions.Funcs.microMean(col(valueCol)).as("__mu"))
     val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    val wd = Window.partitionBy(keys: _*).orderBy(ordCols.map(_.desc): _*)
-    val t = df.join(mu, keyCols)
+    val t = SeriesTail.indexed(df.join(mu, keyCols), keyCols, ordCols)
       .withColumn("__xc", col(valueCol).cast("double") - col("__mu"))
       .withColumn("__m", graft.expr.RoundHalfUpExpr.column(col("__xc") * lit(1e4)).cast("long"))
       .withColumn("__i1", lag(col("__m"), 1).over(w))
@@ -160,7 +160,6 @@ object YuleWalker {
       .withColumn("__i3", lag(col("__m"), 3).over(w))
       .withColumn("__i4", lag(col("__m"), 4).over(w))
       .withColumn("__i5", lag(col("__m"), 5).over(w))
-      .withColumn("__rd", row_number().over(wd))
     val dec = "decimal(38,0)"
     def d8(c: Column) = c.cast("double") / lit(1e8) + lit(0.0)
     def prod(k: Column) = d8(sum(col("__m").cast(dec) * k))
@@ -173,11 +172,11 @@ object YuleWalker {
       prod(col("__i3")).as("__p3"),
       prod(col("__i4")).as("__p4"),
       prod(col("__i5")).as("__p5"),
-      max(when(col("__rd") === 1, col("__m"))).as("__x1i"),
-      max(when(col("__rd") === 2, col("__m"))).as("__x2i"),
-      max(when(col("__rd") === 3, col("__m"))).as("__x3i"),
-      max(when(col("__rd") === 4, col("__m"))).as("__x4i"),
-      max(when(col("__rd") === 5, col("__m"))).as("__x5i"),
+      SeriesTail.last(col("__m")).as("__x1i"),
+      SeriesTail.last(col("__m"), lit(1)).as("__x2i"),
+      SeriesTail.last(col("__m"), lit(2)).as("__x3i"),
+      SeriesTail.last(col("__m"), lit(3)).as("__x4i"),
+      SeriesTail.last(col("__m"), lit(4)).as("__x5i"),
       first(col("__mu")).as("__mu"))
       .filter(col("__np5") >= 3)
     // Levinson–Durbin, five levels unrolled as one select chain; every

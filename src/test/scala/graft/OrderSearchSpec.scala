@@ -251,6 +251,25 @@ class OrderSearchSpec extends SparkSpec {
     blend.foreach { case (g, _, nm) => assert(nm == boardN(g), s"$g: $nm") }
   }
 
+  test("seasonal and Δ² bases: one series pass each, no join and no descending sort") {
+    // the residual count, the last level and the last difference come
+    // from the grid fit's own per-series aggregate
+    val df = series((1 to 20).map(t => ("a", t, java.lang.Double.valueOf((t * 7) % 5))): _*)
+    val (keys, ord) = (Seq("k"), Seq(col("t")))
+    for ((name, fit) <- Seq(
+        "sarima011Full" -> OrderSearch.sarima011Full(df, keys, ord, "v", 4),
+        "sarma11Full" -> OrderSearch.sarma11Full(df, keys, ord, "v", 4),
+        "arima021Full" -> OrderSearch.arima021Full(df, keys, ord, "v"))) {
+      val plan = fit.queryExecution.executedPlan.toString
+      assert(!plan.contains("Join"), s"$name: $plan")
+      assert(!plan.contains(" DESC"), s"$name: $plan")
+    }
+    val counts = OrderSearch.sarima011Full(df, keys, ord, "v", 4).select("sma_neff")
+      .as[Double].head() -> OrderSearch.arima021Full(df, keys, ord, "v")
+      .select("d2_neff", "y_last", "dy_last").as[(Double, Double, Double)].head()
+    assert(counts == (16.0 -> (18.0, 0.0, -3.0)))
+  }
+
   test("ARIMA(2,1,1) forecast integrates from the last level") {
     // linear series: diffs constant 3 → every triple ties at SSE 0 on
     // the centered-zero diffs; forecast continues the line

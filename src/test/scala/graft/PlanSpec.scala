@@ -428,10 +428,60 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("AR intervals: the lagged series checkpoints once for its three consumers") {
+  test("AR intervals: one lineitem scan and no join in the executed plan") {
     val plan = SparkEntry.queries("q251_ar_intervals")(spark, dir)
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("Scan parquet"), plan)
+    assert("Scan parquet".r.findAllIn(plan).length == 1, plan)
+    assert(!plan.contains("Join"), plan)
+  }
+
+  test("the seq forecasters build without running a Spark job") {
+    import spark.implicits._
+    val df = (1 to 30).flatMap(t => Seq(("a", t, (t % 7).toDouble), ("b", t, t.toDouble)))
+      .toDF("k", "t", "v")
+    val (keys, ord) = (Seq("k"), Seq(col("t")))
+    val periods = Seq(("a", 7), ("b", 4)).toDF("k", "p")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val builders: Seq[(String, () => DataFrame)] = Seq(
+      "Ar.forecast" -> (() => graft.seq.Ar.forecast(df, keys, ord, "v", 4)),
+      "Ar.forecastIntervals" -> (() => graft.seq.Ar.forecastIntervals(df, keys, ord, "v", 4)),
+      "Ar.forecastIntegrated" -> (() => graft.seq.Ar.forecastIntegrated(df, keys, ord, "v", 4)),
+      "Ar.forecastSeasonalIntegrated" -> (() =>
+        graft.seq.Ar.forecastSeasonalIntegrated(df, keys, ord, "v", 13, 4)),
+      "Theta.forecast" -> (() => graft.seq.Theta.forecast(df, keys, ord, "v", 0.3, 4)),
+      "dampedHoltForecast" -> (() => graft.seq.SequentialKernels.dampedHoltForecast(
+        df, keys, ord, "v", 0.3, 0.1, 0.9, 4)),
+      "holtWintersForecast" -> (() => graft.seq.SequentialKernels.holtWintersForecast(
+        df, keys, ord, "v", 0.3, 0.1, 0.2, 4, 3)),
+      "arima111Forecast" -> (() =>
+        graft.seq.SequentialKernels.arima111Forecast(df, keys, ord, "v", 4)),
+      "Baselines.forecasts" -> (() =>
+        graft.seq.Baselines.forecasts(df, keys, col("t"), "v", 4, 13)),
+      "Baselines.seasonalNaiveAdaptive" -> (() => graft.seq.Baselines.seasonalNaiveAdaptive(
+        df, keys, col("t"), "v", periods, "p", 4)),
+      "OrderSearch.arima021Full" -> (() => graft.seq.OrderSearch.arima021Full(df, keys, ord, "v")),
+      "OrderSearch.sarima011Full" -> (() =>
+        graft.seq.OrderSearch.sarima011Full(df, keys, ord, "v", 13)),
+      "OrderSearch.sarma11Full" -> (() =>
+        graft.seq.OrderSearch.sarma11Full(df, keys, ord, "v", 13)),
+      "OrderSearch.seasonalBase" -> (() =>
+        graft.seq.OrderSearch.seasonalBase(df, keys, ord, "v", 4, 13)),
+      "YuleWalker.ar5Full" -> (() => graft.seq.YuleWalker.ar5Full(df, keys, ord, "v")))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val ran = builders.map { case (name, build) =>
+        GraftSqlBridge.statusJobs(spark) // drains the listener bus
+        val before = jobs.get
+        build().queryExecution.executedPlan
+        GraftSqlBridge.statusJobs(spark)
+        name -> (jobs.get - before)
+      }.filter(_._2 > 0)
+      assert(ran.isEmpty, s"building ran Spark jobs: $ran")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("weighted quantiles: the q-list shares ONE cumulative-weight exchange") {
